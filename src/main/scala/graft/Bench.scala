@@ -140,11 +140,19 @@ object Bench {
     val retried = scala.collection.mutable.LinkedHashMap[String, Double]()
     val results: Map[String, Double] = results0.map { case (k, v) =>
       if (keyViolates(k, v) && !errors.contains(k)) {
+        // a failed retry is recorded, not timed: a fast failure must not
+        // pass the gate as a fast run
         val t0 = System.nanoTime()
-        try { SparkEntry.queries(k)(spark, sfDir).count() } catch { case _: Throwable => () }
-        val again = (System.nanoTime() - t0) / 1e9
-        retried(k) = math.min(v, again)
-        k -> math.min(v, again)
+        try {
+          SparkEntry.queries(k)(spark, sfDir).count()
+          val again = (System.nanoTime() - t0) / 1e9
+          retried(k) = math.min(v, again)
+          k -> math.min(v, again)
+        } catch {
+          case e: Throwable =>
+            errors(k) = ("retry: " + Option(e.getMessage).getOrElse(e.getClass.getName)).take(200)
+            k -> v
+        }
       } else k -> v
     }
     val violations: Seq[(String, Double, Double)] = results.toSeq.collect {

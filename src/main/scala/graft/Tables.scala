@@ -11,15 +11,23 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * pushdown and column pruning happen at the scan (SURVEY.md §4).
   */
 object Tables {
-  /** Scan one table. Kept as a plain `spark.read.parquet` so Catalyst sees
-    * a V1 FileScan it can push filters/projections into — do not collect or
-    * cache here; callers compose lazily.
+  /** Scan one table. Kept as a plain parquet read so Catalyst sees a V1
+    * FileScan it can push filters/projections into — do not collect or
+    * cache here; callers compose lazily. The schema comes from the footer
+    * Spark's inference would read, read in this JVM
+    * ([[org.apache.spark.sql.graft.FooterSchema]]), so resolving a table
+    * runs no Spark job; without a readable data file the plain
+    * `spark.read.parquet` runs and its error surfaces.
     */
   def t(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     // Session-level conf, set here so even a caller-provided session (the
     // driver's smoke check) can read either historical `events.ts` layout.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(s"$sfDir/$name.parquet")
+    val path = s"$sfDir/$name.parquet"
+    val df = org.apache.spark.sql.graft.FooterSchema.of(spark, path) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None         => spark.read.parquet(path)
+    }
     normalizeTimestamps(df)
   }
 

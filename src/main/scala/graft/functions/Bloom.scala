@@ -22,7 +22,7 @@ import org.apache.spark.sql.types.{BinaryType, BooleanType, DataType, LongType}
   * injection, which this mirrors at the user level).
   *
   * Same partial-aggregate story as [[TDigest]]: each partition folds its
-  * keys into a fixed-size bitset, bitsets OR-merge associatively, and the
+  * keys into a filter of fixed (m, k), filters OR-merge associatively, and the
   * serialized artifact is storable and re-mergeable later
   * ([[BloomMergeAgg]]) — build once over yesterday's corpus, union with
   * today's increment without re-scanning.
@@ -33,15 +33,41 @@ import org.apache.spark.sql.types.{BinaryType, BooleanType, DataType, LongType}
   * lesson from this repo's LSH families (a weak mix correlates probe
   * positions and inflates the real FPR well past theory).
   *
+  * Two in-memory forms, chosen by content: a SPARSE sorted list of set-bit
+  * positions while 4 bytes × positions is smaller than the ⌈m/64⌉ × 8-byte
+  * bitset, and the DENSE bitset beyond that point. A per-group filter
+  * sized for the corpus (the daily rollup keeps m = 2^23, a 1 MiB bitset)
+  * usually holds a few hundred bits, so it costs kilobytes, not a
+  * megabyte, to allocate, shuffle, merge and store. The switch point
+  * follows from m alone; `add`, `merge` and `mightContain` answer the same
+  * in either form.
+  *
   * STORAGE SCHEMA (version-tagged, shuffle format == at-rest format):
-  *   byte 0   : format version (1)
-  *   int32 BE : m — number of bits
-  *   int32 BE : k — probes per key
-  *   ⌈m/64⌉ × int64 BE bitset words
+  *   v1 dense  — byte 0 = 1; int32 BE m; int32 BE k;
+  *               ⌈m/64⌉ × int64 BE bitset words
+  *   v2 sparse — byte 0 = 2; int32 BE m; int32 BE k;
+  *               the set-bit positions as strictly increasing int32 BE,
+  *               to the end of the payload
+  * The encoding is CANONICAL: the bytes depend only on (m, k, set bits),
+  * never on the in-memory form. v2 is written exactly when it is the
+  * smaller payload (positions < 2 × ⌈m/64⌉), v1 otherwise, so a
+  * dense-sized filter keeps its v1 bytes and every stored v1 payload
+  * still deserializes.
   */
 final class BloomFilter(val numBits: Int, val numHashes: Int) extends Serializable {
   require(numBits > 0 && numHashes > 0)
-  private[functions] val words = new Array[Long]((numBits + 63) >>> 6)
+  private val numWords = (numBits + 63) >>> 6
+  // at this many positions the sparse form is as large as the bitset
+  // (4 × positions bytes = numWords × 8 bytes): it switches to dense
+  private val sparseLimit = 2 * numWords
+
+  // dense form: the bitset, null while sparse
+  private var words: Array[Long] = null
+  // sparse form: positions(0 until nSorted) sorted and distinct, then the
+  // bits set since the last compaction (absent from the sorted prefix)
+  private var positions = new Array[Int](math.min(16, sparseLimit))
+  private var nPos = 0
+  private var nSorted = 0
 
   @inline private def mix(z0: Long): Long = {
     var z = z0 + 0x9e3779b97f4a7c15L
@@ -55,8 +81,7 @@ final class BloomFilter(val numBits: Int, val numHashes: Int) extends Serializab
     val h2 = mix(key ^ 0xc2b2ae3d27d4eb4fL) | 1L
     var i = 0
     while (i < numHashes) {
-      val bit = (((h1 + i * h2) & Long.MaxValue) % numBits).toInt
-      words(bit >>> 6) |= 1L << (bit & 63)
+      setBit((((h1 + i * h2) & Long.MaxValue) % numBits).toInt)
       i += 1
     }
   }
@@ -64,10 +89,14 @@ final class BloomFilter(val numBits: Int, val numHashes: Int) extends Serializab
   def mightContain(key: Long): Boolean = {
     val h1 = mix(key)
     val h2 = mix(key ^ 0xc2b2ae3d27d4eb4fL) | 1L
+    if (words == null) compact()
     var i = 0
     while (i < numHashes) {
       val bit = (((h1 + i * h2) & Long.MaxValue) % numBits).toInt
-      if ((words(bit >>> 6) & (1L << (bit & 63))) == 0L) return false
+      val hit =
+        if (words != null) (words(bit >>> 6) & (1L << (bit & 63))) != 0L
+        else java.util.Arrays.binarySearch(positions, 0, nSorted, bit) >= 0
+      if (!hit) return false
       i += 1
     }
     true
@@ -76,17 +105,90 @@ final class BloomFilter(val numBits: Int, val numHashes: Int) extends Serializab
   def merge(other: BloomFilter): BloomFilter = {
     require(other.numBits == numBits && other.numHashes == numHashes,
       s"cannot merge bloom($numBits,$numHashes) with bloom(${other.numBits},${other.numHashes})")
-    var i = 0
-    while (i < words.length) { words(i) |= other.words(i); i += 1 }
+    if (other.words != null) {
+      densify()
+      var i = 0
+      while (i < numWords) { words(i) |= other.words(i); i += 1 }
+    } else if (!(other eq this)) {
+      var i = 0
+      while (i < other.nPos) { setBit(other.positions(i)); i += 1 }
+    }
     this
   }
 
   def serialize(): Array[Byte] = {
-    val bb = ByteBuffer.allocate(1 + 4 + 4 + words.length * 8)
-    bb.put(1.toByte).putInt(numBits).putInt(numHashes)
+    if (words == null) compact()
+    val n = if (words == null) nPos else {
+      var c = 0; var i = 0
+      while (i < numWords) { c += java.lang.Long.bitCount(words(i)); i += 1 }
+      c
+    }
+    if (n < sparseLimit) {
+      val bb = ByteBuffer.allocate(9 + 4 * n)
+      bb.put(2.toByte).putInt(numBits).putInt(numHashes)
+      if (words == null) {
+        var i = 0
+        while (i < nPos) { bb.putInt(positions(i)); i += 1 }
+      } else {
+        var w = 0
+        while (w < numWords) {
+          var bits = words(w)
+          while (bits != 0L) {
+            bb.putInt(w * 64 + java.lang.Long.numberOfTrailingZeros(bits))
+            bits &= bits - 1
+          }
+          w += 1
+        }
+      }
+      bb.array()
+    } else {
+      densify()
+      val bb = ByteBuffer.allocate(9 + 8 * numWords)
+      bb.put(1.toByte).putInt(numBits).putInt(numHashes)
+      var i = 0
+      while (i < numWords) { bb.putLong(words(i)); i += 1 }
+      bb.array()
+    }
+  }
+
+  private def setBit(bit: Int): Unit =
+    if (words != null) words(bit >>> 6) |= 1L << (bit & 63)
+    else if (java.util.Arrays.binarySearch(positions, 0, nSorted, bit) < 0) {
+      if (nPos == positions.length) {
+        compact()
+        if (nPos >= sparseLimit) { densify(); setBit(bit); return }
+        if (nPos * 2 > positions.length && positions.length < sparseLimit)
+          positions = java.util.Arrays.copyOf(positions,
+            math.min(positions.length * 2, sparseLimit))
+      }
+      positions(nPos) = bit
+      nPos += 1
+    }
+
+  /** Sort the bits appended since the last compaction into the sorted
+    * prefix, dropping repeats. */
+  private def compact(): Unit = if (nSorted < nPos) {
+    java.util.Arrays.sort(positions, nSorted, nPos)
+    val out = new Array[Int](positions.length)
+    var i = 0; var j = nSorted; var n = 0
+    while (i < nSorted || j < nPos) {
+      val v =
+        if (j == nPos || (i < nSorted && positions(i) <= positions(j))) { i += 1; positions(i - 1) }
+        else { j += 1; positions(j - 1) }
+      if (n == 0 || out(n - 1) != v) { out(n) = v; n += 1 }
+    }
+    positions = out
+    nPos = n
+    nSorted = n
+  }
+
+  private def densify(): Unit = if (words == null) {
+    words = new Array[Long](numWords)
     var i = 0
-    while (i < words.length) { bb.putLong(words(i)); i += 1 }
-    bb.array()
+    while (i < nPos) { words(positions(i) >>> 6) |= 1L << (positions(i) & 63); i += 1 }
+    positions = null
+    nPos = 0
+    nSorted = 0
   }
 }
 
@@ -94,10 +196,27 @@ object BloomFilter {
   def deserialize(bytes: Array[Byte]): BloomFilter = {
     val bb = ByteBuffer.wrap(bytes)
     val version = bb.get()
-    require(version == 1, s"unknown bloom sketch version $version")
+    require(version == 1 || version == 2, s"unknown bloom sketch version $version")
     val f = new BloomFilter(bb.getInt(), bb.getInt())
-    var i = 0
-    while (i < f.words.length) { f.words(i) = bb.getLong(); i += 1 }
+    if (version == 1) {
+      f.densify()
+      var i = 0
+      while (i < f.numWords) { f.words(i) = bb.getLong(); i += 1 }
+    } else {
+      val n = bb.remaining() / 4
+      require(bb.remaining() % 4 == 0 && n < f.sparseLimit, "malformed bloom sketch (v2)")
+      f.positions = new Array[Int](math.max(n, f.positions.length))
+      var i = 0
+      while (i < n) {
+        val bit = bb.getInt()
+        require(bit >= 0 && bit < f.numBits && (i == 0 || bit > f.positions(i - 1)),
+          "malformed bloom sketch (v2): positions must be increasing and below m")
+        f.positions(i) = bit
+        i += 1
+      }
+      f.nPos = n
+      f.nSorted = n
+    }
     f
   }
 }

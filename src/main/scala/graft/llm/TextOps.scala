@@ -381,24 +381,26 @@ object TextOps {
     // aggregates see exactly the standalone gates' groups: the votes
     // stay bit-identical to the standalone keys (CorpusOpsSpec pins the
     // NB agreement row for row; the oracle replays both gates).
+    // wc counts EVERY token, like the standalone NLL gate's frequency
+    // table: cc + rc would drop the tokens whose source has no class
+    // (curated is null when the source suffix does not parse)
     val toks = docs
-      .select(col("doc_id"), col("source"),
-        expr("CAST(substr(source, 4) AS INT) % 3 = 0").as("curated"),
+      .select(col("doc_id"), col("source"), curatedOf(col("source")).as("curated"),
         explode(split(col("text"), " ")).as("w"))
       .filter(length(col("w")) > 0)
       .localCheckpoint()
     val wstats = toks.groupBy("w").agg(
         count(when(col("curated"), lit(1))).as("cc"),
-        count(when(!col("curated"), lit(1))).as("rc"))
+        count(when(!col("curated"), lit(1))).as("rc"),
+        count(lit(1)).as("wc"))
       .localCheckpoint()
     val tot = wstats.agg(sum("cc").as("c_n"), sum("rc").as("r_n"),
-      count(lit(1)).as("v"), sum(col("cc") + col("rc")).as("n_total"))
+      count(lit(1)).as("v"), sum("wc").as("n_total"))
     val model = wstats.crossJoin(broadcast(tot))
       .withColumn("lo",
         log((col("cc") + lit(1.0)) / (col("c_n") + col("v"))) -
           log((col("rc") + lit(1.0)) / (col("r_n") + col("v"))))
-      .select(col("w"), col("lo"), (col("cc") + col("rc")).as("wc"),
-        col("n_total"))
+      .select(col("w"), col("lo"), col("wc"), col("n_total"))
     val scored = toks.join(broadcast(model), Seq("w"))
       .groupBy("doc_id", "source")
       .agg(
@@ -942,10 +944,14 @@ object TextOps {
 
   private def nbToks(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     docs
-      .select(col("doc_id"),
-        expr("CAST(substr(source, 4) AS INT) % 3 = 0").as("curated"),
+      .select(col("doc_id"), curatedOf(col("source")).as("curated"),
         explode(split(col("text"), " ")).as("w"))
       .filter(length(col("w")) > 0)
+
+  /** The NB class of a source `srcN`: curated when N % 3 = 0, null (no
+    * class) when the suffix does not parse as an integer. */
+  private def curatedOf(source: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    substring(source, 4, Int.MaxValue).try_cast("int") % 3 === 0
 
   private def nbModelFromToks(toks: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     // ONE corpus pass: the per-word class counts. The class totals and
@@ -1491,6 +1497,20 @@ object TextOps {
     * jx `corpus_op` front end can point it at a jx-derived corpus. */
   def qualityFilterOf(docs: org.apache.spark.sql.DataFrame):
       org.apache.spark.sql.DataFrame = {
+    val wR = Window.partitionBy("source").orderBy(col("nll").asc, col("doc_id").asc)
+    val wC = Window.partitionBy("source")
+    nllScoresOf(docs).withColumn("rn", row_number().over(wR))
+      .withColumn("n_src", count(lit(1)).over(wC))
+      .filter(col("rn") * 2 <= col("n_src"))
+      .select("source", "doc_id", "nll")
+      .orderBy("source", "doc_id")
+  }
+
+  /** Per-document unigram NLL (doc_id, source, nll) under the corpus's own
+    * frequency table — the score [[qualityFilterOf]] ranks within each
+    * source. */
+  def nllScoresOf(docs: org.apache.spark.sql.DataFrame):
+      org.apache.spark.sql.DataFrame = {
     val toks = docs
       .select(col("doc_id"), col("source"), explode(split(col("text"), " ")).as("w"))
       .filter(length(col("w")) > 0)
@@ -1501,17 +1521,10 @@ object TextOps {
     // the token stream is never shuffled by word (guide §3.1).
     val freq = toks.groupBy("w").agg(count(lit(1)).as("wc")).localCheckpoint()
     val total = freq.agg(sum("wc").as("n_total"))
-    val nll = toks.join(broadcast(freq), Seq("w"))
+    toks.join(broadcast(freq), Seq("w"))
       .crossJoin(broadcast(total))
       .groupBy("doc_id", "source")
       .agg(r4(-avg(log(col("wc").cast("double") / col("n_total")))).as("nll"))
-    val wR = Window.partitionBy("source").orderBy(col("nll").asc, col("doc_id").asc)
-    val wC = Window.partitionBy("source")
-    nll.withColumn("rn", row_number().over(wR))
-      .withColumn("n_src", count(lit(1)).over(wC))
-      .filter(col("rn") * 2 <= col("n_src"))
-      .select("source", "doc_id", "nll")
-      .orderBy("source", "doc_id")
   }
 
   /** X4j: token-budget sampling — fill a fixed per-source token quota and

@@ -9,6 +9,30 @@ import org.scalatest.funsuite.AnyFunSuite
   * driver's TIMESTAMP(NANOS) events table. */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
+
+  /** The number of Spark jobs `body` started on this thread (and threads
+    * it spawned): jobs are tagged with a local property, so a job another
+    * suite's background thread starts meanwhile is not counted. */
+  def jobsDuring(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val tag = java.util.UUID.randomUUID().toString
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("graft.test.jobsDuring") == tag))
+          started.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty("graft.test.jobsDuring", tag)
+    try {
+      body
+      org.apache.spark.graft.ListenerBusBridge.drain(sc)
+    } finally {
+      sc.setLocalProperty("graft.test.jobsDuring", null)
+      sc.removeSparkListener(listener)
+    }
+    started.get
+  }
 }
 
 object SparkSpec {

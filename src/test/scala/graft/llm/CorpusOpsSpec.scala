@@ -920,6 +920,38 @@ class CorpusOpsSpec extends graft.SparkSpec {
       s"degenerate ensemble: $kept of ${rows.length}")
   }
 
+  test("quality ensemble: the fused NLL vote equals the standalone NLL " +
+      "ranking when sources do not parse") {
+    val spark = this.spark
+    import spark.implicits._
+    val rnd = new scala.util.Random(7)
+    val vocab = Seq("sat", "on", "mat", "dog", "ran")
+    // sources shorter than 4 characters and with non-numeric suffixes:
+    // their tokens have no NB class, yet the NLL frequencies count them
+    val sources = Seq("ab", "", "s", "src", "srcX", "src7", "src12", "srcab")
+    val random = (0 until 64).map { i =>
+      (i.toLong, sources(i % sources.size),
+        ("the the " + Seq.fill(2 + rnd.nextInt(6))(vocab(rnd.nextInt(vocab.size)))
+          .mkString(" ")))
+    }
+    // zz* occur only in doc 100, so it is the less fluent of the two "xy"
+    // docs; with the unparseable-source tokens dropped from the counts,
+    // its zz* tokens would vanish and "the" alone would rank it first
+    val designed = Seq((100L, "xy", "the zz1 zz2 zz3 zz4 zz5 zz6"),
+      (101L, "xy", "cat cat cat"), (102L, "src7", "cat cat cat"))
+    val docs = (random ++ designed).toDF("doc_id", "source", "text")
+    val fused = TextOps.ensembleVotesOf(docs).select("doc_id", "pass_nll").collect()
+      .map(r => r.getLong(0) -> r.getBoolean(1)).toMap
+    val expected = TextOps.nllScoresOf(docs).collect()
+      .map(r => (r.getAs[Long]("doc_id"), r.getAs[String]("source"), r.getAs[Double]("nll")))
+      .groupBy(_._2).values.flatMap { g =>
+        val ranked = g.sortBy(x => (x._3, x._1))
+        ranked.indices.map(i => ranked(i)._1 -> ((i + 1) * 2 <= ranked.length))
+      }.toMap
+    assert(fused === expected)
+    assert(!fused(100L) && fused(101L))
+  }
+
   // ---- pipeline_corpus_ensemble ----
 
   test("ensemble-gated chain: every survivor passed the 2-of-3 vote on " +
