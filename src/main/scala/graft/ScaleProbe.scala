@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Third-scale-point measurement for the nlist∝n SHIPPED DEFAULT (r17
   * order #4): times the two documented frozen-nlist steepeners
   * (`jx_knn_centrality` / `mm_semantic_dedup`-shaped calls) at nlist=16
@@ -14,15 +12,7 @@ import org.apache.spark.sql.SparkSession
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/graft_sf1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt)
     spark.range(1 << 20).selectExpr("sum(id)").collect()
     def time(f: => Long): Double = {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9

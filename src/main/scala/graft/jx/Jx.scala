@@ -8,6 +8,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.JxFunctions
+import graft.operators.Common.Q
 
 /** jx JSON query compiler — the reference's user-facing query language
   * (upstream: jx_base/query.py normalizes the JSON into a QueryOp of
@@ -376,500 +377,272 @@ object Jx {
     }
   }
 
-  /** Compile a {"corpus_op": {...}} node — the corpus-level
-    * training-data operators (SURVEY §2.9 X4i–X4l) reached through jx,
-    * the same single-user-surface story as `pipeline` (upstream analog:
-    * jx is ActiveData's only query language). Spec keys: `op` (one of
-    * quality_gate / source_kl / token_budget / bpe_merges /
-    * semantic_dedup / overlap / dsir / shard_manifest / pack_manifest /
-    * knn_diverse / knn_clusters / knn_stats / knn_recall /
-    * knn_centrality / knn_coreset / quantizer_refresh / ivf_delta /
-    * pairs_delta / pair_centrality / canonical / topic_mix /
-    * quality_monitor / curation_report / train_order / curriculum_order /
-    * anneal_order / order_audit / ppl_buckets / quality_calibration /
-    * probe_tuning / knn_join / sq8 / fertility / mix_schedule /
-    * anneal_schedule / dataset_card / novelty family / payload family /
-    * split_leakfree / quality_classifier / quality_ensemble /
-    * forget_pairs / forget_clusters / forget_ivf / forget_dict /
-    * forget_canonical / forget_manifest / forget_novelty / forget_sq8 /
-    * forget_lines / forget_sketch) and
-    * `corpus` (a jx query, required —
-    * documents-shaped for the text ops, (vec_id, embedding)-shaped for
-    * semantic_dedup); token_budget also takes `quota` and `shards`,
-    * semantic_dedup takes `nlist`/`tau`, overlap takes `k`. The op
-    * functions are the Column-API library entry points, so the jx front
-    * end lands on the exact same decision sets the driver oracles pin;
-    * dsir takes `target_lang`/`buckets` (DSIR importance resampling).
-    *
-    * The kNN-graph readouts (knn_diverse / knn_clusters / knn_stats /
-    * knn_recall) route to the STORED artifact ([[graft.llm.Artifacts]] `knn_graph`
-    * family) when the corpus is the plain standard `embeddings` table at
-    * default index knobs and the service was started with a dataset dir
-    * — the jx surface then provably shares the sim_* keys' build-once
-    * tables instead of rebuilding quantizer + graph + CC per query (the
-    * r12 bench's 9–13 s jx_knn_* keys). Any other corpus subquery or
-    * knob setting falls back to the in-plan build. */
+  /** Compile a {"corpus_op": {...}} node: the corpus-level training-data
+    * operators reached through jx, the same single-user-surface story as
+    * `pipeline` (upstream analog: jx is ActiveData's only query language).
+    * Spec keys: `op` (a key of [[corpusOps]]), `corpus` (a jx query) and
+    * the op's knobs. The builders are the Column-API library entry
+    * points, so the jx front end lands on the exact decision sets the
+    * oracles pin. */
   private def runCorpusOp(spark: SparkSession, c: JsonNode,
-      tables: String => DataFrame,
-      dataset: Option[String] = None): DataFrame = {
-    lazy val docs = runNode(spark, req(c, "corpus"), tables, dataset)
-    // stored-artifact routing precondition for the kNN readouts: the
-    // corpus node is exactly {"from": "embeddings"} and the index knobs
-    // are the artifact's build knobs (defaults)
-    val corpusNode = req(c, "corpus")
-    val plainEmbeddings = corpusNode.isObject &&
-      corpusNode.size() == 1 &&
-      opt(corpusNode, "from").exists(f => f.isTextual && f.asText() == "embeddings")
-    // same shape test against the plain standard documents corpus, shared
-    // by the pair_centrality / quality_monitor / canonical / topic_mix
-    // store-routing cases below
-    val plainDocuments = corpusNode.isObject && corpusNode.size() == 1 &&
-      opt(corpusNode, "from").exists(f => f.isTextual && f.asText() == "documents")
-    // the events-domain twin (T13m forget_sketch routes on the raw table)
-    val plainEvents = corpusNode.isObject && corpusNode.size() == 1 &&
-      opt(corpusNode, "from").exists(f => f.isTextual && f.asText() == "events")
-    val defaultKnobs =
-      opt(c, "nlist").forall(n => n.isIntegralNumber && n.asInt() == 16) &&
-        opt(c, "k").forall(_.asInt() == 3)
-    val storeDir = if (plainEmbeddings && defaultKnobs) dataset else None
-    // `"nlist": "auto"` selects the size-derived list count (the shipped
-    // library default, [[graft.llm.Similarity.AutoNlist]]); an explicit
-    // integer pins it; absent keeps 16 — the stored-artifact knob every
-    // driver-key oracle replays
-    def nlistKnob(default: Int = 16): Int =
-      opt(c, "nlist").map { n =>
-        if (n.isTextual && n.asText() == "auto") graft.llm.Similarity.AutoNlist
-        else n.asInt()
-      }.getOrElse(default)
-    req(c, "op").asText() match {
-      case "quality_gate" => graft.llm.TextOps.qualityFilterOf(docs)
-      // X5 through the query surface: the payload wrap + decode +
-      // gate/dedup chains over the documents-shaped corpus node
-      case "payload_quality" => graft.llm.Multimodal.qualityReport(docs)
-      case "payload_pack_manifest" =>
-        graft.llm.TextOps.packMergeFrom(
-          graft.llm.Multimodal.mmPackPartialsOf(docs,
-            nShards = opt(c, "n_shards").map(_.asLong()).getOrElse(8L)),
-          ctx = opt(c, "ctx").map(_.asLong()).getOrElse(2048L))
-      case "payload_pack" => graft.llm.Multimodal.mmPackOf(docs,
-        ctx = opt(c, "ctx").map(_.asLong()).getOrElse(2048L),
-        nShards = opt(c, "n_shards").map(_.asLong()).getOrElse(8L))
-        .orderBy("doc_id").limit(300)
-      case "payload_pack_tuning" => graft.llm.Multimodal.mmPackTuningOf(docs,
-        nShards = opt(c, "n_shards").map(_.asLong()).getOrElse(8L))
-      case "payload_dedup" =>
-        // plain standard corpus + dataset dir → probe the stored payload
-        // pair graph (the same table mm_dedup reads); otherwise rebuild
-        // the byte-shingle chain in-plan
-        if (plainDocuments && dataset.isDefined)
-          graft.llm.Multimodal.queries("mm_dedup")(spark, dataset.get)
-        else graft.llm.Multimodal.dedupPairsOf(docs)
-      case "payload_semantic_dedup" =>
-        // embedding-space payload dedup: standard corpus + dataset dir →
-        // the stored mm quantizer path (the same artifact
-        // mm_semantic_dedup probes); otherwise decode + train in-plan
-        if (plainDocuments && dataset.isDefined && defaultKnobs
-            && opt(c, "tau").isEmpty)
-          graft.llm.Multimodal.queries("mm_semantic_dedup")(spark, dataset.get)
-        else graft.llm.Multimodal.semanticDedupOfDocs(docs,
-          nlist = nlistKnob(),
-          tau = opt(c, "tau").map(_.asDouble()).getOrElse(0.999))
-      case "payload_knn" =>
-        // cross-set semantic routing over payload embeddings, same
-        // store-routing contract
-        if (plainDocuments && dataset.isDefined && defaultKnobs)
-          graft.llm.Multimodal.queries("mm_knn")(spark, dataset.get)
-        else graft.llm.Multimodal.knnOfDocs(docs,
-          nlist = nlistKnob())
-      case "payload_align" =>
-        // cross-modal alignment gate: payload tower vs the standard
-        // embeddings table as text tower; standard corpus + dataset →
-        // the stored decode pass, otherwise decode in-plan
-        if (plainDocuments && dataset.isDefined)
-          graft.llm.Multimodal.queries("mm_text_align")(spark, dataset.get)
-        else graft.llm.Multimodal.textAlignOfDocs(docs,
-          resolveFrom("embeddings", tables))
-      case "payload_semantic_decon" =>
-        // embedding-space payload eval-integrity pass, same contract
-        if (plainDocuments && dataset.isDefined && defaultKnobs
-            && opt(c, "tau").isEmpty)
-          graft.llm.Multimodal.queries("mm_semantic_decon")(spark, dataset.get)
-        else graft.llm.Multimodal.semanticDeconOfDocs(docs,
-          nlist = nlistKnob(),
-          tau = opt(c, "tau").map(_.asDouble()).getOrElse(0.999))
-      case "payload_decon_report" =>
-        // the per-eval-item triage twin
-        if (plainDocuments && dataset.isDefined && defaultKnobs
-            && opt(c, "tau").isEmpty)
-          graft.llm.Multimodal.queries("mm_decon_report")(spark, dataset.get)
-        else graft.llm.Multimodal.deconReportOfDocs(docs,
-          nlist = nlistKnob(),
-          tau = opt(c, "tau").map(_.asDouble()).getOrElse(0.999))
-      case "source_kl" => graft.llm.TextOps.sourceKlOf(docs)
-      case "mix_schedule" =>
-        val budget = opt(c, "budget_pct").map(_.asLong()).getOrElse(200L)
-        val epochs = opt(c, "max_epochs").map(_.asLong()).getOrElse(4L)
-        // standard corpus + dataset → plan off the streamed quality
-        // monitor's EXACT per-source token sums (no corpus scan: the
-        // monitor maintains what the planner needs); any other corpus
-        // aggregates in-plan
-        if (plainDocuments && dataset.isDefined)
-          graft.llm.TextOps.mixScheduleFromTok(
-            graft.streaming.Streams.queries("stream_quality_store")(
-              spark, dataset.get)
-              .select(col("source"), col("n_tokens").as("n_tok")),
-            budget, epochs)
-        else graft.llm.TextOps.mixScheduleOf(docs, budget, epochs)
-      case "anneal_order" => graft.llm.TextOps.annealOrderOf(docs,
-        bulkPct = opt(c, "bulk_pct").map(_.asLong()).getOrElse(160L),
-        annealPct = opt(c, "anneal_pct").map(_.asLong()).getOrElse(40L),
-        maxEpochs = opt(c, "max_epochs").map(_.asLong()).getOrElse(4L),
-        nShards = opt(c, "n_shards").map(_.asLong()).getOrElse(8L))
-      case "curriculum_order" => graft.llm.TextOps.curriculumOrderOf(docs,
-        budgetPct = opt(c, "budget_pct").map(_.asLong()).getOrElse(200L),
-        maxEpochs = opt(c, "max_epochs").map(_.asLong()).getOrElse(4L),
-        nShards = opt(c, "n_shards").map(_.asLong()).getOrElse(8L))
-      case "train_order" => graft.llm.TextOps.trainOrderOf(docs,
-        budgetPct = opt(c, "budget_pct").map(_.asLong()).getOrElse(200L),
-        maxEpochs = opt(c, "max_epochs").map(_.asLong()).getOrElse(4L),
-        nShards = opt(c, "n_shards").map(_.asLong()).getOrElse(8L))
-      case "order_audit" => graft.llm.TextOps.orderAuditOf(docs,
-        budgetPct = opt(c, "budget_pct").map(_.asLong()).getOrElse(200L),
-        maxEpochs = opt(c, "max_epochs").map(_.asLong()).getOrElse(4L),
-        nShards = opt(c, "n_shards").map(_.asLong()).getOrElse(8L))
-      case "epoch_budget" => graft.llm.TextOps.epochBudgetOf(docs,
-        budgetPct = opt(c, "budget_pct").map(_.asLong()).getOrElse(200L),
-        maxEpochs = opt(c, "max_epochs").map(_.asLong()).getOrElse(4L),
-        nShards = opt(c, "n_shards").map(_.asLong()).getOrElse(8L))
-      case "pack_tuning" => graft.llm.TextOps.packTuningOf(docs,
-        nShards = opt(c, "n_shards").map(_.asLong()).getOrElse(8L))
-      case "ppl_buckets" =>
-        // standard corpus + dataset → score against the frozen bigram-LM
-        // artifact (the same tables the streamed score store probes);
-        // any other corpus trains the LM in-plan from the subquery
-        if (plainDocuments && dataset.isDefined) {
-          val (ab, ctx, v) = graft.llm.TextOps.bigramLmStored(spark, dataset.get)
-          graft.llm.TextOps.pplTiersFrom(
-            graft.llm.TextOps.bigramNllAgainstLm(docs, ab, ctx, v))
-        } else graft.llm.TextOps.pplBucketsOf(docs)
-      case "dataset_card" =>
-        // the card is only defined over the standard dataset (its dup and
-        // decon columns need the stored pair-graph/bench conventions)
-        if (!plainDocuments || dataset.isEmpty)
-          throw new IllegalArgumentException(
-            "dataset_card requires the plain dataset-backed documents corpus")
-        graft.llm.TextOps.queries("text_dataset_card")(spark, dataset.get)
-      case "anneal_schedule" =>
-        val bulkPct = opt(c, "bulk_pct").map(_.asLong()).getOrElse(160L)
-        val annealPct = opt(c, "anneal_pct").map(_.asLong()).getOrElse(40L)
-        val epochs = opt(c, "max_epochs").map(_.asLong()).getOrElse(4L)
-        // standard corpus + dataset → plan BOTH phases off maintained
-        // stores: the quality monitor's exact token sums and the
-        // classifier monitor's exact pass counts (two monitors → one
-        // planner; mix_schedule's closed loop extended to quality)
-        if (plainDocuments && dataset.isDefined)
-          graft.llm.TextOps.annealScheduleFromParts(
-            graft.streaming.Streams.queries("stream_quality_store")(
-              spark, dataset.get)
-              .select(col("source"), col("n_tokens").as("n_tok"), col("n_docs"))
-              .join(
-                graft.streaming.Streams.queries("stream_classifier_store")(
-                  spark, dataset.get)
-                  .select(col("source"), col("n_sel")),
-                Seq("source")),
-            bulkPct, annealPct, epochs)
-        else graft.llm.TextOps.annealScheduleOf(docs, bulkPct, annealPct, epochs)
-      case "novelty" => graft.llm.TextOps.ngramNoveltyOf(docs)
-      case "rule_filter" => graft.llm.TextOps.ruleFilterOf(docs)
-      case "rule_profile" => graft.llm.TextOps.ruleProfileOf(docs)
-      case "line_dedup" => graft.llm.TextOps.lineDedupOf(docs)
-      case "secret_scan" => graft.llm.TextOps.secretScanOf(docs)
-      case "hygiene_report" => graft.llm.TextOps.hygieneReportOf(docs)
-      case "novelty_curve" => graft.llm.TextOps.noveltyCurveOf(docs)
-      case "novelty_sources" => graft.llm.TextOps.noveltySourcesOf(docs)
-      case "soft_sample" =>
-        if (plainDocuments && dataset.isDefined)
-          graft.llm.Dedup.queries("sample_soft_dedup")(spark, dataset.get)
-        else graft.llm.Dedup.sampleSoftOf(docs)
-      case "threshold_tuning" =>
-        if (plainDocuments && dataset.isDefined)
-          graft.llm.Dedup.queries("dedup_threshold_tuning")(spark, dataset.get)
-        else graft.llm.Dedup.thresholdTuningOf(docs)
-      case "reweight" =>
-        // plain standard corpus + dataset → probe the STORED pair-graph
-        // labels; anything else rebuilds the pair chain in-plan
-        if (plainDocuments && dataset.isDefined)
-          graft.llm.Dedup.queries("dedup_reweight")(spark, dataset.get)
-        else graft.llm.Dedup.reweightOf(docs)
-      case "split_stratified" =>
-        if (plainDocuments && dataset.isDefined)
-          graft.llm.Dedup.queries("dedup_split_stratified")(spark, dataset.get)
-        else graft.llm.Dedup.splitStratifiedOf(docs)
-      case "split_leakfree" =>
-        // plain standard corpus + dataset → hash the STORED pair-graph
-        // labels; anything else rebuilds the pair chain in-plan
-        if (plainDocuments && dataset.isDefined)
-          graft.llm.Dedup.queries("dedup_split_leakfree")(spark, dataset.get)
-        else graft.llm.Dedup.splitLeakfreeOf(docs)
-      case "quality_classifier" => graft.llm.TextOps.qualityClassifierOf(docs)
-      case "quality_calibration" =>
-        graft.llm.TextOps.qualityCalibrationOf(docs)
-      case "quality_ensemble" => graft.llm.TextOps.qualityEnsembleOf(docs)
-      case "fertility" =>
-        // standard corpus + dataset → probe the stored BPE vocabulary
-        // (the same artifact text_fertility reads); otherwise train the
-        // vocab in-plan from the corpus subquery itself
-        if (plainDocuments && dataset.isDefined)
-          graft.llm.TextOps.queries("text_fertility")(spark, dataset.get)
-        else graft.llm.TextOps.fertilityOf(docs,
-          graft.llm.TextOps.fertilityVocabOf(docs))
-      case "knn_join" => storeDir match {
-        case Some(dd) => graft.llm.Similarity.queries("sim_knn_join")(spark, dd)
-        case None => graft.llm.Similarity.knnJoinOf(docs,
-          nlistKnob())
-      }
-      case "probe_tuning" => storeDir match {
-        case Some(dd) =>
-          graft.llm.Similarity.queries("sim_probe_tuning")(spark, dd)
-        case None => graft.llm.Similarity.probeTuningOf(docs,
-          nlistKnob())
-      }
-      case "sq8" =>
-        // plain standard embeddings + dataset → probe the stored SQ8
-        // stats/codes artifact; any other corpus builds in-plan
-        if (plainEmbeddings && dataset.isDefined)
-          graft.llm.Similarity.queries("sim_sq8")(spark, dataset.get)
-        else graft.llm.Similarity.sq8TopkOf(docs)
-      case "token_budget" => graft.llm.TextOps.tokenBudgetOf(docs,
-        opt(c, "quota").map(_.asLong()).getOrElse(300L),
-        opt(c, "shards").map(_.asLong()).getOrElse(4L))
-      case "bpe_merges" => graft.llm.TextOps.bpeMergesOf(docs,
-        opt(c, "merges").map(_.asInt()).getOrElse(3))
-      case "semantic_dedup" => storeDir match {
-        case Some(d) => graft.llm.Similarity.semanticDedupStored(spark, d,
-          opt(c, "tau").map(_.asDouble()).getOrElse(0.35))
-        case None => graft.llm.Similarity.semanticDedupOf(docs,
-          nlistKnob(),
-          opt(c, "tau").map(_.asDouble()).getOrElse(0.35))
-      }
-      case "decon_recall" => storeDir match {
-        case Some(d) => graft.llm.Similarity.deconRecallStored(spark, d,
-          opt(c, "tau").map(_.asDouble()).getOrElse(0.35))
-        case None => graft.llm.Similarity.deconRecallOf(docs,
-          nlistKnob(),
-          opt(c, "tau").map(_.asDouble()).getOrElse(0.35))
-      }
-      case "decon_report" => storeDir match {
-        case Some(d) => graft.llm.Similarity.deconReportStored(spark, d,
-          opt(c, "tau").map(_.asDouble()).getOrElse(0.35))
-        case None => graft.llm.Similarity.deconReportOf(docs,
-          nlistKnob(),
-          opt(c, "tau").map(_.asDouble()).getOrElse(0.35))
-      }
-      case "semantic_decon" => storeDir match {
-        case Some(d) => graft.llm.Similarity.semanticDeconStored(spark, d,
-          opt(c, "tau").map(_.asDouble()).getOrElse(0.35))
-        case None => graft.llm.Similarity.semanticDeconOf(docs,
-          nlistKnob(),
-          opt(c, "tau").map(_.asDouble()).getOrElse(0.35))
-      }
-      case "overlap" => graft.llm.Dedup.corpusOverlapOf(docs,
-        opt(c, "k").map(_.asInt()).getOrElse(128))
-      case "dsir" => graft.llm.TextOps.dsirOf(docs,
-        opt(c, "target_lang").map(_.asText()).getOrElse("en"),
-        opt(c, "buckets").map(_.asInt()).getOrElse(128))
-      case "shard_manifest" => graft.llm.TextOps.shardManifest(docs,
-        opt(c, "shards").map(_.asInt()).getOrElse(16))
-      case "pack_manifest" => graft.llm.TextOps.packManifest(docs,
-        opt(c, "context").map(_.asLong()).getOrElse(2048L),
-        opt(c, "shards").map(_.asLong()).getOrElse(8L))
-      case "knn_diverse" => storeDir match {
-        case Some(d) => graft.llm.Similarity.knnDiverseStored(spark, d,
-          opt(c, "m").map(_.asInt()).getOrElse(2))
-        case None => graft.llm.Similarity.knnDiverseOf(docs,
-          opt(c, "m").map(_.asInt()).getOrElse(2),
-          nlistKnob(),
-          opt(c, "k").map(_.asInt()).getOrElse(3))
-      }
-      case "knn_clusters" => storeDir match {
-        case Some(d) => graft.llm.Similarity.knnClustersStored(spark, d)
-        case None => graft.llm.Similarity.knnClustersOf(docs,
-          nlistKnob(),
-          opt(c, "k").map(_.asInt()).getOrElse(3))
-      }
-      case "knn_stats" => storeDir match {
-        case Some(d) => graft.llm.Similarity.knnStatsStored(spark, d)
-        case None => graft.llm.Similarity.knnStatsOf(docs,
-          nlistKnob(),
-          opt(c, "k").map(_.asInt()).getOrElse(3))
-      }
-      case "knn_recall" => storeDir match {
-        case Some(d) => graft.llm.Similarity.knnRecallStored(spark, d)
-        case None => graft.llm.Similarity.knnRecallOf(docs,
-          nlistKnob(),
-          opt(c, "k").map(_.asInt()).getOrElse(3))
-      }
-      case "knn_centrality" => storeDir match {
-        case Some(d) => graft.llm.Similarity.knnCentralityStored(spark, d)
-        case None => graft.llm.Similarity.knnCentralityOf(docs,
-          nlistKnob(),
-          opt(c, "k").map(_.asInt()).getOrElse(3))
-      }
-      case "knn_coreset" => storeDir match {
-        case Some(d) => graft.llm.Similarity.knnCoresetStored(spark, d,
-          opt(c, "m").map(_.asInt()).getOrElse(2))
-        case None => graft.llm.Similarity.knnCoresetOf(docs,
-          opt(c, "m").map(_.asInt()).getOrElse(2),
-          nlistKnob(),
-          opt(c, "k").map(_.asInt()).getOrElse(3))
-      }
-      case "quantizer_refresh" => storeDir match {
-        case Some(d) => graft.llm.Similarity.quantizerRefreshStored(spark, d)
-        case None => graft.llm.Similarity.quantizerRefreshOf(docs,
-          nlistKnob())
-      }
-      case "ivf_delta" => graft.llm.Similarity.ivfDeltaOf(docs,
-        nlistKnob(32))
-      case "pairs_delta" =>
-        // incremental pair-graph growth over an even/odd split of the
-        // corpus subquery — the same deterministic split the driver
-        // key gates (the exactness claim is corpus-independent)
-        graft.llm.Dedup.pairsDeltaOf(
-            docs.filter(col("doc_id") % 2 === 0),
-            docs.filter(col("doc_id") % 2 =!= 0))
-          .orderBy(desc("jaccard"), asc("da"), asc("db"))
-      case "curation_report" =>
-        // standard corpus only: the report summarizes the STORED
-        // decision sets (pair-graph drop list + quality monitor), which
-        // exist for the service's dataset — an arbitrary corpus subquery
-        // has no stored decisions to summarize
-        dataset match {
-          case Some(ds) =>
-            graft.llm.TextOps.queries("text_curation_report")(spark, ds)
-          case None => throw new IllegalArgumentException(
-            "curation_report needs a dataset-backed service (stored decision sets)")
-        }
-      case "dedup_profile" =>
-        // cluster-size histogram: stored pair-graph labels for the
-        // standard corpus, in-plan pair chain otherwise
-        if (plainDocuments && dataset.isDefined)
-          graft.llm.Dedup.queries("dedup_profile")(spark, dataset.get)
-        else graft.llm.Dedup.dedupProfileOf(docs)
-      case "pair_centrality" =>
-        // doc-graph PageRank: stored pair graph for the standard corpus,
-        // in-plan pair chain otherwise
-        if (plainDocuments && dataset.isDefined)
-          graft.llm.Dedup.queries("dedup_centrality")(spark, dataset.get)
-        else graft.llm.Dedup.pairCentralityOf(docs)
-      case "quality_monitor" =>
-        // the ST11 monitor readout through the query surface: plain
-        // standard corpus + dataset → the streamed store's merge (the
-        // same frame the dashboard quality panel serves); any other
-        // corpus → the one-shot partials+merge in-plan (provably equal
-        // by the ST11 oracle)
-        if (plainDocuments && dataset.isDefined)
-          graft.streaming.Streams.queries("stream_quality_store")(spark, dataset.get)
-        else graft.llm.TextOps.qualityMergeFrom(
-          graft.llm.TextOps.qualityPartialsOf(docs))
-      case "canonical" =>
-        // plain standard corpus + a dataset dir → probe the stored pair
-        // graph (the same tables dedup_canonical reads); anything else
-        // rebuilds the pair chain in-plan
-        if (plainDocuments && dataset.isDefined)
-          graft.llm.Dedup.queries("dedup_canonical")(spark, dataset.get)
-        else graft.llm.Dedup.canonicalOf(docs)
-      case "topic_mix" =>
-        // store routing mirrors the kNN readouts, but the corpus here is
-        // DOCUMENTS-shaped (the thing being mixed); the topic assignment
-        // comes from the stored quantizer when the service has a dataset
-        // dir, else from an in-plan quantizer over the embeddings table
-        val alpha = opt(c, "alpha").map(_.asDouble()).getOrElse(0.5)
-        if (plainDocuments && defaultKnobs && alpha == 0.5 && dataset.isDefined)
-          graft.llm.Similarity.textTopicMix(spark, dataset.get)
-        else graft.llm.Similarity.topicMixOf(docs,
-          graft.llm.Similarity.ivfIndexOf(tables("embeddings"),
-            nlistKnob())._4, alpha)
-      // r16 additions: keyword search + retrieval chunking over the
-      // documents shape; funnel / transition / z-order layout analytics
-      // over the events shape — same library entry points the driver
-      // keys pin, so the jx surface shares their oracles verbatim
-      case "inverted_index" => graft.llm.TextOps.invertedIndexOf(docs)
-      case "bm25" => graft.llm.TextOps.bm25Of(docs)
-      case "chunks" => graft.llm.TextOps.chunkHashesOf(docs)
-      case "funnel" => graft.etl.Transforms.funnelOf(docs)
-      case "sessions" => graft.etl.Transforms.sessionsOf(docs)
-      case "transitions" => graft.etl.Transforms.transitionsOf(docs)
-      case "zorder" => graft.etl.Transforms.zorderOf(docs)
-      case "hybrid_search" =>
-        graft.llm.Similarity.hybridSearchOf(docs, tables("embeddings"))
-      // forget-propagation (T13b–T13e): plain standard corpus + dataset →
-      // probe the FORGOTTEN stores (the same tables the driver keys
-      // read); otherwise derive in-plan from the corpus — which is the
-      // rebuild-from-purged the store gate pins equal
-      case "forget_pairs" =>
-        if (plainDocuments && dataset.isDefined)
-          graft.llm.Forget.dedupForgetPairs(spark, dataset.get)
-        else graft.llm.Forget.forgetPairsOf(docs)
-      case "forget_clusters" =>
-        if (plainDocuments && dataset.isDefined)
-          graft.llm.Forget.dedupForgetClusters(spark, dataset.get)
-        else graft.llm.Forget.forgetClustersOf(docs)
-      case "forget_ivf" => storeDir match {
-        case Some(dd) => graft.llm.Forget.simForgetIvf(spark, dd)
-        case None     => graft.llm.Forget.forgetIvfOf(docs)
-      }
-      case "forget_dict" =>
-        if (plainDocuments && dataset.isDefined)
-          graft.llm.Forget.textForgetDict(spark, dataset.get)
-        else graft.llm.Forget.forgetDictOf(docs)
-      case "forget_payload" =>
-        if (plainDocuments && dataset.isDefined)
-          graft.llm.Forget.mmForgetPairs(spark, dataset.get)
-        else graft.llm.Forget.forgetPayloadPairsOf(docs)
-      case "forget_knn" => storeDir match {
-        case Some(dd) => graft.llm.Forget.simForgetKnn(spark, dd)
-        case None     => graft.llm.Forget.forgetKnnOf(docs)
-      }
-      // T13h–T13k twins: same store-probing contract as the family above
-      case "forget_canonical" =>
-        if (plainDocuments && dataset.isDefined)
-          graft.llm.Forget.dedupForgetCanonical(spark, dataset.get)
-        else graft.llm.Forget.forgetCanonicalOf(docs)
-      case "forget_manifest" =>
-        if (plainDocuments && dataset.isDefined)
-          graft.llm.Forget.textForgetManifest(spark, dataset.get)
-        else graft.llm.Forget.forgetManifestOf(docs)
-      case "forget_novelty" =>
-        if (plainDocuments && dataset.isDefined)
-          graft.llm.Forget.textForgetNovelty(spark, dataset.get)
-        else graft.llm.Forget.forgetNoveltyOf(docs)
-      case "forget_sq8" => storeDir match {
-        case Some(dd) => graft.llm.Forget.simForgetSq8(spark, dd)
-        case None     => graft.llm.Forget.forgetSq8Of(docs)
-      }
-      // T13l/T13m twins: the subtract-patched line store (documents
-      // domain) and the day-reprocessed sketch store (EVENTS domain —
-      // user-keyed tombstones, so the route tests the corpus shape
-      // against the raw events table)
-      case "forget_lines" =>
-        if (plainDocuments && dataset.isDefined)
-          graft.llm.Forget.textForgetLines(spark, dataset.get)
-        else graft.llm.Forget.forgetLinesOf(docs)
-      case "forget_sketch" =>
-        if (plainEvents && dataset.isDefined)
-          graft.llm.Forget.aggForgetSketch(spark, dataset.get)
-        else graft.llm.Forget.forgetSketchOf(docs)
-      // T13n: the audit is BY DEFINITION over the dataset-backed stored
-      // artifacts — there is no in-plan fallback to audit
-      case "forget_audit" =>
-        if (plainDocuments && dataset.isDefined)
-          graft.llm.Forget.etlForgetAudit(spark, dataset.get)
-        else throw new IllegalArgumentException(
-          "forget_audit audits the dataset-backed STORED artifacts; " +
-            "run it with a dataset and the plain documents corpus")
-      case other =>
-        throw new IllegalArgumentException(s"unknown corpus_op: $other")
+      tables: String => DataFrame, dataset: Option[String]): DataFrame = {
+    val name = req(c, "op").asText()
+    val op = corpusOps.getOrElse(name,
+      throw new IllegalArgumentException(s"unknown corpus_op: $name"))
+    val call = new Call(spark, c, runNode(spark, req(c, "corpus"), tables, dataset), tables)
+    (storedRoute(c, dataset), op.inPlan) match {
+      case (Some(d), _) => op.stored.get(call, d)
+      case (None, Some(build)) => build(call)
+      case (None, None) => throw new IllegalArgumentException(
+        s"$name reads the dataset's stored artifacts; run it with a dataset " +
+          s"and the plain ${op.from} corpus")
     }
+  }
+
+  /** The store-or-rebuild decision: the dataset dir to read the op's
+    * stored twin from, or None to build in-plan. The twin answers only
+    * the request it was built for: the corpus is exactly {"from": <the
+    * twin's table>}, a dataset was given, and every build knob is absent
+    * or at its build value. A session then reuses the stored keys'
+    * build-once tables instead of rebuilding quantizer, graph or pair
+    * chain per query. */
+  private[jx] def storedRoute(c: JsonNode, dataset: Option[String]): Option[String] = {
+    val op = corpusOps(req(c, "op").asText())
+    val corpus = req(c, "corpus")
+    val knobs = new Knobs(c)
+    dataset.filter(_ => op.stored.isDefined &&
+      corpus.isObject && corpus.size() == 1 &&
+      opt(corpus, "from").exists(f => f.isTextual && f.asText() == op.from) &&
+      op.build.forall { case (k, v) => knobs.read(k, v) == v })
+  }
+
+  /** Typed knob readers over a corpus_op spec: a knob of the wrong JSON
+    * type is an IllegalArgumentException naming it, never a silent 0. */
+  private[jx] class Knobs(c: JsonNode) {
+    private def knob[A](name: String, default: A, ok: JsonNode => Boolean,
+        read: JsonNode => A): A = opt(c, name).map { n =>
+      if (!ok(n)) throw new IllegalArgumentException(
+        s"corpus_op knob '$name' has the wrong JSON type: $n")
+      read(n)
+    }.getOrElse(default)
+    def long(name: String, default: Long): Long =
+      knob(name, default, _.isIntegralNumber, _.asLong())
+    def int(name: String, default: Int): Int =
+      knob(name, default, _.isIntegralNumber, _.asInt())
+    def double(name: String, default: Double): Double =
+      knob(name, default, _.isNumber, _.asDouble())
+    def text(name: String, default: String): String =
+      knob(name, default, _.isTextual, _.asText())
+    /** `"auto"` selects the size-derived list count (the library default
+      * [[graft.llm.Similarity.AutoNlist]]); an integer pins it. */
+    def nlist(default: Int = 16): Int = knob("nlist", default,
+      n => n.isIntegralNumber || (n.isTextual && n.asText() == "auto"),
+      n => if (n.isTextual) graft.llm.Similarity.AutoNlist else n.asInt())
+    /** `name` read with the type of its build value `v`. */
+    def read(name: String, v: Any): Any = v match {
+      case b: Double => double(name, b)
+      case b: Int => if (name == "nlist") nlist(b) else int(name, b)
+    }
+  }
+
+  /** What a builder sees: the knobs, the session, the caller's table
+    * resolver and the corpus frame (compiled only if a builder reads it). */
+  private[jx] final class Call(val spark: SparkSession, c: JsonNode,
+      corpus: => DataFrame, val tables: String => DataFrame) extends Knobs(c) {
+    lazy val docs: DataFrame = corpus
+  }
+
+  /** One corpus_op: its in-plan builder (None for an op that exists only
+    * over stored data) and its optional stored twin, built once from the
+    * plain `from` table at the `build` knob values. */
+  private[jx] final case class CorpusOp(from: String, build: Seq[(String, Any)],
+      inPlan: Option[Call => DataFrame], stored: Option[(Call, String) => DataFrame])
+
+  private def op(inPlan: Call => DataFrame) = CorpusOp("", Nil, Some(inPlan), None)
+  private def on(inPlan: DataFrame => DataFrame) = op(c => inPlan(c.docs))
+  private def twin(from: String, build: (String, Any)*)(inPlan: Call => DataFrame)(
+      stored: (Call, String) => DataFrame) = CorpusOp(from, build, Some(inPlan), Some(stored))
+  private def probe(q: => Q): (Call, String) => DataFrame =
+    (c, d) => q(c.spark, d)
+  private def plainTwin(from: String, inPlan: DataFrame => DataFrame,
+      stored: => Q) = twin(from)(c => inPlan(c.docs))(probe(stored))
+  private def storeOnly(stored: => Q) = CorpusOp("documents", Nil, None, Some(probe(stored)))
+
+  /** Every corpus_op, by name. */
+  private[jx] lazy val corpusOps: Map[String, CorpusOp] = {
+    import graft.llm.{Dedup, Forget, Multimodal => MM, Similarity => Sim, TextOps => TO}
+    import graft.streaming.Streams
+    import graft.etl.Transforms
+    val knn = Seq("nlist" -> 16, "k" -> 3)
+    def budgeted(f: (DataFrame, Long, Long, Long) => DataFrame) = op(c => f(c.docs,
+      c.long("budget_pct", 200L), c.long("max_epochs", 4L), c.long("n_shards", 8L)))
+    def tauTwin(of: (DataFrame, Int, Double) => DataFrame,
+        stored: (SparkSession, String, Double) => DataFrame) =
+      twin("embeddings", "nlist" -> 16)(c => of(c.docs, c.nlist(), c.double("tau", 0.35)))(
+        (c, d) => stored(c.spark, d, c.double("tau", 0.35)))
+    def knnTwin(of: (DataFrame, Int, Int) => DataFrame, stored: => Q) =
+      twin("embeddings", knn: _*)(c => of(c.docs, c.nlist(), c.int("k", 3)))(probe(stored))
+    def payloadTwin(of: (DataFrame, Int, Double) => DataFrame, key: String) =
+      twin("documents", "nlist" -> 16, "tau" -> 0.999)(c =>
+        of(c.docs, c.nlist(), c.double("tau", 0.999)))(probe(MM.queries(key)))
+    // the streamed quality monitor keeps the exact per-source token sums
+    // the schedulers plan from, so the stored twins scan no corpus
+    def tokenSums(c: Call, d: String) =
+      Streams.queries("stream_quality_store")(c.spark, d)
+        .select(col("source"), col("n_tokens").as("n_tok"), col("n_docs"))
+    Map(
+      "quality_gate" -> on(TO.qualityFilterOf(_)),
+      "payload_quality" -> on(MM.qualityReport(_)),
+      "payload_pack_manifest" -> op(c => TO.packMergeFrom(
+        MM.mmPackPartialsOf(c.docs, nShards = c.long("n_shards", 8L)),
+        ctx = c.long("ctx", 2048L))),
+      "payload_pack" -> op(c => MM.mmPackOf(c.docs, ctx = c.long("ctx", 2048L),
+        nShards = c.long("n_shards", 8L)).orderBy("doc_id").limit(300)),
+      "payload_pack_tuning" -> op(c =>
+        MM.mmPackTuningOf(c.docs, nShards = c.long("n_shards", 8L))),
+      "payload_dedup" -> plainTwin("documents", MM.dedupPairsOf(_), MM.queries("mm_dedup")),
+      "payload_semantic_dedup" -> payloadTwin(MM.semanticDedupOfDocs(_, _, _), "mm_semantic_dedup"),
+      "payload_knn" -> twin("documents", "nlist" -> 16)(c =>
+        MM.knnOfDocs(c.docs, nlist = c.nlist()))(probe(MM.queries("mm_knn"))),
+      // the text tower is the standard embeddings table
+      "payload_align" -> twin("documents")(c => MM.textAlignOfDocs(c.docs,
+        resolveFrom("embeddings", c.tables)))(probe(MM.queries("mm_text_align"))),
+      "payload_semantic_decon" -> payloadTwin(MM.semanticDeconOfDocs(_, _, _), "mm_semantic_decon"),
+      "payload_decon_report" -> payloadTwin(MM.deconReportOfDocs(_, _, _), "mm_decon_report"),
+      "source_kl" -> on(TO.sourceKlOf(_)),
+      "mix_schedule" -> twin("documents")(c => TO.mixScheduleOf(c.docs,
+        c.long("budget_pct", 200L), c.long("max_epochs", 4L)))((c, d) =>
+        TO.mixScheduleFromTok(tokenSums(c, d).drop("n_docs"),
+          c.long("budget_pct", 200L), c.long("max_epochs", 4L))),
+      "anneal_order" -> op(c => TO.annealOrderOf(c.docs,
+        bulkPct = c.long("bulk_pct", 160L), annealPct = c.long("anneal_pct", 40L),
+        maxEpochs = c.long("max_epochs", 4L), nShards = c.long("n_shards", 8L))),
+      "curriculum_order" -> budgeted(TO.curriculumOrderOf),
+      "train_order" -> budgeted(TO.trainOrderOf),
+      "order_audit" -> budgeted(TO.orderAuditOf),
+      "epoch_budget" -> budgeted(TO.epochBudgetOf),
+      "pack_tuning" -> op(c => TO.packTuningOf(c.docs, nShards = c.long("n_shards", 8L))),
+      // the stored twin scores against the frozen bigram LM (the tables
+      // the streamed score store probes) instead of training one
+      "ppl_buckets" -> twin("documents")(c => TO.pplBucketsOf(c.docs)) { (c, d) =>
+        val (ab, ctx, v) = TO.bigramLmStored(c.spark, d)
+        TO.pplTiersFrom(TO.bigramNllAgainstLm(c.docs, ab, ctx, v))
+      },
+      // the card's dup and decon columns need the stored pair-graph and
+      // bench conventions, so it is defined over the standard dataset only
+      "dataset_card" -> storeOnly(TO.queries("text_dataset_card")),
+      // two monitors, one planner: the classifier monitor adds the exact
+      // pass counts the anneal phase plans from
+      "anneal_schedule" -> twin("documents")(c => TO.annealScheduleOf(c.docs,
+        c.long("bulk_pct", 160L), c.long("anneal_pct", 40L), c.long("max_epochs", 4L)))(
+        (c, d) => TO.annealScheduleFromParts(tokenSums(c, d).join(
+          Streams.queries("stream_classifier_store")(c.spark, d)
+            .select(col("source"), col("n_sel")), Seq("source")),
+          c.long("bulk_pct", 160L), c.long("anneal_pct", 40L), c.long("max_epochs", 4L))),
+      "novelty" -> on(TO.ngramNoveltyOf(_)),
+      "rule_filter" -> on(TO.ruleFilterOf(_)),
+      "rule_profile" -> on(TO.ruleProfileOf(_)),
+      "line_dedup" -> on(TO.lineDedupOf(_)),
+      "secret_scan" -> on(TO.secretScanOf(_)),
+      "hygiene_report" -> on(TO.hygieneReportOf(_)),
+      "novelty_curve" -> on(TO.noveltyCurveOf(_)),
+      "novelty_sources" -> on(TO.noveltySourcesOf(_)),
+      "soft_sample" -> plainTwin("documents", Dedup.sampleSoftOf(_),
+        Dedup.queries("sample_soft_dedup")),
+      "threshold_tuning" -> plainTwin("documents", Dedup.thresholdTuningOf(_),
+        Dedup.queries("dedup_threshold_tuning")),
+      "reweight" -> plainTwin("documents", Dedup.reweightOf(_), Dedup.queries("dedup_reweight")),
+      "split_stratified" -> plainTwin("documents", Dedup.splitStratifiedOf(_),
+        Dedup.queries("dedup_split_stratified")),
+      "split_leakfree" -> plainTwin("documents", Dedup.splitLeakfreeOf(_),
+        Dedup.queries("dedup_split_leakfree")),
+      "quality_classifier" -> on(TO.qualityClassifierOf(_)),
+      "quality_calibration" -> on(TO.qualityCalibrationOf(_)),
+      "quality_ensemble" -> on(TO.qualityEnsembleOf(_)),
+      // in-plan, the BPE vocabulary is trained from the corpus subquery itself
+      "fertility" -> plainTwin("documents",
+        d => TO.fertilityOf(d, TO.fertilityVocabOf(d)), TO.queries("text_fertility")),
+      "knn_join" -> twin("embeddings", "nlist" -> 16)(c =>
+        Sim.knnJoinOf(c.docs, c.nlist()))(probe(Sim.queries("sim_knn_join"))),
+      "probe_tuning" -> twin("embeddings", "nlist" -> 16)(c =>
+        Sim.probeTuningOf(c.docs, c.nlist()))(probe(Sim.queries("sim_probe_tuning"))),
+      "sq8" -> plainTwin("embeddings", Sim.sq8TopkOf(_), Sim.queries("sim_sq8")),
+      "token_budget" -> op(c =>
+        TO.tokenBudgetOf(c.docs, c.long("quota", 300L), c.long("shards", 4L))),
+      "bpe_merges" -> op(c => TO.bpeMergesOf(c.docs, c.int("merges", 3))),
+      "semantic_dedup" -> tauTwin(Sim.semanticDedupOf, Sim.semanticDedupStored),
+      "decon_recall" -> tauTwin(Sim.deconRecallOf, Sim.deconRecallStored),
+      "decon_report" -> tauTwin(Sim.deconReportOf, Sim.deconReportStored),
+      "semantic_decon" -> tauTwin(Sim.semanticDeconOf, Sim.semanticDeconStored),
+      "overlap" -> op(c => Dedup.corpusOverlapOf(c.docs, c.int("k", 128))),
+      "dsir" -> op(c => TO.dsirOf(c.docs, c.text("target_lang", "en"), c.int("buckets", 128))),
+      "shard_manifest" -> op(c => TO.shardManifest(c.docs, c.int("shards", 16))),
+      "pack_manifest" -> op(c =>
+        TO.packManifest(c.docs, c.long("context", 2048L), c.long("shards", 8L))),
+      "knn_diverse" -> twin("embeddings", knn: _*)(c => Sim.knnDiverseOf(c.docs,
+        c.int("m", 2), c.nlist(), c.int("k", 3)))((c, d) =>
+        Sim.knnDiverseStored(c.spark, d, c.int("m", 2))),
+      "knn_clusters" -> knnTwin(Sim.knnClustersOf, Sim.knnClustersStored),
+      "knn_stats" -> knnTwin(Sim.knnStatsOf, Sim.knnStatsStored),
+      "knn_recall" -> knnTwin(Sim.knnRecallOf, Sim.knnRecallStored),
+      "knn_centrality" -> knnTwin(Sim.knnCentralityOf, Sim.knnCentralityStored),
+      "knn_coreset" -> twin("embeddings", knn: _*)(c => Sim.knnCoresetOf(c.docs,
+        c.int("m", 2), c.nlist(), c.int("k", 3)))((c, d) =>
+        Sim.knnCoresetStored(c.spark, d, c.int("m", 2))),
+      "quantizer_refresh" -> twin("embeddings", "nlist" -> 16)(c =>
+        Sim.quantizerRefreshOf(c.docs, c.nlist()))(probe(Sim.quantizerRefreshStored)),
+      "ivf_delta" -> op(c => Sim.ivfDeltaOf(c.docs, c.nlist(32))),
+      // the even/odd split is the dedup_pairs_delta key's own split;
+      // the delta's exactness claim does not depend on the corpus
+      "pairs_delta" -> on(d => Dedup.pairsDeltaOf(d.filter(col("doc_id") % 2 === 0),
+        d.filter(col("doc_id") % 2 =!= 0)).orderBy(desc("jaccard"), asc("da"), asc("db"))),
+      // the report summarizes the stored decision sets (pair-graph drop
+      // list, quality monitor); a corpus subquery has none to summarize
+      "curation_report" -> storeOnly(TO.queries("text_curation_report")),
+      "dedup_profile" -> plainTwin("documents", Dedup.dedupProfileOf(_),
+        Dedup.queries("dedup_profile")),
+      "pair_centrality" -> plainTwin("documents", Dedup.pairCentralityOf(_),
+        Dedup.queries("dedup_centrality")),
+      "quality_monitor" -> plainTwin("documents",
+        d => TO.qualityMergeFrom(TO.qualityPartialsOf(d)),
+        Streams.queries("stream_quality_store")),
+      "canonical" -> plainTwin("documents", Dedup.canonicalOf(_), Dedup.queries("dedup_canonical")),
+      // the corpus is the documents being mixed; the topics come from a
+      // quantizer over the embeddings table
+      "topic_mix" -> twin("documents", "nlist" -> 16, "alpha" -> 0.5)(c =>
+        Sim.topicMixOf(c.docs, Sim.ivfIndexOf(c.tables("embeddings"), c.nlist())._4,
+          c.double("alpha", 0.5)))(probe(Sim.textTopicMix)),
+      "inverted_index" -> on(TO.invertedIndexOf(_)),
+      "bm25" -> on(TO.bm25Of(_)),
+      "chunks" -> on(TO.chunkHashesOf(_)),
+      "funnel" -> on(Transforms.funnelOf(_)),
+      "sessions" -> on(Transforms.sessionsOf(_)),
+      "transitions" -> on(Transforms.transitionsOf(_)),
+      "zorder" -> on(Transforms.zorderOf(_)),
+      "hybrid_search" -> op(c => Sim.hybridSearchOf(c.docs, c.tables("embeddings"))),
+      // forget propagation: the stored twins are the FORGOTTEN stores, and
+      // the in-plan builders are the rebuild-from-purged the store gate
+      // pins equal to them
+      "forget_pairs" -> plainTwin("documents", Forget.forgetPairsOf(_), Forget.dedupForgetPairs),
+      "forget_clusters" -> plainTwin("documents", Forget.forgetClustersOf(_),
+        Forget.dedupForgetClusters),
+      "forget_ivf" -> plainTwin("embeddings", Forget.forgetIvfOf(_), Forget.simForgetIvf),
+      "forget_dict" -> plainTwin("documents", Forget.forgetDictOf(_), Forget.textForgetDict),
+      "forget_payload" -> plainTwin("documents", Forget.forgetPayloadPairsOf(_),
+        Forget.mmForgetPairs),
+      "forget_knn" -> plainTwin("embeddings", Forget.forgetKnnOf(_), Forget.simForgetKnn),
+      "forget_canonical" -> plainTwin("documents", Forget.forgetCanonicalOf(_),
+        Forget.dedupForgetCanonical),
+      "forget_manifest" -> plainTwin("documents", Forget.forgetManifestOf(_),
+        Forget.textForgetManifest),
+      "forget_novelty" -> plainTwin("documents", Forget.forgetNoveltyOf(_),
+        Forget.textForgetNovelty),
+      "forget_sq8" -> plainTwin("embeddings", Forget.forgetSq8Of(_), Forget.simForgetSq8),
+      "forget_lines" -> plainTwin("documents", Forget.forgetLinesOf(_), Forget.textForgetLines),
+      // tombstones are user-keyed, so the sketch store's twin is the events table
+      "forget_sketch" -> plainTwin("events", Forget.forgetSketchOf(_), Forget.aggForgetSketch),
+      // the audit is over the stored artifacts by definition
+      "forget_audit" -> storeOnly(Forget.etlForgetAudit))
   }
 
   private def resolveFrom(name: String, tables: String => DataFrame): DataFrame = {

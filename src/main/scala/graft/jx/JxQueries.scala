@@ -597,210 +597,132 @@ object JxQueries {
       .orderBy("event_type")
   }
 
+  /** A key whose result is the jx query `json` over the standard tables;
+    * `withDataset` also hands [[Jx.run]] the dataset dir, so corpus ops
+    * may read their stored twins. */
+  private def jx(json: String, withDataset: Boolean = false): Q =
+    (s, d) => Jx.run(s, json, name => t(s, d, name), Some(d).filter(_ => withDataset))
+
   val queries: Map[String, Q] = Map(
     "jx_sketch" -> jxSketch,
     "jx_meta_columns" -> jxMetaColumns,
-    "jx_ops_expr" -> ((s, d) => Jx.run(s, opsExprJson, name => t(s, d, name))),
-    "jx_percentile" -> ((s, d) => Jx.run(s, percentileJson, name => t(s, d, name))),
-    "jx_nested_from" -> ((s, d) => Jx.run(s, nestedFromJson, name => t(s, d, name))),
-    "jx_math" -> ((s, d) => Jx.run(s, mathJson, name => t(s, d, name))),
-    "jx_edges_topn" -> ((s, d) => Jx.run(s, edgesTopnJson, name => t(s, d, name))),
-    "jx_edges_expr" -> ((s, d) => Jx.run(s, edgesExprJson, name => t(s, d, name))),
-    "jx_select_expr" -> ((s, d) => Jx.run(s, selectExprJson, name => t(s, d, name))),
+    "jx_ops_expr" -> jx(opsExprJson),
+    "jx_percentile" -> jx(percentileJson),
+    "jx_nested_from" -> jx(nestedFromJson),
+    "jx_math" -> jx(mathJson),
+    "jx_edges_topn" -> jx(edgesTopnJson),
+    "jx_edges_expr" -> jx(edgesExprJson),
+    "jx_select_expr" -> jx(selectExprJson),
     "jx_deepfrom" -> ((s, d) => {
       val nested = t(s, d, "events").groupBy("user_id")
         .agg(org.apache.spark.sql.functions.collect_list(
           org.apache.spark.sql.functions.struct("event_id", "event_type", "value")).as("evs"))
       Jx.run(s, deepJson, { case "sessions" => nested })
     }),
-    "jx_global" -> ((s, d) => Jx.run(s, globalJson, name => t(s, d, name))),
-    "jx_groupby" -> ((s, d) => Jx.run(s, groupbyJson, name => t(s, d, name))),
-    "jx_edges" -> ((s, d) => Jx.run(s, edgesJson, name => t(s, d, name))),
-    "jx_range" -> ((s, d) => Jx.run(s, rangeJson, name => t(s, d, name))),
-    "jx_duration" -> ((s, d) => Jx.run(s, durationJson, name => t(s, d, name))),
-    "jx_window" -> ((s, d) => Jx.run(s, windowJson, name => t(s, d, name))),
-    "jx_window_edges" -> ((s, d) => Jx.run(s, windowEdgesJson, name => t(s, d, name))),
-    "jx_pipeline" -> ((s, d) => Jx.run(s, pipelineJson, name => t(s, d, name))),
-    "jx_release" -> ((s, d) => Jx.run(s, releaseJson, name => t(s, d, name), Some(d))),
-    "jx_order" -> ((s, d) => Jx.run(s, orderJson, name => t(s, d, name), Some(d))),
-    "jx_pipeline_ensemble" ->
-      ((s, d) => Jx.run(s, pipelineEnsembleJson, name => t(s, d, name))),
-    "jx_pipeline_tiered" ->
-      ((s, d) => Jx.run(s, pipelineTieredJson, name => t(s, d, name))),
-    "jx_pipeline_rules" ->
-      ((s, d) => Jx.run(s, pipelineRulesJson, name => t(s, d, name))),
-    "jx_quality_gate" -> ((s, d) => Jx.run(s, qualityGateJson, name => t(s, d, name))),
-    "jx_payload_quality" ->
-      ((s, d) => Jx.run(s, payloadQualityJson, name => t(s, d, name))),
-    "jx_payload_dedup" ->
-      ((s, d) => Jx.run(s, payloadDedupJson, name => t(s, d, name), Some(d))),
-    "jx_payload_semantic_dedup" ->
-      ((s, d) => Jx.run(s, payloadSemanticDedupJson, name => t(s, d, name), Some(d))),
-    "jx_payload_knn" ->
-      ((s, d) => Jx.run(s, payloadKnnJson, name => t(s, d, name), Some(d))),
-    "jx_payload_align" ->
-      ((s, d) => Jx.run(s, payloadAlignJson, name => t(s, d, name), Some(d))),
-    "jx_payload_semantic_decon" ->
-      ((s, d) => Jx.run(s, payloadSemanticDeconJson, name => t(s, d, name), Some(d))),
-    "jx_payload_decon_report" ->
-      ((s, d) => Jx.run(s, payloadDeconReportJson, name => t(s, d, name), Some(d))),
-    "jx_source_kl" -> ((s, d) => Jx.run(s, sourceKlJson, name => t(s, d, name))),
-    "jx_mix_schedule" ->
-      ((s, d) => Jx.run(s, mixScheduleJson, name => t(s, d, name))),
-    "jx_train_order" ->
-      ((s, d) => Jx.run(s, trainOrderJson, name => t(s, d, name))),
-    "jx_order_audit" ->
-      ((s, d) => Jx.run(s, orderAuditJson, name => t(s, d, name))),
-    "jx_epoch_budget" ->
-      ((s, d) => Jx.run(s, epochBudgetJson, name => t(s, d, name))),
-    "jx_pack_tuning" ->
-      ((s, d) => Jx.run(s, packTuningJson, name => t(s, d, name))),
-    "jx_payload_tuning" ->
-      ((s, d) => Jx.run(s, payloadTuningJson, name => t(s, d, name))),
-    "jx_ppl_buckets" ->
-      ((s, d) => Jx.run(s, pplBucketsJson, name => t(s, d, name), Some(d))),
-    "jx_quality_calibration" ->
-      ((s, d) => Jx.run(s, qualityCalibrationJson, name => t(s, d, name))),
-    "jx_anneal_order" ->
-      ((s, d) => Jx.run(s, annealOrderJson, name => t(s, d, name))),
-    "jx_curriculum_order" ->
-      ((s, d) => Jx.run(s, curriculumOrderJson, name => t(s, d, name))),
-    "jx_payload_pack" ->
-      ((s, d) => Jx.run(s, payloadPackJson, name => t(s, d, name))),
-    "jx_payload_manifest" ->
-      ((s, d) => Jx.run(s, payloadManifestJson, name => t(s, d, name))),
+    "jx_global" -> jx(globalJson),
+    "jx_groupby" -> jx(groupbyJson),
+    "jx_edges" -> jx(edgesJson),
+    "jx_range" -> jx(rangeJson),
+    "jx_duration" -> jx(durationJson),
+    "jx_window" -> jx(windowJson),
+    "jx_window_edges" -> jx(windowEdgesJson),
+    "jx_pipeline" -> jx(pipelineJson),
+    "jx_release" -> jx(releaseJson, withDataset = true),
+    "jx_order" -> jx(orderJson, withDataset = true),
+    "jx_pipeline_ensemble" -> jx(pipelineEnsembleJson),
+    "jx_pipeline_tiered" -> jx(pipelineTieredJson),
+    "jx_pipeline_rules" -> jx(pipelineRulesJson),
+    "jx_quality_gate" -> jx(qualityGateJson),
+    "jx_payload_quality" -> jx(payloadQualityJson),
+    "jx_payload_dedup" -> jx(payloadDedupJson, withDataset = true),
+    "jx_payload_semantic_dedup" -> jx(payloadSemanticDedupJson, withDataset = true),
+    "jx_payload_knn" -> jx(payloadKnnJson, withDataset = true),
+    "jx_payload_align" -> jx(payloadAlignJson, withDataset = true),
+    "jx_payload_semantic_decon" -> jx(payloadSemanticDeconJson, withDataset = true),
+    "jx_payload_decon_report" -> jx(payloadDeconReportJson, withDataset = true),
+    "jx_source_kl" -> jx(sourceKlJson),
+    "jx_mix_schedule" -> jx(mixScheduleJson),
+    "jx_train_order" -> jx(trainOrderJson),
+    "jx_order_audit" -> jx(orderAuditJson),
+    "jx_epoch_budget" -> jx(epochBudgetJson),
+    "jx_pack_tuning" -> jx(packTuningJson),
+    "jx_payload_tuning" -> jx(payloadTuningJson),
+    "jx_ppl_buckets" -> jx(pplBucketsJson, withDataset = true),
+    "jx_quality_calibration" -> jx(qualityCalibrationJson),
+    "jx_anneal_order" -> jx(annealOrderJson),
+    "jx_curriculum_order" -> jx(curriculumOrderJson),
+    "jx_payload_pack" -> jx(payloadPackJson),
+    "jx_payload_manifest" -> jx(payloadManifestJson),
     // dataset-backed: the anneal plan probes the quality + classifier
     // monitors (no corpus scan) — gated by the full corpus-scan oracle,
     // so store == recompute is proven per-row
-    "jx_anneal" ->
-      ((s, d) => Jx.run(s, annealJson, name => t(s, d, name), Some(d))),
-    "jx_dataset_card" ->
-      ((s, d) => Jx.run(s, datasetCardJson, name => t(s, d, name), Some(d))),
-    "jx_quality_ensemble" ->
-      ((s, d) => Jx.run(s, qualityEnsembleJson, name => t(s, d, name))),
-    "jx_sq8" -> ((s, d) => Jx.run(s, sq8Json, name => t(s, d, name), Some(d))),
-    "jx_novelty" -> ((s, d) => Jx.run(s, noveltyJson, name => t(s, d, name))),
-    "jx_rule_filter" ->
-      ((s, d) => Jx.run(s, ruleFilterJson, name => t(s, d, name))),
-    "jx_rule_profile" ->
-      ((s, d) => Jx.run(s, ruleProfileJson, name => t(s, d, name))),
-    "jx_line_dedup" ->
-      ((s, d) => Jx.run(s, lineDedupJson, name => t(s, d, name))),
-    "jx_secret_scan" ->
-      ((s, d) => Jx.run(s, secretScanJson, name => t(s, d, name))),
-    "jx_inverted_index" ->
-      ((s, d) => Jx.run(s, invertedIndexJson, name => t(s, d, name))),
-    "jx_bm25" ->
-      ((s, d) => Jx.run(s, bm25Json, name => t(s, d, name))),
-    "jx_chunks" ->
-      ((s, d) => Jx.run(s, chunksJson, name => t(s, d, name))),
-    "jx_funnel" ->
-      ((s, d) => Jx.run(s, funnelJson, name => t(s, d, name))),
-    "jx_sessions" ->
-      ((s, d) => Jx.run(s, sessionsJson, name => t(s, d, name))),
-    "jx_transitions" ->
-      ((s, d) => Jx.run(s, transitionsJson, name => t(s, d, name))),
-    "jx_zorder" ->
-      ((s, d) => Jx.run(s, zorderJson, name => t(s, d, name))),
-    "jx_forget_pairs" ->
-      ((s, d) => Jx.run(s, forgetPairsJson, name => t(s, d, name), Some(d))),
-    "jx_forget_clusters" ->
-      ((s, d) => Jx.run(s, forgetClustersJson, name => t(s, d, name), Some(d))),
-    "jx_forget_ivf" ->
-      ((s, d) => Jx.run(s, forgetIvfJson, name => t(s, d, name), Some(d))),
-    "jx_forget_dict" ->
-      ((s, d) => Jx.run(s, forgetDictJson, name => t(s, d, name), Some(d))),
-    "jx_forget_payload" ->
-      ((s, d) => Jx.run(s, forgetPayloadJson, name => t(s, d, name), Some(d))),
-    "jx_forget_knn" ->
-      ((s, d) => Jx.run(s, forgetKnnJson, name => t(s, d, name), Some(d))),
-    "jx_forget_canonical" ->
-      ((s, d) => Jx.run(s, forgetCanonicalJson, name => t(s, d, name), Some(d))),
-    "jx_forget_manifest" ->
-      ((s, d) => Jx.run(s, forgetManifestJson, name => t(s, d, name), Some(d))),
-    "jx_forget_novelty" ->
-      ((s, d) => Jx.run(s, forgetNoveltyJson, name => t(s, d, name), Some(d))),
-    "jx_forget_sq8" ->
-      ((s, d) => Jx.run(s, forgetSq8Json, name => t(s, d, name), Some(d))),
-    "jx_forget_release" ->
-      ((s, d) => Jx.run(s, forgetReleaseJson, name => t(s, d, name), Some(d))),
-    "jx_forget_lines" ->
-      ((s, d) => Jx.run(s, forgetLinesJson, name => t(s, d, name), Some(d))),
-    "jx_forget_sketch" ->
-      ((s, d) => Jx.run(s, forgetSketchJson, name => t(s, d, name), Some(d))),
-    "jx_forget_audit" ->
-      ((s, d) => Jx.run(s, forgetAuditJson, name => t(s, d, name), Some(d))),
-    "jx_hybrid" ->
-      ((s, d) => Jx.run(s, hybridJson, name => t(s, d, name))),
-    "jx_reweight" ->
-      ((s, d) => Jx.run(s, reweightJson, name => t(s, d, name))),
-    "jx_split_stratified" ->
-      ((s, d) => Jx.run(s, splitStratifiedJson, name => t(s, d, name))),
-    "jx_threshold_tuning" ->
-      ((s, d) => Jx.run(s, thresholdTuningJson, name => t(s, d, name))),
-    "jx_soft_sample" ->
-      ((s, d) => Jx.run(s, softSampleJson, name => t(s, d, name))),
-    "jx_mode" -> ((s, d) => Jx.run(s, modeJson, name => t(s, d, name))),
-    "jx_hygiene_report" ->
-      ((s, d) => Jx.run(s, hygieneReportJson, name => t(s, d, name))),
-    "jx_novelty_curve" ->
-      ((s, d) => Jx.run(s, noveltyCurveJson, name => t(s, d, name))),
-    "jx_quality_classifier" ->
-      ((s, d) => Jx.run(s, qualityClassifierJson, name => t(s, d, name))),
-    "jx_novelty_sources" ->
-      ((s, d) => Jx.run(s, noveltySourcesJson, name => t(s, d, name))),
-    "jx_split_leakfree" ->
-      ((s, d) => Jx.run(s, splitLeakfreeJson, name => t(s, d, name), Some(d))),
-    "jx_fertility" ->
-      ((s, d) => Jx.run(s, fertilityJson, name => t(s, d, name), Some(d))),
-    "jx_knn_join" ->
-      ((s, d) => Jx.run(s, knnJoinJson, name => t(s, d, name), Some(d))),
-    "jx_probe_tuning" ->
-      ((s, d) => Jx.run(s, probeTuningJson, name => t(s, d, name), Some(d))),
-    "jx_semantic_dedup" ->
-      ((s, d) => Jx.run(s, semanticDedupJson, name => t(s, d, name), Some(d))),
-    "jx_semantic_decon" ->
-      ((s, d) => Jx.run(s, semanticDeconJson, name => t(s, d, name), Some(d))),
-    "jx_decon_report" ->
-      ((s, d) => Jx.run(s, deconReportJson, name => t(s, d, name), Some(d))),
-    "jx_dedup_profile" ->
-      ((s, d) => Jx.run(s, dedupProfileJson, name => t(s, d, name), Some(d))),
-    "jx_decon_recall" ->
-      ((s, d) => Jx.run(s, deconRecallJson, name => t(s, d, name), Some(d))),
-    "jx_overlap" -> ((s, d) => Jx.run(s, overlapJson, name => t(s, d, name))),
-    "jx_dsir" -> ((s, d) => Jx.run(s, dsirJson, name => t(s, d, name))),
-    "jx_shard_manifest" ->
-      ((s, d) => Jx.run(s, shardManifestJson, name => t(s, d, name))),
-    "jx_knn_diverse" ->
-      ((s, d) => Jx.run(s, knnDiverseJson, name => t(s, d, name), Some(d))),
-    "jx_knn_clusters" ->
-      ((s, d) => Jx.run(s, knnClustersJson, name => t(s, d, name), Some(d))),
-    "jx_knn_stats" ->
-      ((s, d) => Jx.run(s, knnStatsJson, name => t(s, d, name), Some(d))),
-    "jx_pack_manifest" ->
-      ((s, d) => Jx.run(s, packManifestJson, name => t(s, d, name))),
-    "jx_knn_recall" ->
-      ((s, d) => Jx.run(s, knnRecallJson, name => t(s, d, name), Some(d))),
-    "jx_quantizer_refresh" ->
-      ((s, d) => Jx.run(s, quantizerRefreshJson, name => t(s, d, name), Some(d))),
-    "jx_ivf_delta" ->
-      ((s, d) => Jx.run(s, ivfDeltaJson, name => t(s, d, name))),
-    "jx_canonical" ->
-      ((s, d) => Jx.run(s, canonicalJson, name => t(s, d, name), Some(d))),
-    "jx_topic_mix" ->
-      ((s, d) => Jx.run(s, topicMixJson, name => t(s, d, name), Some(d))),
-    "jx_knn_centrality" ->
-      ((s, d) => Jx.run(s, knnCentralityJson, name => t(s, d, name), Some(d))),
-    "jx_knn_coreset" ->
-      ((s, d) => Jx.run(s, knnCoresetJson, name => t(s, d, name), Some(d))),
-    "jx_quality_monitor" ->
-      ((s, d) => Jx.run(s, qualityMonitorJson, name => t(s, d, name), Some(d))),
-    "jx_curation_report" ->
-      ((s, d) => Jx.run(s, curationReportJson, name => t(s, d, name), Some(d))),
-    "jx_pairs_delta" ->
-      ((s, d) => Jx.run(s, pairsDeltaJson, name => t(s, d, name))),
-    "jx_pair_centrality" ->
-      ((s, d) => Jx.run(s, pairCentralityJson, name => t(s, d, name), Some(d))))
+    "jx_anneal" -> jx(annealJson, withDataset = true),
+    "jx_dataset_card" -> jx(datasetCardJson, withDataset = true),
+    "jx_quality_ensemble" -> jx(qualityEnsembleJson),
+    "jx_sq8" -> jx(sq8Json, withDataset = true),
+    "jx_novelty" -> jx(noveltyJson),
+    "jx_rule_filter" -> jx(ruleFilterJson),
+    "jx_rule_profile" -> jx(ruleProfileJson),
+    "jx_line_dedup" -> jx(lineDedupJson),
+    "jx_secret_scan" -> jx(secretScanJson),
+    "jx_inverted_index" -> jx(invertedIndexJson),
+    "jx_bm25" -> jx(bm25Json),
+    "jx_chunks" -> jx(chunksJson),
+    "jx_funnel" -> jx(funnelJson),
+    "jx_sessions" -> jx(sessionsJson),
+    "jx_transitions" -> jx(transitionsJson),
+    "jx_zorder" -> jx(zorderJson),
+    "jx_forget_pairs" -> jx(forgetPairsJson, withDataset = true),
+    "jx_forget_clusters" -> jx(forgetClustersJson, withDataset = true),
+    "jx_forget_ivf" -> jx(forgetIvfJson, withDataset = true),
+    "jx_forget_dict" -> jx(forgetDictJson, withDataset = true),
+    "jx_forget_payload" -> jx(forgetPayloadJson, withDataset = true),
+    "jx_forget_knn" -> jx(forgetKnnJson, withDataset = true),
+    "jx_forget_canonical" -> jx(forgetCanonicalJson, withDataset = true),
+    "jx_forget_manifest" -> jx(forgetManifestJson, withDataset = true),
+    "jx_forget_novelty" -> jx(forgetNoveltyJson, withDataset = true),
+    "jx_forget_sq8" -> jx(forgetSq8Json, withDataset = true),
+    "jx_forget_release" -> jx(forgetReleaseJson, withDataset = true),
+    "jx_forget_lines" -> jx(forgetLinesJson, withDataset = true),
+    "jx_forget_sketch" -> jx(forgetSketchJson, withDataset = true),
+    "jx_forget_audit" -> jx(forgetAuditJson, withDataset = true),
+    "jx_hybrid" -> jx(hybridJson),
+    "jx_reweight" -> jx(reweightJson),
+    "jx_split_stratified" -> jx(splitStratifiedJson),
+    "jx_threshold_tuning" -> jx(thresholdTuningJson),
+    "jx_soft_sample" -> jx(softSampleJson),
+    "jx_mode" -> jx(modeJson),
+    "jx_hygiene_report" -> jx(hygieneReportJson),
+    "jx_novelty_curve" -> jx(noveltyCurveJson),
+    "jx_quality_classifier" -> jx(qualityClassifierJson),
+    "jx_novelty_sources" -> jx(noveltySourcesJson),
+    "jx_split_leakfree" -> jx(splitLeakfreeJson, withDataset = true),
+    "jx_fertility" -> jx(fertilityJson, withDataset = true),
+    "jx_knn_join" -> jx(knnJoinJson, withDataset = true),
+    "jx_probe_tuning" -> jx(probeTuningJson, withDataset = true),
+    "jx_semantic_dedup" -> jx(semanticDedupJson, withDataset = true),
+    "jx_semantic_decon" -> jx(semanticDeconJson, withDataset = true),
+    "jx_decon_report" -> jx(deconReportJson, withDataset = true),
+    "jx_dedup_profile" -> jx(dedupProfileJson, withDataset = true),
+    "jx_decon_recall" -> jx(deconRecallJson, withDataset = true),
+    "jx_overlap" -> jx(overlapJson),
+    "jx_dsir" -> jx(dsirJson),
+    "jx_shard_manifest" -> jx(shardManifestJson),
+    "jx_knn_diverse" -> jx(knnDiverseJson, withDataset = true),
+    "jx_knn_clusters" -> jx(knnClustersJson, withDataset = true),
+    "jx_knn_stats" -> jx(knnStatsJson, withDataset = true),
+    "jx_pack_manifest" -> jx(packManifestJson),
+    "jx_knn_recall" -> jx(knnRecallJson, withDataset = true),
+    "jx_quantizer_refresh" -> jx(quantizerRefreshJson, withDataset = true),
+    "jx_ivf_delta" -> jx(ivfDeltaJson),
+    "jx_canonical" -> jx(canonicalJson, withDataset = true),
+    "jx_topic_mix" -> jx(topicMixJson, withDataset = true),
+    "jx_knn_centrality" -> jx(knnCentralityJson, withDataset = true),
+    "jx_knn_coreset" -> jx(knnCoresetJson, withDataset = true),
+    "jx_quality_monitor" -> jx(qualityMonitorJson, withDataset = true),
+    "jx_curation_report" -> jx(curationReportJson, withDataset = true),
+    "jx_pairs_delta" -> jx(pairsDeltaJson),
+    "jx_pair_centrality" -> jx(pairCentralityJson, withDataset = true))
 
   val oracle: Map[String, String] = Map(
     // the jx front end must land on the Column API's exact decision set,

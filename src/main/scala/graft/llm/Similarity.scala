@@ -1538,7 +1538,7 @@ object Similarity {
   /** [[simKnnClusters]] over ANY (vec_id, embedding) frame — the jx
     * `corpus_op` fallback for a non-standard corpus subquery: graph
     * built in-plan. A plain `{"from": "embeddings"}` corpus routes to
-    * the stored artifact instead (Jx.runCorpusOp). */
+    * the stored artifact instead (the `knn_clusters` entry of Jx.corpusOps). */
   def knnClustersOf(embs: DataFrame, nlist: Int = AutoNlist, k: Int = 3): DataFrame =
     clustersFromPairs(mutualOfEdges(knnGraphOf(embs, nlist, k))
       .select(col("src").as("da"), col("dst").as("db")))

@@ -555,19 +555,10 @@ class JxSpec extends graft.SparkSpec {
   test("route-table sweep: every corpus_op route, enumerated from the " +
       "dispatcher source, accepts the standard select/sort/limit tail " +
       "or rejects with the typed error; unknown op always rejects") {
-    // Enumerate the dispatch table FROM THE CODE (the `case "x" =>`
-    // tokens of Jx.runCorpusOp), not from a hand-maintained list: a
-    // route added to the dispatcher without tail support fails here
-    // automatically; if the dispatcher moves, the boundary lookup fails
-    // loudly.
-    val src = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("src/main/scala/graft/jx/Jx.scala")),
-      java.nio.charset.StandardCharsets.UTF_8)
-    val start = src.indexOf("private def runCorpusOp")
-    val end = src.indexOf("private def resolveFrom")
-    assert(start >= 0 && end > start, "runCorpusOp boundaries not found")
-    val routes = """case "([a-z0-9_]+)"""".r
-      .findAllMatchIn(src.substring(start, end)).map(_.group(1)).toSeq
+    // Enumerate the dispatch table itself (the keys of Jx.corpusOps), not
+    // a hand-maintained list: a route added to the table without tail
+    // support fails here automatically.
+    val routes = Jx.corpusOps.keys.toSeq.sorted
     assert(routes.size >= 60, s"route table shrank? ${routes.size}")
 
     // two corpus shapes: documents-shaped for the text/payload ops,
@@ -652,5 +643,15 @@ class JxSpec extends graft.SparkSpec {
         tables).collect()
     }
     assert(unk.getMessage.contains("unknown corpus_op"))
+  }
+
+  test("corpus_op knob of the wrong JSON type raises the typed error " +
+      "naming the knob") {
+    val docs = Seq((1L, "a b c", "srcA")).toDF("doc_id", "text", "source")
+    val e = intercept[IllegalArgumentException] {
+      Jx.run(spark, """{"corpus_op": {"op": "payload_pack_tuning",
+        "corpus": {"from": "documents"}, "n_shards": "x"}}""", _ => docs)
+    }
+    assert(e.getMessage.contains("'n_shards'"), e.getMessage)
   }
 }

@@ -1376,4 +1376,17 @@ class CorpusOpsSpec extends graft.SparkSpec {
     assert(head1.getAs[Double]("min_nll") == 0.0,
       "the unscorable doc must tier at nll 0, not vanish")
   }
+
+  test("jx curation_report reads the stored report of the plain corpus " +
+      "only; a filtered corpus is rejected") {
+    def viaJx(corpus: String) = graft.jx.Jx.run(spark,
+      s"""{"corpus_op": {"op": "curation_report", "corpus": $corpus}}""",
+      name => graft.Tables.t(spark, sf, name), Some(sf))
+    val e = intercept[IllegalArgumentException] {
+      viaJx("""{"from": "documents", "where": {"lt": ["doc_id", 5]}}""").collect()
+    }
+    assert(e.getMessage.contains("dataset"), e.getMessage)
+    assert(viaJx("""{"from": "documents"}""").collect().map(_.toString).toSeq ===
+      TextOps.queries("text_curation_report")(spark, sf).collect().map(_.toString).toSeq)
+  }
 }

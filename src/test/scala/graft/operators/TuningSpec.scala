@@ -36,16 +36,27 @@ class TuningSpec extends graft.SparkSpec {
     val ev = graft.Tables.t(spark, sf, "events")
     val iv = ev.groupBy(col("user_id").as("uid"))
       .agg(min("value").as("lo"), max("value").as("hi"))
-    val direct = Relational
+    // n is exact; the sums add the same values in another association,
+    // so they agree to a relative 1e-9 (rounding both to 2 places would
+    // flip whenever a sum lands on a .xx5 boundary)
+    def byUid(df: org.apache.spark.sql.DataFrame): Map[Long, (Long, Double)] =
+      df.collect().map(r => r.getAs[Long]("uid") ->
+        ((r.getAs[Long]("n"), r.getAs[Double]("sum_v")))).toMap
+    val direct = byUid(Relational
       .bandedRangeJoin(ev.select("event_id", "value"), "value", iv, "lo", "hi", 25.0)
       .groupBy("uid")
-      .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("sum_v"))
-      .orderBy("uid").collect().toSeq
+      .agg(count(lit(1)).as("n"), sum("value").as("sum_v")))
+    assert(direct.nonEmpty)
     for (w <- Seq(1.0, 5.0, 25.0, 400.0)) {
-      val fast = Relational.bandedRangeAggByUid(ev, w)
-        .select(col("uid"), col("n"), round(col("sum_v_raw"), 2).as("sum_v"))
-        .orderBy("uid").collect().toSeq
-      assert(fast === direct, s"width $w")
+      val fast = byUid(Relational.bandedRangeAggByUid(ev, w)
+        .select(col("uid"), col("n"), col("sum_v_raw").as("sum_v")))
+      assert(fast.keySet === direct.keySet, s"width $w")
+      direct.foreach { case (uid, (n, sumV)) =>
+        val (fn, fsum) = fast(uid)
+        assert(fn === n, s"width $w uid $uid n")
+        assert(math.abs(fsum - sumV) <= 1e-9 * math.max(math.abs(sumV), 1.0),
+          s"width $w uid $uid sum $fsum vs $sumV")
+      }
     }
   }
 
