@@ -579,14 +579,14 @@ object Forget {
     affected.foreach { bid =>
       val neg = TextOps.lineFreqsOf(tombDocs.filter(col("doc_id") % nB === bid))
         .withColumnRenamed("ldf", "n_neg")
-      s.read.parquet(baseC).filter(col("batch_id") === bid)
-        .drop("batch_id")
-        .join(neg, Seq("lh"), "left")
-        .withColumn("n_docs", col("n_docs") - coalesce(col("n_neg"), lit(0L)))
-        .filter(col("n_docs") > 0)
-        .select(col("lh"), col("n_docs"), lit(bid).as("batch_id"))
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(outC)
+      graft.streaming.Streams.sinkBatch(
+        s.read.parquet(baseC).filter(col("batch_id") === bid)
+          .drop("batch_id")
+          .join(neg, Seq("lh"), "left")
+          .withColumn("n_docs", col("n_docs") - coalesce(col("n_neg"), lit(0L)))
+          .filter(col("n_docs") > 0)
+          .select(col("lh"), col("n_docs")),
+        bid, outC)
     }
     affected
   }
@@ -621,7 +621,7 @@ object Forget {
     * subtracted back out — so the only sound delta is the T13e
     * re-process applied to the DAY partitions the tombstoned users
     * touched: rebuild those days' (day, event_type) partials from the
-    * purged raw slice in ONE dynamic-overwrite write, copy every other
+    * purged raw slice in ONE partition-overwrite write, copy every other
     * day verbatim. Tombstones are USER-keyed (T11 `etl_forget`'s
     * user_id % 37 rule — GDPR requests name people, not documents), so
     * the family now spans both id domains. At 100 TB a user's events
@@ -636,11 +636,11 @@ object Forget {
     s.read.parquet(baseDaily)
       .filter(!col("day").isin(affected: _*))
       .write.mode("overwrite").partitionBy("day").parquet(outDaily)
-    graft.operators.Aggregates.sketchPartialsOf(
+    graft.sources.Sinks.overwritePartitions(
+      graft.operators.Aggregates.sketchPartialsOf(
         ev.join(broadcast(tombUsers), Seq("user_id"), "left_anti")
-          .filter(date_format(col("ts"), "yyyy-MM-dd").isin(affected: _*)))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("day").parquet(outDaily)
+          .filter(date_format(col("ts"), "yyyy-MM-dd").isin(affected: _*))),
+      outDaily, "day")
     affected
   }
 

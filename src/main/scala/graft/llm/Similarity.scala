@@ -1842,11 +1842,12 @@ object Similarity {
   /** Apply a refresh IN PLACE on a cid-partitioned inverted-list store:
     * re-assign the stored vectors against the refreshed centroids and
     * rewrite ONLY the lists drift touched (every list that gained or
-    * lost a member), via dynamic partition overwrite — the other
-    * partitions' files are never rewritten. This is the "re-assign only
-    * drifted vectors" half of the refresh story: at 100 TB a mostly-
-    * converged quantizer drifts a few percent of vectors per refresh,
-    * so the rewrite is proportional to the drift, not the corpus.
+    * lost a member), via [[graft.sources.Sinks.overwritePartitions]] —
+    * the other partitions' files are never rewritten. This is the
+    * "re-assign only drifted vectors" half of the refresh story: at
+    * 100 TB a mostly-converged quantizer drifts a few percent of vectors
+    * per refresh, so the rewrite is proportional to the drift, not the
+    * corpus.
     * Returns the number of lists rewritten (0 = the store was already
     * the fixpoint and nothing was written). IvfPersistSpec pins both
     * the equality with a full re-assignment and the untouched bytes. */
@@ -1870,15 +1871,14 @@ object Similarity {
     val writtenCids = rows.select("cid").distinct().collect()
       .map(_.getLong(0)).toSet
     if (writtenCids.nonEmpty)
-      rows.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("cid").parquet(invlistDir)
+      graft.sources.Sinks.overwritePartitions(rows, invlistDir, "cid")
     // a DRAINED list (lost every member) has no rows in the write, so
-    // dynamic overwrite leaves its old partition behind — drop it
-    // explicitly or its members would exist in two lists
+    // the partition overwrite leaves its old partition behind — drop it
+    // explicitly (through the path's own filesystem, so a file:, hdfs:
+    // or s3a: store loses it too) or its members would exist in two lists
     affectedCids.filterNot(writtenCids).foreach { c =>
-      val p = new java.io.File(invlistDir, s"cid=$c")
-      Option(p.listFiles()).getOrElse(Array.empty[java.io.File]).foreach(_.delete())
-      p.delete()
+      val p = new org.apache.hadoop.fs.Path(invlistDir, s"cid=$c")
+      graft.sources.Sinks.fsOf(s, p).delete(p, true)
     }
     affectedCids.length.toLong
   }

@@ -417,8 +417,10 @@ object Aggregates {
 
   /** One store row per (day, event_type): the four mergeable partials.
     * Shared by the batch rollup build above and the STREAMING maintainer
-    * ([[graft.streaming.Streams.sketchStoreSink]]) — one store schema,
-    * two writers. */
+    * ([[graft.streaming.Streams.sketchStoreSink]], which adds a
+    * `batch_id` partition under `day` through
+    * [[graft.streaming.Streams.sinkBatch]]) — one store schema, two
+    * writers. */
   private[graft] def sketchPartialsOf(events: DataFrame): DataFrame =
     events
       .groupBy(date_format(col("ts"), "yyyy-MM-dd").as("day"), col("event_type"))

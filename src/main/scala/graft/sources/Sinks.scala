@@ -1,6 +1,7 @@
 package graft.sources
 
-import org.apache.spark.sql.DataFrame
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Output routing (SURVEY.md §2.1 S5–S7).
@@ -16,17 +17,35 @@ import org.apache.spark.sql.functions._
   */
 object Sinks {
 
-  /** S7: daily-index router — `partitionBy(day)` writes every row to its
-    * day's directory in a single job. Dynamic partition overwrite keeps
-    * re-ETL idempotent per day (only days present in `df` are rewritten).
-    * SinksSpec proves pruning: a `day = X` read plans only that partition. */
-  def dailyRouter(df: DataFrame, dir: String, tsCol: String = "ts"): Unit =
-    df.withColumn("day", date_format(col(tsCol), "yyyyMMdd"))
+  /** The one idempotent store write (SURVEY.md ST5): `df` partitioned by
+    * `cols` into `dir`, replacing exactly the partitions `df` has rows
+    * for — every other partition's files are left alone. Re-running the
+    * same key rewrites its own partitions, the Spark form of the
+    * reference's one-S3-object-per-etl-key overwrite. Every dynamic
+    * overwrite in the library goes through here. */
+  def overwritePartitions(df: DataFrame, dir: String, cols: String*): Unit =
+    df
       // writer-scoped option, NOT session conf: a session-level dynamic
       // mode would silently change overwrite semantics for every later
       // partitioned write on the shared session
       .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("day").parquet(dir)
+      .partitionBy(cols: _*).parquet(dir)
+
+  /** The Hadoop FileSystem that owns `p`, resolved from the path's own
+    * scheme (file:, hdfs:, s3a:) under the session's Hadoop conf. A
+    * java.io.File only sees the local disk, and `FileSystem.get(conf)` is
+    * the DEFAULT filesystem, so either one silently misses a store that
+    * lives anywhere else. */
+  private[graft] def fsOf(s: SparkSession, p: Path): FileSystem =
+    p.getFileSystem(s.sessionState.newHadoopConf())
+
+  /** S7: daily-index router — `partitionBy(day)` writes every row to its
+    * day's directory in a single job. [[overwritePartitions]] keeps
+    * re-ETL idempotent per day (only days present in `df` are rewritten).
+    * SinksSpec proves pruning: a `day = X` read plans only that partition. */
+  def dailyRouter(df: DataFrame, dir: String, tsCol: String = "ts"): Unit =
+    overwritePartitions(
+      df.withColumn("day", date_format(col(tsCol), "yyyyMMdd")), dir, "day")
 
   /** S6: staged JSON-lines sink, one directory per etl key (the S3 staging
     * layout; gzip via codec to match the reference's .json.gz objects). */
@@ -42,24 +61,24 @@ object Sinks {
     * per-file tasks (the "small files problem" — at 100 TB the
     * difference between a scan dominated by S3 GETs and one dominated
     * by bytes). Compaction rewrites each partition to
-    * ⌈bytes / targetBytes⌉ files ATOMICALLY per partition via dynamic
-    * partition overwrite — readers never see a partial partition, and
+    * ⌈bytes / targetBytes⌉ files ATOMICALLY per partition via
+    * [[overwritePartitions]] — readers never see a partial partition, and
     * only partitions present in the rewrite are touched (same
     * idempotency contract as the daily router).
     *
     * Rewrites everything it reads; an incremental driver would pass a
     * predicate selecting only decayed partitions (e.g. yesterday's). */
-  def compactPartitions(spark: org.apache.spark.sql.SparkSession, dir: String,
+  def compactPartitions(spark: SparkSession, dir: String,
       partitionCol: String, targetBytes: Long = 128L * 1024 * 1024): Unit = {
     val df = spark.read.parquet(dir)
-    // current size per partition, from the file index (no data pass)
+    // current size per partition, from the file index (no data pass);
+    // each file is stat'ed through its own filesystem, not the default one
     val files = df.inputFiles
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sessionState.newHadoopConf())
+    val conf = spark.sessionState.newHadoopConf()
     val sizes = files.map { f =>
-      val p = new org.apache.hadoop.fs.Path(f)
+      val p = new Path(f)
       val part = p.getParent.getName // e.g. "day=20240101"
-      part -> fs.getFileStatus(p).getLen
+      part -> p.getFileSystem(conf).getFileStatus(p).getLen
     }.groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).sum }
     val nFiles = sizes.map { case (k, bytes) =>
       k -> math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
@@ -70,11 +89,9 @@ object Sinks {
       // Spark (rightly) refuses to overwrite a path a live plan still
       // reads; the checkpoint breaks that file dependency and makes the
       // per-partition swap safe
-      df.filter(col(colName) === value)
-        .localCheckpoint()
-        .repartition(n)
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partitionCol).parquet(dir)
+      overwritePartitions(
+        df.filter(col(colName) === value).localCheckpoint().repartition(n),
+        dir, partitionCol)
     }
   }
 

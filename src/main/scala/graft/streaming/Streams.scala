@@ -185,31 +185,46 @@ object Streams {
     events.withWatermark("ts", lateness).dropDuplicatesWithinWatermark(keys)
 
   /** ST5: idempotent sink — per micro-batch, dedup on the lineage key,
-    * then OVERWRITE the batch's own partition (dynamic partition
-    * overwrite): a re-delivered batch id rewrites exactly its partition
-    * instead of appending duplicates — the reference's etl-key overwrite
-    * semantics (upstream sinks/s3_bucket.py: one S3 object per etl key,
-    * re-ETL replaces it). Effectively-exactly-once on top of the
-    * checkpoint's at-least-once redelivery. */
+    * then OVERWRITE the batch's own partition ([[sinkBatch]]): a
+    * re-delivered batch id rewrites exactly its partition instead of
+    * appending duplicates — the reference's etl-key overwrite semantics
+    * (upstream sinks/s3_bucket.py: one S3 object per etl key, re-ETL
+    * replaces it). Effectively-exactly-once on top of the checkpoint's
+    * at-least-once redelivery. */
   def idempotentAppend(batch: DataFrame, batchId: Long, dir: String, keyCols: Seq[String]): Unit =
-    batch
-      .dropDuplicates(keyCols)
-      .withColumn("batch_id", lit(batchId))
-      // writer-scoped option, NOT session conf: a session-level dynamic
-      // mode would silently change overwrite semantics for every later
-      // partitioned write on the shared session
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(dir)
+    sinkBatch(batch.dropDuplicates(keyCols), batchId, dir)
+
+  /** The one batch write behind every stream store: tag `df` with its
+    * `batch_id` and write it under `leading :+ "batch_id"` partitions
+    * through [[graft.sources.Sinks.overwritePartitions]], so a redelivered
+    * batch id replaces exactly the partitions it wrote before and never
+    * appends a second copy. `leading` keeps a pruning column in front of
+    * the batch (the sketch partials' `day`, the inverted lists' `cid`). */
+  def sinkBatch(df: DataFrame, batchId: Long, dir: String, leading: String*): Unit =
+    graft.sources.Sinks.overwritePartitions(
+      df.withColumn("batch_id", lit(batchId)), dir, leading :+ "batch_id": _*)
+
+  /** The batch twins' delivery sequence: the `n` disjoint batches
+    * `pmod(key, n) = b` for b in 0 until n, in order, then an
+    * at-least-once REDELIVERY of batch `again`. The redelivery must
+    * overwrite its partition, not append, so the store reads back as if
+    * every batch had landed once — the twin's oracle is the one-shot
+    * pass over the whole input. Rows with a null key are in no batch. */
+  private[graft] def replay(df: DataFrame, key: String, n: Long, again: Long)(
+      sink: (DataFrame, Long) => Unit): Unit = {
+    def batch(b: Long) = df.filter(pmod(col(key), lit(n)) === b)
+    (0L until n).foreach(b => sink(batch(b), b))
+    sink(batch(again), again)
+  }
 
   /** ST8: the streaming MAINTAINER of the daily sketch rollup behind the
     * dashboard ([[graft.operators.Aggregates.sketchDashboardFrame]]): per
     * micro-batch, fold the batch's events into per-(day, event_type)
     * PARTIAL sketches and write them under the batch's own
-    * (day, batch_id) partitions — dynamic partition overwrite, so a
-    * REDELIVERED batch replaces exactly its own partials instead of
-    * double-counting (the same effectively-exactly-once recipe as
-    * [[idempotentAppend]]). The store accretes one partial row per
-    * (day, event_type, batch); reads stay day-pruned, and because the
+    * (day, batch_id) partitions through [[sinkBatch]], so a REDELIVERED
+    * batch replaces exactly its own partials instead of double-counting.
+    * The store accretes one partial row per (day, event_type, batch);
+    * reads stay day-pruned, and because the
     * partials are mergeable the dashboard merge is exact over ANY number
     * of rows per day — the writer never compacts or rewrites history,
     * and a late event simply adds another partial to its event-time day.
@@ -217,10 +232,7 @@ object Streams {
     * keeps KB-scale dashboard state fresh without ever re-scanning raw
     * events. */
   def sketchStoreSink(batch: DataFrame, batchId: Long, dir: String): Unit =
-    graft.operators.Aggregates.sketchPartialsOf(batch)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("day", "batch_id").parquet(dir)
+    sinkBatch(graft.operators.Aggregates.sketchPartialsOf(batch), batchId, dir, "day")
 
   /** ST9 (forward idea s): stream-maintained SHARD-MANIFEST store — the
     * export twin of [[sketchStoreSink]]. Each micro-batch writes its own
@@ -228,15 +240,11 @@ object Streams {
     * [[graft.llm.TextOps.mergeManifests]]' distributive algebra
     * (sums / min / max / xor), so the merged readout is exact over any
     * number of partials, and a redelivered batch id overwrites only its
-    * own partition (dynamic partition overwrite: at-least-once delivery
-    * → exactly-once manifest). A continuously-ingesting exporter keeps
-    * the trainer-facing manifest fresh without ever re-reading old
-    * shards. */
+    * own partition ([[sinkBatch]]: at-least-once delivery → exactly-once
+    * manifest). A continuously-ingesting exporter keeps the
+    * trainer-facing manifest fresh without ever re-reading old shards. */
   def manifestStoreSink(batch: DataFrame, batchId: Long, dir: String): Unit =
-    graft.llm.TextOps.shardManifest(batch)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(dir)
+    sinkBatch(graft.llm.TextOps.shardManifest(batch), batchId, dir)
 
   /** ST21: stream-maintained PACKING-manifest store — the batch-assembly
     * twin of [[manifestStoreSink]]: a continuously-ingesting exporter
@@ -244,30 +252,22 @@ object Streams {
     * packed shards. Each micro-batch writes per-packing-shard partials
     * ([[graft.llm.TextOps.packPartialsOf]]: doc/token sums + xor
     * fingerprint, all distributive) under its own batch partition
-    * (dynamic idempotent overwrite); the readout
+    * ([[sinkBatch]]); the readout
     * ([[graft.llm.TextOps.packMergeFrom]]) re-derives n_chunks/last_fill
     * from the merged totals — exact, because gap-free concat packing
     * pins n_chunks to ceil(n_tokens/ctx). */
   def packStoreSink(batch: DataFrame, batchId: Long, dir: String): Unit =
-    graft.llm.TextOps.packPartialsOf(batch)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(dir)
+    sinkBatch(graft.llm.TextOps.packPartialsOf(batch), batchId, dir)
 
   /** ST21 batch twin / driver gate: two deterministic micro-batches
     * (doc_id parity split) sunk through [[packStoreSink]], batch 0
-    * REDELIVERED to prove the idempotent overwrite, then the merged
-    * readout — gated by `text_pack_manifest`'s oracle VERBATIM (the
-    * maintained store must be indistinguishable from packing the whole
-    * corpus in one shot). */
+    * REDELIVERED ([[replay]]), then the merged readout — gated by
+    * `text_pack_manifest`'s oracle VERBATIM (the maintained store must be
+    * indistinguishable from packing the whole corpus in one shot). */
   val streamPackStore: Q = (s, d) => {
     val dir = graft.llm.Artifacts.buildOnce(s, "pack_store_stream", d) { dd =>
-      val docs = t(s, d, "documents")
-      val p = s"$dd/p"
-      packStoreSink(docs.filter(col("doc_id") % 2 === 0), 0L, p)
-      packStoreSink(docs.filter(col("doc_id") % 2 === 1), 1L, p)
-      // at-least-once redelivery of batch 0: must overwrite, not append
-      packStoreSink(docs.filter(col("doc_id") % 2 === 0), 0L, p)
+      replay(t(s, d, "documents"), "doc_id", 2, again = 0)(
+        packStoreSink(_, _, s"$dd/p"))
     }
     graft.llm.TextOps.packMergeFrom(s.read.parquet(s"$dir/p"))
   }
@@ -277,21 +277,14 @@ object Streams {
     * ([[graft.llm.Multimodal.mmPackPartialsOf]]), so one maintenance
     * recipe serves text-only and interleaved exporters. */
   def mmPackStoreSink(batch: DataFrame, batchId: Long, dir: String): Unit =
-    graft.llm.Multimodal.mmPackPartialsOf(batch)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(dir)
+    sinkBatch(graft.llm.Multimodal.mmPackPartialsOf(batch), batchId, dir)
 
   /** ST21b batch twin / driver gate: gated by `mm_pack_manifest`'s
     * coordinate-derived oracle VERBATIM. */
   val streamMmPackStore: Q = (s, d) => {
     val dir = graft.llm.Artifacts.buildOnce(s, "mm_pack_store_stream", d) { dd =>
-      val docs = t(s, d, "documents")
-      val p = s"$dd/p"
-      mmPackStoreSink(docs.filter(col("doc_id") % 2 === 0), 0L, p)
-      mmPackStoreSink(docs.filter(col("doc_id") % 2 === 1), 1L, p)
-      // at-least-once redelivery of batch 0: must overwrite, not append
-      mmPackStoreSink(docs.filter(col("doc_id") % 2 === 0), 0L, p)
+      replay(t(s, d, "documents"), "doc_id", 2, again = 0)(
+        mmPackStoreSink(_, _, s"$dd/p"))
     }
     graft.llm.TextOps.packMergeFrom(s.read.parquet(s"$dir/p"))
   }
@@ -303,15 +296,12 @@ object Streams {
     * its docs into per-source partials
     * ([[graft.llm.TextOps.qualityPartialsOf]]: sums / min / max plus a
     * DECIMAL quality sum, all distributive) written under the batch's
-    * own partition — dynamic partition overwrite, so a redelivered batch
-    * replaces exactly itself ([[idempotentAppend]]'s recipe). The
-    * readout re-merges |sources|×|batches| KB-scale rows; at 100 TB/day
-    * the monitor's refresh cost is independent of corpus size. */
+    * own partition by [[sinkBatch]], so a redelivered batch replaces
+    * exactly itself. The readout re-merges |sources|×|batches| KB-scale
+    * rows; at 100 TB/day the monitor's refresh cost is independent of
+    * corpus size. */
   def qualityStoreSink(batch: DataFrame, batchId: Long, dir: String): Unit =
-    graft.llm.TextOps.qualityPartialsOf(batch)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(dir)
+    sinkBatch(graft.llm.TextOps.qualityPartialsOf(batch), batchId, dir)
 
   /** ST15: stream-maintained CLASSIFIER pass-rate monitor — the quality
     * monitor's decision-level twin: "what fraction of each source is the
@@ -321,10 +311,10 @@ object Streams {
     * micro-batch scores ITSELF (per-doc score is batch-local: one
     * broadcast hash join + a per-doc mean) and writes per-source
     * partials — doc/pass counts plus a DECIMAL score sum, all
-    * distributive — under its own batch partition (dynamic idempotent
-    * overwrite). Because the frozen model makes every doc's score
-    * independent of its batch, the merged store equals the full-corpus
-    * scoring pass BIT-identically under any split or redelivery. */
+    * distributive — under its own batch partition ([[sinkBatch]]).
+    * Because the frozen model makes every doc's score independent of
+    * its batch, the merged store equals the full-corpus scoring pass
+    * BIT-identically under any split or redelivery. */
   /** One batch's per-source partials against the frozen model: doc and
     * pass counts plus a DECIMAL score sum — every column distributive. */
   def classifierPartialsOf(batch: DataFrame, model: DataFrame): DataFrame =
@@ -338,10 +328,7 @@ object Streams {
 
   def classifierStoreSink(batch: DataFrame, batchId: Long, dir: String,
       model: DataFrame): Unit =
-    classifierPartialsOf(batch, model)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(dir)
+    sinkBatch(classifierPartialsOf(batch, model), batchId, dir)
 
   /** The pass-rate readout over ANY union of [[classifierPartialsOf]]
     * rows: re-sum the distributive partials, then derive the integer
@@ -369,13 +356,9 @@ object Streams {
     * batching, not mere consistency). */
   val streamClassifierStore: Q = (s, d) => {
     val dir = graft.llm.Artifacts.buildOnce(s, "classifier_store_stream", d) { dd =>
-      val docs = t(s, d, "documents")
       val model = graft.llm.TextOps.nbModelStored(s, d)
-      val c = s"$dd/c"
-      classifierStoreSink(docs.filter(col("doc_id") % 2 === 0), 0L, c, model)
-      classifierStoreSink(docs.filter(col("doc_id") % 2 === 1), 1L, c, model)
-      // at-least-once redelivery of batch 0: must overwrite, not append
-      classifierStoreSink(docs.filter(col("doc_id") % 2 === 0), 0L, c, model)
+      replay(t(s, d, "documents"), "doc_id", 2, again = 0)(
+        classifierStoreSink(_, _, s"$dd/c", model))
     }
     classifierStoreReadout(s, s"$dir/c")
   }
@@ -384,20 +367,19 @@ object Streams {
     * drift alarm: SQ8 codes are only as good as the per-dimension
     * [mn, mx] ranges they were trained on, and arriving data OUTSIDE the
     * stored range silently clamps to 0/255. Each batch folds its vectors
-    * into per-dim (mn, mx) partials under its own partition (dynamic
-    * idempotent overwrite); min/max are MONOTONE-distributive, so the
+    * into per-dim (mn, mx) partials under its own partition
+    * ([[sinkBatch]]); min/max are MONOTONE-distributive, so the
     * merged store equals the full-corpus stats EXACTLY under any batch
     * split or redelivery — comparing it against the frozen `sq8` stats
     * artifact is the re-encode trigger. (Unlike the IVF delta, an SQ8
     * re-encode is corpus-proportional — which is exactly why production
     * freezes stats per index generation and watches this monitor.) */
   def sq8StatsSink(batch: DataFrame, batchId: Long, dir: String): Unit =
-    batch
-      .select(posexplode(expr("transform(embedding, x -> CAST(x AS DOUBLE))")))
-      .groupBy("pos").agg(min("col").as("mn"), max("col").as("mx"))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(dir)
+    sinkBatch(
+      batch
+        .select(posexplode(expr("transform(embedding, x -> CAST(x AS DOUBLE))")))
+        .groupBy("pos").agg(min("col").as("mn"), max("col").as("mx")),
+      batchId, dir)
 
   /** The accumulated range readout: re-min/max the per-batch partials. */
   def sq8StatsReadout(s: SparkSession, dir: String): DataFrame =
@@ -410,12 +392,8 @@ object Streams {
     * full-corpus per-dim stats oracle (exactness, not consistency). */
   val streamSq8Stats: Q = (s, d) => {
     val dir = graft.llm.Artifacts.buildOnce(s, "sq8_stats_stream", d) { dd =>
-      val vecs = t(s, d, "embeddings")
-      val p = s"$dd/p"
-      sq8StatsSink(vecs.filter(col("vec_id") % 2 === 0), 0L, p)
-      sq8StatsSink(vecs.filter(col("vec_id") % 2 === 1), 1L, p)
-      // at-least-once redelivery of batch 0: must overwrite, not append
-      sq8StatsSink(vecs.filter(col("vec_id") % 2 === 0), 0L, p)
+      replay(t(s, d, "embeddings"), "vec_id", 2, again = 0)(
+        sq8StatsSink(_, _, s"$dd/p"))
     }
     sq8StatsReadout(s, s"$dir/p")
   }
@@ -426,7 +404,7 @@ object Streams {
     * ([[graft.llm.TextOps.bigramLmStored]] — training is a separate
     * periodic job) are batch-independent, so the stream maintains the
     * per-doc SCORE table (one row per doc — KB-scale beside the corpus)
-    * under per-batch dynamic idempotent overwrite, and the readout
+    * through [[sinkBatch]], and the readout
     * re-RANKS the merged scores into head/middle/tail. Score being a pure
     * per-doc function of the frozen model makes the merged store equal
     * the one-shot full-corpus pass BIT-identically under any batch split
@@ -434,10 +412,7 @@ object Streams {
     * the corpus. */
   def pplStoreSink(batch: DataFrame, batchId: Long, dir: String,
       ab: DataFrame, ctx: DataFrame, v: DataFrame): Unit =
-    graft.llm.TextOps.bigramNllAgainstLm(batch, ab, ctx, v)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(dir)
+    sinkBatch(graft.llm.TextOps.bigramNllAgainstLm(batch, ab, ctx, v), batchId, dir)
 
   /** The accumulated tier readout: rank the merged per-doc scores. */
   def pplStoreReadout(s: SparkSession, dir: String): DataFrame =
@@ -449,13 +424,9 @@ object Streams {
     * `text_ppl_buckets`' full-corpus oracle verbatim. */
   val streamPplStore: Q = (s, d) => {
     val dir = graft.llm.Artifacts.buildOnce(s, "ppl_store_stream", d) { dd =>
-      val docs = t(s, d, "documents")
       val (ab, ctx, v) = graft.llm.TextOps.bigramLmStored(s, d)
-      val c = s"$dd/c"
-      pplStoreSink(docs.filter(col("doc_id") % 2 === 0), 0L, c, ab, ctx, v)
-      pplStoreSink(docs.filter(col("doc_id") % 2 === 1), 1L, c, ab, ctx, v)
-      // at-least-once redelivery of batch 0: must overwrite, not append
-      pplStoreSink(docs.filter(col("doc_id") % 2 === 0), 0L, c, ab, ctx, v)
+      replay(t(s, d, "documents"), "doc_id", 2, again = 0)(
+        pplStoreSink(_, _, s"$dd/c", ab, ctx, v))
     }
     pplStoreReadout(s, s"$dir/c")
   }
@@ -465,7 +436,7 @@ object Streams {
     * of this doc's trigrams has the corpus never seen before?), so a
     * continuously ingesting pipeline wants it answered per batch without
     * re-scanning history. Each micro-batch writes two doc-bounded
-    * partials under its own partition (dynamic idempotent overwrite):
+    * partials under its own partition ([[sinkBatch]]):
     * its grams' batch-local first-seen table (g, first_doc = min doc_id
     * within the batch) and its docs' distinct-gram counts. The readout
     * re-mins the first-seen rows across batches — min is
@@ -475,14 +446,10 @@ object Streams {
     * explode over itself; history is never re-read. */
   def noveltyStoreSink(batch: DataFrame, batchId: Long, dir: String): Unit = {
     val occ = graft.llm.TextOps.gramOccurrencesOf(batch).localCheckpoint()
-    occ.groupBy("g").agg(min("doc_id").as("first_doc"))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(s"$dir/grams")
-    occ.groupBy("doc_id").agg(countDistinct("g").as("n_grams"))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(s"$dir/docs")
+    sinkBatch(occ.groupBy("g").agg(min("doc_id").as("first_doc")),
+      batchId, s"$dir/grams")
+    sinkBatch(occ.groupBy("doc_id").agg(countDistinct("g").as("n_grams")),
+      batchId, s"$dir/docs")
   }
 
   /** The accumulated novelty readout: re-min the per-batch first-seen
@@ -502,14 +469,19 @@ object Streams {
     * ([[graft.llm.Similarity.deconHitsAgainstIndex]]: probe selection
     * depends only on the fixed centroids, hits only on the fixed lists)
     * and writes its (bid, nid, cosine) hit partials under its own batch
-    * partition — dynamic idempotent overwrite, so a redelivered batch
-    * replaces exactly itself. The readout re-rolls count + struct-max
-    * across batches — both distributive, so the merged store equals the
-    * one-shot whole-bench decon BIT-identically under any batch split
-    * or redelivery order. At 100 TB: a new eval suite costs one probe
+    * partition ([[sinkBatch]]), so a redelivered batch replaces exactly
+    * itself. The readout re-rolls count + struct-max across batches —
+    * both distributive, so the merged store equals the one-shot
+    * whole-bench decon BIT-identically under any batch split or
+    * redelivery order. At 100 TB: a new eval suite costs one probe
     * pass over ITS OWN vectors; the corpus is never re-scanned. */
-  def deconStoreInit(s: SparkSession, d: String, dir: String): Unit = {
-    val (cents, inv) = graft.llm.Similarity.deconIndexArtifacts(s, d)
+  def deconStoreInit(s: SparkSession, d: String, dir: String): Unit =
+    writeDeconIndex(graft.llm.Similarity.deconIndexArtifacts(s, d), dir)
+
+  /** Persist a decon index — (centroids, corpus inverted lists) — where
+    * [[deconDeltaSink]] reads it. */
+  private def writeDeconIndex(index: (DataFrame, DataFrame), dir: String): Unit = {
+    val (cents, inv) = index
     cents.write.mode("overwrite").parquet(s"$dir/cents")
     inv.write.mode("overwrite").parquet(s"$dir/inv")
   }
@@ -517,11 +489,10 @@ object Streams {
   def deconDeltaSink(batch: DataFrame, batchId: Long, dir: String,
       tau: Double = 0.35): Unit = {
     val s = batch.sparkSession
-    graft.llm.Similarity.deconHitsAgainstIndex(batch,
-        s.read.parquet(s"$dir/cents"), s.read.parquet(s"$dir/inv"), tau)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(s"$dir/hits")
+    sinkBatch(
+      graft.llm.Similarity.deconHitsAgainstIndex(batch,
+        s.read.parquet(s"$dir/cents"), s.read.parquet(s"$dir/inv"), tau),
+      batchId, s"$dir/hits")
   }
 
   /** The accumulated readout in `sim_semantic_decon`'s output shape. */
@@ -537,12 +508,9 @@ object Streams {
     * the frozen lists), hit partials land under the batch's own
     * partition. Merged readout == the one-shot mm_semantic_decon pass
     * BIT-identically under any split/redelivery, at the mm τ. */
-  def mmDeconStoreInit(s: SparkSession, d: String, dir: String): Unit = {
-    val (cents, inv) = graft.llm.Similarity.deconIndexArtifactsFrom(
-      graft.llm.Multimodal.mmIndex(s, d), col("vec_id") % 10 === 0)
-    cents.write.mode("overwrite").parquet(s"$dir/cents")
-    inv.write.mode("overwrite").parquet(s"$dir/inv")
-  }
+  def mmDeconStoreInit(s: SparkSession, d: String, dir: String): Unit =
+    writeDeconIndex(graft.llm.Similarity.deconIndexArtifactsFrom(
+      graft.llm.Multimodal.mmIndex(s, d), col("vec_id") % 10 === 0), dir)
 
   /** ST23 batch twin / driver gate: index init + three bench-payload
     * deliveries + an at-least-once redelivery, readout in
@@ -553,12 +521,7 @@ object Streams {
       mmDeconStoreInit(s, d, x)
       val bench = graft.llm.Multimodal.mmVecsOf(s, d)
         .filter(col("vec_id") % 10 === 0)
-      deconDeltaSink(bench.filter(col("vec_id") % 3 === 0), 0L, x, tau = 0.999)
-      deconDeltaSink(bench.filter(col("vec_id") % 3 === 1), 1L, x, tau = 0.999)
-      deconDeltaSink(bench.filter(col("vec_id") % 3 === 2), 2L, x, tau = 0.999)
-      // at-least-once redelivery of batch 1 AFTER batch 2: the overwrite
-      // replaces identical partials, the store must not drift
-      deconDeltaSink(bench.filter(col("vec_id") % 3 === 1), 1L, x, tau = 0.999)
+      replay(bench, "vec_id", 3, again = 1)(deconDeltaSink(_, _, x, tau = 0.999))
     }
     deconStoreReadout(s, s"$dir/x")
   }
@@ -571,8 +534,8 @@ object Streams {
     * (a) computes its in-row signatures, (b) joins them against the
     * ACCUMULATED index (base + every earlier delta — so cross-batch
     * pairs are found), (c) adds its banded internal pairs, writing all
-    * pairs AND its own index rows under its own batch partition with
-    * dynamic idempotent overwrite. A redelivered batch can only rewrite
+    * pairs AND its own index rows under its own batch partition
+    * ([[sinkBatch]]). A redelivered batch can only rewrite
     * its own partitions; a redelivery arriving AFTER later batches may
     * re-derive pairs those batches already recorded — exact duplicates
     * by construction (same signatures, same jaccard), collapsed by the
@@ -585,13 +548,12 @@ object Streams {
       .write.mode("overwrite").parquet(s"$dir/bands")
     graft.llm.Dedup.docShingleSetsFromShingles(sh)
       .write.mode("overwrite").parquet(s"$dir/sets")
-    graft.llm.Dedup.minhashScoredPairsFrom(sh)
-      .filter(col("jaccard") >= 0.5)
-      .select(col("da"), col("db"),
-        graft.operators.Common.r4(col("jaccard")).as("jaccard"))
-      .withColumn("batch_id", lit(-1L))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(s"$dir/pairs")
+    sinkBatch(
+      graft.llm.Dedup.minhashScoredPairsFrom(sh)
+        .filter(col("jaccard") >= 0.5)
+        .select(col("da"), col("db"),
+          graft.operators.Common.r4(col("jaccard")).as("jaccard")),
+      -1L, s"$dir/pairs")
   }
 
   def pairDeltaSink(batch: DataFrame, batchId: Long, dir: String): Unit = {
@@ -599,12 +561,9 @@ object Streams {
     val signed = graft.llm.Dedup.minhashInRow(batch).localCheckpoint()
     def withDelta(basePath: String, deltaPath: String, cols: Seq[String]) = {
       val b = s.read.parquet(basePath).selectExpr(cols: _*)
-      // Resolve through Hadoop's FileSystem so URI paths (file:/, hdfs:,
-      // s3a:) see their deltas too — java.io.File would silently report
-      // false for any non-local path and drop cross-batch pairs.
-      val p = new org.apache.hadoop.fs.Path(deltaPath)
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(p))
+      // a URI delta path (file:, hdfs:, s3a:) must be seen too, or the
+      // cross-batch pairs are silently dropped
+      if (fsExists(s, deltaPath))
         b.unionByName(s.read.parquet(deltaPath).selectExpr(cols: _*))
       else b
     }
@@ -618,19 +577,12 @@ object Streams {
       .filter(col("jaccard") >= 0.5)
       .select(col("da"), col("db"),
         graft.operators.Common.r4(col("jaccard")).as("jaccard"))
-    cross.unionByName(internal).distinct()
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(s"$dir/pairs")
-    signed.select(col("doc_id"), posexplode(col("bands")))
-      .select(col("doc_id"), col("pos").as("band"), col("col").as("bh"))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(s"$dir/dbands")
-    signed.select("doc_id", "hs", "n_sh")
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(s"$dir/dsets")
+    sinkBatch(cross.unionByName(internal).distinct(), batchId, s"$dir/pairs")
+    sinkBatch(
+      signed.select(col("doc_id"), posexplode(col("bands")))
+        .select(col("doc_id"), col("pos").as("band"), col("col").as("bh")),
+      batchId, s"$dir/dbands")
+    sinkBatch(signed.select("doc_id", "hs", "n_sh"), batchId, s"$dir/dsets")
   }
 
   /** The accumulated pair-graph readout: distinct pairs across base and
@@ -659,11 +611,10 @@ object Streams {
     * touch only members of components the batch merged
     * (delta-proportional, never corpus-proportional). */
   def labelStoreInit(s: SparkSession, dir: String): Unit =
-    graft.llm.Dedup.clusterLabelsFrom(
-        s.read.parquet(s"$dir/pairs").select("da", "db"))
-      .withColumn("batch_id", lit(-1L))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(s"$dir/labels")
+    sinkBatch(
+      graft.llm.Dedup.clusterLabelsFrom(
+        s.read.parquet(s"$dir/pairs").select("da", "db")),
+      -1L, s"$dir/labels")
 
   def labelDeltaSink(s: SparkSession, batchId: Long, dir: String): Unit = {
     // this batch's pairs (written by pairDeltaSink just before) — the
@@ -693,10 +644,7 @@ object Streams {
     val newLabeled = nodes.join(cur, Seq("id"), "left_anti")
       .join(broadcast(rm.withColumnRenamed("old_lbl", "id")), Seq("id"), "left")
       .select(col("id"), coalesce(col("new_lbl"), col("id")).as("lbl"))
-    updatedOld.unionByName(newLabeled)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(s"$dir/labels")
+    sinkBatch(updatedOld.unionByName(newLabeled), batchId, s"$dir/labels")
   }
 
   /** The maintained labels in [[graft.llm.Dedup.clusterLabelsFrom]]'s
@@ -711,21 +659,18 @@ object Streams {
     * against the FIXED stored centroids
     * ([[graft.llm.Similarity.assignAgainstCentroids]]: one broadcast
     * pass, stateless) and written under its own (cid, batch_id)
-    * partitions — dynamic partition overwrite, so a redelivered batch
-    * replaces exactly its own rows (the [[idempotentAppend]] recipe).
-    * cid stays the leading partition column so probes partition-prune to
-    * the probed lists, delta rows included. Assignment depends only on
-    * the fixed centroids, so base ∪ delta is bit-identical to a batch
-    * rebuild over the grown corpus with the same quantizer — probes stay
-    * exact while the (expensive, rare) centroid re-train is a separate
+    * partitions by [[sinkBatch]], so a redelivered batch replaces exactly
+    * its own rows. cid stays the leading partition column so probes
+    * partition-prune to the probed lists, delta rows included.
+    * Assignment depends only on the fixed centroids, so base ∪ delta is
+    * bit-identical to a batch rebuild over the grown corpus with the
+    * same quantizer — probes stay exact while the (expensive, rare) centroid re-train is a separate
     * scheduled job, monitored by `sim_quantizer_refresh`'s drift report
     * and `sim_knn_recall`'s quality census. */
   def invlistStoreSink(batch: DataFrame, batchId: Long, dir: String,
       centroids: DataFrame): Unit =
-    graft.llm.Similarity.assignAgainstCentroids(batch, centroids)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("cid", "batch_id").parquet(dir)
+    sinkBatch(graft.llm.Similarity.assignAgainstCentroids(batch, centroids),
+      batchId, dir, "cid")
 
   /** Read the streamed delta back in inverted-list shape. Partition
     * columns come back as the narrowest inferred type (cid as INT) — the
@@ -822,22 +767,18 @@ object Streams {
 
   /** ST8 batch twin / driver gate: replay the streaming maintenance in
     * batch — two deterministic "micro-batches" (an event_id parity
-    * split) sunk through [[sketchStoreSink]], batch 0 REDELIVERED to
-    * prove the idempotent overwrite — then the dashboard merge over the
-    * STREAMED store for the same 8-day window as `sketch_dashboard`,
-    * pinned against exact raw-events values. A double-counted
-    * redelivery, dropped partial, or mis-pruned day breaks the exact-n
-    * pin; a broken cross-batch merge breaks the p50/HLL pins. Oracle:
+    * split) sunk through [[sketchStoreSink]], batch 0 REDELIVERED
+    * ([[replay]]) — then the dashboard merge over the STREAMED store
+    * for the same 8-day window as `sketch_dashboard`, pinned against
+    * exact raw-events values. A double-counted redelivery, dropped
+    * partial, or mis-pruned day breaks the exact-n pin; a broken
+    * cross-batch merge breaks the p50/HLL pins. Oracle:
     * identical SQL to `sketch_dashboard` (the maintained store must be
     * indistinguishable from the batch rollup at read time). */
   val streamSketchStore: Q = (s, d) => {
     val dir = graft.llm.Artifacts.buildOnce(s, "sketch_store_stream", d) { dd =>
-      val ev = t(s, d, "events")
-      val daily = s"$dd/daily"
-      sketchStoreSink(ev.filter(col("event_id") % 2 === 0), 0L, daily)
-      sketchStoreSink(ev.filter(col("event_id") % 2 === 1), 1L, daily)
-      // at-least-once redelivery of batch 0: must overwrite, not append
-      sketchStoreSink(ev.filter(col("event_id") % 2 === 0), 0L, daily)
+      replay(t(s, d, "events"), "event_id", 2, again = 0)(
+        sketchStoreSink(_, _, s"$dd/daily"))
     }
     graft.operators.Aggregates.dashboardPins(s, d,
       graft.operators.Aggregates.sketchMergeFrame(
@@ -847,18 +788,14 @@ object Streams {
 
   /** ST11 batch twin / driver gate: replay the quality-store maintenance
     * in batch — two deterministic micro-batches (doc_id parity split)
-    * sunk through [[qualityStoreSink]], batch 0 REDELIVERED to prove the
-    * idempotent overwrite — then the monitor merge over the streamed
-    * store, which must be indistinguishable from a one-shot whole-corpus
-    * readout (the oracle computes exactly that). */
+    * sunk through [[qualityStoreSink]], batch 0 REDELIVERED ([[replay]])
+    * — then the monitor merge over the streamed store, which must be
+    * indistinguishable from a one-shot whole-corpus readout (the oracle
+    * computes exactly that). */
   val streamQualityStore: Q = (s, d) => {
     val dir = graft.llm.Artifacts.buildOnce(s, "quality_store_stream", d) { dd =>
-      val docs = t(s, d, "documents")
-      val q = s"$dd/q"
-      qualityStoreSink(docs.filter(col("doc_id") % 2 === 0), 0L, q)
-      qualityStoreSink(docs.filter(col("doc_id") % 2 === 1), 1L, q)
-      // at-least-once redelivery of batch 0: must overwrite, not append
-      qualityStoreSink(docs.filter(col("doc_id") % 2 === 0), 0L, q)
+      replay(t(s, d, "documents"), "doc_id", 2, again = 0)(
+        qualityStoreSink(_, _, s"$dd/q"))
     }
     graft.llm.TextOps.qualityMergeFrom(s.read.parquet(s"$dir/q"))
   }
@@ -899,14 +836,10 @@ object Streams {
     * [[dictBatches]] (the store-family rule, readout-invariant). */
   private[graft] def noveltyStoreDir(s: SparkSession, d: String): java.io.File =
     graft.llm.Artifacts.buildOnce(s, "novelty_store_stream", d) { dd =>
-      val docs = t(s, d, "documents").select("doc_id", "text")
-      val n = s"$dd/n"
-      (0L until dictBatches).foreach { b =>
-        noveltyStoreSink(docs.filter(col("doc_id") % dictBatches === b), b, n)
-      }
-      // at-least-once redelivery of batch 1 AFTER the rest: min-merge
-      // makes the rewrite a no-op, the store must not drift
-      noveltyStoreSink(docs.filter(col("doc_id") % dictBatches === 1), 1L, n)
+      // batch 1 is redelivered AFTER the rest: min-merge makes the
+      // rewrite a no-op, the store must not drift
+      replay(t(s, d, "documents").select("doc_id", "text"), "doc_id",
+        dictBatches, again = 1)(noveltyStoreSink(_, _, s"$dd/n"))
     }
 
   val streamNoveltyStore: Q = (s, d) =>
@@ -921,13 +854,8 @@ object Streams {
     val dir = graft.llm.Artifacts.buildOnce(s, "decon_store_stream", d) { dd =>
       val x = s"$dd/x"
       deconStoreInit(s, d, x)
-      val bench = t(s, d, "embeddings").filter(col("vec_id") % 10 === 0)
-      deconDeltaSink(bench.filter(col("vec_id") % 3 === 0), 0L, x)
-      deconDeltaSink(bench.filter(col("vec_id") % 3 === 1), 1L, x)
-      deconDeltaSink(bench.filter(col("vec_id") % 3 === 2), 2L, x)
-      // at-least-once redelivery of batch 1 AFTER batch 2: the overwrite
-      // replaces identical partials, the store must not drift
-      deconDeltaSink(bench.filter(col("vec_id") % 3 === 1), 1L, x)
+      replay(t(s, d, "embeddings").filter(col("vec_id") % 10 === 0),
+        "vec_id", 3, again = 1)(deconDeltaSink(_, _, x))
     }
     deconStoreReadout(s, s"$dir/x")
   }
@@ -939,18 +867,14 @@ object Streams {
     * doc's verdicts depend only on its own bytes, never on the corpus)
     * and folds them into per-source failure-count partials
     * ([[graft.llm.TextOps.rulePartialsOf]] — every column a distributive
-    * sum) written under the batch's own partition (dynamic idempotent
-    * overwrite, [[idempotentAppend]]'s recipe). Batch-independent
-    * verdicts make the merged store equal the full-corpus profile
-    * BIT-identically under any split or redelivery — gated here by
-    * text_rule_profile's oracle VERBATIM. At 100 TB/day the monitor
+    * sum) written under the batch's own partition ([[sinkBatch]]).
+    * Batch-independent verdicts make the merged store equal the
+    * full-corpus profile BIT-identically under any split or redelivery
+    * — gated here by text_rule_profile's oracle VERBATIM. At 100 TB/day the monitor
     * refresh is |sources|×|batches| KB-scale rows, corpus never
     * rescanned. */
   def ruleStoreSink(batch: DataFrame, batchId: Long, dir: String): Unit =
-    graft.llm.TextOps.rulePartialsOf(batch)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(dir)
+    sinkBatch(graft.llm.TextOps.rulePartialsOf(batch), batchId, dir)
 
   def ruleStoreReadout(s: SparkSession, dir: String): DataFrame =
     graft.llm.TextOps.ruleProfileMergeFrom(s.read.parquet(dir))
@@ -960,12 +884,8 @@ object Streams {
     * mere consistency. */
   val streamRuleStore: Q = (s, d) => {
     val dir = graft.llm.Artifacts.buildOnce(s, "rule_store_stream", d) { dd =>
-      val docs = t(s, d, "documents")
-      val c = s"$dd/c"
-      ruleStoreSink(docs.filter(col("doc_id") % 2 === 0), 0L, c)
-      ruleStoreSink(docs.filter(col("doc_id") % 2 === 1), 1L, c)
-      // at-least-once redelivery of batch 0: must overwrite, not append
-      ruleStoreSink(docs.filter(col("doc_id") % 2 === 0), 0L, c)
+      replay(t(s, d, "documents"), "doc_id", 2, again = 0)(
+        ruleStoreSink(_, _, s"$dd/c"))
     }
     ruleStoreReadout(s, s"$dir/c")
   }
@@ -983,11 +903,8 @@ object Streams {
     * and must land on text_line_dedup's oracle VERBATIM — store-then-
     * rewrite equals the one-shot pass bit-for-bit. */
   def lineStoreSink(batch: DataFrame, batchId: Long, dir: String): Unit =
-    graft.llm.TextOps.lineFreqsOf(batch)
-      .withColumnRenamed("ldf", "n_docs")
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(dir)
+    sinkBatch(graft.llm.TextOps.lineFreqsOf(batch).withColumnRenamed("ldf", "n_docs"),
+      batchId, dir)
 
   /** The merged frequency table over the store's batch partitions. */
   def lineStoreFreqs(s: SparkSession, dir: String): DataFrame =
@@ -1000,12 +917,8 @@ object Streams {
     * gated by the one-shot oracle verbatim. */
   private[graft] def lineStoreDir(s: SparkSession, d: String): java.io.File =
     graft.llm.Artifacts.buildOnce(s, "line_store_stream", d) { dd =>
-      val docs = t(s, d, "documents")
-      val c = s"$dd/c"
-      lineStoreSink(docs.filter(col("doc_id") % 2 === 0), 0L, c)
-      lineStoreSink(docs.filter(col("doc_id") % 2 === 1), 1L, c)
-      // at-least-once redelivery of batch 0: must overwrite, not append
-      lineStoreSink(docs.filter(col("doc_id") % 2 === 0), 0L, c)
+      replay(t(s, d, "documents"), "doc_id", 2, again = 0)(
+        lineStoreSink(_, _, s"$dd/c"))
     }
 
   val streamLineStore: Q = (s, d) =>
@@ -1022,10 +935,7 @@ object Streams {
     * just start leaking credentials?" from |sources|×|batches| KB-scale
     * rows — the corpus is never rescanned. */
   def secretStoreSink(batch: DataFrame, batchId: Long, dir: String): Unit =
-    graft.llm.TextOps.secretPartialsOf(batch)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(dir)
+    sinkBatch(graft.llm.TextOps.secretPartialsOf(batch), batchId, dir)
 
   /** The merged per-source monitor over the store's batch partitions. */
   def secretStoreReadout(s: SparkSession, dir: String): DataFrame =
@@ -1040,12 +950,8 @@ object Streams {
     * flag arithmetic aggregated per source) VERBATIM. */
   val streamSecretStore: Q = (s, d) => {
     val dir = graft.llm.Artifacts.buildOnce(s, "secret_store_stream", d) { dd =>
-      val docs = t(s, d, "documents")
-      val c = s"$dd/c"
-      secretStoreSink(docs.filter(col("doc_id") % 2 === 0), 0L, c)
-      secretStoreSink(docs.filter(col("doc_id") % 2 === 1), 1L, c)
-      // at-least-once redelivery of batch 0: must overwrite, not append
-      secretStoreSink(docs.filter(col("doc_id") % 2 === 0), 0L, c)
+      replay(t(s, d, "documents"), "doc_id", 2, again = 0)(
+        secretStoreSink(_, _, s"$dd/c"))
     }
     secretStoreReadout(s, s"$dir/c")
   }
@@ -1062,19 +968,9 @@ object Streams {
     * re-reads stores plus exactly one corpus pass (the line-count
     * probe, which needs the docs regardless). */
   def hygieneStoreSink(batch: DataFrame, batchId: Long, dir: String): Unit = {
-    graft.llm.TextOps.rulePartialsOf(batch)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(s"$dir/rules")
-    graft.llm.TextOps.lineFreqsOf(batch)
-      .withColumnRenamed("ldf", "n_docs")
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(s"$dir/lines")
-    graft.llm.TextOps.secretPartialsOf(batch)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(s"$dir/secrets")
+    ruleStoreSink(batch, batchId, s"$dir/rules")
+    lineStoreSink(batch, batchId, s"$dir/lines")
+    secretStoreSink(batch, batchId, s"$dir/secrets")
   }
 
   def hygieneStoreReadout(s: SparkSession, dir: String,
@@ -1089,12 +985,8 @@ object Streams {
     * across all three sub-stores, then the composed readout. */
   val streamHygieneStore: Q = (s, d) => {
     val dir = graft.llm.Artifacts.buildOnce(s, "hygiene_store_stream", d) { dd =>
-      val docs = t(s, d, "documents")
-      val c = s"$dd/c"
-      hygieneStoreSink(docs.filter(col("doc_id") % 2 === 0), 0L, c)
-      hygieneStoreSink(docs.filter(col("doc_id") % 2 === 1), 1L, c)
-      // at-least-once redelivery of batch 0: must overwrite, not append
-      hygieneStoreSink(docs.filter(col("doc_id") % 2 === 0), 0L, c)
+      replay(t(s, d, "documents"), "doc_id", 2, again = 0)(
+        hygieneStoreSink(_, _, s"$dd/c"))
     }
     hygieneStoreReadout(s, s"$dir/c", t(s, d, "documents"))
   }
@@ -1105,8 +997,8 @@ object Streams {
     * (df, cf, max_tf, best-(−tf, doc)) partials
     * ([[graft.llm.TextOps.dfPartialsOf]] — docs live in exactly one
     * batch, so df/cf sum exactly and the argmax-doc min-struct merges
-    * without drift) written under the batch's own partition (dynamic
-    * idempotent overwrite). The merged readout must equal the one-shot
+    * without drift) written under the batch's own partition
+    * ([[sinkBatch]]). The merged readout must equal the one-shot
     * dictionary BIT-identically under any split or redelivery — gated
     * by text_inverted_index's oracle VERBATIM. At 100 TB the refresh is
     * |vocabulary|×|batches| KB-scale rows; the corpus is never
@@ -1117,7 +1009,7 @@ object Streams {
     * always answer false (r17 ADVICE on the late-store watermark guard). */
   private[graft] def fsExists(s: SparkSession, dir: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(dir)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)
+    graft.sources.Sinks.fsOf(s, p).exists(p)
   }
 
   /** The dictionary store's batch rule: doc_id % dictBatches. ≥8 batches
@@ -1129,10 +1021,7 @@ object Streams {
   private[graft] val dictBatches = 8L
 
   def dfStoreSink(batch: DataFrame, batchId: Long, dir: String): Unit =
-    graft.llm.TextOps.dfPartialsOf(batch)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(dir)
+    sinkBatch(graft.llm.TextOps.dfPartialsOf(batch), batchId, dir)
 
   def dfStoreReadout(s: SparkSession, dir: String): DataFrame =
     graft.llm.TextOps.invertedIndexMergeFrom(s.read.parquet(dir))
@@ -1143,13 +1032,8 @@ object Streams {
     * in place of a corpus rebuild. Batch rule: doc_id % [[dictBatches]]. */
   private[graft] def dfStoreDir(s: SparkSession, d: String): java.io.File =
     graft.llm.Artifacts.buildOnce(s, "df_store_stream", d) { dd =>
-      val docs = t(s, d, "documents")
-      val c = s"$dd/c"
-      (0L until dictBatches).foreach { b =>
-        dfStoreSink(docs.filter(col("doc_id") % dictBatches === b), b, c)
-      }
-      // at-least-once redelivery of batch 0: must overwrite, not append
-      dfStoreSink(docs.filter(col("doc_id") % dictBatches === 0), 0L, c)
+      replay(t(s, d, "documents"), "doc_id", dictBatches, again = 0)(
+        dfStoreSink(_, _, s"$dd/c"))
     }
 
   /** ST24 batch twin: [[dictBatches]] disjoint batches + an at-least-once
@@ -1163,7 +1047,7 @@ object Streams {
     * real GDPR pipeline takes: deletes trickle in, the index must
     * converge to the fully-purged state, and a redelivered tombstone
     * batch must be a no-op. Each sink call (1) records its tombstone
-    * batch under its own partition (dynamic idempotent overwrite), then
+    * batch under its own partition ([[sinkBatch]]), then
     * (2) re-derives the dictionary partials of ONLY the doc-batches its
     * tombstones touch, from the raw slice purged by the CUMULATIVE
     * stored tombstone set — monotone, so any redelivery or reordering
@@ -1189,10 +1073,7 @@ object Streams {
             .select("doc_id")).distinct()
       else tombBatch.select("doc_id")
     ).localCheckpoint()
-    merged
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(tombsDir)
+    sinkBatch(merged, batchId, tombsDir)
     val allTombs = s.read.parquet(tombsDir).select("doc_id")
     val affected: Seq[Long] = merged
       .select(pmod(col("doc_id"), lit(dictBatches)).as("b")).distinct()
@@ -1268,10 +1149,8 @@ object Streams {
     val docs = t(s, d, "documents")
     val dir = graft.llm.Artifacts.buildOnce(s, "forget_asof_stream", d) { dd =>
       Seq(37L -> 0L, 41L -> 1L, 43L -> 2L).foreach { case (m, bid) =>
-        docs.select("doc_id").filter(col("doc_id") % m === 0)
-          .withColumn("batch_id", lit(bid))
-          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id").parquet(s"$dd/tombs")
+        sinkBatch(docs.select("doc_id").filter(col("doc_id") % m === 0),
+          bid, s"$dd/tombs")
       }
     }
     asofDictRead(s, docs, s"${dfStoreDir(s, d)}/c", s"$dir/tombs", k = 1L)
@@ -1313,15 +1192,14 @@ object Streams {
       case Some(w) => col("ts") < lit(w) - expr("INTERVAL 10 MINUTES")
       case None    => lit(false)
     }
-    batch
-      .withColumn("late", lateFlag)
-      .groupBy("event_type")
-      .agg(count(lit(1)).as("n_total"),
-        sum(when(col("late"), 1L).otherwise(0L)).as("n_late"),
-        max("ts").as("bmax"))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(dir)
+    sinkBatch(
+      batch
+        .withColumn("late", lateFlag)
+        .groupBy("event_type")
+        .agg(count(lit(1)).as("n_total"),
+          sum(when(col("late"), 1L).otherwise(0L)).as("n_late"),
+          max("ts").as("bmax")),
+      batchId, dir)
   }
 
   def lateStoreReadout(s: SparkSession, dir: String): DataFrame =
@@ -1344,14 +1222,10 @@ object Streams {
     * batch 1, then the merged audit. */
   val streamLateStore: Q = (s, d) => {
     val dir = graft.llm.Artifacts.buildOnce(s, "late_store_stream", d) { dd =>
-      val ev = t(s, d, "events").withColumn("bid", lateBatchId)
-      val c = s"$dd/c"
-      lateStoreSink(s, ev.filter(col("bid") === 0L), 0L, c)
-      lateStoreSink(s, ev.filter(col("bid") === 1L), 1L, c)
-      lateStoreSink(s, ev.filter(col("bid") === 2L), 2L, c)
-      // at-least-once redelivery of batch 1 AFTER batch 2: its watermark
-      // reads only batch 0's partials — identical flags, no drift
-      lateStoreSink(s, ev.filter(col("bid") === 1L), 1L, c)
+      // batch 1 is redelivered AFTER batch 2: its watermark reads only
+      // batch 0's partials — identical flags, no drift
+      replay(t(s, d, "events").withColumn("bid", lateBatchId), "bid", 3,
+        again = 1)(lateStoreSink(s, _, _, s"$dd/c"))
     }
     lateStoreReadout(s, s"$dir/c")
   }
@@ -1359,8 +1233,8 @@ object Streams {
   /** ST26: stream-maintained CDC UPSERT store — the change-data-capture
     * feed as an incrementally maintained store (the Delta/Iceberg
     * change-feed shape): each micro-batch of change rows lands under its
-    * own partition (dynamic idempotent overwrite — a redelivered batch
-    * can only rewrite itself), and the readout applies the PER-KEY
+    * own partition ([[sinkBatch]] — a redelivered batch can only
+    * rewrite itself), and the readout applies the PER-KEY
     * LATEST change (last-writer-wins via max over struct(batch_id, …) —
     * a plain distributive aggregate over the KB-scale feed, no
     * state-store) to the base table through the same one-join apply as
@@ -1372,10 +1246,7 @@ object Streams {
     * regress it). At 100 TB the apply is one equi-join per refresh; the
     * feed itself is never rescanned, only its per-key argmax. */
   def cdcStoreSink(changes: DataFrame, batchId: Long, dir: String): Unit =
-    changes
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(dir)
+    sinkBatch(changes, batchId, dir)
 
   def cdcStoreApply(s: SparkSession, dir: String, base: DataFrame): DataFrame =
     cdcStoreApplyAsOf(s, dir, base, Long.MaxValue)
@@ -1408,11 +1279,7 @@ object Streams {
     graft.llm.Artifacts.buildOnce(s, "cdc_store_stream", d) { dd =>
       val changes = graft.etl.Transforms.cdcChangesOf(t(s, d, "orders"))
       val c = s"$dd/c"
-      cdcStoreSink(changes.filter(col("o_orderkey") % 3 === 0), 0L, c)
-      cdcStoreSink(changes.filter(col("o_orderkey") % 3 === 1), 1L, c)
-      cdcStoreSink(changes.filter(col("o_orderkey") % 3 === 2), 2L, c)
-      // at-least-once redelivery of batch 1: must overwrite, not append
-      cdcStoreSink(changes.filter(col("o_orderkey") % 3 === 1), 1L, c)
+      replay(changes, "o_orderkey", 3, again = 1)(cdcStoreSink(_, _, c))
       // upsert override: a later batch re-issues the %30==3 subset —
       // last-writer-wins must pick batch 3's (identical) rows
       cdcStoreSink(changes.filter(col("o_orderkey") % 30 === 3), 3L, c)

@@ -32,10 +32,14 @@ class IvfPersistSpec extends graft.SparkSpec {
     assert(fromDisk === inPlan, "stored-index probe diverged from in-plan IVF")
   }
 
-  test("applying a refresh rewrites only drift-touched lists and lands " +
-    "on the full re-assignment") {
+  /** The refresh case on a store addressed as `prefix + dir`: "" for a
+    * plain local path, "file:" for the same directory as a URI — the
+    * form an hdfs: or s3a: store takes, where a java.io.File does not
+    * reach the store. */
+  private def refreshCase(prefix: String): Unit = {
     import spark.implicits._
     val dir = Files.createTempDirectory("ivf3").toString + "/invlists"
+    val store = prefix + dir
     // dim-4 synthetic with drift BY CONSTRUCTION: lists on axes e1/e2/e3;
     // the refreshed quantizer replaces e3 with e4, which moves the
     // c-vectors (0, 0.6, 0.8, 0) from list 2 to list 1 (cos 0.6 vs 0) —
@@ -51,7 +55,7 @@ class IvfPersistSpec extends graft.SparkSpec {
         .toDF("cid", "cv")
         .withColumn("cn", graft.functions.DotProduct(col("cv"), col("cv")))
     Similarity.assignAgainstCentroids(vecs, cents(Seq(0.0, 0, 1, 0)))
-      .write.partitionBy("cid").parquet(dir)
+      .write.partitionBy("cid").parquet(store)
 
     def files(cid: Long) = Option(new java.io.File(dir, s"cid=$cid")
       .listFiles()).getOrElse(Array.empty[java.io.File])
@@ -61,11 +65,11 @@ class IvfPersistSpec extends graft.SparkSpec {
     assert(files(2L).nonEmpty, "list 2 must exist before the refresh")
 
     val newCents = cents(Seq(0.0, 0, 0, 1))
-    val n = Similarity.applyQuantizerRefresh(spark, dir, newCents)
+    val n = Similarity.applyQuantizerRefresh(spark, store, newCents)
     assert(n === 2L, s"drift touches lists 1 and 2 only, got $n")
 
     // the store now IS the full re-assignment against the new centroids
-    val got = spark.read.parquet(dir)
+    val got = spark.read.parquet(store)
       .select(col("cid").cast("long"), col("nid"), col("nn"))
       .collect().map(_.toString).sorted.toSeq
     val want = Similarity.assignAgainstCentroids(vecs, newCents)
@@ -77,7 +81,16 @@ class IvfPersistSpec extends graft.SparkSpec {
     assert(files(0L) === untouchedBefore, "untouched list was rewritten")
     assert(files(2L).isEmpty, "drained list left stale rows behind")
     // idempotence: re-applying the same centroids is a no-op write
-    assert(Similarity.applyQuantizerRefresh(spark, dir, newCents) === 0L)
+    assert(Similarity.applyQuantizerRefresh(spark, store, newCents) === 0L)
+  }
+
+  test("applying a refresh rewrites only drift-touched lists and lands " +
+    "on the full re-assignment") {
+    refreshCase("")
+  }
+
+  test("a refresh on a file: URI store drops the drained list too") {
+    refreshCase("file:")
   }
 
   test("probing a stored index prunes the inverted-list scan to the probed cids") {

@@ -47,7 +47,10 @@ class SinksSpec extends graft.SparkSpec {
       .collect().map(_.getLong(0)).toSeq === Seq(9L))
   }
 
-  test("S8: compaction rewrites decayed partitions to few files, same data") {
+  /** Compaction of a decayed two-day store addressed as `prefix + dir`,
+    * run while the session's default filesystem is `defaultFs` (when
+    * set): every file must be stat'ed through its own filesystem. */
+  private def compactCase(prefix: String, defaultFs: Option[String]): Unit = {
     val dir = Files.createTempDirectory("graft-s8").toString
     val rows = (0 until 200).map(i =>
       (i.toLong, ts(s"2024-01-0${1 + i % 2} 10:00:00"), s"ev$i"))
@@ -63,13 +66,29 @@ class SinksSpec extends graft.SparkSpec {
     val before = spark.read.parquet(dir).select("event_id", "event_type")
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
 
-    Sinks.compactPartitions(spark, dir, "day") // targetBytes default ≫ data
+    val key = "fs.defaultFS"
+    val saved = spark.conf.getOption(key)
+    defaultFs.foreach(spark.conf.set(key, _))
+    // targetBytes default ≫ data
+    try Sinks.compactPartitions(spark, prefix + dir, "day")
+    finally saved match {
+      case Some(v) => spark.conf.set(key, v)
+      case None    => spark.conf.unset(key)
+    }
 
     val after = filesPerDay
     assert(after.values.forall(_ === 1), s"not compacted: $after")
     val data = spark.read.parquet(dir).select("event_id", "event_type")
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
     assert(data === before)
+  }
+
+  test("S8: compaction rewrites decayed partitions to few files, same data") {
+    compactCase("", None)
+  }
+
+  test("S8: compaction stats each file through its own filesystem, not the default one") {
+    compactCase("file:", Some("graftnofs:///"))
   }
 
   test("schema accretion at the storage layer: mergeSchema unifies evolving files") {
