@@ -1,92 +1,310 @@
 package graft
+
+import java.math.BigDecimal
+import java.nio.file.{Files, Path, Paths}
+import java.util.Locale
+
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
+
+import com.fasterxml.jackson.core.{JsonProcessingException, StreamReadFeature, StreamWriteFeature}
+import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.cfg.JsonNodeFeature
+import com.fasterxml.jackson.databind.json.JsonMapper
+import com.fasterxml.jackson.databind.node.{DecimalNode, JsonNodeFactory, ObjectNode}
+
 object Bench {
+  private val nodes = JsonNodeFactory.instance
+
+  /** The one JSON codec for every bench and verify artifact. Floats read as
+    * exact decimals and are written plain, so a frozen anchor's `0.630`
+    * keeps its text; a duplicate key is a parse error, not a dropped entry. */
+  private[graft] val json: ObjectMapper = JsonMapper.builder()
+    .enable(DeserializationFeature.USE_BIG_DECIMAL_FOR_FLOATS)
+    .enable(StreamReadFeature.STRICT_DUPLICATE_DETECTION)
+    .disable(JsonNodeFeature.STRIP_TRAILING_BIGDECIMAL_ZEROES)
+    .enable(StreamWriteFeature.WRITE_BIGDECIMAL_AS_PLAIN)
+    .build()
+
+  /** An object holding `fields` in the given order. */
+  private[graft] def obj(fields: Iterable[(String, JsonNode)]): ObjectNode = {
+    val o = nodes.objectNode()
+    fields.foreach { case (k, v) => o.set[JsonNode](k, v) }
+    o
+  }
+
+  private[graft] def str(s: String): JsonNode = nodes.textNode(s)
+
+  /** A number written exactly as `text`. */
+  private[graft] def num(text: String): JsonNode = DecimalNode.valueOf(new BigDecimal(text))
+
+  /** `v` at `dec` decimals in Locale.ROOT: under a comma-decimal default
+    * locale every number written here would corrupt the record. */
+  private[graft] def fixed(dec: Int, v: Double): String =
+    s"%.${dec}f".formatLocal(Locale.ROOT, v)
+
+  /** The artifact at `p`; None when there is no such file (a first run).
+    * A file that cannot be read or is not a JSON object throws. */
+  private[graft] def readJson(p: Path): Option[JsonNode] =
+    Option.when(Files.exists(p))(json.readTree(Files.readString(p))).map { t =>
+      require(t.isObject, s"$p is not a JSON object"); t
+    }
+
+  private def message(e: Throwable) = Option(e.getMessage).getOrElse(e.getClass.getName)
+
+  /** `f`, or `orElse` with `f`'s failure recorded in `errors` under `name`,
+    * the artifact's file name: an artifact that cannot be read, parsed or
+    * written fails the run. Fatal errors are not caught. */
+  private[graft] def recorded[T](errors: collection.mutable.Map[String, String],
+      name: String, orElse: T)(f: => T): T =
+    try f catch {
+      case NonFatal(e) =>
+        errors(name) = (e match {
+          // a parse error names its place in the file, not Jackson's source banner
+          case j: JsonProcessingException if j.getLocation != null => s"${j.getOriginalMessage} " +
+            s"(line ${j.getLocation.getLineNr}, column ${j.getLocation.getColumnNr})"
+          case _ => message(e)
+        }).take(200)
+        orElse
+    }
+
+  /** The entries of the object at `key` of `node` (`node` itself when
+    * `key` is empty), in file order. */
+  private def entries(node: JsonNode, key: String = ""): Seq[(String, JsonNode)] = {
+    val o = if (key.isEmpty) node else node.path(key)
+    require(o.isObject, s"'$key' is not an object")
+    o.properties.iterator.asScala.map(e => e.getKey -> e.getValue).toSeq
+  }
+
+  private def number(v: JsonNode, where: String): BigDecimal = {
+    require(v.isNumber, s"$where is not a number")
+    v.decimalValue
+  }
+
+  /** A prior sidecar's (bench_full.json) per-key times; empty when it was
+    * measured at another sf. */
+  private[graft] def sidecarTimes(sidecar: JsonNode, sf: String): Map[String, Double] =
+    if (sidecar.path("sf").asText != sf) Map.empty
+    else entries(sidecar, "queries").map { case (k, v) =>
+      k -> number(v, s"queries.$k").doubleValue }.toMap
+
+  /** BENCH_ANCHOR.json's per-key anchors with their number text as written;
+    * empty for another sf. Throws unless `queries` is an object of numbers. */
+  private[graft] def anchorTexts(anchor: JsonNode, sf: String): Seq[(String, String)] = {
+    val texts = entries(anchor, "queries").map { case (k, v) =>
+      k -> number(v, s"queries.$k").toPlainString }
+    if (anchor.path("sf").asText == sf) texts else Nil
+  }
+
+  /** BENCH_ANCHOR.json with `added` (key, number text) sorted in among the
+    * frozen anchors; all else is carried through, in the committed layout:
+    * one entry per line, `comment`, `sf`, `superseded` (a re-frozen
+    * anchor's old entry and note) and `queries` first. */
+  private[graft] def anchorFile(anchor: JsonNode, added: Seq[(String, String)]): String = {
+    val queries = (entries(anchor, "queries") ++
+      added.map { case (k, t) => k -> num(t) }).sortBy(_._1)
+    val first = Seq("comment", "sf", "superseded", "queries")
+    val top = first.flatMap(k => Option(anchor.get(k)).map(k -> _)) ++
+      entries(anchor).filterNot(e => first.contains(e._1))
+    def entry(k: String, v: JsonNode): String = json.writeValueAsString(k) + ": " +
+      (if (v.isObject && !v.isEmpty)
+         entries(v).map { case (k2, v2) => entry(k2, v2) }.mkString("{\n", ",\n", "\n}")
+       else json.writeValueAsString(v))
+    top.map {
+      case ("queries", _) => entry("queries", obj(queries))
+      case (k, v)         => entry(k, v)
+    }.mkString("{\n", ",\n", "\n}\n")
+  }
+
+  /** The anchor file with the `results` keys it lacks frozen at this run's
+    * time, or None when there is nothing to add or no anchor file at this
+    * sf (`anchored`: the parsed file and its [[anchorTexts]]). Existing
+    * anchors are NEVER re-timed. */
+  private[graft] def frozenAnchors(anchored: Option[(JsonNode, Seq[(String, String)])],
+      results: Seq[(String, Double)]): Option[String] =
+    anchored.filter(_._2.nonEmpty).flatMap { case (tree, texts) =>
+      val have = texts.map(_._1).toSet
+      val added = results.collect { case (k, v) if !have(k) => k -> fixed(3, v) }
+      Option.when(added.nonEmpty)(anchorFile(tree, added))
+    }
+
+  /** A prior run: its git rev or round tag, query count and total seconds. */
+  private[graft] final case class Prior(label: String, n: Int, total: Double)
+
+  /** The round-close records (BENCH_r{N}.json) in `dir` with their round
+    * tags, newest first. */
+  private[graft] def roundCloses(dir: Path): Seq[(String, Path)] = {
+    val rFile = """BENCH_r(\d+)\.json""".r
+    dir.toFile.listFiles.toSeq.flatMap(f => f.getName match {
+      case rFile(n) => Some(n.toInt -> f.toPath)
+      case _        => None
+    }).sortBy(-_._1).map { case (n, p) => s"r$n" -> p }
+  }
+
+  /** A round close at `sf`, read from its stdout line as recorded (the
+    * record's `parsed` object); None if none was parsed or another sf. */
+  private[graft] def closeOf(tag: String, record: JsonNode, sf: String): Option[Prior] = {
+    val line = record.path("parsed")
+    Option.when(line.isObject && line.path("sf").asText == sf)(Prior(tag,
+      number(line.path("n_queries"), "parsed.n_queries").intValueExact,
+      number(line.path("value"), "parsed.value").doubleValue))
+  }
+
+  /** The short rev checked out in the `.git` directory `git`: HEAD, or the
+    * commit of the branch it names, from the loose ref or else from
+    * `packed-refs` (where `git gc` moves refs); "unknown" when not found. */
+  private[graft] def gitRev(git: Path): String = {
+    def read(name: String) =
+      Option(git.resolve(name)).filter(Files.isRegularFile(_)).map(Files.readString(_).trim)
+    read("HEAD").flatMap { h =>
+      if (!h.startsWith("ref: ")) Some(h)
+      else read(h.drop(5)).orElse(read("packed-refs").flatMap(_.linesIterator
+        .map(_.split(" ")).collectFirst { case Array(sha, ref) if ref == h.drop(5) => sha }))
+    }.fold("unknown")(_.take(7))
+  }
+
+  // BASELINE.md is a markdown table, not JSON: its [auto] rows are the one
+  // thing here matched by a pattern
+  private val autoRow = ("""\| \d{4}-\d{2}-\d{2} \| ([0-9a-f]{7}|unknown) \| """ +
+    """([^ |]+) \| ([0-9.]+) \| \[auto\] (\d+) queries""").r
+
+  /** An `[auto]` BASELINE.md row: its sf number and its record. */
+  private[graft] def baselineRow(line: String): Option[(String, Prior)] =
+    autoRow.findFirstMatchIn(line).map(m =>
+      m.group(2) -> Prior(m.group(1), m.group(4).toInt, m.group(3).toDouble))
+
+  /** The 2× gate's reference: the `[auto]` row at `sf` whose query count is
+    * closest to `n` (the later row wins a tie), other than this tree's own
+    * `rev` or an unknown one. Per-query means keep it like-for-like while
+    * the surface grows. */
+  private[graft] def gateRow(baseline: Seq[String], sf: String, rev: String,
+      n: Int): Option[Prior] = {
+    val rows = baseline.flatMap(baselineRow).collect {
+      case (`sf`, p) if p.label != rev && p.label != "unknown" => p }
+    Option.when(rows.nonEmpty && n > 0)(
+      rows.zipWithIndex.minBy { case (p, i) => (math.abs(p.n - n), -i) }._1)
+  }
+
+  /** BASELINE.md with the [auto] `row` of a run of `total` seconds: it
+    * replaces the row of the same rev, sf and query count only when `total`
+    * is LOWER (best-of-runs: a contended re-run never overwrites a quiet
+    * record) and is appended when there is none; None when a better row
+    * stands. Hand-written rows are never touched. */
+  private[graft] def withAutoRow(baseline: Seq[String], row: String,
+      total: Double): Option[Seq[String]] = {
+    val (sf, mine) = baselineRow(row).get
+    val same = baseline.indexWhere(l => baselineRow(l).exists { case (s, p) =>
+      s == sf && p.label == mine.label && p.n == mine.n })
+    if (same < 0) Some(baseline :+ row)
+    else Option.when(total < baselineRow(baseline(same)).get._2.total)(
+      baseline.updated(same, row))
+  }
+
+  /** One run's report: per-key times in timing order, errors, the keys
+    * escalated past the base reps, the gate and round-close references,
+    * and the anchor gate (shared keys, anchor and current sums) with its
+    * per-key violations (key, anchor, now), worst first. */
+  private[graft] final case class Report(
+      sf: String,
+      results: Seq[(String, Double)],
+      errors: Seq[(String, String)],
+      escalated: Seq[(String, Int)],
+      gate: Option[Prior],
+      prevClose: Option[Prior],
+      anchor: Option[(Int, Double, Double)],
+      violations: Seq[(String, Double, Double)]) {
+    val total: Double = results.map(_._2).sum
+    def perQuery(p: Prior): Double = (total / results.size) / (p.total / p.n)
+  }
+
+  /** The report as one JSON line: times at `dec` decimals, trailing zeros
+    * stripped, for the `topK` costliest keys only (the ones the 2× gate
+    * cares about); `withReps` adds the escalated keys. Control characters
+    * in an error are blanked. */
+  private[graft] def line(r: Report, dec: Int, topK: Int, withReps: Boolean = false): String = {
+    def sec(v: Double) = DecimalNode.valueOf(new BigDecimal(fixed(dec, v)).stripTrailingZeros)
+    // a ratio over a zero anchor is written as the string "NaN"/"Infinity"
+    def at(places: Int, v: Double) =
+      if (v.isNaN || v.isInfinite) nodes.numberNode(v) else num(fixed(places, v))
+    def int(n: Int) = nodes.numberNode(n)
+    def blank(s: String) = s.map(c => if (c < ' ') ' ' else c)
+    def vs(p: Prior) = str(s"${p.label}/${p.n}q/${fixed(1, p.total)}s")
+    val kept =
+      if (topK >= r.results.size) r.results else r.results.sortBy(-_._2).take(topK)
+    val anchor = r.anchor.map { case (n, anc, cur) => "anchor" -> obj(Seq(
+      "n_shared" -> int(n), "anchor_s" -> at(1, anc), "now_s" -> at(1, cur),
+      "ratio" -> at(2, cur / anc),
+      "violations" -> nodes.arrayNode().addAll(r.violations.take(5).map { case (k, a, v) =>
+        obj(Seq("q" -> str(k), "anchor" -> at(2, a), "now" -> at(2, v), "ratio" -> at(1, v / a)))
+      }.asJava)) ++
+      Option.when(r.violations.size > 5)("violations_omitted" -> int(r.violations.size - 5)) :+
+      ("pass" -> nodes.booleanNode(cur / anc <= 2.0 && r.violations.isEmpty)))
+    }
+    json.writeValueAsString(obj(Seq(
+      "metric" -> str("total"), "value" -> sec(r.total), "unit" -> str("sec"),
+      "n_queries" -> int(r.results.size),
+      "queries" -> obj(kept.map { case (k, v) => k -> sec(v) })) ++
+      Option.when(kept.size < r.results.size)("queries_omitted" -> int(r.results.size - kept.size)) ++
+      Seq("errors" -> obj(r.errors.map { case (k, v) => blank(k) -> str(blank(v)) })) ++
+      Option.when(withReps)("reps_escalated" -> obj(r.escalated.map { case (k, n) => k -> int(n) })) ++
+      r.gate.map(p => "gate" -> obj(Seq("vs" -> vs(p),
+        "per_query_ratio" -> at(2, r.perQuery(p)),
+        "pass" -> nodes.booleanNode(r.perQuery(p) <= 2.0)))) ++
+      r.prevClose.map(p => "prev_close" -> obj(Seq("vs" -> vs(p),
+        "per_query_ratio" -> at(2, r.perQuery(p))))) ++
+      anchor :+ ("sf" -> str(r.sf))))
+  }
+
+  /** The stdout line. Its consumer parses it out of the last 2000 chars of
+    * stdout, which also hold sbt's ~75-char [success] trailer: a ~1920-char
+    * budget (round 3's full-precision doubles and round 7's 113 keys each
+    * overflowed it: parsed:null despite rc=0). Precision degrades 2 → 1 →
+    * 0 decimals, then the map shrinks to the top-K keys; bench_full.json
+    * keeps them all. */
+  private[graft] def stdoutLine(r: Report): String =
+    ((2 to 0 by -1).view.map(line(r, _, Int.MaxValue)) ++
+      Seq(60, 40, 25, 15).view.map(line(r, 1, _)))
+      .find(_.length <= 1920).getOrElse(line(r, 0, 10))
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = LocalSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
-    // Warm the JVM/codegen/scheduler paths once so the first timed query
-    // doesn't absorb session startup (it was inflating whichever query
-    // happened to iterate first by multiple seconds).
+    // Warm the JVM/codegen/scheduler once so the first timed query doesn't
+    // absorb session startup (seconds on whichever query came first).
     spark.range(1 << 20).selectExpr("sum(id)").collect()
     Tables.t(spark, sfDir, "region").count()
     val sfName = new java.io.File(sfDir).getName
-    // ALL machine-parsed number formatting goes through Locale.ROOT: the
-    // plain f-interpolator uses the JVM default locale, and under a
-    // comma-decimal locale every JSON fragment / anchor line / BASELINE row
-    // written here would silently corrupt the cross-round record.
-    def d1(v: Double) = "%.1f".formatLocal(java.util.Locale.ROOT, v)
-    def d2(v: Double) = "%.2f".formatLocal(java.util.Locale.ROOT, v)
-    def d3(v: Double) = "%.3f".formatLocal(java.util.Locale.ROOT, v)
-    // Prior run's per-query times (same sf only) — loaded BEFORE timing so
-    // that variance-flagged queries can escalate reps inline instead of
-    // merely being reported after the fact. Round-11 verdict: a single
-    // contended sample became the official artifact at 1.99× the gate;
-    // min-of-N with escalation measures the plan, not the weather.
-    val prevTimes: Map[String, Double] =
-      try {
-        val prevPath = java.nio.file.Paths.get("bench_full.json")
-        if (java.nio.file.Files.exists(prevPath)) {
-          val prev = java.nio.file.Files.readString(prevPath)
-          if (prev.contains(s""""sf":"$sfName"""")) {
-            // Parse ONLY the "queries" object: the sidecar also carries a
-            // reps_escalated map whose integer values would otherwise
-            // shadow the times (same key names, later match wins in toMap).
-            val qobj = prev.indexOf(""""queries":{""") match {
-              case -1 => ""
-              case i =>
-                val start = i + """"queries":{""".length
-                prev.substring(start, prev.indexOf('}', start).max(start))
-            }
-            val entry = """"([a-z0-9_]+)":([0-9.]+)""".r
-            entry.findAllMatchIn(qobj)
-              .map(m => m.group(1) -> m.group(2).toDouble).toMap
-          } else Map.empty[String, Double]
-        } else Map.empty[String, Double]
-      } catch { case _: Throwable => Map.empty[String, Double] }
-    // FIXED cross-round anchor (round-14 verdict gap #4): the closest-row
-    // gate below ratchets against the most recent comparable record, so a
-    // slow per-round drift could accumulate invisibly across many rounds.
-    // BENCH_ANCHOR.json pins every key's FIRST quiet measurement forever
-    // (append-only — entries are never re-timed). Parsed BEFORE timing so
-    // per-key violations can trigger an inline quiet re-measure (below).
-    // Entries keep their VERBATIM number text (anchorTexts) so the append
-    // path can rewrite the file without re-rounding frozen history.
-    val anchorPath = java.nio.file.Paths.get("BENCH_ANCHOR.json")
-    val anchorRaw: String =
-      try {
-        if (java.nio.file.Files.exists(anchorPath))
-          java.nio.file.Files.readString(anchorPath)
-        else ""
-      } catch { case _: Throwable => "" }
-    val anchorTexts: Seq[(String, String)] =
-      try {
-        if (anchorRaw.contains(s""""sf": "$sfName"""") ||
-            anchorRaw.contains(s""""sf":"$sfName"""")) {
-          val entry = """"([a-z0-9_]+)":\s*([0-9.]+)""".r
-          entry.findAllMatchIn(
-            anchorRaw.substring(anchorRaw.indexOf("\"queries\"").max(0)))
-            .map(m => m.group(1) -> m.group(2)).toSeq
-        } else Seq.empty
-      } catch { case _: Throwable => Seq.empty }
+    val sfNum = sfName.stripPrefix("sf")
+    // A failing query, or an artifact that cannot be read, parsed or
+    // written, fails the bench VISIBLY: its error is recorded, the rest
+    // still runs, and the exit is non-zero (no -1L masking).
+    val errors = scala.collection.mutable.LinkedHashMap[String, String]()
+    def artifact[T](name: String, orElse: T)(f: => T): T = recorded(errors, name, orElse)(f)
+    // The prior sidecar's times (same sf), loaded BEFORE timing so a
+    // variance-flagged query escalates its reps inline (r11: one contended
+    // sample became the official artifact at 1.99× the gate).
+    val prevTimes: Map[String, Double] = artifact("bench_full.json", Map.empty[String, Double])(
+      readJson(Paths.get("bench_full.json")).fold(Map.empty[String, Double])(sidecarTimes(_, sfName)))
+    // FIXED cross-round anchor (r14 gap #4): the closest-row gate ratchets
+    // against recent records, so a slow drift could pass invisibly;
+    // BENCH_ANCHOR.json pins every key's FIRST quiet time forever. Parsed
+    // BEFORE timing so a per-key violation gets an inline quiet re-measure.
+    val anchorPath = Paths.get("BENCH_ANCHOR.json")
+    val anchored: Option[(JsonNode, Seq[(String, String)])] =
+      artifact("BENCH_ANCHOR.json", Option.empty[(JsonNode, Seq[(String, String)])])(
+        readJson(anchorPath).map(tree => tree -> anchorTexts(tree, sfName)))
     val anchor: Map[String, Double] =
-      anchorTexts.map { case (k, t) => k -> t.toDouble }.toMap
-    // A failing query must fail the bench VISIBLY: record its error, keep
-    // timing the rest, and exit non-zero at the end (no -1L masking).
-    // Each query is timed `reps` times and reports the MIN: single-shot
-    // timings on this sandbox swing up to ~2× (first-execution codegen +
-    // neighbor noise); min-of-2 measures the plan, not the weather. When
-    // the min still sits >3× the previous sidecar's time for the same
-    // query (the documented noise band is ~2×), the query gets up to
-    // `extraReps` more runs — a noisy window then costs extra samples, not
-    // a contaminated official artifact.
+      anchored.toSeq.flatMap(_._2).map { case (k, t) => k -> t.toDouble }.toMap
+    // Each query reports the MIN of `reps` runs (single shots swing ~2× on
+    // codegen and neighbor noise); a min still >3× the prior sidecar's time
+    // gets up to `extraReps` more runs, so a noisy window costs samples,
+    // not a contaminated artifact.
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt
     val extraReps = sys.env.getOrElse("SPARK_GRAFT_BENCH_EXTRA_REPS", "2").toInt
-    // Key filter for STANDALONE quiet re-measures (the per-key anchor
-    // gate's retry discipline): a filtered run times only the named keys
-    // and SKIPS every permanent record (bench_full.json, anchor append,
-    // BASELINE.md) — partial runs must never masquerade as full ones.
+    // Key filter for STANDALONE quiet re-measures: a filtered run SKIPS
+    // every permanent record, so a partial run never masquerades as full.
     val only: Option[Set[String]] =
       sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
-    val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     val repsUsed = scala.collection.mutable.LinkedHashMap[String, Int]()
     val results0 = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
@@ -96,8 +314,7 @@ object Bench {
       def runOnce(): Unit = {
         val t0 = System.nanoTime()
         try { fn(spark, sfDir).count() } catch {
-          case e: Throwable =>
-            errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
+          case e: Throwable => errors(name) = message(e).take(200)
         }
         best = math.min(best, (System.nanoTime() - t0) / 1e9)
         rep += 1
@@ -114,17 +331,11 @@ object Bench {
       repsUsed(name) = rep
       name -> best
     }
-    // PER-KEY anchor gate (round-15 order #2): the aggregate anchor ratio
-    // hides a single 10× key inside a 319-key sum (~3% movement), so every
-    // shared key is also compared against its own frozen first-green time.
-    // Two clauses (round-17 verdict #1b): the noise band (>2× AND >+1 s —
-    // sub-second keys jitter past 2× on this sandbox) AND a RATIO-ONLY
-    // escalation (≥3× anchor regardless of absolute delta, anchors ≥50 ms)
-    // — the r17 close let 22 sub-second keys drift past 2× because every
-    // one escaped the delta clause. Each violator gets ONE quiet re-measure
-    // before being flagged — by this point the fleet has drained, so the
-    // retry is the "standalone re-measure" that exonerated sim_sq8_gate in
-    // r14/r15 by hand; a genuine plan regression survives the retry.
+    // PER-KEY anchor gate (r15 #2: the aggregate ratio hides one 10× key in
+    // a 319-key sum). Two clauses (r17 #1b): the noise band (>2× AND >+1 s)
+    // and a ratio-only one (≥3×, anchors ≥50 ms) that sub-second drift can't
+    // escape. Each violator gets ONE quiet re-measure once the fleet has
+    // drained; a genuine plan regression survives it.
     def keyViolates(k: String, v: Double): Boolean =
       anchor.get(k).exists(a =>
         (v > 2 * a && v - a > 1.0) || (a >= 0.05 && v >= 3 * a))
@@ -141,7 +352,7 @@ object Bench {
           k -> math.min(v, again)
         } catch {
           case e: Throwable =>
-            errors(k) = ("retry: " + Option(e.getMessage).getOrElse(e.getClass.getName)).take(200)
+            errors(k) = ("retry: " + message(e)).take(200)
             k -> v
         }
       } else k -> v
@@ -150,111 +361,23 @@ object Bench {
       case (k, v) if keyViolates(k, v) && !errors.contains(k) =>
         (k, anchor(k), v)
     }.sortBy { case (_, a, v) => -(v / a) }
-    // Compact per-query timings to 3 decimals: the driver parses the JSON
-    // line out of a bounded TAIL of stdout (last ~2000 chars) — round 3's
-    // full-precision doubles pushed the line past that window and the
-    // driver recorded parsed:null despite rc=0. Millisecond resolution is
-    // plenty for the 2× gate.
-    def jstr(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"")
-      .replaceAll("[\\x00-\\x1f]", " ") + "\""
-    val errJson = errors.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }
-      .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.values.sum else 0.0
-    def gitRev: String =
-      try {
-        val h = java.nio.file.Files
-          .readString(java.nio.file.Paths.get(".git/HEAD")).trim
-        (if (h.startsWith("ref: "))
-           java.nio.file.Files.readString(
-             java.nio.file.Paths.get(".git/" + h.drop(5))).trim
-         else h).take(7)
-      } catch { case _: Throwable => "unknown" }
-    // The 2×-vs-baseline gate, computed HERE instead of by judge/builder
-    // arithmetic: find the prior [auto] BASELINE.md row at this sf whose
-    // query count is closest to this run's (most recent wins ties,
-    // excluding this tree's own row), and compare PER-QUERY mean time —
-    // like-for-like even while the surface grows. The verdict's gate is
-    // "within 2× of the recorded baseline"; ratio > 2 fails loudly in
-    // both the stdout JSON and stderr.
-    val gate: Option[(String, Int, Double, Double)] =
-      try {
-        val sfNum = sfName.stripPrefix("sf")
-        val row = ("""\| \d{4}-\d{2}-\d{2} \| ([0-9a-f]{7}) \| """ +
-          java.util.regex.Pattern.quote(sfNum) +
-          """ \| ([0-9.]+) \| \[auto\] (\d+) queries""").r
-        val rev = gitRev
-        val rows = java.nio.file.Files
-          .readAllLines(java.nio.file.Paths.get("BASELINE.md"))
-          .toArray.toSeq.map(_.toString)
-          .flatMap(l => row.findFirstMatchIn(l))
-          .map(m => (m.group(1), m.group(3).toInt, m.group(2).toDouble))
-          .filter(_._1 != rev)
-        if (rows.isEmpty || results.isEmpty) None
-        else {
-          val (pRev, pN, pTotal) = rows.zipWithIndex
-            .minBy { case ((_, n, _), i) =>
-              (math.abs(n - results.size), -i) }._1
-          val perQ = (total / results.size) / (pTotal / pN)
-          Some((pRev, pN, pTotal, perQ))
-        }
-      } catch { case _: Throwable => None }
-    // Gate vs the previous ROUND-CLOSE artifact too (round-17 verdict #1c):
-    // the closest-row gate above can end up comparing against this round's
-    // own worst intermediate run, which flatters the trend. The highest
-    // BENCH_r{N}.json in the repo is the prior round's official close; its
-    // per-query cost is recorded alongside so a round can't look faster by
-    // racing its own contended runs. Informational (stderr + JSON), not a
-    // pass/fail — the anchors are the binding record.
-    val prevClose: Option[(String, Int, Double)] =
-      try {
-        val dir = new java.io.File(".")
-        val rFile = """BENCH_r(\d+)\.json""".r
-        val closes = dir.listFiles.toSeq.flatMap { f =>
-          f.getName match {
-            case rFile(n) => Some((n.toInt, f))
-            case _        => None
-          }
-        }.sortBy(-_._1)
-        closes.view.flatMap { case (n, f) =>
-          // the driver wrapper embeds the bench stdout line as an escaped
-          // JSON string — un-escape before matching
-          val txt = java.nio.file.Files.readString(f.toPath)
-            .replace("\\\"", "\"")
-          val v = """"metric":"total","value":([0-9.]+)""".r
-            .findFirstMatchIn(txt).map(_.group(1).toDouble)
-          val q = """"n_queries":(\d+)""".r
-            .findFirstMatchIn(txt).map(_.group(1).toInt)
-          val sfOk = txt.contains(s""""sf": ${sfName.stripPrefix("sf")}""") ||
-            txt.contains(s""""sf":"$sfName"""")
-          if (sfOk) v.zip(q).map { case (vv, qq) => (s"r$n", qq, vv) }
-          else None
-        }.headOption
-      } catch { case _: Throwable => None }
-    val prevCloseJson = prevClose.filter(_ => results.nonEmpty)
-      .map { case (r, pN, pTotal) =>
-        val perQ = (total / results.size) / (pTotal / pN)
-        s""","prev_close":{"vs":"$r/${pN}q/${d1(pTotal)}s","per_query_ratio":${d2(perQ)}}"""
-      }.getOrElse("")
-    prevClose.filter(_ => results.nonEmpty).foreach { case (r, pN, pTotal) =>
-      val perQ = (total / results.size) / (pTotal / pN)
-      System.err.println(
-        f"[bench] PREV-CLOSE: per-query ratio $perQ%.2fx vs $r " +
-          f"($pN queries, $pTotal%.1fs)")
-    }
-    val gateJson = gate.map { case (pRev, pN, pTotal, perQ) =>
-      s""","gate":{"vs":"$pRev/${pN}q/${d1(pTotal)}s","per_query_ratio":${d2(perQ)},"pass":${perQ <= 2.0}}"""
-    }.getOrElse("") + prevCloseJson
-    gate.foreach { case (pRev, pN, pTotal, perQ) =>
-      System.err.println(
-        f"[bench] GATE ${if (perQ <= 2.0) "PASS" else "FAIL"}: " +
-          f"per-query ratio $perQ%.2fx vs $pRev ($pN queries, $pTotal%.1fs)")
-    }
-    // Aggregate anchor gate (parsed up top, before timing) + the per-key
-    // violations list (round-15 order #2). `pass` requires BOTH: aggregate
-    // ratio <= 2 AND zero per-key violations — a single 10× key can no
-    // longer hide inside the sum. Violations ride in the stdout JSON
-    // (capped at 5 for the line budget; the full list is in
-    // bench_full.json via the same fragment) and on stderr.
+    val rev = artifact(".git", "unknown")(gitRev(Paths.get(".git")))
+    val baselinePath = Paths.get("BASELINE.md")
+    val baseline: Option[Seq[String]] = artifact("BASELINE.md", Option.empty[Seq[String]])(
+      Option.when(Files.exists(baselinePath))(Files.readAllLines(baselinePath).asScala.toSeq))
+    // The 2×-vs-baseline gate, computed HERE, not by hand; > 2 fails loudly.
+    val gate = baseline.flatMap(gateRow(_, sfNum, rev, results.size))
+    // vs the previous round's official close too (r17 #1c: the closest row
+    // can be this round's own worst run, which flatters the trend).
+    // Informational: the anchors are the binding record.
+    val prevClose: Option[Prior] =
+      if (results.isEmpty) None
+      else roundCloses(Paths.get(".")).view.flatMap { case (tag, p) =>
+        artifact(p.getFileName.toString, Option.empty[Prior])(
+          readJson(p).flatMap(closeOf(tag, _, sfName)))
+      }.headOption
+    // Aggregate anchor gate: `pass` needs ratio <= 2 AND no per-key
+    // violation (the line shows 5 of them, stderr all).
     val anchorGate: Option[(Int, Double, Double)] = {
       val shared = results.keySet.intersect(anchor.keySet)
       if (shared.isEmpty) None
@@ -264,20 +387,20 @@ object Bench {
         Some((shared.size, anc, cur))
       }
     }
-    val violJson =
-      if (violations.isEmpty) """"violations":[]"""
-      else {
-        val shown = violations.take(5).map { case (k, a, v) =>
-          s"""{"q":"$k","anchor":${d2(a)},"now":${d2(v)},"ratio":${d1(v / a)}}"""
-        }.mkString("[", ",", "]")
-        val more = if (violations.size > 5)
-          s""","violations_omitted":${violations.size - 5}""" else ""
-        s""""violations":$shown$more"""
-      }
-    val anchorJson = anchorGate.map { case (n, anc, cur) =>
-      val pass = cur / anc <= 2.0 && violations.isEmpty
-      s""","anchor":{"n_shared":$n,"anchor_s":${d1(anc)},"now_s":${d1(cur)},"ratio":${d2(cur / anc)},$violJson,"pass":$pass}"""
-    }.getOrElse("")
+    // a def: errors recorded by the artifact writes below reach the stdout line
+    def report = Report(sfName, results.toSeq, errors.toSeq,
+      repsUsed.filter(_._2 > reps).toSeq, gate, prevClose, anchorGate, violations)
+    prevClose.foreach { p =>
+      System.err.println(
+        f"[bench] PREV-CLOSE: per-query ratio ${report.perQuery(p)}%.2fx vs ${p.label} " +
+          f"(${p.n} queries, ${p.total}%.1fs)")
+    }
+    gate.foreach { p =>
+      val perQ = report.perQuery(p)
+      System.err.println(
+        f"[bench] GATE ${if (perQ <= 2.0) "PASS" else "FAIL"}: " +
+          f"per-query ratio $perQ%.2fx vs ${p.label} (${p.n} queries, ${p.total}%.1fs)")
+    }
     anchorGate.foreach { case (n, anc, cur) =>
       val r = cur / anc
       val pass = r <= 2.0 && violations.isEmpty
@@ -292,42 +415,8 @@ object Bench {
             "persistent contention, read the plan")
       }
     }
-    // The driver parses this line out of a BOUNDED tail of stdout: the
-    // last 2000 chars, which must also hold sbt's ~75-char [success]
-    // trailer — so the line budget is ~1920 chars. Precision degrades
-    // (2 → 1 → 0 decimals, trailing zeros stripped) before the line can
-    // ever overflow; the untruncated 3-decimal JSON is also written to
-    // bench_full.json for human/judge consumption.
-    // Round 7 lesson: with 113 queries even line(0) exceeds the driver's
-    // tail window, so BENCH_r07 recorded parsed:null despite rc=0. When
-    // precision degradation alone can't fit the line, shrink the stdout
-    // map to the top-K costliest queries (they're what the 2× gate cares
-    // about) and say how many cheap ones were elided; bench_full.json
-    // always carries all of them at 3 decimals.
-    def line(dec: Int, topK: Int, withReps: Boolean = false): String = {
-      def sec(v: Double) = s"%.${dec}f".formatLocal(java.util.Locale.ROOT, v)
-        .replaceAll("(\\.\\d*?)0+$", "$1").replaceAll("\\.$", "")
-      val kept =
-        if (topK >= results.size) results.toSeq
-        else results.toSeq.sortBy(-_._2).take(topK)
-      val omitted =
-        if (kept.size == results.size) ""
-        else s""","queries_omitted":${results.size - kept.size}"""
-      val qs = kept.map { case (k, v) => "\"" + k + "\":" + sec(v) }
-        .mkString("{", ",", "}")
-      // reps-used map rides only in the sidecar (stdout line budget is
-      // tight); escalated queries are the ones with reps > base.
-      val repsJson =
-        if (!withReps) ""
-        else repsUsed.filter(_._2 > reps)
-          .map { case (k, v) => "\"" + k + "\":" + v }
-          .mkString(""","reps_escalated":{""", ",", "}")
-      s"""{"metric":"total","value":${sec(total)},"unit":"sec","n_queries":${results.size},"queries":$qs$omitted,"errors":$errJson$repsJson$gateJson$anchorJson,"sf":"$sfName"}"""
-    }
-    // Variance reporting (post-escalation): anything STILL >3× after the
-    // extra reps is worth reading as a possible plan regression; big
-    // downward moves are logged too (they reset the sidecar floor).
-    // stderr-only: the driver's stdout JSON contract is untouched.
+    // Variance (stderr only): still >3× after escalation may be a plan
+    // regression; big drops are logged too (they reset the sidecar floor).
     results.foreach { case (k, v) =>
       prevTimes.get(k).filter(_ >= 0.15).foreach { pv =>
         if (v > 3 * pv || (v >= 0.15 && pv > 3 * v)) {
@@ -338,130 +427,31 @@ object Bench {
         }
       }
     }
-    try {
-      if (only.isEmpty) java.nio.file.Files.writeString(
-        java.nio.file.Paths.get("bench_full.json"),
-        line(3, Int.MaxValue, withReps = true) + "\n")
-    } catch { case _: Throwable => () } // sidecar is best-effort
-    // Anchor maintenance: keys not yet in BENCH_ANCHOR.json get frozen at
-    // this run's time (their first clean measurement); existing entries
-    // are NEVER rewritten — their VERBATIM number text (anchorTexts) is
-    // carried through, never re-parsed-and-re-rounded. The write ABORTS
-    // if the strict key regex parsed fewer entries than the file's
-    // queries block visibly holds (a corrupted/nonconforming entry must
-    // never be silently dropped from the permanent record). Only runs at
-    // the anchor's own sf with zero errors touch the file, so a local
-    // sf0.01 iteration loop or a failing tree can't pollute it.
-    try {
-      if (only.isEmpty && errors.isEmpty && anchorTexts.nonEmpty &&
-          results.exists { case (k, _) => !anchor.contains(k) }) {
-        val qBlock = anchorRaw.substring(anchorRaw.indexOf("\"queries\"").max(0))
-        val looseCount = """"[^"\n]+"\s*:""".r.findAllIn(qBlock).size
-        // strict entries + 1 for the "queries" label itself
-        if (looseCount != anchorTexts.size + 1)
-          System.err.println(s"[bench] ANCHOR WRITE ABORTED: strict parse " +
-            s"${anchorTexts.size} entries vs $looseCount key tokens in file " +
-            "- fix BENCH_ANCHOR.json by hand, not by lossy rewrite")
-        else {
-          val comment = """(?s)"comment":\s*"((?:[^"\\]|\\.)*)"""".r
-            .findFirstMatchIn(anchorRaw).map(_.group(1)).getOrElse("")
-          // The annotated re-record block (r16 verdict #3): when a stale
-          // anchor is re-frozen by hand, its OLD entry moves into
-          // "superseded" (placed BEFORE "queries" so neither the anchor
-          // parse nor the strict-count audit sees it). Carried through
-          // every rewrite VERBATIM — history is appended, never erased.
-          // Extracted by a brace-balanced, string-aware scan (a regex
-          // cannot match nested braces, and a brace inside a note string
-          // would silently erase the block — round-17 ADVICE); if the
-          // label is present but no balanced block follows, the write
-          // ABORTS loudly like the strict-count check above.
-          val supIdx = anchorRaw.indexOf("\"superseded\"")
-          val superseded: Option[String] =
-            if (supIdx < 0) Some("")
-            else {
-              val open = anchorRaw.indexOf('{', supIdx)
-              var i = open; var depth = 0; var inStr = false; var esc = false
-              var end = -1
-              while (open >= 0 && i < anchorRaw.length && end < 0) {
-                val c = anchorRaw.charAt(i)
-                if (esc) esc = false
-                else if (inStr) {
-                  if (c == '\\') esc = true
-                  else if (c == '"') inStr = false
-                } else c match {
-                  case '"' => inStr = true
-                  case '{' => depth += 1
-                  case '}' => depth -= 1; if (depth == 0) end = i
-                  case _   => ()
-                }
-                i += 1
-              }
-              if (end < 0) None
-              else Some(anchorRaw.substring(supIdx, end + 1) + ",\n")
-            }
-          superseded match {
-            case None =>
-              System.err.println("[bench] ANCHOR WRITE ABORTED: " +
-                "'superseded' present but no brace-balanced block found " +
-                "- fix BENCH_ANCHOR.json by hand, not by lossy rewrite")
-            case Some(sup) =>
-              val newKeys = results.toSeq
-                .filter { case (k, _) => !anchor.contains(k) }
-                .map { case (k, v) => k -> d3(v) }
-              val body = (anchorTexts ++ newKeys).sortBy(_._1).map { case (k, t) =>
-                s""""$k": $t"""
-              }.mkString(",\n")
-              java.nio.file.Files.writeString(anchorPath,
-                s"""{\n"comment": "$comment",\n"sf": "$sfName",\n$sup"queries": {\n$body\n}\n}\n""")
-          }
-        }
+    if (only.isEmpty) artifact("bench_full.json", ())(Files.writeString(
+      Paths.get("bench_full.json"), line(report, 3, Int.MaxValue, withReps = true) + "\n"))
+    // New keys are frozen into the anchor file only by a full run with zero
+    // errors at the anchor's sf, so a failing tree can't pollute it.
+    if (only.isEmpty && errors.isEmpty) frozenAnchors(anchored, results.toSeq).foreach {
+      text => artifact("BENCH_ANCHOR.json", ())(Files.writeString(anchorPath, text))
+    }
+    // The machine-kept BASELINE.md row (r11: the manual record drifted).
+    if (only.isEmpty && errors.isEmpty) baseline.foreach { lines =>
+      val top = results.toSeq.sortBy(-_._2).take(5)
+        .map { case (k, v) => s"$k ${fixed(1, v)}" }.mkString(", ")
+      val escNote =
+        if (repsUsed.exists(_._2 > reps))
+          s"; escalated: ${repsUsed.filter(_._2 > reps).keys.mkString(",")}"
+        else "; 0 escalated"
+      val total = report.total
+      val row = s"| ${java.time.LocalDate.now} | $rev | $sfNum | ${fixed(1, total)} " +
+        s"| [auto] ${results.size} queries, min-of-$reps + variance " +
+        s"escalation$escNote; top: $top |"
+      withAutoRow(lines, row, total).foreach { updated =>
+        artifact("BASELINE.md", ())(
+          Files.writeString(baselinePath, updated.mkString("", "\n", "\n")))
       }
-    } catch { case _: Throwable => () } // anchor append is best-effort
-    // Machine-append the BASELINE.md narrative row (round-11 verdict: the
-    // manual record drifted from the artifact). Rows carry an [auto] marker;
-    // re-running the same tree at the same sf REPLACES its [auto] row only
-    // when the new total is LOWER — the documented best-of-runs policy is
-    // now enforced by code, so a contended re-run can never overwrite a
-    // quiet record and hand-written narrative rows are never touched.
-    try {
-      val baseline = java.nio.file.Paths.get("BASELINE.md")
-      if (only.isEmpty && java.nio.file.Files.exists(baseline) && errors.isEmpty) {
-        val rev = gitRev
-        val sfNum = sfName.stripPrefix("sf")
-        val top = results.toSeq.sortBy(-_._2).take(5)
-          .map { case (k, v) => s"$k ${d1(v)}" }.mkString(", ")
-        val escNote =
-          if (repsUsed.exists(_._2 > reps))
-            s"; escalated: ${repsUsed.filter(_._2 > reps).keys.mkString(",")}"
-          else "; 0 escalated"
-        val row = s"| ${java.time.LocalDate.now} | $rev | $sfNum | ${d1(total)} " +
-          s"| [auto] ${results.size} queries, min-of-$reps + variance " +
-          s"escalation$escNote; top: $top |"
-        val lines = java.nio.file.Files.readAllLines(baseline)
-        val key = s"| $rev | $sfNum |"
-        val existing = (0 until lines.size).find { i =>
-          val l = lines.get(i)
-          l.contains("[auto]") && l.contains(key) &&
-            l.contains(s" ${results.size} queries")
-        }
-        existing match {
-          case Some(i) =>
-            val prevTotal = """\| ([0-9.]+) \| \[auto\]""".r
-              .findFirstMatchIn(lines.get(i)).map(_.group(1).toDouble)
-            if (prevTotal.forall(total < _)) {
-              lines.set(i, row)
-              java.nio.file.Files.write(baseline, lines)
-            } // else: a better (lower) record for this tree already stands
-          case None =>
-            java.nio.file.Files.writeString(baseline,
-              String.join("\n", lines) + "\n" + row + "\n")
-        }
-      }
-    } catch { case _: Throwable => () } // narrative append is best-effort
-    val candidates =
-      (2 to 0 by -1).map(line(_, Int.MaxValue)) ++
-        Seq(60, 40, 25, 15).map(line(1, _))
-    println(candidates.find(_.length <= 1920).getOrElse(line(0, 10)))
+    }
+    println(stdoutLine(report))
     spark.stop()
     if (errors.nonEmpty) {
       errors.foreach { case (k, v) => System.err.println(s"[bench] FAILED $k: $v") }

@@ -94,7 +94,7 @@ object QueryService {
           try respond(ex, 200, pooled(dashboardJson(spark, d, body)))
           catch {
             case e: Exception =>
-              respond(ex, 400, s"""{"error":${quote(e.getMessage)}}""")
+              respond(ex, 400, errorBody(e))
           }
         })
     }
@@ -106,12 +106,15 @@ object QueryService {
         try respond(ex, 200, pooled(graft.jx.Jx.runFormatted(spark, body, tables, dataset)))
         catch {
           case e: Exception =>
-            respond(ex, 400, s"""{"error":${quote(e.getMessage)}}""")
+            respond(ex, 400, errorBody(e))
         }
       })
     server.start()
     server
   }
+
+  /** Shared by the pooled handlers (thread-safe once built). */
+  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
   /** Named-view panel cache: the six dashboard panels are deterministic
     * per (session, dataset) — every section probes build-once stores —
@@ -136,7 +139,6 @@ object QueryService {
     * their oracles. */
   private def dashboardJson(spark: SparkSession, dataset: String,
       body: String): String = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val q = mapper.readTree(if (body.trim.isEmpty) "{}" else body)
     val view = Option(q.get("view")).map(_.asText())
     if (view.exists(panelViews.contains))
@@ -356,10 +358,10 @@ object QueryService {
     throw new IllegalArgumentException(s"unknown view: $view")
   }
 
-  private def quote(s: String): String =
-    "\"" + Option(s).getOrElse("query failed")
-      .replace("\\", "\\\\").replace("\"", "\\\"")
-      .replaceAll("[\\x00-\\x1f]", " ") + "\""
+  /** The 400 body `{"error": <message>}`. */
+  private def errorBody(e: Exception): String =
+    mapper.writeValueAsString(mapper.createObjectNode()
+      .put("error", Option(e.getMessage).getOrElse("query failed")))
 
   private def respond(ex: HttpExchange, code: Int, body: String): Unit = {
     val bytes = body.getBytes(StandardCharsets.UTF_8)

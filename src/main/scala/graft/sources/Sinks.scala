@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 
 /** Output routing (SURVEY.md §2.1 S5–S7).
@@ -66,32 +67,42 @@ object Sinks {
     * only partitions present in the rewrite are touched (same
     * idempotency contract as the daily router).
     *
+    * A multi-level store (`day=X/batch_id=Y`) is compacted leaf by leaf,
+    * filtered and overwritten on every level of the path's spec, so sibling
+    * batches are never touched; `partitionCol` must lead the spec.
+    *
     * Rewrites everything it reads; an incremental driver would pass a
     * predicate selecting only decayed partitions (e.g. yesterday's). */
   def compactPartitions(spark: SparkSession, dir: String,
       partitionCol: String, targetBytes: Long = 128L * 1024 * 1024): Unit = {
     val df = spark.read.parquet(dir)
-    // current size per partition, from the file index (no data pass);
-    // each file is stat'ed through its own filesystem, not the default one
-    val files = df.inputFiles
     val conf = spark.sessionState.newHadoopConf()
-    val sizes = files.map { f =>
+    val root = new Path(dir)
+    val rootPath = root.getFileSystem(conf).makeQualified(root).toUri.getPath
+    // ("day", "X") :: ("batch_id", "Y") :: Nil for .../day=X/batch_id=Y/part-…
+    def spec(file: Path): List[(String, String)] =
+      Iterator.iterate(file.getParent)(_.getParent)
+        .takeWhile(p => p != null && p.toUri.getPath != rootPath)
+        .map(_.getName.split("=", 2)).collect { case Array(c, v) => c -> v }
+        .toList.reverse
+    // current size per leaf partition, from the file index (no data pass);
+    // each file is stat'ed through its own filesystem, not the default one
+    val sizes = df.inputFiles.toSeq.map { f =>
       val p = new Path(f)
-      val part = p.getParent.getName // e.g. "day=20240101"
-      part -> p.getFileSystem(conf).getFileStatus(p).getLen
-    }.groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).sum }
-    val nFiles = sizes.map { case (k, bytes) =>
-      k -> math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-    }
-    nFiles.foreach { case (partDir, n) =>
-      val Array(colName, value) = partDir.split("=", 2)
+      spec(p) -> p.getFileSystem(conf).getFileStatus(p).getLen
+    }.groupMapReduce(_._1)(_._2)(_ + _)
+    for (part <- sizes.keys) require(part.headOption.exists(_._1 == partitionCol),
+      s"store $dir is partitioned by ${part.map(_._1)}, not led by $partitionCol")
+    sizes.foreach { case (part, bytes) =>
+      val n = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
+      val leaf = part.map { case (c, v) =>
+        col(c) === ExternalCatalogUtils.unescapePathName(v) }.reduce(_ && _)
       // localCheckpoint materializes the partition BEFORE the overwrite —
       // Spark (rightly) refuses to overwrite a path a live plan still
       // reads; the checkpoint breaks that file dependency and makes the
       // per-partition swap safe
-      overwritePartitions(
-        df.filter(col(colName) === value).localCheckpoint().repartition(n),
-        dir, partitionCol)
+      overwritePartitions(df.filter(leaf).localCheckpoint().repartition(n),
+        dir, part.map(_._1): _*)
     }
   }
 

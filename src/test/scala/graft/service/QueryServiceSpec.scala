@@ -213,6 +213,18 @@ class QueryServiceSpec extends graft.SparkSpec {
     }
   }
 
+  test("a rejected query's error body parses back to its message, quotes, " +
+    "backslashes and newlines included") {
+    withServer { (c, port) =>
+      val format = "a \"quoted\" \\ back\nslash"
+      val r = post(c, port, mapper.writeValueAsString(mapper.createObjectNode()
+        .put("from", "logs").put("format", format)))
+      assert(r.statusCode() === 400)
+      assert(mapper.readTree(r.body()).get("error").asText() ===
+        s"unsupported format: $format")
+    }
+  }
+
   test("GET /query is rejected with 405") {
     withServer { (c, port) =>
       val r = c.send(

@@ -91,6 +91,32 @@ class SinksSpec extends graft.SparkSpec {
     compactCase("file:", Some("graftnofs:///"))
   }
 
+  test("S8: compacting a (day, batch_id) store by day keeps every batch") {
+    val dir = Files.createTempDirectory("graft-s8-levels").toString
+    val rows = (0 until 40).map(i =>
+      (i.toLong, s"ev$i", s"2024010${1 + i % 2}", (i / 2) % 2))
+    // several files per (day, batch_id) leaf, the sketch store's layout
+    rows.toDF("event_id", "event_type", "day", "batch_id").repartition(4)
+      .write.mode("overwrite").partitionBy("day", "batch_id").parquet(dir)
+    def leaves: Map[String, Int] = (for {
+      d <- new java.io.File(dir).listFiles().toSeq if d.isDirectory
+      b <- d.listFiles().toSeq if b.isDirectory
+    } yield s"${d.getName}/${b.getName}" ->
+      b.listFiles().count(_.getName.endsWith(".parquet"))).toMap
+    val expected = (for (d <- Seq("day=20240101", "day=20240102");
+                         b <- Seq("batch_id=0", "batch_id=1")) yield s"$d/$b").toSet
+    assert(leaves.keySet === expected)
+    assert(leaves.values.exists(_ > 1), s"fixture not decayed: $leaves")
+
+    Sinks.compactPartitions(spark, dir, "day")
+
+    assert(leaves === expected.map(_ -> 1).toMap)
+    val data = spark.read.parquet(dir)
+      .select("event_id", "event_type", "day", "batch_id").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.get(2).toString, r.getInt(3))).toSet
+    assert(data === rows.toSet)
+  }
+
   test("schema accretion at the storage layer: mergeSchema unifies evolving files") {
     // the reference's documents grow fields over time (schemaless JSON);
     // the columnar equivalent: older parquet files simply lack the new
