@@ -185,6 +185,14 @@ object Bench {
       rows.zipWithIndex.minBy { case (p, i) => (math.abs(p.n - n), -i) }._1)
   }
 
+  /** The 2× gate's and the prev-close's references for a run of `n` keys:
+    * both compare its per-query mean with a full run's, so a filtered run
+    * (`SPARK_GRAFT_BENCH_ONLY`) gets neither and reads no round close. */
+  private[graft] def fullRunRefs(filtered: Boolean, baseline: Option[Seq[String]],
+      sf: String, rev: String, n: Int, prevClose: => Option[Prior]): (Option[Prior], Option[Prior]) =
+    if (filtered) (None, None)
+    else (baseline.flatMap(gateRow(_, sf, rev, n)), prevClose)
+
   /** BASELINE.md with the [auto] `row` of a run of `total` seconds: it
     * replaces the row of the same rev, sf and query count only when `total`
     * is LOWER (best-of-runs: a contended re-run never overwrites a quiet
@@ -366,16 +374,15 @@ object Bench {
     val baseline: Option[Seq[String]] = artifact("BASELINE.md", Option.empty[Seq[String]])(
       Option.when(Files.exists(baselinePath))(Files.readAllLines(baselinePath).asScala.toSeq))
     // The 2×-vs-baseline gate, computed HERE, not by hand; > 2 fails loudly.
-    val gate = baseline.flatMap(gateRow(_, sfNum, rev, results.size))
-    // vs the previous round's official close too (r17 #1c: the closest row
+    // And vs the previous round's official close (r17 #1c: the closest row
     // can be this round's own worst run, which flatters the trend).
     // Informational: the anchors are the binding record.
-    val prevClose: Option[Prior] =
+    val (gate, prevClose) = fullRunRefs(only.isDefined, baseline, sfNum, rev, results.size,
       if (results.isEmpty) None
       else roundCloses(Paths.get(".")).view.flatMap { case (tag, p) =>
         artifact(p.getFileName.toString, Option.empty[Prior])(
           readJson(p).flatMap(closeOf(tag, _, sfName)))
-      }.headOption
+      }.headOption)
     // Aggregate anchor gate: `pass` needs ratio <= 2 AND no per-key
     // violation (the line shows 5 of them, stderr all).
     val anchorGate: Option[(Int, Double, Double)] = {

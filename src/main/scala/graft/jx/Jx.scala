@@ -383,20 +383,28 @@ object Jx {
     * Spec keys: `op` (a key of [[corpusOps]]), `corpus` (a jx query) and
     * the op's knobs. The builders are the Column-API library entry
     * points, so the jx front end lands on the exact decision sets the
-    * oracles pin. */
+    * oracles pin. A knob the chosen route never reads is rejected, not
+    * answered as if it were absent. */
   private def runCorpusOp(spark: SparkSession, c: JsonNode,
       tables: String => DataFrame, dataset: Option[String]): DataFrame = {
     val name = req(c, "op").asText()
     val op = corpusOps.getOrElse(name,
       throw new IllegalArgumentException(s"unknown corpus_op: $name"))
     val call = new Call(spark, c, runNode(spark, req(c, "corpus"), tables, dataset), tables)
-    (storedRoute(c, dataset), op.inPlan) match {
-      case (Some(d), _) => op.stored.get(call, d)
+    val out = (storedRoute(c, dataset), op.inPlan) match {
+      case (Some(d), _) =>
+        // the twin was built at its build knobs, which the request matched
+        op.build.foreach { case (k, v) => call.read(k, v) }
+        op.stored.get(call, d)
       case (None, Some(build)) => build(call)
       case (None, None) => throw new IllegalArgumentException(
         s"$name reads the dataset's stored artifacts; run it with a dataset " +
           s"and the plain ${op.from} corpus")
     }
+    val unread = c.fieldNames.asScala.filterNot(f => f == "op" || f == "corpus" || call.seen(f))
+    if (unread.nonEmpty) throw new IllegalArgumentException(
+      s"corpus_op $name does not read ${unread.map(k => s"knob '$k'").mkString(", ")}")
+    out
   }
 
   /** The store-or-rebuild decision: the dataset dir to read the op's
@@ -417,10 +425,12 @@ object Jx {
   }
 
   /** Typed knob readers over a corpus_op spec: a knob of the wrong JSON
-    * type is an IllegalArgumentException naming it, never a silent 0. */
+    * type is an IllegalArgumentException naming it, never a silent 0.
+    * Every knob name asked for is recorded in `seen`. */
   private[jx] class Knobs(c: JsonNode) {
+    val seen = scala.collection.mutable.Set[String]()
     private def knob[A](name: String, default: A, ok: JsonNode => Boolean,
-        read: JsonNode => A): A = opt(c, name).map { n =>
+        read: JsonNode => A): A = { seen += name; opt(c, name) }.map { n =>
       if (!ok(n)) throw new IllegalArgumentException(
         s"corpus_op knob '$name' has the wrong JSON type: $n")
       read(n)

@@ -116,31 +116,8 @@ object Dedup {
     * for exactly this reason. */
   val dedupNgramPrefix: Q = (s, d) => {
     val jt = 0.3
-    val sh0 = shingles(s, d)
-    // ONE shuffle serves both the hot-shingle cap and the rarest-first
-    // prefix ranking: a count window over h annotates every shingle with
-    // its doc frequency in place, and the cap is a filter on the same
-    // column — no doc-frequency groupBy, no anti-join, no annotation
-    // join. The capped set is localCheckpoint'ed because FOUR downstream
-    // branches consume it (sizes, the prefix rank, both verify sides):
-    // without materialization each branch re-runs the scan + md5 +
-    // distinct + window (measured 12.3 s at sf0.1; materialized ≈ half).
-    // Same call a 100 TB run wants — the capped shingle table is the
-    // natural intermediate to persist.
-    val shdf = sh0
-      .withColumn("df", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy("h")))
-      .filter(col("df") <= HotShingleCap)
-      .localCheckpoint()
-    val sh = shdf.select("doc_id", "h")
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
-    val prefix = shdf
-      .withColumn("rk", org.apache.spark.sql.functions.row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy("doc_id").orderBy("df", "h")))
-      .join(sizes, Seq("doc_id"))
-      .filter(col("rk") <= col("n_sh") - ceil(lit(jt) * col("n_sh")) + 1)
-      .select("doc_id", "h")
+    val (sh, _, ranked) = rarestFirstPrefix(s, d, jt)
+    val prefix = ranked.select("doc_id", "h")
     val cand = prefix.as("a").join(prefix.as("b"),
         col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("da"), col("b.doc_id").as("db"))
@@ -149,6 +126,31 @@ object Dedup {
       .filter(col("jaccard") > jt)
       .select(col("da"), col("db"), col("c"), r4(col("jaccard")).as("jaccard"))
       .orderBy(desc("jaccard"), asc("da"), asc("db"))
+  }
+
+  /** The capped shingle index of both prefix filters, for threshold `t`:
+    * (sh, sizes, prefix) = the (doc_id, h) set without hot shingles
+    * (df > [[HotShingleCap]]), its (doc_id, n_sh) counts, and each doc's
+    * rarest-first n − ⌈t·n⌉ + 1 shingles (doc_id, h, df, rk, n_sh).
+    * ONE count window over h gives both the cap and the rarest-first
+    * rank — no doc-frequency groupBy, anti-join or annotation join. The
+    * capped set is materialized: three or four branches read it, and
+    * each would re-run the scan + md5 + distinct + window (measured
+    * 12.3 s at sf0.1; materialized ≈ half) — the natural intermediate
+    * to persist at 100 TB. */
+  private def rarestFirstPrefix(s: SparkSession, d: String, t: Double):
+      (DataFrame, DataFrame, DataFrame) = {
+    val shdf = materialize(shingles(s, d)
+      .withColumn("df", count(lit(1)).over(Window.partitionBy("h")))
+      .filter(col("df") <= HotShingleCap), "dedup.capped_shingles")
+    val sh = shdf.select("doc_id", "h")
+    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
+    val prefix = shdf
+      .withColumn("rk", row_number().over(
+        Window.partitionBy("doc_id").orderBy("df", "h")))
+      .join(sizes, Seq("doc_id"))
+      .filter(col("rk") <= col("n_sh") - ceil(lit(t) * col("n_sh")) + 1)
+    (sh, sizes, prefix)
   }
 
   /** Exact-Jaccard verify for a candidate pair set: gather each doc's
@@ -228,22 +230,8 @@ object Dedup {
     * ScalaTest-gated in DedupSpec and both share the DuckDB oracle. */
   val dedupContainmentPrefix: Q = (s, d) => {
     val ct = 0.8
-    val sh0 = shingles(s, d)
-    // same one-window df annotation + hot cap + localCheckpoint as
-    // dedupNgramPrefix: three downstream branches re-read the capped set
-    val shdf = sh0
-      .withColumn("df", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy("h")))
-      .filter(col("df") <= HotShingleCap)
-      .localCheckpoint()
-    val sh = shdf.select("doc_id", "h")
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
-    val prefix = shdf
-      .withColumn("rk", org.apache.spark.sql.functions.row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy("doc_id").orderBy("df", "h")))
-      .join(sizes, Seq("doc_id"))
-      .filter(col("rk") <= col("n_sh") - ceil(lit(ct) * col("n_sh")) + 1)
+    val (sh, sizes, ranked) = rarestFirstPrefix(s, d, ct)
+    val prefix = ranked
       .select(col("doc_id").as("pd"), col("h"), col("n_sh").as("pn"))
     val full = sh.join(sizes, Seq("doc_id"))
       .select(col("doc_id").as("fd"), col("h"), col("n_sh").as("fn"))
@@ -452,7 +440,6 @@ object Dedup {
       minhashScoredPairsFrom(shingles(s, d))
         .filter(col("jaccard") >= 0.5)
         .select(col("da"), col("db"), r4(col("jaccard")).as("jaccard"))
-        .localCheckpoint()
         .write.mode("overwrite").parquet(s"$dd/pairs")
       clusterLabelsFrom(s.read.parquet(s"$dd/pairs"))
         .write.mode("overwrite").parquet(s"$dd/labels")
@@ -726,27 +713,32 @@ object Dedup {
     // and STORED ([[Artifacts.buildOnce]]) — the operator's own contract
     // is build-once/probe-many, so the gate times the PROBE against the
     // stored index, not a per-call rebuild (the rebuild was the #1 bench
-    // cost in round 11). Both index tables derive from one materialized
-    // shingle pass; the bands table is written partitionBy("band") so a
-    // narrower probe (a stream probing one band at a time) partition-
-    // prunes. At 100 TB this is the production shape verbatim: index
-    // build on corpus version change, every arriving batch pays only
-    // the in-row signature + two index joins.
-    val dir = Artifacts.buildOnce(s, "dedup_gate", d) { dd =>
-      val sh = shinglesOf(docs).localCheckpoint()
-      minhashBandsFromShingles(sh)
-        .write.mode("overwrite").partitionBy("band").parquet(s"$dd/bands")
-      docShingleSetsFromShingles(sh)
-        .write.mode("overwrite").parquet(s"$dd/sets")
-    }
+    // cost in round 11; layout: [[writeBandIndex]]). At 100 TB this is
+    // the production shape verbatim: index build on corpus version
+    // change, every arriving batch pays only the in-row signature + two
+    // index joins.
+    val dir = Artifacts.buildOnce(s, "dedup_gate", d)(dd => writeBandIndex(shinglesOf(docs), dd))
     // probe signatures materialized ONCE (the in-row chain is the real
     // per-probe cost; see dedupAgainstCorpusSigned) — the streaming form
     // computes them per arriving row, the batch gate per probe slice
-    dedupAgainstCorpusSigned(minhashInRow(probes).localCheckpoint(),
+    dedupAgainstCorpusSigned(materialize(minhashInRow(probes), "dedup.probe_signatures"),
         s.read.parquet(s"$dir/bands"), s.read.parquet(s"$dir/sets"))
       .filter(col("doc_id") =!= col("corpus_doc"))
       .distinct()
       .orderBy(desc("jaccard"), asc("doc_id"), asc("corpus_doc"))
+  }
+
+  /** Writes the probe index of an online gate under `dir`: `bands`
+    * (doc_id, band, bh), partitioned by band so a narrower probe (a
+    * stream probing one band at a time) partition-prunes, and `sets`
+    * (doc_id, hs, n_sh). Both derive from ONE materialized pass over the
+    * (doc_id, h) shingle frame `sh`. */
+  private[llm] def writeBandIndex(sh: DataFrame, dir: java.io.File): Unit = {
+    val shm = materialize(sh, "dedup.index_shingles")
+    minhashBandsFromShingles(shm)
+      .write.mode("overwrite").partitionBy("band").parquet(s"$dir/bands")
+    docShingleSetsFromShingles(shm)
+      .write.mode("overwrite").parquet(s"$dir/sets")
   }
 
   /** X1i: EXACT incremental growth of the near-dup pair graph — the
@@ -764,11 +756,11 @@ object Dedup {
     * the index build is per-batch-incremental, only the (rare) CC
     * label refresh touches the accumulated KB-scale pair graph. */
   def pairsDeltaOf(base: DataFrame, delta: DataFrame): DataFrame = {
-    val baseSh = shinglesOf(base).localCheckpoint()
+    val baseSh = materialize(shinglesOf(base), "dedup.base_shingles")
     val basePairs = minhashScoredPairsFrom(baseSh)
       .filter(col("jaccard") >= 0.5)
       .select(col("da"), col("db"), r4(col("jaccard")).as("jaccard"))
-    val cross = crossPairsSigned(minhashInRow(delta).localCheckpoint(),
+    val cross = crossPairsSigned(materialize(minhashInRow(delta), "dedup.delta_signatures"),
       minhashBandsFromShingles(baseSh), docShingleSetsFromShingles(baseSh))
     val deltaPairs = minhashScoredPairsFrom(shinglesOf(delta))
       .filter(col("jaccard") >= 0.5)
@@ -873,7 +865,8 @@ object Dedup {
     * drop set). Components via iterative min-label propagation: each
     * round is one distributed join + min-groupBy (the GraphX-free CC
     * pattern); the driver `while` only counts rounds — all data work is
-    * distributed — and `localCheckpoint` caps plan-lineage growth.
+    * distributed — and each round's materialization caps plan-lineage
+    * growth.
     * Near-dup components have tiny diameters (docs similar to a common
     * doc are similar-ish to each other), so rounds ≈ 3–4; a 100 TB run
     * facing adversarial chain components would swap in large-star/
@@ -905,7 +898,7 @@ object Dedup {
     * same deterministic answer. */
   def clusterLabelsFrom(pairFrame: DataFrame,
       driverMax: Long = 2000000L): DataFrame = {
-    val pairs = pairFrame.select("da", "db").localCheckpoint()
+    val pairs = materialize(pairFrame.select("da", "db"), "dedup.cc_pairs")
     if (pairs.count() <= driverMax) {
       val parent = scala.collection.mutable.LongMap.empty[Long]
       def find(x: Long): Long = {
@@ -934,9 +927,9 @@ object Dedup {
       return s.createDataFrame(
         s.sparkContext.parallelize(rows, 1), schema)
     }
-    val edges = pairs.select(col("da").as("src"), col("db").as("dst"))
-      .unionByName(pairs.select(col("db").as("src"), col("da").as("dst")))
-      .localCheckpoint()
+    val edges = materialize(pairs.select(col("da").as("src"), col("db").as("dst"))
+      .unionByName(pairs.select(col("db").as("src"), col("da").as("dst"))),
+      "dedup.cc_edges")
     var labels = edges.select(col("src").as("id")).distinct()
       .withColumn("lbl", col("id"))
     // one hop of min-label propagation over the edges, then POINTER
@@ -967,7 +960,7 @@ object Dedup {
       // overhead — not the data — dominates CC cost (measured 5.7 s for
       // 2k pairs). An extra step after quiescence is a no-op join, far
       // cheaper than doubling the action count.
-      val next = step(step(labels)).localCheckpoint()
+      val next = materialize(step(step(labels)), "dedup.cc_labels")
       // labels only ever decrease; any strict decrease = not converged
       converged = next.join(labels.withColumnRenamed("lbl", "prev"), Seq("id"))
         .filter(col("lbl") < col("prev")).isEmpty
@@ -1319,7 +1312,7 @@ object Dedup {
     // 1/p of windows survive selection, so the frame is a fraction of
     // the token count: materialize once (a parquet window index at
     // 100 TB — the [[substringIndex]] store shape).
-    val wins = substringFingerprintsPos(docs, k, p).localCheckpoint()
+    val wins = materialize(substringFingerprintsPos(docs, k, p), "dedup.span_windows")
     // canonical owner per shared fingerprint
     val shared = wins.groupBy("h")
       .agg(countDistinct(col("doc_id")).as("n_docs"), min("doc_id").as("owner"))

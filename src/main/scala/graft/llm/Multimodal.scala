@@ -162,28 +162,30 @@ object Multimodal {
     cnt.map(c => if (bytes.isEmpty) 0.0 else c.toDouble / n)
   }
 
-  /** The payload-embedding table the semantic mm ops index: one vector
-    * per non-empty payload, doc_id as vec_id. localCheckpoint pins the
-    * decode pass (an RDD boundary Catalyst cannot dedupe) so the
-    * quantizer training + every downstream probe reads the 64·n-double
-    * table instead of re-running the codec per plan branch — the same
-    * "decode once, index many" shape a real pipeline has, where the
-    * decode pass is the expensive stage and its output is the artifact. */
-  private def mmVecs(s: SparkSession, d: String): DataFrame =
-    decodeEmbedding(
-        withPayload(t(s, d, "documents")).filter(length(col("payload")) > 0))
-      .localCheckpoint()
+  /** The payload-embedding table the semantic mm ops index, over ANY
+    * documents-shaped frame: one vector per non-empty payload, doc_id as
+    * vec_id. Materialized: the decode pass is an RDD boundary Catalyst
+    * cannot dedupe, so the quantizer training + every downstream probe
+    * reads the 64·n-double table instead of re-running the codec per
+    * plan branch — the same "decode once, index many" shape a real
+    * pipeline has, where the decode pass is the expensive stage and its
+    * output is the artifact. */
+  private def payloadVecsOf(docs: DataFrame): DataFrame =
+    materialize(decodeEmbedding(withPayload(docs).filter(length(col("payload")) > 0)),
+      "mm.payload_vecs")
 
   /** The stored mm IVF index tuple (vecs, cents, scored, assign) — the
     * composition point for the streamed mm decon store (ST23) and any
     * other consumer of the payload-embedding index. */
   private[graft] def mmIndex(s: SparkSession, d: String):
       (DataFrame, DataFrame, DataFrame, DataFrame) =
-    Similarity.ivfIndexStored(s, d, 16, "mm")(mmVecs(s, d))
+    Similarity.ivfIndexStored(s, d, 16, "mm")(mmVecsOf(s, d))
 
-  /** The payload-embedding table itself (vec_id = doc_id, non-empty
-    * payloads) — the ST23 batch source. */
-  private[graft] def mmVecsOf(s: SparkSession, d: String): DataFrame = mmVecs(s, d)
+  /** The payload-embedding table of the standard documents (vec_id =
+    * doc_id, non-empty payloads) — the mm index's and the ST23 batch
+    * source. */
+  private[graft] def mmVecsOf(s: SparkSession, d: String): DataFrame =
+    payloadVecsOf(t(s, d, "documents"))
 
   /** X5k: SEMANTIC payload dedup — SemDeDup over the codec's embedding
     * vectors, closing the gap byte-shingle dedup ([[mmDedup]]) cannot:
@@ -197,7 +199,7 @@ object Multimodal {
     * Scale shape: identical to sim_semantic_dedup — broadcast-scored
     * centroids, one shuffle on cid, never all-pairs. */
   val mmSemanticDedup: Q = (s, d) => {
-    val (vecs, _, _, assign) = Similarity.ivfIndexStored(s, d, 16, "mm")(mmVecs(s, d))
+    val (vecs, _, _, assign) = Similarity.ivfIndexStored(s, d, 16, "mm")(mmVecsOf(s, d))
     Similarity.semanticDedupFromIndex(vecs, assign, tau = 0.999)
   }
 
@@ -208,7 +210,7 @@ object Multimodal {
     * curation/retrieval, the multimodal twin of sim_knn_join. Query set
     * = vec_id % 10 == 0, corpus = the rest, as the sim twin pins. */
   val mmKnn: Q = (s, d) => {
-    val (vecs, _, scored, assign) = Similarity.ivfIndexStored(s, d, 16, "mm")(mmVecs(s, d))
+    val (vecs, _, scored, assign) = Similarity.ivfIndexStored(s, d, 16, "mm")(mmVecsOf(s, d))
     Similarity.knnJoinFrom(vecs, scored, assign, col("vec_id") % 10 === 0)
   }
 
@@ -223,7 +225,7 @@ object Multimodal {
     * flag, so the stream-side decision set is exactly what the oracle
     * replays. */
   val mmSemanticGate: Q = (s, d) => {
-    val (vecs, _, scored, assign) = Similarity.ivfIndexStored(s, d, 16, "mm")(mmVecs(s, d))
+    val (vecs, _, scored, assign) = Similarity.ivfIndexStored(s, d, 16, "mm")(mmVecsOf(s, d))
     Similarity.knnJoinFrom(vecs, scored, assign, col("vec_id") % 100 === 0)
       .filter(col("rnk") === 1)
       .select(col("qid"), col("nid").as("nearest"), col("cosine"),
@@ -241,7 +243,7 @@ object Multimodal {
     * [[Similarity.simSemanticDecon]]: bench broadcasts, candidates are
     * cid-equi against the replicated inverted lists, never all-pairs. */
   val mmSemanticDecon: Q = (s, d) => {
-    val (vecs, _, scored, _) = Similarity.ivfIndexStored(s, d, 16, "mm")(mmVecs(s, d))
+    val (vecs, _, scored, _) = Similarity.ivfIndexStored(s, d, 16, "mm")(mmVecsOf(s, d))
     Similarity.semanticDeconFrom(vecs, scored, col("vec_id") % 10 === 0, tau = 0.999)
   }
 
@@ -250,7 +252,7 @@ object Multimodal {
     * offender attached. [[Similarity.deconReportFrom]] verbatim over
     * the mm index. */
   val mmDeconReport: Q = (s, d) => {
-    val (vecs, _, scored, _) = Similarity.ivfIndexStored(s, d, 16, "mm")(mmVecs(s, d))
+    val (vecs, _, scored, _) = Similarity.ivfIndexStored(s, d, 16, "mm")(mmVecsOf(s, d))
     Similarity.deconReportFrom(vecs, scored, col("vec_id") % 10 === 0, tau = 0.999)
   }
 
@@ -263,7 +265,7 @@ object Multimodal {
     * are the container's deterministic stand-ins (the codec's 64-bin
     * byte histogram, [[decodeEmbedding]], and the embeddings table as
     * the text tower), but the plumbing is production-true: decode once
-    * (the checkpointed [[mmVecs]] pass), EQUI-join the towers on item
+    * (the materialized [[payloadVecsOf]] pass), EQUI-join the towers on item
     * id — never a cross-join; misalignment is a property of the pair,
     * not a search — one codegen'd dot product per pair, ntile gate per
     * source. At 100 TB both towers are id-partitioned parquet and this
@@ -290,15 +292,12 @@ object Multimodal {
   }
 
   val mmTextAlign: Q = (s, d) =>
-    textAlignFrom(mmVecs(s, d), t(s, d, "embeddings"), t(s, d, "documents"))
+    textAlignFrom(mmVecsOf(s, d), t(s, d, "embeddings"), t(s, d, "documents"))
 
   /** [[mmTextAlign]] over ANY documents-shaped corpus + text-tower frame
     * (jx `corpus_op` fallback): payload tower decoded in-plan. */
   def textAlignOfDocs(docs: DataFrame, textVecs: DataFrame): DataFrame =
-    textAlignFrom(
-      decodeEmbedding(
-        withPayload(docs).filter(length(col("payload")) > 0)).localCheckpoint(),
-      textVecs, docs)
+    textAlignFrom(payloadVecsOf(docs), textVecs, docs)
 
   /** [[mmSemanticDedup]] over ANY documents-shaped frame with an in-plan
     * quantizer (jx `corpus_op` fallback for a non-standard corpus; a
@@ -306,18 +305,14 @@ object Multimodal {
     * driver key instead). */
   def semanticDedupOfDocs(docs: DataFrame, nlist: Int = Similarity.AutoNlist,
       tau: Double = 0.999): DataFrame = {
-    val vecs = decodeEmbedding(
-      withPayload(docs).filter(length(col("payload")) > 0)).localCheckpoint()
-    val (v, _, _, assign) = Similarity.ivfIndexOf(vecs, nlist)
+    val (v, _, _, assign) = Similarity.ivfIndexOf(payloadVecsOf(docs), nlist)
     Similarity.semanticDedupFromIndex(v, assign, tau)
   }
 
   /** [[mmKnn]] over ANY documents-shaped frame with an in-plan quantizer
     * (jx `corpus_op` fallback, same store-routing contract). */
   def knnOfDocs(docs: DataFrame, nlist: Int = Similarity.AutoNlist): DataFrame = {
-    val vecs = decodeEmbedding(
-      withPayload(docs).filter(length(col("payload")) > 0)).localCheckpoint()
-    val (v, _, scored, assign) = Similarity.ivfIndexOf(vecs, nlist)
+    val (v, _, scored, assign) = Similarity.ivfIndexOf(payloadVecsOf(docs), nlist)
     Similarity.knnJoinFrom(v, scored, assign, col("vec_id") % 10 === 0)
   }
 
@@ -325,18 +320,14 @@ object Multimodal {
     * quantizer (jx `corpus_op` fallback, same store-routing contract). */
   def semanticDeconOfDocs(docs: DataFrame, nlist: Int = Similarity.AutoNlist,
       tau: Double = 0.999): DataFrame = {
-    val vecs = decodeEmbedding(
-      withPayload(docs).filter(length(col("payload")) > 0)).localCheckpoint()
-    val (v, _, scored, _) = Similarity.ivfIndexOf(vecs, nlist)
+    val (v, _, scored, _) = Similarity.ivfIndexOf(payloadVecsOf(docs), nlist)
     Similarity.semanticDeconFrom(v, scored, col("vec_id") % 10 === 0, tau)
   }
 
   /** [[mmDeconReport]] over ANY documents-shaped frame (jx fallback). */
   def deconReportOfDocs(docs: DataFrame, nlist: Int = Similarity.AutoNlist,
       tau: Double = 0.999): DataFrame = {
-    val vecs = decodeEmbedding(
-      withPayload(docs).filter(length(col("payload")) > 0)).localCheckpoint()
-    val (v, _, scored, _) = Similarity.ivfIndexOf(vecs, nlist)
+    val (v, _, scored, _) = Similarity.ivfIndexOf(payloadVecsOf(docs), nlist)
     Similarity.deconReportFrom(v, scored, col("vec_id") % 10 === 0, tau)
   }
 
@@ -580,15 +571,11 @@ object Multimodal {
     * already in the corpus?" at ingest time). */
   val mmOnlineGate: Q = (s, d) => {
     val mm = withPayload(t(s, d, "documents"))
-    val dir = Artifacts.buildOnce(s, "mm_gate", d) { dd =>
-      val sh = byteShinglesOf(mm).localCheckpoint()
-      Dedup.minhashBandsFromShingles(sh)
-        .write.mode("overwrite").partitionBy("band").parquet(s"$dd/bands")
-      Dedup.docShingleSetsFromShingles(sh)
-        .write.mode("overwrite").parquet(s"$dd/sets")
-    }
+    val dir = Artifacts.buildOnce(s, "mm_gate", d)(dd =>
+      Dedup.writeBandIndex(byteShinglesOf(mm), dd))
     Dedup.dedupAgainstCorpusSigned(
-        byteMinhashInRow(mm.filter(col("doc_id") % 10 === 0)).localCheckpoint(),
+        materialize(byteMinhashInRow(mm.filter(col("doc_id") % 10 === 0)),
+          "mm.probe_signatures"),
         s.read.parquet(s"$dir/bands"), s.read.parquet(s"$dir/sets"))
       .filter(col("doc_id") =!= col("corpus_doc"))
       .distinct()

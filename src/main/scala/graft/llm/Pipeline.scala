@@ -16,7 +16,7 @@ import graft.operators.Common._
   *  - clean + redact: in-row codegen'd regexp work in the scan stage —
   *    linear, no shuffle, survives any corpus size.
   *  - shingling: the one expensive pass. Computed ONCE over the hygienic
-  *    text and materialized ([[DataFrame.localCheckpoint]] here; a
+  *    text and materialized ([[graft.operators.Common.materialize]]; a
   *    parquet shingle table in a 100 TB deployment — same role as
   *    [[Similarity.ivfArtifacts]]), then SHARED by the MinHash band
   *    build, the exact-Jaccard verify, and the decontamination overlap —
@@ -113,50 +113,34 @@ object Pipeline {
     // gate — only docs passing EVERY heuristic rule reach the shingle
     // pass (the cheapest of the front gates: pure per-row string work,
     // no corpus-wide model, so at 100 TB it runs first among filters)
-    // EVERY gate's keep list materializes ONCE (localCheckpoint, KB-scale
-    // — one row per kept doc): the gated corpus is referenced by several
-    // consumers (the shingle union, the survivor joins, canonical's
-    // quality frame), and an unmaterialized gate subtree — a corpus-wide
-    // word explode + frequency join + rank window for quality/tiered,
-    // three such passes for ensemble — replayed under EACH consumer
-    // (r18 plan read: the ensemble chain carried 92 scans / 132
-    // exchanges; the rules branch measured 28.5 s → 0.8 s when its list
-    // was first materialized in r17). Production shape: a gate output IS
-    // a persisted decision list.
-    val hygCorpus =
+    // EVERY gate's keep list materializes ONCE (KB-scale — one row per
+    // kept doc): the gated corpus is referenced by several consumers (the
+    // shingle union, the survivor joins, canonical's quality frame), and
+    // an unmaterialized gate subtree — a corpus-wide word explode +
+    // frequency join + rank window for quality/tiered, three such passes
+    // for ensemble, the rule chain's large decoration codegen tree for
+    // rules — replayed under EACH consumer (r18 plan read: the ensemble
+    // chain carried 92 scans / 132 exchanges; the rules branch measured
+    // 28.5 s → 0.8 s when its list was first materialized in r17).
+    // Production shape: a gate output IS a persisted decision list.
+    def gated(srcs: DataFrame) = hygCorpus0.join(srcs, Seq("doc_id"))
+    val keep: Option[DataFrame] =
       (qualitySources, ensembleSources, tieredSources, rulesSources) match {
-      case (Some(srcs), _, _, _) =>
-        TextOps.qualityFilterOf(hygCorpus0.join(srcs, Seq("doc_id")))
-          .select("doc_id").localCheckpoint()
-          .join(hygCorpus0, Seq("doc_id"))
+      case (Some(srcs), _, _, _) => Some(TextOps.qualityFilterOf(gated(srcs)))
       case (None, Some(srcs), _, _) =>
-        TextOps.ensembleVotesOf(hygCorpus0.join(srcs, Seq("doc_id")))
-          .filter(col("keep")).select("doc_id")
-          .localCheckpoint()
-          .join(hygCorpus0, Seq("doc_id"))
+        Some(TextOps.ensembleVotesOf(gated(srcs)).filter(col("keep")))
       case (None, None, Some(srcs), _) =>
-        TextOps.pplGateOf(hygCorpus0.join(srcs, Seq("doc_id")))
-          .filter(col("keep")).select("doc_id")
-          .localCheckpoint()
-          .join(hygCorpus0, Seq("doc_id"))
+        Some(TextOps.pplGateOf(gated(srcs)).filter(col("keep")))
       case (None, None, None, Some(srcs)) =>
-        // the keep list materializes ONCE (localCheckpoint, KB-scale —
-        // one row per doc): the rule chain's decoration expressions are
-        // a large codegen tree, and the hygiene plan references the
-        // gated corpus from several consumers (shingle union, survivor
-        // joins, packing) — unmaterialized, each replayed the whole
-        // per-row chain (measured 28.5 s → the one-eval cost is 0.8 s
-        // at sf0.1). Production shape: the gate output IS a decision
-        // list, persisted like the other gate artifacts.
-        TextOps.ruleVerdictsOf(hygCorpus0.join(srcs, Seq("doc_id")))
-          .filter(col("keep")).select("doc_id")
-          .localCheckpoint()
-          .join(hygCorpus0, Seq("doc_id"))
-      case (None, None, None, None) => hygCorpus0
+        Some(TextOps.ruleVerdictsOf(gated(srcs)).filter(col("keep")))
+      case (None, None, None, None) => None
     }
+    val hygCorpus = keep.fold(hygCorpus0)(k =>
+      materialize(k.select("doc_id"), "pipeline.keep_list").join(hygCorpus0, Seq("doc_id")))
     // the one shingle pass over corpus ∪ bench, materialized and shared
     // (see object doc); bench rows ride along so decontamination reuses it
-    val sh = Dedup.shinglesOf(hygCorpus.unionByName(hygBench)).localCheckpoint()
+    val sh = materialize(Dedup.shinglesOf(hygCorpus.unionByName(hygBench)),
+      "pipeline.shingles")
     val benchIds = hygBench.select("doc_id")
     val corpusSh = sh.join(broadcast(benchIds), Seq("doc_id"), "left_anti")
     val benchSh = sh.join(broadcast(benchIds), Seq("doc_id"), "left_semi")
@@ -207,10 +191,9 @@ object Pipeline {
     // replayed the regex chain + gate join + both anti-joins. The frame
     // is the DECISION-side output (surviving text, KB–MB at gate scale;
     // the parquet `hygiene_survivors` store is its cross-job twin).
-    val survivors0 = hygCorpus
+    val survivors0 = materialize(hygCorpus
       .join(dropIds, Seq("doc_id"), "left_anti")
-      .join(contaminated, Seq("doc_id"), "left_anti")
-      .localCheckpoint()
+      .join(contaminated, Seq("doc_id"), "left_anti"), "pipeline.survivors")
 
     // optional passage-level pass (the Lee-et-al-style completion):
     // whole-doc near-dups are already gone; this removes REPEATED SPANS
@@ -218,7 +201,7 @@ object Pipeline {
     // canonical (lowest doc_id) occurrence
     // the trimmed corpus is a second decision-side frame with the same
     // read-twice consumers — materialize it as well (trim-path only)
-    if (trimSpans) Dedup.substringTrimText(survivors0).localCheckpoint()
+    if (trimSpans) materialize(Dedup.substringTrimText(survivors0), "pipeline.trimmed")
     else survivors0
   }
 

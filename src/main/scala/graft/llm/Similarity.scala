@@ -919,7 +919,9 @@ object Similarity {
       .select(col("vec_id"), col("pos").as("m"), col("col").as("sv"))
     val seed = sub.filter(col("vec_id") < 16)
       .select(col("m"), col("vec_id").as("cid"), col("sv").as("cv"))
-    val cents = pqTrain(sub)
+    // the codebook materializes before the codes are planned on it, so
+    // the Lloyd training runs once for the codebook and the codes alike
+    val cents = materialize(pqTrain(sub), "sim.pq_codebook")
     (sub, seed, cents, pqAssign(sub, cents))
   }
 
@@ -962,7 +964,7 @@ object Similarity {
     // is unchanged.
     val dir = Artifacts.buildOnce(s, "pq", d) { dd =>
       val (_, _, cents, codesWithDist) = pqParts(s, d)
-      cents.localCheckpoint().write.mode("overwrite").parquet(s"$dd/pqcents")
+      cents.write.mode("overwrite").parquet(s"$dd/pqcents")
       codesWithDist.select("vec_id", "m", "cid")
         .write.mode("overwrite").parquet(s"$dd/codes")
     }
@@ -1211,7 +1213,7 @@ object Similarity {
       val rsub = resid.select(col("vec_id"), posexplode(expr(
           "transform(sequence(0, 7), m -> slice(rv, m * 8 + 1, 8))")))
         .select(col("vec_id"), col("pos").as("m"), col("col").as("sv"))
-      val cents2 = pqTrain(rsub).localCheckpoint()
+      val cents2 = materialize(pqTrain(rsub), "sim.ivfpq_codebook")
       cents.write.mode("overwrite").parquet(s"$dd/cents")
       cents2.write.mode("overwrite").parquet(s"$dd/pqcents")
       pqAssign(rsub, cents2)
@@ -1414,7 +1416,7 @@ object Similarity {
         Window.partitionBy("vec_id").orderBy(desc("cos"), asc("cid"))))
       .filter(col("prb") <= p)
       .select(col("vec_id"), col("cid"))
-    probes.join(vecs, Seq("vec_id")).localCheckpoint()
+    materialize(probes.join(vecs, Seq("vec_id")), "sim.knn_membership")
   }
 
   /** The edge build over a membership frame, with the QUERY side
@@ -1515,7 +1517,7 @@ object Similarity {
     * over the mutual kNN graph, reusing the exact iterative min-label
     * machinery near-dup clustering proved out
     * ([[graft.llm.Dedup.clusterLabelsFrom]]: per round one distributed
-    * join + min-groupBy, `localCheckpoint` caps lineage). Mutual edges
+    * join + min-groupBy, materialization caps lineage). Mutual edges
     * make the components meaningful (one-way hub edges would glue
     * unrelated regions); the result is the curation artifact diversity
     * samplers and topic auditors consume — cluster id, size, members. */
@@ -1659,9 +1661,9 @@ object Similarity {
     * groupBy on the vertex key; the driver loop only counts the 3
     * fixed rounds — pure distributed work, same contract as CC. */
   private[llm] def centralityOfMutual(mutual: DataFrame): DataFrame = {
-    val edges = mutual.select(col("src"), col("dst"))
-      .unionByName(mutual.select(col("dst").as("src"), col("src").as("dst")))
-      .localCheckpoint()
+    val edges = materialize(mutual.select(col("src"), col("dst"))
+      .unionByName(mutual.select(col("dst").as("src"), col("src").as("dst"))),
+      "sim.centrality_edges")
     val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
     var r = deg.select(col("src").as("id"), lit(1.0d).as("r"))
     for (_ <- 1 to 3) {
@@ -1670,10 +1672,9 @@ object Similarity {
         .join(r.withColumnRenamed("id", "src"), Seq("src"))
         .select(col("dst").as("id"),
           expr("cast(round(r / deg, 12) as decimal(38,12))").as("c"))
-      r = contrib.groupBy("id")
+      r = materialize(contrib.groupBy("id")
         .agg(round(lit(0.15d) + lit(0.85d) * sum(col("c")).cast("double"), 12)
-          .as("r"))
-        .localCheckpoint()
+          .as("r")), "sim.centrality_rank")
     }
     r.join(deg.select(col("src").as("id"), col("deg").as("degree")), Seq("id"))
       .select(col("id").as("vec_id"), r4(col("r")).as("centrality"),
@@ -1865,8 +1866,8 @@ object Similarity {
       .distinct()
     // materialize BEFORE the overwrite: both frames read the very files
     // the write replaces
-    val rows = reassigned.join(broadcast(affected), Seq("cid"))
-      .localCheckpoint()
+    val rows = materialize(reassigned.join(broadcast(affected), Seq("cid")),
+      "sim.refresh_rows")
     val affectedCids = affected.collect().map(_.getLong(0)) // ≤ nlist rows
     val writtenCids = rows.select("cid").distinct().collect()
       .map(_.getLong(0)).toSet

@@ -384,16 +384,14 @@ object TextOps {
     // wc counts EVERY token, like the standalone NLL gate's frequency
     // table: cc + rc would drop the tokens whose source has no class
     // (curated is null when the source suffix does not parse)
-    val toks = docs
+    val toks = materialize(docs
       .select(col("doc_id"), col("source"), curatedOf(col("source")).as("curated"),
         explode(split(col("text"), " ")).as("w"))
-      .filter(length(col("w")) > 0)
-      .localCheckpoint()
-    val wstats = toks.groupBy("w").agg(
+      .filter(length(col("w")) > 0), "text.ensemble_tokens")
+    val wstats = materialize(toks.groupBy("w").agg(
         count(when(col("curated"), lit(1))).as("cc"),
         count(when(!col("curated"), lit(1))).as("rc"),
-        count(lit(1)).as("wc"))
-      .localCheckpoint()
+        count(lit(1)).as("wc")), "text.ensemble_vocab")
     val tot = wstats.agg(sum("cc").as("c_n"), sum("rc").as("r_n"),
       count(lit(1)).as("v"), sum("wc").as("n_total"))
     val model = wstats.crossJoin(broadcast(tot))
@@ -491,13 +489,13 @@ object TextOps {
     * without any corpus scan (monitor → planner, closed loop). */
   def mixScheduleFromTok(srcTok: org.apache.spark.sql.DataFrame, budgetPct: Long = 200L,
       maxEpochs: Long = 4L): org.apache.spark.sql.DataFrame = {
-    val src = srcTok
+    // materialized at |sources| rows — the totals frame below re-reads
+    // this KB table instead of re-running the upstream aggregate
+    val src = materialize(srcTok
       .withColumn("weight_pct", expr(
         """CAST(CASE CAST(substr(source, 4) AS INT) % 3
-             WHEN 0 THEN 225 WHEN 1 THEN 100 ELSE 40 END AS BIGINT)"""))
-      // materialized at |sources| rows — the totals frame below re-reads
-      // this KB table instead of re-running the upstream aggregate
-      .localCheckpoint()
+             WHEN 0 THEN 225 WHEN 1 THEN 100 ELSE 40 END AS BIGINT)""")),
+      "text.mix_sources")
     val tot = src.agg(
       sum("n_tok").as("tot_tok"), sum("weight_pct").as("tot_w"))
     src.crossJoin(broadcast(tot))
@@ -750,13 +748,12 @@ object TextOps {
     // the per-doc decision bits are a KB-scale frame, materialized so
     // the corpus-wide NB explode+join never replays under the second
     // consumer (it ran twice per call before this).
-    val scores = classifierScoresOf(docs).select("doc_id", "selected")
-      .localCheckpoint()
+    val scores = materialize(classifierScoresOf(docs).select("doc_id", "selected"),
+      "text.anneal_scores")
     // |sources| rows, probed once per phase — materialize so the quota
     // tail (totals broadcast) doesn't re-plan under each branch
-    val sched = annealScheduleFromScores(docs, scores, bulkPct, annealPct,
-        maxEpochs)
-      .localCheckpoint()
+    val sched = materialize(annealScheduleFromScores(docs, scores, bulkPct, annealPct,
+        maxEpochs), "text.anneal_schedule")
     val base = docs.select(col("doc_id"), col("source"),
       size(split(col("text"), " ")).cast("long").as("n_tok"))
     val bulk = placeInstances(base,
@@ -785,7 +782,7 @@ object TextOps {
     * of the shared token total (no double crosses a row boundary), each
     * capped at `maxEpochs` passes of the source. Plan at 100 TB: the
     * classifier model is a vocabulary-bounded broadcast table, the
-    * per-source frame is |sources| rows (localCheckpoint'd), and the
+    * per-source frame is |sources| rows (materialized), and the
     * totals re-read those KB rows — after the scoring scan nothing grows
     * with the corpus. */
   val textAnnealSchedule: Q = (s, d) => annealScheduleOf(t(s, d, "documents"))
@@ -827,14 +824,14 @@ object TextOps {
   def annealScheduleFromParts(srcStats: org.apache.spark.sql.DataFrame,
       bulkPct: Long = 160L, annealPct: Long = 40L,
       maxEpochs: Long = 4L): org.apache.spark.sql.DataFrame = {
-    val src = srcStats
+    // |sources| rows — the totals frame below re-reads this KB table
+    // instead of re-running the scoring scan
+    val src = materialize(srcStats
       .withColumn("w_bulk", expr(
         """CAST(CASE CAST(substr(source, 4) AS INT) % 3
              WHEN 0 THEN 225 WHEN 1 THEN 100 ELSE 40 END AS BIGINT)"""))
-      .withColumn("sel_permille", expr("(1000 * n_sel) div n_docs"))
-      // |sources| rows — the totals frame below re-reads this KB table
-      // instead of re-running the scoring scan
-      .localCheckpoint()
+      .withColumn("sel_permille", expr("(1000 * n_sel) div n_docs")),
+      "text.anneal_sources")
     val tot = src.agg(
       sum("n_tok").as("tot_tok"), sum("w_bulk").as("tot_wb"),
       sum("sel_permille").as("tot_wa"))
@@ -962,10 +959,9 @@ object TextOps {
     // frame — guide §2.4, remove passes outright. The counts table
     // materializes once (vocabulary-bounded, the persisted-model shape)
     // so the totals read doesn't replay the token explode.
-    val counts = toks.groupBy("w").agg(
+    val counts = materialize(toks.groupBy("w").agg(
       count(when(col("curated"), lit(1))).as("cc"),
-      count(when(!col("curated"), lit(1))).as("rc"))
-      .localCheckpoint()
+      count(when(!col("curated"), lit(1))).as("rc")), "text.classifier_vocab")
     val totals = counts.agg(
       sum("cc").as("c_n"), sum("rc").as("r_n"), count(lit(1)).as("v"))
     counts.crossJoin(broadcast(totals))
@@ -1040,14 +1036,13 @@ object TextOps {
     * corpus convention) for the decile split. */
   def noveltyCurveOf(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val nDocs = docs.agg(count(lit(1)).as("n_docs"))
-    val perDecile = gramOccurrencesOf(docs)
+    // 10 rows — materialized so the totals below re-read them instead of
+    // re-running the gram pass
+    val perDecile = materialize(gramOccurrencesOf(docs)
       .groupBy("g").agg(min("doc_id").as("first_doc"))
       .crossJoin(broadcast(nDocs))
       .withColumn("decile", least(lit(9L), expr("first_doc * 10 div n_docs")))
-      .groupBy("decile").agg(count(lit(1)).as("n_first"))
-      // 10 rows — materialized so the totals below re-read them instead
-      // of re-running the gram pass
-      .localCheckpoint()
+      .groupBy("decile").agg(count(lit(1)).as("n_first")), "text.novelty_deciles")
     val w = Window.orderBy("decile")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val tot = perDecile.agg(sum("n_first").as("n_grams"))
@@ -1066,7 +1061,7 @@ object TextOps {
     * read of the same acquisition signal. Scale: gram pass → per-gram
     * min doc → doc-level left join onto a pruned (doc_id, source) scan →
     * a bounded-source aggregate; the share denominators come from the
-    * localCheckpoint'd |sources|-row table, never a second corpus
+    * materialized |sources|-row table, never a second corpus
     * scan. */
   val textNoveltySources: Q = (s, d) => noveltySourcesOf(t(s, d, "documents"))
 
@@ -1076,12 +1071,11 @@ object TextOps {
     val firsts = gramOccurrencesOf(docs)
       .groupBy("g").agg(min("doc_id").as("first_doc"))
       .groupBy("first_doc").agg(count(lit(1)).as("n_first"))
-    val perSource = docs.select(col("doc_id"), col("source"))
+    val perSource = materialize(docs.select(col("doc_id"), col("source"))
       .join(firsts, col("doc_id") === col("first_doc"), "left")
       .groupBy("source")
       .agg(count(lit(1)).as("n_docs"),
-        sum(coalesce(col("n_first"), lit(0L))).as("n_first"))
-      .localCheckpoint()
+        sum(coalesce(col("n_first"), lit(0L))).as("n_first")), "text.novelty_sources")
     val tot = perSource.agg(sum("n_first").as("n_grams"))
     perSource.crossJoin(broadcast(tot))
       .select(col("source"), col("n_docs"), col("n_first"),
@@ -1251,7 +1245,7 @@ object TextOps {
     * only the plan shape differs. */
   private[graft] def bigramNllSelfOf(docs: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
-    val big = bigramsOf(docs).localCheckpoint()
+    val big = materialize(bigramsOf(docs), "text.bigrams")
     val ab = big.groupBy("a", "b").agg(count(lit(1)).as("c_ab"))
     val ctx = big.groupBy("a").agg(count(lit(1)).as("c_a"))
     val v = docs.select(explode(split(col("text"), " ")).as("w"))
@@ -1519,7 +1513,7 @@ object TextOps {
     // guide §2.4). The table materializes once (vocabulary-bounded, the
     // persisted-table shape) and BROADCASTS into the scoring join, so
     // the token stream is never shuffled by word (guide §3.1).
-    val freq = toks.groupBy("w").agg(count(lit(1)).as("wc")).localCheckpoint()
+    val freq = materialize(toks.groupBy("w").agg(count(lit(1)).as("wc")), "text.nll_vocab")
     val total = freq.agg(sum("wc").as("n_total"))
     toks.join(broadcast(freq), Seq("w"))
       .crossJoin(broadcast(total))
@@ -1781,18 +1775,17 @@ object TextOps {
       (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
     val SEP = BpeSep
     def syms(encCol: String): org.apache.spark.sql.Column = bpeSyms(encCol)
-    val words0 = docs
+    // the ONE corpus-sized pass, materialized: every round's pair
+    // aggregate and symbol count re-reads the vocabulary table from here
+    // instead of re-exploding the corpus (3.5 s → ~1 s at sf0.1; at
+    // 100 TB this is a parquet word-frequency table)
+    val words0 = materialize(docs
       .select(explode(split(col("text"), " ")).as("w"))
       .filter(length(col("w")) > 0)
       .groupBy("w").agg(count(lit(1)).as("cnt"))
       .select(col("w"),
         concat(lit(SEP), regexp_replace(col("w"), "(.)", "$1" + SEP)).as("enc"),
-        col("cnt"))
-      // the ONE corpus-sized pass, materialized: every round's pair
-      // aggregate and symbol count re-reads the vocabulary table from
-      // here instead of re-exploding the corpus (3.5 s → ~1 s at sf0.1;
-      // at 100 TB this is a parquet word-frequency table)
-      .localCheckpoint()
+        col("cnt")), "text.bpe_vocab")
     def round(words: org.apache.spark.sql.DataFrame, step: Int):
         (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
       val top1 = words
@@ -2359,6 +2352,11 @@ object TextOps {
       // (guide §2.3: project before the exchange / materialization)
       .select(col("doc_id"), col("dlines"))
 
+  /** [[withDocLines]] materialized: the line-dedup and line-count passes
+    * read the lined frame twice (the rewrite explode + per-doc counts). */
+  private def linedOf(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    materialize(withDocLines(docs), "text.doc_lines")
+
   /** X4ai driver gate: corpus-frequency line dedup — hash every line,
     * count how many DISTINCT docs each hash appears in, and REWRITE each
     * doc keeping only lines below the boilerplate threshold (≥5 docs ⇒
@@ -2377,7 +2375,7 @@ object TextOps {
     // replay of the split/slice/join transform it avoids; at 100 TB the
     // frequency table is the maintained ST19 store and arriving docs are
     // lined once by construction ([[lineDedupAgainst]]).
-    val lined = withDocLines(docs).localCheckpoint()
+    val lined = linedOf(docs)
     lineDedupFromLined(lined, lineFreqsFromLined(lined))
   }
 
@@ -2404,7 +2402,7 @@ object TextOps {
     * rescanning the corpus. */
   def lineDedupAgainst(docs: org.apache.spark.sql.DataFrame,
       dfreq: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    lineDedupFromLined(withDocLines(docs).localCheckpoint(), dfreq)
+    lineDedupFromLined(linedOf(docs), dfreq)
 
   /** The rewrite pass over a PRE-LINED (materialized) frame — the lined
     * transform is read twice below (rewrite explode + per-doc counts). */
@@ -2435,7 +2433,7 @@ object TextOps {
   private[llm] def lineCountsOf(
       docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     // same one-line-build sharing as [[lineDedupOf]]
-    val lined = withDocLines(docs).localCheckpoint()
+    val lined = linedOf(docs)
     lineCountsFromLined(lined, lineFreqsFromLined(lined))
   }
 
@@ -2443,7 +2441,7 @@ object TextOps {
     * store's merged frame) — unseen lines kept by definition. */
   private[llm] def lineCountsAgainst(docs: org.apache.spark.sql.DataFrame,
       dfreq: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    lineCountsFromLined(withDocLines(docs).localCheckpoint(), dfreq)
+    lineCountsFromLined(linedOf(docs), dfreq)
 
   private def lineCountsFromLined(lined: org.apache.spark.sql.DataFrame,
       dfreq: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {

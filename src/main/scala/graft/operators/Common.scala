@@ -19,6 +19,20 @@ object Common {
   def t(spark: SparkSession, sfDir: String, name: String): DataFrame =
     graft.Tables.t(spark, sfDir, name)
 
+  /** The library's one eager materialization: `df` is computed now and
+    * its lineage cut ([[DataFrame.localCheckpoint]]), so every consumer
+    * reads the computed rows instead of replaying the plan. Its jobs run
+    * with `label` as their job description; the caller's description (a
+    * stream's micro-batch one, or none) is restored afterwards. ROADMAP
+    * direction 2 lists every label, its consumers and its bound. */
+  def materialize(df: DataFrame, label: String): DataFrame = {
+    val sc = df.sparkSession.sparkContext
+    val caller = sc.getLocalProperty("spark.job.description")
+    sc.setLocalProperty("spark.job.description", label)
+    try df.localCheckpoint()
+    finally sc.setLocalProperty("spark.job.description", caller)
+  }
+
   /** Fan heavy per-row explode work (shingle/window md5 passes) out of an
     * under-parallel SCAN: a parquet scan can never carry more tasks than
     * row groups, and this corpus ships ONE row group per table, so the

@@ -97,12 +97,13 @@ object Sinks {
       val n = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
       val leaf = part.map { case (c, v) =>
         col(c) === ExternalCatalogUtils.unescapePathName(v) }.reduce(_ && _)
-      // localCheckpoint materializes the partition BEFORE the overwrite —
-      // Spark (rightly) refuses to overwrite a path a live plan still
-      // reads; the checkpoint breaks that file dependency and makes the
+      // the partition materializes BEFORE the overwrite — Spark (rightly)
+      // refuses to overwrite a path a live plan still reads; the
+      // materialization breaks that file dependency and makes the
       // per-partition swap safe
-      overwritePartitions(df.filter(leaf).localCheckpoint().repartition(n),
-        dir, part.map(_._1): _*)
+      overwritePartitions(
+        graft.operators.Common.materialize(df.filter(leaf), "sinks.compact_partition")
+          .repartition(n), dir, part.map(_._1): _*)
     }
   }
 

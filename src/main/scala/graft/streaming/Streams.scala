@@ -445,7 +445,7 @@ object Streams {
     * label store's algebra). At 100 TB: an arriving batch pays one
     * explode over itself; history is never re-read. */
   def noveltyStoreSink(batch: DataFrame, batchId: Long, dir: String): Unit = {
-    val occ = graft.llm.TextOps.gramOccurrencesOf(batch).localCheckpoint()
+    val occ = materialize(graft.llm.TextOps.gramOccurrencesOf(batch), "streams.novelty_grams")
     sinkBatch(occ.groupBy("g").agg(min("doc_id").as("first_doc")),
       batchId, s"$dir/grams")
     sinkBatch(occ.groupBy("doc_id").agg(countDistinct("g").as("n_grams")),
@@ -543,7 +543,7 @@ object Streams {
     * is never re-shingled; each arriving batch pays its own signature
     * pass plus band-bucket joins. */
   def pairStoreInit(base: DataFrame, dir: String): Unit = {
-    val sh = graft.llm.Dedup.shinglesOf(base).localCheckpoint()
+    val sh = materialize(graft.llm.Dedup.shinglesOf(base), "streams.pair_shingles")
     graft.llm.Dedup.minhashBandsFromShingles(sh)
       .write.mode("overwrite").parquet(s"$dir/bands")
     graft.llm.Dedup.docShingleSetsFromShingles(sh)
@@ -558,7 +558,7 @@ object Streams {
 
   def pairDeltaSink(batch: DataFrame, batchId: Long, dir: String): Unit = {
     val s = batch.sparkSession
-    val signed = graft.llm.Dedup.minhashInRow(batch).localCheckpoint()
+    val signed = materialize(graft.llm.Dedup.minhashInRow(batch), "streams.pair_signatures")
     def withDelta(basePath: String, deltaPath: String, cols: Seq[String]) = {
       val b = s.read.parquet(basePath).selectExpr(cols: _*)
       // a URI delta path (file:, hdfs:, s3a:) must be seen too, or the
@@ -1063,16 +1063,15 @@ object Streams {
     // re-derive of their doc-batches would resurrect the forgotten docs.
     // Tombstones are monotone, so per-partition set-union keeps an
     // identical redelivery a no-op and lets a drifted one only ADD.
-    // KB-scale feed batch → localCheckpoint breaks the read-then-
+    // KB-scale feed batch → materializing breaks the read-then-
     // overwrite cycle on the partition being rewritten.
     val tombsDir = s"$dir/tombs"
-    val merged = (
+    val merged = materialize(
       if (fsExists(s, tombsDir))
         tombBatch.select("doc_id").unionByName(
           s.read.parquet(tombsDir).filter(col("batch_id") === batchId)
             .select("doc_id")).distinct()
-      else tombBatch.select("doc_id")
-    ).localCheckpoint()
+      else tombBatch.select("doc_id"), "streams.tombstones")
     sinkBatch(merged, batchId, tombsDir)
     val allTombs = s.read.parquet(tombsDir).select("doc_id")
     val affected: Seq[Long] = merged

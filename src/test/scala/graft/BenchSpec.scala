@@ -101,6 +101,25 @@ class BenchSpec extends AnyFunSuite {
     assert(Bench.withAutoRow(once, grown, 260.0) === Some(once :+ grown))
   }
 
+  test("a filtered run reports neither the 2x gate nor the prev-close, a full run both") {
+    val lines = Files.readAllLines(records.resolve("BASELINE.md")).asScala.toSeq
+    var closesRead = 0
+    def close = { closesRead += 1; prevClose(records, "sf0.1") }
+    assert(Bench.fullRunRefs(filtered = true, Some(lines), "0.1", "9dc08a2", 2, close) ===
+      (None, None))
+    assert(closesRead === 0)
+    assert(Bench.fullRunRefs(filtered = false, Some(lines), "0.1", "9dc08a2", 398, close) ===
+      (Some(Prior("7651fee", 398, 315.7)), Some(Prior("r19", 398, 267.0))))
+    assert(closesRead === 1)
+    // the filtered run's line keeps its per-key anchor gate, and has no
+    // gate or prev_close key
+    val filtered = Report("sf0.1", Seq("agg_cube" -> 0.5, "win_topk" -> 0.25), Nil, Nil,
+      None, None, Some((2, 0.5, 0.75)), Nil)
+    val fields = Bench.json.readTree(Bench.stdoutLine(filtered)).fieldNames.asScala.toSeq
+    assert(fields.contains("anchor"))
+    assert(!fields.contains("gate") && !fields.contains("prev_close"), fields)
+  }
+
   test("gitRev reads a branch from packed-refs when it has no loose ref") {
     val sha1 = "0123456789abcdef0123456789abcdef01234567"
     val packed = s"# pack-refs with: peeled fully-peeled sorted \n" +

@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one JVM-wide session — Spark
@@ -11,16 +13,21 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
 
   /** The number of Spark jobs `body` started on this thread (and threads
-    * it spawned): jobs are tagged with a local property, so a job another
-    * suite's background thread starts meanwhile is not counted. */
-  def jobsDuring(body: => Any): Int = {
+    * it spawned). */
+  def jobsDuring(body: => Any): Int = jobLabelsDuring(body).size
+
+  /** The job description of each Spark job `body` started on this thread
+    * (and threads it spawned), in start order; None for a job without one.
+    * Jobs are tagged with a local property, so a job another suite's
+    * background thread starts meanwhile is not counted. */
+  def jobLabelsDuring(body: => Any): Seq[Option[String]] = {
     val sc = spark.sparkContext
     val tag = java.util.UUID.randomUUID().toString
-    val started = new java.util.concurrent.atomic.AtomicInteger
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[Option[String]]
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         if (Option(e.properties).exists(_.getProperty("graft.test.jobsDuring") == tag))
-          started.incrementAndGet()
+          started.add(Option(e.properties.getProperty("spark.job.description")))
     }
     sc.addSparkListener(listener)
     sc.setLocalProperty("graft.test.jobsDuring", tag)
@@ -31,7 +38,7 @@ trait SparkSpec extends AnyFunSuite {
       sc.setLocalProperty("graft.test.jobsDuring", null)
       sc.removeSparkListener(listener)
     }
-    started.get
+    started.asScala.toSeq
   }
 }
 

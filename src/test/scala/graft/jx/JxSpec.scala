@@ -654,4 +654,28 @@ class JxSpec extends graft.SparkSpec {
     }
     assert(e.getMessage.contains("'n_shards'"), e.getMessage)
   }
+
+  test("corpus_op rejects a knob its route never reads and accepts the ones it does") {
+    // the route sweep's 64-dim vectors
+    val vecs = (0L until 12L).map { i =>
+      (i, Array.tabulate(64)(j => ((i * 31 + j * 17) % 13).toFloat / 13f))
+    }.toDF("vec_id", "embedding")
+    def run(spec: String) = Jx.run(spark,
+      s"""{"corpus_op": {"corpus": {"from": "embeddings"}, $spec}}""", _ => vecs)
+    // forget_ivf fixes its own list count, and knn_join's probe never reads k
+    for ((spec, knob) <- Seq(""""op": "forget_ivf", "nlist": 8""" -> "nlist",
+        """"op": "knn_join", "k": 5""" -> "k")) {
+      val e = intercept[IllegalArgumentException](run(spec))
+      assert(e.getMessage.contains(s"knob '$knob'"), e.getMessage)
+    }
+    // knn_diverse reads m in-plan
+    assert(run(""""op": "knn_diverse", "m": 4""").columns.nonEmpty)
+    // the committed jx keys whose corpus_op carries knobs besides op and
+    // corpus (every other key's corpus_op has none to reject), on their
+    // own routes: dsir, shard_manifest and pack_manifest in-plan,
+    // knn_diverse and knn_coreset on the stored graph
+    for (key <- Seq("jx_dsir", "jx_shard_manifest", "jx_pack_manifest", "jx_knn_diverse",
+        "jx_knn_coreset"))
+      assert(JxQueries.queries(key)(spark, "/root/testdata/sf0.01").columns.nonEmpty, key)
+  }
 }

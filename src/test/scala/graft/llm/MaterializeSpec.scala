@@ -1,0 +1,31 @@
+package graft.llm
+
+import org.apache.spark.sql.functions._
+
+/** The eager jobs a curation chain runs while it is built, named by the
+  * materialization that ran them ([[graft.operators.Common.materialize]]):
+  * the list pins how many materializations the chain runs and in which
+  * order. */
+class MaterializeSpec extends graft.SparkSpec {
+
+  private val sf = "/root/testdata/sf0.01"
+
+  /** Consecutive jobs of one label collapsed to one entry: a
+    * materialization runs one job per stage it executes. */
+  private def runs(labels: Seq[Option[String]]): Seq[Option[String]] =
+    labels.foldLeft(Vector.empty[Option[String]]) { (acc, l) =>
+      if (acc.lastOption.contains(l)) acc else acc :+ l }
+
+  test("the rules chain of corpusSurvivors runs its eager jobs under the expected labels") {
+    val docs = graft.Tables.t(spark, sf, "documents").filter(col("doc_id") < 80)
+    val labels = jobLabelsDuring {
+      Pipeline.corpusSurvivors(docs.filter(col("doc_id") >= 10),
+        docs.filter(col("doc_id") < 10),
+        rulesSources = Some(docs.select("doc_id", "source")))
+    }
+    // keep list, the shared shingle pass, the pair list of the cluster
+    // labels (then its unlabeled count and driver collect), survivors
+    assert(runs(labels) === Seq(Some("pipeline.keep_list"), Some("pipeline.shingles"),
+      Some("dedup.cc_pairs"), None, Some("pipeline.survivors")), labels)
+  }
+}

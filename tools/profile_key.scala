@@ -1,6 +1,8 @@
 // Per-job profile of one query key: runs the key with a listener recording
 // every Spark job's duration + description. Usage:
 //   PROF_KEY=<key> PROF_SF=/root/testdata/sf0.1 spark-shell ... -I tools/profile_key.scala
+// An eager job run while the key's DataFrame is built prints the label of
+// the Common.materialize call that ran it (e.g. "pipeline.shingles").
 import org.apache.spark.scheduler._
 import scala.collection.mutable
 val jobs = mutable.LinkedHashMap[Int, (Long, String)]()
