@@ -2,7 +2,9 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Readers for the driver-generated parquet tables (TESTDATA.md).
+/** Readers for the driver-generated parquet tables (TESTDATA.md) and the
+  * one parquet reader every store readout, probe and stream read-back of
+  * the library goes through ([[Tables.parquet]]).
   *
   * The reference (klahnakoski/TestLog-ETL) reads JSON-lines documents from
   * S3 buckets (upstream: pyLibrary/aws/s3.py) and Elasticsearch indexes
@@ -11,25 +13,30 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * pushdown and column pruning happen at the scan (SURVEY.md §4).
   */
 object Tables {
-  /** Scan one table. Kept as a plain parquet read so Catalyst sees a V1
-    * FileScan it can push filters/projections into — do not collect or
-    * cache here; callers compose lazily. The schema comes from the footer
-    * Spark's inference would read, read in this JVM
-    * ([[org.apache.spark.sql.graft.FooterSchema]]), so resolving a table
-    * runs no Spark job; without a readable data file the plain
-    * `spark.read.parquet` runs and its error surfaces.
-    */
+  /** Scan one table: the session conf set, then [[parquet]], then
+    * [[normalizeTimestamps]]. */
   def t(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     // Session-level conf, set here so even a caller-provided session (the
     // driver's smoke check) can read either historical `events.ts` layout.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val path = s"$sfDir/$name.parquet"
-    val df = org.apache.spark.sql.graft.FooterSchema.of(spark, path) match {
+    normalizeTimestamps(parquet(spark, s"$sfDir/$name.parquet"))
+  }
+
+  /** The library's one parquet reader, for the driver's tables and for
+    * every store the library writes. Kept as a plain parquet read so
+    * Catalyst sees a V1 FileScan it can push filters/projections into — do
+    * not collect or cache here; callers compose lazily. The schema comes
+    * from the footer Spark's inference would read, read in this JVM
+    * ([[org.apache.spark.sql.graft.FooterSchema]]), so opening a path runs
+    * no schema-inference job; without a readable data file the plain
+    * `spark.read.parquet` runs and its error surfaces. Timestamps are not
+    * normalized: stores hold the `TimestampType` Spark wrote.
+    */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    org.apache.spark.sql.graft.FooterSchema.of(spark, path) match {
       case Some(schema) => spark.read.schema(schema).parquet(path)
       case None         => spark.read.parquet(path)
     }
-    normalizeTimestamps(df)
-  }
 
   /** The driver has shipped `events.ts` in two parquet layouts over time:
     * TIMESTAMP(NANOS) (read as raw longs under `spark.sql.legacy.parquet

@@ -441,12 +441,12 @@ object Dedup {
         .filter(col("jaccard") >= 0.5)
         .select(col("da"), col("db"), r4(col("jaccard")).as("jaccard"))
         .write.mode("overwrite").parquet(s"$dd/pairs")
-      clusterLabelsFrom(s.read.parquet(s"$dd/pairs"))
+      clusterLabelsFrom(graft.Tables.parquet(s, s"$dd/pairs"))
         .write.mode("overwrite").parquet(s"$dd/labels")
     }
 
   val dedupMinhash: Q = (s, d) =>
-    s.read.parquet(s"${pairStore(s, d)}/pairs")
+    graft.Tables.parquet(s, s"${pairStore(s, d)}/pairs")
       .orderBy(desc("jaccard"), asc("da"), asc("db"))
 
   /** X1c: SimHash near-dup pairs (Charikar 2002). One 64-bit signature per
@@ -722,7 +722,7 @@ object Dedup {
     // per-probe cost; see dedupAgainstCorpusSigned) — the streaming form
     // computes them per arriving row, the batch gate per probe slice
     dedupAgainstCorpusSigned(materialize(minhashInRow(probes), "dedup.probe_signatures"),
-        s.read.parquet(s"$dir/bands"), s.read.parquet(s"$dir/sets"))
+        graft.Tables.parquet(s, s"$dir/bands"), graft.Tables.parquet(s, s"$dir/sets"))
       .filter(col("doc_id") =!= col("corpus_doc"))
       .distinct()
       .orderBy(desc("jaccard"), asc("doc_id"), asc("corpus_doc"))
@@ -807,7 +807,7 @@ object Dedup {
     * rounds, CTE-replayed). */
   val dedupCentrality: Q = (s, d) =>
     docCentralityOfPairs(
-      s.read.parquet(s"${pairStore(s, d)}/pairs"))
+      graft.Tables.parquet(s, s"${pairStore(s, d)}/pairs"))
 
   /** The doc-graph ranking over any scored (da, db) pair frame. */
   private def docCentralityOfPairs(pairs: DataFrame): DataFrame =
@@ -877,7 +877,7 @@ object Dedup {
     * lbl = the smallest doc id reachable from id. Shared by the cluster
     * report and the drop list. */
   private def clusterLabels(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"${pairStore(s, d)}/labels")
+    graft.Tables.parquet(s, s"${pairStore(s, d)}/labels")
 
   /** The same iterative min-label propagation over ANY (da, db) pair
     * frame — public so a composed pipeline can feed pairs scored from a
@@ -899,14 +899,18 @@ object Dedup {
   def clusterLabelsFrom(pairFrame: DataFrame,
       driverMax: Long = 2000000L): DataFrame = {
     val pairs = materialize(pairFrame.select("da", "db"), "dedup.cc_pairs")
-    if (pairs.count() <= driverMax) {
+    // one job decides and fetches: at most driverMax + 1 pairs, read from
+    // one partition so the limit cannot scale up into further jobs
+    val head = pairs.coalesce(1)
+      .limit(math.min(math.max(driverMax + 1, 0L), Int.MaxValue.toLong).toInt).collect()
+    if (head.length <= driverMax) {
       val parent = scala.collection.mutable.LongMap.empty[Long]
       def find(x: Long): Long = {
         var r = x
         while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
         r
       }
-      pairs.collect().foreach { row =>
+      head.foreach { row =>
         val (a, b) = (row.getLong(0), row.getLong(1))
         parent.getOrElseUpdate(a, a)
         parent.getOrElseUpdate(b, b)
@@ -1175,7 +1179,7 @@ object Dedup {
     * thresholds are FILTERS over the one stored table — no rescore per
     * candidate, the probe-tuning trick verbatim. */
   val dedupThresholdTuning: Q = (s, d) =>
-    thresholdTuningFrom(s.read.parquet(s"${pairStore(s, d)}/pairs"))
+    thresholdTuningFrom(graft.Tables.parquet(s, s"${pairStore(s, d)}/pairs"))
 
   private[graft] def thresholdTuningFrom(pairs: DataFrame): DataFrame = {
     val taus = array(Seq(500, 700, 900, 950, 975).map(lit(_)): _*)

@@ -89,8 +89,8 @@ object Forget {
       val tomb = t(s, d, "documents").select("doc_id")
         .filter(tombstoned(col("doc_id")))
       val (pairs, labels) = forgetPairFrames(
-        s.read.parquet(s"$base/pairs"),
-        s.read.parquet(s"$base/labels"), tomb)
+        graft.Tables.parquet(s, s"$base/pairs"),
+        graft.Tables.parquet(s, s"$base/labels"), tomb)
       pairs.write.mode("overwrite").parquet(s"$dd/pairs")
       labels.write.mode("overwrite").parquet(s"$dd/labels")
     }
@@ -108,10 +108,10 @@ object Forget {
       .orderBy("cluster_id")
 
   val dedupForgetPairs: Q = (s, d) =>
-    pairsReadout(s.read.parquet(s"${forgottenPairStore(s, d)}/pairs"))
+    pairsReadout(graft.Tables.parquet(s, s"${forgottenPairStore(s, d)}/pairs"))
 
   val dedupForgetClusters: Q = (s, d) =>
-    clustersReadout(s.read.parquet(s"${forgottenPairStore(s, d)}/labels"))
+    clustersReadout(graft.Tables.parquet(s, s"${forgottenPairStore(s, d)}/labels"))
 
   // ——— in-plan twins (jx corpus_op fallbacks): the same forget
   // semantics derived from the corpus frame when no store is available —
@@ -180,7 +180,7 @@ object Forget {
       val base = Similarity.quantizerStore(s, d, 16)
       val tomb = t(s, d, "embeddings").select("vec_id")
         .filter(tombstoned(col("vec_id")))
-      s.read.parquet(s"$base/assign")
+      graft.Tables.parquet(s, s"$base/assign")
         .join(broadcast(tomb), Seq("vec_id"), "left_anti")
         .write.mode("overwrite").parquet(s"$dd/assign")
     }
@@ -201,7 +201,7 @@ object Forget {
       .orderBy("cid")
 
   val simForgetIvf: Q = (s, d) =>
-    listsReadout(s.read.parquet(s"${forgottenIvfStore(s, d)}/assign"))
+    listsReadout(graft.Tables.parquet(s, s"${forgottenIvfStore(s, d)}/assign"))
 
   // ——— T13g: multimodal payload pair graph ———
 
@@ -215,7 +215,7 @@ object Forget {
       val base = Multimodal.mmPairStore(s, d)
       val tomb = t(s, d, "documents").select("doc_id")
         .filter(tombstoned(col("doc_id")))
-      s.read.parquet(s"$base/pairs")
+      graft.Tables.parquet(s, s"$base/pairs")
         .join(broadcast(tomb.select(col("doc_id").as("da"))), Seq("da"), "left_anti")
         .join(broadcast(tomb.select(col("doc_id").as("db"))), Seq("db"), "left_anti")
         .select("da", "db", "jaccard")
@@ -223,7 +223,7 @@ object Forget {
     }
 
   val mmForgetPairs: Q = (s, d) =>
-    pairsReadout(s.read.parquet(s"${forgottenMmPairStore(s, d)}/pairs"))
+    pairsReadout(graft.Tables.parquet(s, s"${forgottenMmPairStore(s, d)}/pairs"))
 
   /** In-plan twin (jx `forget_knn` fallback): full rebuild over the
     * purged membership — by ForgetSpec's pin, exactly what the store's
@@ -261,7 +261,7 @@ object Forget {
       val base = Similarity.knnStore(s, d)
       val tomb = t(s, d, "embeddings").select("vec_id")
         .filter(tombstoned(col("vec_id")))
-      val edges = s.read.parquet(s"$base/edges")
+      val edges = graft.Tables.parquet(s, s"$base/edges")
       val keptSrc = edges
         .join(broadcast(tomb.select(col("vec_id").as("src"))), Seq("src"), "left_anti")
       val affected = keptSrc
@@ -279,7 +279,7 @@ object Forget {
     }
 
   val simForgetKnn: Q = (s, d) =>
-    s.read.parquet(s"${forgottenKnnStore(s, d)}/edges").orderBy("src", "rnk")
+    graft.Tables.parquet(s, s"${forgottenKnnStore(s, d)}/edges").orderBy("src", "rnk")
 
   // ——— T13e: ST24 BM25 dictionary ———
 
@@ -298,7 +298,7 @@ object Forget {
     val affected: Seq[Long] = tomb
       .select(pmod(col("doc_id"), lit(nB)).as("batch_id")).distinct()
       .collect().map(_.getLong(0)).toSeq.sorted
-    s.read.parquet(baseC)
+    graft.Tables.parquet(s, baseC)
       .filter(!col("batch_id").isin(affected: _*))
       .write.mode("overwrite").partitionBy("batch_id").parquet(outC)
     affected.foreach { bid =>
@@ -400,7 +400,7 @@ object Forget {
 
   val textForgetManifest: Q = (s, d) => {
     val docs = t(s, d, "documents")
-    val base = s.read.parquet(s"${manifestStoreDir(s, d)}/m")
+    val base = graft.Tables.parquet(s, s"${manifestStoreDir(s, d)}/m")
     val tombDocs = shardedDocCols(docs.filter(tombstoned(col("doc_id"))))
     val survivors = shardedDocCols(docs.filter(!tombstoned(col("doc_id"))))
     manifestForget(base, tombDocs, survivors, Seq("shard"))
@@ -418,7 +418,7 @@ object Forget {
     val affected: Seq[Long] = tomb
       .select(TextOps.shardCol(16).as("shard")).distinct()
       .collect().map(_.getLong(0)).toSeq.sorted
-    val base = s.read.parquet(baseDocs)
+    val base = graft.Tables.parquet(s, baseDocs)
       .withColumn("shard", col("shard").cast("long"))
     base.filter(!col("shard").isin(affected: _*))
       .write.mode("overwrite").partitionBy("shard").parquet(outDocs)
@@ -441,7 +441,7 @@ object Forget {
 
   val textForgetExport: Q = (s, d) =>
     TextOps.shardManifestOf(
-      s.read.parquet(s"${forgottenExportStore(s, d)}/docs")
+      graft.Tables.parquet(s, s"${forgottenExportStore(s, d)}/docs")
         .withColumn("shard", col("shard").cast("long")))
 
   /** T13h-release: the CORPUS RELEASE manifest forgotten under FROZEN
@@ -479,7 +479,7 @@ object Forget {
       .select(pmod(col("doc_id"), lit(nB)).as("b")).distinct()
       .collect().map(_.getLong(0)).toSeq.sorted
     Seq("grams", "docs").foreach { part =>
-      s.read.parquet(s"$baseN/$part")
+      graft.Tables.parquet(s, s"$baseN/$part")
         .filter(!col("batch_id").isin(affected: _*))
         .write.mode("overwrite").partitionBy("batch_id").parquet(s"$outN/$part")
     }
@@ -513,7 +513,7 @@ object Forget {
     * included. Gate: `dedup_canonical`'s oracle over the purged corpus. */
   val dedupForgetCanonical: Q = (s, d) =>
     Dedup.canonicalFromLabels(
-      s.read.parquet(s"${forgottenPairStore(s, d)}/labels"),
+      graft.Tables.parquet(s, s"${forgottenPairStore(s, d)}/labels"),
       t(s, d, "documents").filter(!tombstoned(col("doc_id"))))
 
   // ——— T13k: the SQ8 codes store (frozen stats) ———
@@ -527,10 +527,10 @@ object Forget {
       val base = Similarity.sq8StoreDir(s, d)
       val tomb = t(s, d, "embeddings").select("vec_id")
         .filter(tombstoned(col("vec_id")))
-      s.read.parquet(s"$base/codes")
+      graft.Tables.parquet(s, s"$base/codes")
         .join(broadcast(tomb), Seq("vec_id"), "left_anti")
         .write.mode("overwrite").parquet(s"$dd/codes")
-      s.read.parquet(s"$base/stats")
+      graft.Tables.parquet(s, s"$base/stats")
         .write.mode("overwrite").parquet(s"$dd/stats")
     }
 
@@ -539,8 +539,8 @@ object Forget {
     * neither query nor candidate, and ranks re-close over the survivors. */
   val simForgetSq8: Q = (s, d) => {
     val dir = forgottenSq8Store(s, d)
-    val codes = s.read.parquet(s"$dir/codes")
-      .crossJoin(broadcast(s.read.parquet(s"$dir/stats")))
+    val codes = graft.Tables.parquet(s, s"$dir/codes")
+      .crossJoin(broadcast(graft.Tables.parquet(s, s"$dir/stats")))
     val queries = Similarity.sq8Queries(
       t(s, d, "embeddings").filter(!tombstoned(col("vec_id"))))
     val w = org.apache.spark.sql.expressions.Window
@@ -573,14 +573,14 @@ object Forget {
     val affected: Seq[Long] = tombDocs
       .select(pmod(col("doc_id"), lit(nB)).as("b")).distinct()
       .collect().map(_.getLong(0)).toSeq.sorted
-    s.read.parquet(baseC)
+    graft.Tables.parquet(s, baseC)
       .filter(!col("batch_id").isin(affected: _*))
       .write.mode("overwrite").partitionBy("batch_id").parquet(outC)
     affected.foreach { bid =>
       val neg = TextOps.lineFreqsOf(tombDocs.filter(col("doc_id") % nB === bid))
         .withColumnRenamed("ldf", "n_neg")
       graft.streaming.Streams.sinkBatch(
-        s.read.parquet(baseC).filter(col("batch_id") === bid)
+        graft.Tables.parquet(s, baseC).filter(col("batch_id") === bid)
           .drop("batch_id")
           .join(neg, Seq("lh"), "left")
           .withColumn("n_docs", col("n_docs") - coalesce(col("n_neg"), lit(0L)))
@@ -633,7 +633,7 @@ object Forget {
     val affected: Seq[String] = tombEv
       .select(date_format(col("ts"), "yyyy-MM-dd").as("day")).distinct()
       .collect().map(_.getString(0)).toSeq.sorted
-    s.read.parquet(baseDaily)
+    graft.Tables.parquet(s, baseDaily)
       .filter(!col("day").isin(affected: _*))
       .write.mode("overwrite").partitionBy("day").parquet(outDaily)
     graft.sources.Sinks.overwritePartitions(
@@ -664,7 +664,7 @@ object Forget {
     val purged = ev.join(broadcast(eventTombstones(ev)), Seq("user_id"), "left_anti")
     graft.operators.Aggregates.dashboardPinsOver(purged,
       graft.operators.Aggregates.sketchMergeFrame(
-        s.read.parquet(s"${forgottenSketchStore(s, d)}/daily"),
+        graft.Tables.parquet(s, s"${forgottenSketchStore(s, d)}/daily"),
         "2024-01-05", "2024-01-12"),
       "2024-01-05", "2024-01-12")
   }
@@ -701,19 +701,19 @@ object Forget {
         .select(lit(store).as("store"), col("n_store"), col("tomb_refs"))
     val pairDir = forgottenPairStore(s, d)
     Seq(
-      rowOf("dedup_pairs", s.read.parquet(s"$pairDir/pairs"),
+      rowOf("dedup_pairs", graft.Tables.parquet(s, s"$pairDir/pairs"),
         tombstoned(col("da")) || tombstoned(col("db"))),
-      rowOf("dedup_labels", s.read.parquet(s"$pairDir/labels"),
+      rowOf("dedup_labels", graft.Tables.parquet(s, s"$pairDir/labels"),
         tombstoned(col("id"))),
-      rowOf("ivf_lists", s.read.parquet(s"${forgottenIvfStore(s, d)}/assign"),
+      rowOf("ivf_lists", graft.Tables.parquet(s, s"${forgottenIvfStore(s, d)}/assign"),
         tombstoned(col("vec_id"))),
-      rowOf("knn_edges", s.read.parquet(s"${forgottenKnnStore(s, d)}/edges"),
+      rowOf("knn_edges", graft.Tables.parquet(s, s"${forgottenKnnStore(s, d)}/edges"),
         tombstoned(col("src")) || tombstoned(col("dst"))),
-      rowOf("sq8_codes", s.read.parquet(s"${forgottenSq8Store(s, d)}/codes"),
+      rowOf("sq8_codes", graft.Tables.parquet(s, s"${forgottenSq8Store(s, d)}/codes"),
         tombstoned(col("vec_id"))),
-      rowOf("payload_pairs", s.read.parquet(s"${forgottenMmPairStore(s, d)}/pairs"),
+      rowOf("payload_pairs", graft.Tables.parquet(s, s"${forgottenMmPairStore(s, d)}/pairs"),
         tombstoned(col("da")) || tombstoned(col("db"))),
-      rowOf("export_docs", s.read.parquet(s"${forgottenExportStore(s, d)}/docs"),
+      rowOf("export_docs", graft.Tables.parquet(s, s"${forgottenExportStore(s, d)}/docs"),
         tombstoned(col("doc_id"))))
       .reduce(_ unionByName _).orderBy("store")
   }

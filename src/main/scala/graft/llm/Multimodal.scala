@@ -491,7 +491,7 @@ object Multimodal {
     }
 
   val mmDedup: Q = (s, d) =>
-    s.read.parquet(s"${mmPairStore(s, d)}/pairs")
+    graft.Tables.parquet(s, s"${mmPairStore(s, d)}/pairs")
       .orderBy(desc("jaccard"), asc("da"), asc("db"))
 
   /** [[mmDedup]]'s chain over ANY documents-shaped frame — the jx
@@ -576,7 +576,7 @@ object Multimodal {
     Dedup.dedupAgainstCorpusSigned(
         materialize(byteMinhashInRow(mm.filter(col("doc_id") % 10 === 0)),
           "mm.probe_signatures"),
-        s.read.parquet(s"$dir/bands"), s.read.parquet(s"$dir/sets"))
+        graft.Tables.parquet(s, s"$dir/bands"), graft.Tables.parquet(s, s"$dir/sets"))
       .filter(col("doc_id") =!= col("corpus_doc"))
       .distinct()
       .orderBy(desc("jaccard"), asc("doc_id"), asc("corpus_doc"))

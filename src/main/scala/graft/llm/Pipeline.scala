@@ -330,7 +330,7 @@ object Pipeline {
           docs.filter(col("doc_id") < 10))
         .write.mode("overwrite").parquet(s"$dd/survivors")
     }
-    s.read.parquet(s"$dir/survivors")
+    graft.Tables.parquet(s, s"$dir/survivors")
   }
 
   /** The chain with the MULTIMODAL payload gate composed in front (X5e

@@ -152,8 +152,13 @@ object Similarity {
     * round-trip parquet bit-exactly, so stored == in-plan under every
     * oracle. */
   private[llm] def quantizerStore(s: SparkSession, d: String, nlist: Int): java.io.File =
-    Artifacts.buildOnce(s, s"quantizer_$nlist", d) { dd =>
-      val (_, cents, _, assign) = ivfIndexOf(t(s, d, "embeddings"), nlist)
+    quantizerStoreOf(s, d, s"quantizer_$nlist", nlist)(t(s, d, "embeddings"))
+
+  /** [[quantizerStore]] of any vector family; `vecs` is evaluated only by the building call. */
+  private def quantizerStoreOf(s: SparkSession, d: String, family: String, nlist: Int)(
+      vecs: => DataFrame): java.io.File =
+    Artifacts.buildOnce(s, family, d) { dd =>
+      val (_, cents, _, assign) = ivfIndexOf(vecs, nlist)
       cents.write.mode("overwrite").parquet(s"$dd/cents")
       assign.write.mode("overwrite").parquet(s"$dd/assign")
     }
@@ -163,39 +168,32 @@ object Similarity {
     * assignment) — centroids and assignment PROBE the stored quantizer;
     * scoring is re-derived in-plan from the broadcast centroids. */
   private[llm] def ivfIndex(s: SparkSession, d: String, nlist: Int):
-      (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val dir = quantizerStore(s, d, nlist)
-    val vecs = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
-      .withColumn("norm2", DotProduct(col("embedding"), col("embedding")))
-    val cents = s.read.parquet(s"$dir/cents")
-    val scored = vecs.crossJoin(broadcast(cents))
-      .withColumn("cos",
-        DotProduct(col("embedding"), col("cv")) / (sqrt(col("norm2")) * sqrt(col("cn"))))
-    (vecs, cents, scored, s.read.parquet(s"$dir/assign"))
-  }
+      (DataFrame, DataFrame, DataFrame, DataFrame) =
+    storedIvfIndex(s, d, s"quantizer_$nlist", nlist)(t(s, d, "embeddings"))
 
   /** [[ivfIndex]] for a NON-embeddings vector family (e.g. the
     * multimodal payload embeddings): same store-the-model/re-derive-the-
     * scores contract as [[quantizerStore]]+[[ivfIndex]], keyed by `tag`
     * so each vector family trains and persists its own quantizer once
-    * per (session, dataset). `vecsIn` is by-name: it is only evaluated
-    * on the first (building) call. */
+    * per (session, dataset). `vecsIn` is by-name and evaluated once per
+    * call. */
   private[llm] def ivfIndexStored(s: SparkSession, d: String, nlist: Int,
       tag: String)(vecsIn: => DataFrame):
-      (DataFrame, DataFrame, DataFrame, DataFrame) = {
+      (DataFrame, DataFrame, DataFrame, DataFrame) =
+    storedIvfIndex(s, d, s"${tag}_quantizer_$nlist", nlist)(vecsIn)
+
+  /** [[ivfIndex]] over the quantizer store of `family`. */
+  private def storedIvfIndex(s: SparkSession, d: String, family: String, nlist: Int)(
+      vecsIn: => DataFrame): (DataFrame, DataFrame, DataFrame, DataFrame) = {
     lazy val vecsEval = vecsIn
-    val dir = Artifacts.buildOnce(s, s"${tag}_quantizer_$nlist", d) { dd =>
-      val (_, cents, _, assign) = ivfIndexOf(vecsEval, nlist)
-      cents.write.mode("overwrite").parquet(s"$dd/cents")
-      assign.write.mode("overwrite").parquet(s"$dd/assign")
-    }
+    val dir = quantizerStoreOf(s, d, family, nlist)(vecsEval)
     val vecs = vecsEval.select(col("vec_id"), col("embedding"))
       .withColumn("norm2", DotProduct(col("embedding"), col("embedding")))
-    val cents = s.read.parquet(s"$dir/cents")
+    val cents = graft.Tables.parquet(s, s"$dir/cents")
     val scored = vecs.crossJoin(broadcast(cents))
       .withColumn("cos",
         DotProduct(col("embedding"), col("cv")) / (sqrt(col("norm2")) * sqrt(col("cn"))))
-    (vecs, cents, scored, s.read.parquet(s"$dir/assign"))
+    (vecs, cents, scored, graft.Tables.parquet(s, s"$dir/assign"))
   }
 
   /** [[ivfIndex]] over any (vec_id, embedding) frame — the
@@ -373,7 +371,7 @@ object Similarity {
     * whole census is quantizer-replay EXACT, not approximate. */
   val simNlistTuning: Q = (s, d) => {
     val rows = NlistKnobs.map { nl =>
-      s.read.parquet(s"${quantizerStore(s, d, nl)}/assign")
+      graft.Tables.parquet(s, s"${quantizerStore(s, d, nl)}/assign")
         .groupBy("cid").agg(count(lit(1)).as("n"))
         .agg(
           count(lit(1)).as("n_lists"),
@@ -850,8 +848,8 @@ object Similarity {
       inv.write.mode("overwrite").partitionBy("cid").parquet(s"$dd/invlists")
     }
     val qs = t(s, d, "embeddings").filter(col("vec_id") < 20)
-    ivfProbe(qs, s.read.parquet(s"$dir/centroids"),
-      s.read.parquet(s"$dir/invlists"))
+    ivfProbe(qs, graft.Tables.parquet(s, s"$dir/centroids"),
+      graft.Tables.parquet(s, s"$dir/invlists"))
   }
 
   /** X3e-b: INCREMENTAL INDEX GROWTH under the oracle — the driver-gated
@@ -968,8 +966,8 @@ object Similarity {
       codesWithDist.select("vec_id", "m", "cid")
         .write.mode("overwrite").parquet(s"$dd/codes")
     }
-    val cents = s.read.parquet(s"$dir/pqcents")
-    val codes = s.read.parquet(s"$dir/codes")
+    val cents = graft.Tables.parquet(s, s"$dir/pqcents")
+    val codes = graft.Tables.parquet(s, s"$dir/codes")
     // ADC table: 20 queries × 8 subspaces × ≤16 centroids of exact dots
     val qsub = t(s, d, "embeddings").filter(col("vec_id") < 20)
       .select(col("vec_id").as("qid"), posexplode(expr(
@@ -1067,14 +1065,14 @@ object Similarity {
     Artifacts.buildOnce(s, "sq8", d) { dd =>
       val vecsB = sq8Doubles(t(s, d, "embeddings"))
       sq8StatsOf(vecsB).write.mode("overwrite").parquet(s"$dd/stats")
-      sq8Encode(vecsB, s.read.parquet(s"$dd/stats"))
+      sq8Encode(vecsB, graft.Tables.parquet(s, s"$dd/stats"))
         .write.mode("overwrite").parquet(s"$dd/codes")
     }
 
   private def sq8Stored(s: SparkSession, d: String): DataFrame = {
     val dir = sq8StoreDir(s, d)
-    s.read.parquet(s"$dir/codes")
-      .crossJoin(broadcast(s.read.parquet(s"$dir/stats")))
+    graft.Tables.parquet(s, s"$dir/codes")
+      .crossJoin(broadcast(graft.Tables.parquet(s, s"$dir/stats")))
   }
 
   private def sq8Scores(s: SparkSession, d: String): DataFrame =
@@ -1222,9 +1220,9 @@ object Similarity {
       assign.select(col("vec_id").as("nid"), col("cid"))
         .write.mode("overwrite").partitionBy("cid").parquet(s"$dd/assign")
     }
-    val cents = s.read.parquet(s"$dir/cents")
-    val cents2 = s.read.parquet(s"$dir/pqcents")
-    val codes = s.read.parquet(s"$dir/codes")
+    val cents = graft.Tables.parquet(s, s"$dir/cents")
+    val cents2 = graft.Tables.parquet(s, s"$dir/pqcents")
+    val codes = graft.Tables.parquet(s, s"$dir/codes")
     // query-side tables: 8-subspace ADC dots and per-list coarse dots
     val q = t(s, d, "embeddings").filter(col("vec_id") < 20)
     val qsub = q.select(col("vec_id").as("qid"), posexplode(expr(
@@ -1250,7 +1248,7 @@ object Similarity {
         Window.partitionBy("vec_id").orderBy(desc("cos"), asc("cid"))))
       .filter(col("rk") <= nprobe)
       .select(col("vec_id").as("qid"), col("cid"))
-    val cand = probes.join(s.read.parquet(s"$dir/assign"), Seq("cid"))
+    val cand = probes.join(graft.Tables.parquet(s, s"$dir/assign"), Seq("cid"))
     cand.join(codes, Seq("nid"))
       .join(broadcast(tab), Seq("qid", "m", "pqc"))
       // m-ordered fold; 0D + pd0 = pd0 exactly, so the 8-term sum is
@@ -1465,9 +1463,9 @@ object Similarity {
       // re-running the Lloyd passes inside this family's build
       knnGraphFromIndex(ivfIndex(s, d, 16), k = 3, p = 3)
         .write.mode("overwrite").parquet(s"$dd/edges")
-      val mutual = mutualOfEdges(s.read.parquet(s"$dd/edges"))
+      val mutual = mutualOfEdges(graft.Tables.parquet(s, s"$dd/edges"))
       mutual.write.mode("overwrite").parquet(s"$dd/mutual")
-      val stored = s.read.parquet(s"$dd/mutual")
+      val stored = graft.Tables.parquet(s, s"$dd/mutual")
       Dedup.clusterLabelsFrom(
           stored.select(col("src").as("da"), col("dst").as("db")))
         .write.mode("overwrite").parquet(s"$dd/labels")
@@ -1476,13 +1474,13 @@ object Similarity {
     }
 
   private def knnEdgesStored(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"${knnStore(s, d)}/edges")
+    graft.Tables.parquet(s, s"${knnStore(s, d)}/edges")
   private def knnMutualStored(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"${knnStore(s, d)}/mutual")
+    graft.Tables.parquet(s, s"${knnStore(s, d)}/mutual")
   private def knnLabelsStored(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"${knnStore(s, d)}/labels")
+    graft.Tables.parquet(s, s"${knnStore(s, d)}/labels")
   private def knnDegreesStored(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"${knnStore(s, d)}/degrees")
+    graft.Tables.parquet(s, s"${knnStore(s, d)}/degrees")
 
   /** Mutual-edge count per vertex — the degree table stored in the kNN
     * artifact and reused by the diversity sampler and the health stats. */
@@ -1854,9 +1852,9 @@ object Similarity {
     * the equality with a full re-assignment and the untouched bytes. */
   def applyQuantizerRefresh(s: SparkSession, invlistDir: String,
       newCents: DataFrame): Long = {
-    val old = s.read.parquet(invlistDir)
+    val old = graft.Tables.parquet(s, invlistDir)
       .select(col("cid").cast("long").as("ocid"), col("nid"))
-    val stored = s.read.parquet(invlistDir)
+    val stored = graft.Tables.parquet(s, invlistDir)
       .select(col("nid").as("vec_id"), col("nv").as("embedding"))
     val reassigned = assignAgainstCentroids(stored, newCents)
     val affected = reassigned.select(col("cid"), col("nid"))
@@ -1940,7 +1938,7 @@ object Similarity {
     * readout is nlist rows. */
   val textTopicMix: Q = (s, d) => {
     val dir = quantizerStore(s, d, 16)
-    topicMixOf(t(s, d, "documents"), s.read.parquet(s"$dir/assign"))
+    topicMixOf(t(s, d, "documents"), graft.Tables.parquet(s, s"$dir/assign"))
   }
 
   /** [[textTopicMix]] over any documents-shaped frame and any

@@ -986,7 +986,7 @@ object TextOps {
       nbModelOf(t(s, d, "documents")).write.mode("overwrite")
         .parquet(s"$dd/model")
     }
-    s.read.parquet(s"$dir/model")
+    graft.Tables.parquet(s, s"$dir/model")
   }
 
   /** The SCORE half: per-doc mean log-odds of `docs` against a frozen
@@ -1181,8 +1181,8 @@ object TextOps {
       ctx.write.mode("overwrite").parquet(s"$dd/ctx")
       v.write.mode("overwrite").parquet(s"$dd/v")
     }
-    (s.read.parquet(s"$dir/ab"), s.read.parquet(s"$dir/ctx"),
-      s.read.parquet(s"$dir/v"))
+    (graft.Tables.parquet(s, s"$dir/ab"), graft.Tables.parquet(s, s"$dir/ctx"),
+      graft.Tables.parquet(s, s"$dir/v"))
   }
 
   /** Score ANY (doc_id, source, text) batch against a (possibly frozen)
@@ -1855,7 +1855,7 @@ object TextOps {
     val dir = Artifacts.buildOnce(s, "bpe", d) { dd =>
       bpeChain(s, d)._1.write.mode("overwrite").parquet(s"$dd/vocab")
     }
-    s.read.parquet(s"$dir/vocab").select(col("w"), bpeSyms("enc").as("sy"))
+    graft.Tables.parquet(s, s"$dir/vocab").select(col("w"), bpeSyms("enc").as("sy"))
   }
 
   val textBpeEncode: Q = (s, d) => {
@@ -1973,7 +1973,7 @@ object TextOps {
         .withColumn("shard", shardCol(16))
         .write.mode("overwrite").partitionBy("shard").parquet(s"$dd/docs")
     }
-    shardManifestOf(s.read.parquet(s"$dir/docs")
+    shardManifestOf(graft.Tables.parquet(s, s"$dir/docs")
       .withColumn("shard", col("shard").cast("long")))
   }
 

@@ -435,7 +435,7 @@ object Aggregates {
       TDigestMergeAgg, TDigestQuantile}
     val ev = t(s, d, "events")
     val dir = sketchStoreDir(s, d)
-    val merged = s.read.parquet(s"$dir/daily")
+    val merged = graft.Tables.parquet(s, s"$dir/daily")
       .groupBy("event_type")
       .agg(
         TDigestMergeAgg(col("td")).as("sk"),
@@ -487,7 +487,7 @@ object Aggregates {
   def sketchDashboardFrame(s: SparkSession, d: String,
       dayLo: String, dayHi: String): DataFrame =
     sketchMergeFrame(
-      s.read.parquet(s"${sketchStoreDir(s, d)}/daily"), dayLo, dayHi)
+      graft.Tables.parquet(s, s"${sketchStoreDir(s, d)}/daily"), dayLo, dayHi)
 
   /** The dashboard merge over any frame of store partials (day-pruned
     * batch rollup or the stream-maintained store — the partials are

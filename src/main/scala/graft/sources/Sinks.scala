@@ -75,7 +75,7 @@ object Sinks {
     * predicate selecting only decayed partitions (e.g. yesterday's). */
   def compactPartitions(spark: SparkSession, dir: String,
       partitionCol: String, targetBytes: Long = 128L * 1024 * 1024): Unit = {
-    val df = spark.read.parquet(dir)
+    val df = graft.Tables.parquet(spark, dir)
     val conf = spark.sessionState.newHadoopConf()
     val root = new Path(dir)
     val rootPath = root.getFileSystem(conf).makeQualified(root).toUri.getPath

@@ -269,7 +269,7 @@ object Streams {
       replay(t(s, d, "documents"), "doc_id", 2, again = 0)(
         packStoreSink(_, _, s"$dd/p"))
     }
-    graft.llm.TextOps.packMergeFrom(s.read.parquet(s"$dir/p"))
+    graft.llm.TextOps.packMergeFrom(graft.Tables.parquet(s, s"$dir/p"))
   }
 
   /** ST21b: the INTERLEAVED twin of [[packStoreSink]] — the same store
@@ -286,7 +286,7 @@ object Streams {
       replay(t(s, d, "documents"), "doc_id", 2, again = 0)(
         mmPackStoreSink(_, _, s"$dd/p"))
     }
-    graft.llm.TextOps.packMergeFrom(s.read.parquet(s"$dir/p"))
+    graft.llm.TextOps.packMergeFrom(graft.Tables.parquet(s, s"$dir/p"))
   }
 
   /** ST11: stream-maintained per-source QUALITY monitor store — the
@@ -348,7 +348,7 @@ object Streams {
   /** The accumulated store readout: [[classifierMergeFrom]] over the
     * per-batch partitions. */
   def classifierStoreReadout(s: SparkSession, dir: String): DataFrame =
-    classifierMergeFrom(s.read.parquet(dir))
+    classifierMergeFrom(graft.Tables.parquet(s, dir))
 
   /** ST15 batch twin: two disjoint batches scored against the stored
     * model + an at-least-once redelivery, then the merged readout —
@@ -383,7 +383,7 @@ object Streams {
 
   /** The accumulated range readout: re-min/max the per-batch partials. */
   def sq8StatsReadout(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(dir)
+    graft.Tables.parquet(s, dir)
       .groupBy("pos").agg(min("mn").as("mn"), max("mx").as("mx"))
       .orderBy("pos")
 
@@ -417,7 +417,7 @@ object Streams {
   /** The accumulated tier readout: rank the merged per-doc scores. */
   def pplStoreReadout(s: SparkSession, dir: String): DataFrame =
     graft.llm.TextOps.pplTiersFrom(
-      s.read.parquet(dir).select("doc_id", "source", "n_bigrams", "nll"))
+      graft.Tables.parquet(s, dir).select("doc_id", "source", "n_bigrams", "nll"))
 
   /** ST17 batch twin: two disjoint batches scored against the frozen LM
     * + an at-least-once redelivery, then the ranked readout — gated by
@@ -456,8 +456,8 @@ object Streams {
     * partials, then the shared doc-level join. */
   def noveltyStoreReadout(s: SparkSession, dir: String): DataFrame =
     graft.llm.TextOps.noveltyFromParts(
-      s.read.parquet(s"$dir/grams").select("g", "first_doc"),
-      s.read.parquet(s"$dir/docs").select("doc_id", "n_grams"))
+      graft.Tables.parquet(s, s"$dir/grams").select("g", "first_doc"),
+      graft.Tables.parquet(s, s"$dir/docs").select("doc_id", "n_grams"))
 
   /** ST14: stream-maintained semantic-DECONTAMINATION store — the
     * benchmark side is the one that CHANGES over time (a new eval suite
@@ -491,14 +491,14 @@ object Streams {
     val s = batch.sparkSession
     sinkBatch(
       graft.llm.Similarity.deconHitsAgainstIndex(batch,
-        s.read.parquet(s"$dir/cents"), s.read.parquet(s"$dir/inv"), tau),
+        graft.Tables.parquet(s, s"$dir/cents"), graft.Tables.parquet(s, s"$dir/inv"), tau),
       batchId, s"$dir/hits")
   }
 
   /** The accumulated readout in `sim_semantic_decon`'s output shape. */
   def deconStoreReadout(s: SparkSession, dir: String): DataFrame =
     graft.llm.Similarity.deconRollup(
-      s.read.parquet(s"$dir/hits").select("bid", "nid", "cosine"))
+      graft.Tables.parquet(s, s"$dir/hits").select("bid", "nid", "cosine"))
 
   /** ST23: the MULTIMODAL twin of ST14 — stream-maintained semantic
     * decon store over PAYLOAD embeddings: a new eval suite's images
@@ -560,11 +560,11 @@ object Streams {
     val s = batch.sparkSession
     val signed = materialize(graft.llm.Dedup.minhashInRow(batch), "streams.pair_signatures")
     def withDelta(basePath: String, deltaPath: String, cols: Seq[String]) = {
-      val b = s.read.parquet(basePath).selectExpr(cols: _*)
+      val b = graft.Tables.parquet(s, basePath).selectExpr(cols: _*)
       // a URI delta path (file:, hdfs:, s3a:) must be seen too, or the
       // cross-batch pairs are silently dropped
       if (fsExists(s, deltaPath))
-        b.unionByName(s.read.parquet(deltaPath).selectExpr(cols: _*))
+        b.unionByName(graft.Tables.parquet(s, deltaPath).selectExpr(cols: _*))
       else b
     }
     val bands = withDelta(s"$dir/bands", s"$dir/dbands",
@@ -589,7 +589,7 @@ object Streams {
     * every delta partition — exact duplicates from post-hoc
     * redeliveries collapse here. */
   def pairStoreReadout(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/pairs")
+    graft.Tables.parquet(s, s"$dir/pairs")
       .select("da", "db", "jaccard").distinct()
       .orderBy(desc("jaccard"), asc("da"), asc("db"))
 
@@ -613,15 +613,15 @@ object Streams {
   def labelStoreInit(s: SparkSession, dir: String): Unit =
     sinkBatch(
       graft.llm.Dedup.clusterLabelsFrom(
-        s.read.parquet(s"$dir/pairs").select("da", "db")),
+        graft.Tables.parquet(s, s"$dir/pairs").select("da", "db")),
       -1L, s"$dir/labels")
 
   def labelDeltaSink(s: SparkSession, batchId: Long, dir: String): Unit = {
     // this batch's pairs (written by pairDeltaSink just before) — the
     // partition filter prunes to one batch directory
-    val newPairs = s.read.parquet(s"$dir/pairs")
+    val newPairs = graft.Tables.parquet(s, s"$dir/pairs")
       .filter(col("batch_id") === batchId).select("da", "db")
-    val cur = s.read.parquet(s"$dir/labels")
+    val cur = graft.Tables.parquet(s, s"$dir/labels")
       .groupBy("id").agg(min("lbl").as("lbl"))
     // condense each new edge to its endpoints' current component labels
     // (an unseen endpoint represents itself); CC over this label graph
@@ -650,7 +650,7 @@ object Streams {
   /** The maintained labels in [[graft.llm.Dedup.clusterLabelsFrom]]'s
     * output shape: per-id min across every batch partition. */
   def labelStoreReadout(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/labels")
+    graft.Tables.parquet(s, s"$dir/labels")
       .groupBy("id").agg(min("lbl").as("lbl"))
 
   /** ST10 (forward idea ac, streaming half): stream-maintained IVF
@@ -677,7 +677,7 @@ object Streams {
     * cast here restores the artifact schema so the delta unions cleanly
     * onto the stored base lists. */
   def invlistDelta(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(dir).select(col("cid").cast("long").as("cid"),
+    graft.Tables.parquet(s, dir).select(col("cid").cast("long").as("cid"),
       col("nid"), col("nv"), col("nn"))
 
   /** Batch-twin query for the oracle: identical plan to
@@ -782,7 +782,7 @@ object Streams {
     }
     graft.operators.Aggregates.dashboardPins(s, d,
       graft.operators.Aggregates.sketchMergeFrame(
-        s.read.parquet(s"$dir/daily"), "2024-01-05", "2024-01-12"),
+        graft.Tables.parquet(s, s"$dir/daily"), "2024-01-05", "2024-01-12"),
       "2024-01-05", "2024-01-12")
   }
 
@@ -797,7 +797,7 @@ object Streams {
       replay(t(s, d, "documents"), "doc_id", 2, again = 0)(
         qualityStoreSink(_, _, s"$dd/q"))
     }
-    graft.llm.TextOps.qualityMergeFrom(s.read.parquet(s"$dir/q"))
+    graft.llm.TextOps.qualityMergeFrom(graft.Tables.parquet(s, s"$dir/q"))
   }
 
   /** ST12b batch twin: init + two label-maintained delta batches + an
@@ -877,7 +877,7 @@ object Streams {
     sinkBatch(graft.llm.TextOps.rulePartialsOf(batch), batchId, dir)
 
   def ruleStoreReadout(s: SparkSession, dir: String): DataFrame =
-    graft.llm.TextOps.ruleProfileMergeFrom(s.read.parquet(dir))
+    graft.llm.TextOps.ruleProfileMergeFrom(graft.Tables.parquet(s, dir))
 
   /** ST18 batch twin: two disjoint batches + an at-least-once redelivery
     * of batch 0, then the merged readout — exactness under batching, not
@@ -908,7 +908,7 @@ object Streams {
 
   /** The merged frequency table over the store's batch partitions. */
   def lineStoreFreqs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(dir)
+    graft.Tables.parquet(s, dir)
       .groupBy("lh")
       .agg(sum("n_docs").as("ldf"))
 
@@ -939,7 +939,7 @@ object Streams {
 
   /** The merged per-source monitor over the store's batch partitions. */
   def secretStoreReadout(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(dir)
+    graft.Tables.parquet(s, dir)
       .groupBy("source")
       .agg(sum("n_secret_docs").as("n_secret_docs"))
       .orderBy("source")
@@ -977,9 +977,9 @@ object Streams {
       docs: DataFrame): DataFrame =
     graft.llm.TextOps.hygieneReportAgainst(
       docs,
-      s.read.parquet(s"$dir/lines").groupBy("lh").agg(sum("n_docs").as("ldf")),
-      s.read.parquet(s"$dir/rules").drop("batch_id"),
-      s.read.parquet(s"$dir/secrets").drop("batch_id"))
+      graft.Tables.parquet(s, s"$dir/lines").groupBy("lh").agg(sum("n_docs").as("ldf")),
+      graft.Tables.parquet(s, s"$dir/rules").drop("batch_id"),
+      graft.Tables.parquet(s, s"$dir/secrets").drop("batch_id"))
 
   /** ST20 batch twin: two disjoint batches + an at-least-once redelivery
     * across all three sub-stores, then the composed readout. */
@@ -1024,7 +1024,7 @@ object Streams {
     sinkBatch(graft.llm.TextOps.dfPartialsOf(batch), batchId, dir)
 
   def dfStoreReadout(s: SparkSession, dir: String): DataFrame =
-    graft.llm.TextOps.invertedIndexMergeFrom(s.read.parquet(dir))
+    graft.llm.TextOps.invertedIndexMergeFrom(graft.Tables.parquet(s, dir))
 
   /** The ST24 store directory, built once per (session, dataset) — shared
     * by the batch twin below and the forget-propagation pass
@@ -1069,11 +1069,11 @@ object Streams {
     val merged = materialize(
       if (fsExists(s, tombsDir))
         tombBatch.select("doc_id").unionByName(
-          s.read.parquet(tombsDir).filter(col("batch_id") === batchId)
+          graft.Tables.parquet(s, tombsDir).filter(col("batch_id") === batchId)
             .select("doc_id")).distinct()
       else tombBatch.select("doc_id"), "streams.tombstones")
     sinkBatch(merged, batchId, tombsDir)
-    val allTombs = s.read.parquet(tombsDir).select("doc_id")
+    val allTombs = graft.Tables.parquet(s, tombsDir).select("doc_id")
     val affected: Seq[Long] = merged
       .select(pmod(col("doc_id"), lit(dictBatches)).as("b")).distinct()
       .collect().map(_.getLong(0)).toSeq.sorted
@@ -1121,13 +1121,13 @@ object Streams {
     * is needed. */
   def asofDictRead(s: SparkSession, docs: DataFrame, baseC: String,
       tombsDir: String, k: Long): DataFrame = {
-    val prefix = s.read.parquet(tombsDir)
+    val prefix = graft.Tables.parquet(s, tombsDir)
       .filter(col("batch_id") <= k).select("doc_id")
     val affected: Seq[Long] = prefix
       .select(pmod(col("doc_id"), lit(dictBatches)).as("b")).distinct()
       .collect().map(_.getLong(0)).toSeq.sorted
     val partCols = Seq("w", "df", "cf", "max_tf", "ntf", "top_doc")
-    val untouched = s.read.parquet(baseC)
+    val untouched = graft.Tables.parquet(s, baseC)
       .filter(!col("batch_id").isin(affected: _*))
       .select(partCols.map(col): _*)
     val rederived = affected.map { bid =>
@@ -1184,7 +1184,7 @@ object Streams {
     val wm: Option[java.sql.Timestamp] =
       if (batchId == 0L || !fsExists(s, dir)) None
       else {
-        val prior = s.read.parquet(dir).filter(col("batch_id") < batchId)
+        val prior = graft.Tables.parquet(s, dir).filter(col("batch_id") < batchId)
         Option(prior.agg(max("bmax")).collect()(0).getTimestamp(0))
       }
     val lateFlag = wm match {
@@ -1202,7 +1202,7 @@ object Streams {
   }
 
   def lateStoreReadout(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(dir)
+    graft.Tables.parquet(s, dir)
       .groupBy("event_type")
       .agg(sum("n_total").as("n_total"), sum("n_late").as("n_late"))
       .withColumn("late_pm",
@@ -1259,7 +1259,7 @@ object Streams {
     * history at 100 TB. */
   def cdcStoreApplyAsOf(s: SparkSession, dir: String, base: DataFrame,
       k: Long): DataFrame = {
-    val latest = s.read.parquet(dir)
+    val latest = graft.Tables.parquet(s, dir)
       .filter(col("batch_id") <= k)
       .groupBy("o_orderkey")
       .agg(max(struct(col("batch_id"), col("op"), col("chg_price"))).as("x"))

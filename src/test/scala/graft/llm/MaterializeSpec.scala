@@ -16,16 +16,27 @@ class MaterializeSpec extends graft.SparkSpec {
     labels.foldLeft(Vector.empty[Option[String]]) { (acc, l) =>
       if (acc.lastOption.contains(l)) acc else acc :+ l }
 
-  test("the rules chain of corpusSurvivors runs its eager jobs under the expected labels") {
+  /** The label of every job building the rules chain of corpusSurvivors
+    * over sf0.01 docs 0–79 runs, in start order. */
+  private def rulesChainLabels(): Seq[Option[String]] = {
     val docs = graft.Tables.t(spark, sf, "documents").filter(col("doc_id") < 80)
-    val labels = jobLabelsDuring {
+    jobLabelsDuring {
       Pipeline.corpusSurvivors(docs.filter(col("doc_id") >= 10),
         docs.filter(col("doc_id") < 10),
         rulesSources = Some(docs.select("doc_id", "source")))
     }
+  }
+
+  test("the rules chain of corpusSurvivors runs its eager jobs under the expected labels") {
+    val labels = rulesChainLabels()
     // keep list, the shared shingle pass, the pair list of the cluster
-    // labels (then its unlabeled count and driver collect), survivors
+    // labels (then its unlabeled driver fetch), survivors
     assert(runs(labels) === Seq(Some("pipeline.keep_list"), Some("pipeline.shingles"),
       Some("dedup.cc_pairs"), None, Some("pipeline.survivors")), labels)
+  }
+
+  test("the cluster labels of the rules chain decide and fetch in one unlabelled job") {
+    val labels = rulesChainLabels()
+    assert(labels.count(_.isEmpty) === 1, labels)
   }
 }
