@@ -22,15 +22,14 @@ object ScaleProbe {
     val n = embs.count()
     val auto = llm.Similarity.autoNlist(n)
     def d1(v: Double) = "%.1f".formatLocal(java.util.Locale.ROOT, v)
+    import llm.Similarity.{Ivf, KnnGraph, knnCentrality, semanticDedup}
+    def mmDedup(nlist: Int) =
+      semanticDedup(Ivf.of(llm.Multimodal.payloadVecsOf(docs), nlist), tau = 0.999)
     val rows = Seq(
-      "knn_centrality_16" ->
-        time(llm.Similarity.knnCentralityOf(embs, nlist = 16).count()),
-      "knn_centrality_auto" ->
-        time(llm.Similarity.knnCentralityOf(embs).count()),
-      "mm_semantic_dedup_16" ->
-        time(llm.Multimodal.semanticDedupOfDocs(docs, nlist = 16).count()),
-      "mm_semantic_dedup_auto" ->
-        time(llm.Multimodal.semanticDedupOfDocs(docs).count()))
+      "knn_centrality_16" -> time(knnCentrality(KnnGraph.of(embs, nlist = 16)).count()),
+      "knn_centrality_auto" -> time(knnCentrality(KnnGraph.of(embs)).count()),
+      "mm_semantic_dedup_16" -> time(mmDedup(16).count()),
+      "mm_semantic_dedup_auto" -> time(mmDedup(llm.Similarity.AutoNlist).count()))
     println(rows.map { case (k, v) => s""""$k":${d1(v)}""" }
       .mkString(s"""{"n_vecs":$n,"auto_nlist":$auto,""", ",", s""","sf_dir":"$sfDir"}"""))
     spark.stop()

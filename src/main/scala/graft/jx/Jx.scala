@@ -481,20 +481,31 @@ object Jx {
   /** Every corpus_op, by name. */
   private[jx] lazy val corpusOps: Map[String, CorpusOp] = {
     import graft.llm.{Dedup, Forget, Multimodal => MM, Similarity => Sim, TextOps => TO}
+    import graft.llm.Similarity.{Ivf, KnnGraph}
     import graft.streaming.Streams
     import graft.etl.Transforms
-    val knn = Seq("nlist" -> 16, "k" -> 3)
     def budgeted(f: (DataFrame, Long, Long, Long) => DataFrame) = op(c => f(c.docs,
       c.long("budget_pct", 200L), c.long("max_epochs", 4L), c.long("n_shards", 8L)))
-    def tauTwin(of: (DataFrame, Int, Double) => DataFrame,
-        stored: (SparkSession, String, Double) => DataFrame) =
-      twin("embeddings", "nlist" -> 16)(c => of(c.docs, c.nlist(), c.double("tau", 0.35)))(
-        (c, d) => stored(c.spark, d, c.double("tau", 0.35)))
-    def knnTwin(of: (DataFrame, Int, Int) => DataFrame, stored: => Q) =
-      twin("embeddings", knn: _*)(c => of(c.docs, c.nlist(), c.int("k", 3)))(probe(stored))
-    def payloadTwin(of: (DataFrame, Int, Double) => DataFrame, key: String) =
-      twin("documents", "nlist" -> 16, "tau" -> 0.999)(c =>
-        of(c.docs, c.nlist(), c.double("tau", 0.999)))(probe(MM.queries(key)))
+    // The IVF and kNN-graph twins: one analysis over the index (graph),
+    // built in-plan from the corpus (its rows for embeddings, its payload
+    // embeddings for documents) or opened from the family's store. `use`
+    // reads its own knobs before the index is built.
+    def ivfTwin(from: String, build: (String, Any)*)(use: Call => Ivf => DataFrame) = {
+      val payload = from == "documents"
+      twin(from, ("nlist" -> 16) +: build: _*) { c =>
+        val (f, nlist) = (use(c), c.nlist())
+        f(Ivf.of(if (payload) MM.payloadVecsOf(c.docs) else c.docs, nlist))
+      } { (c, d) =>
+        use(c)(if (payload) Ivf.stored(c.spark, d, "mm_quantizer")(MM.mmVecsOf(c.spark, d))
+          else Ivf.stored(c.spark, d)())
+      }
+    }
+    def tauTwin(from: String, tau: Double, build: (String, Any)*)(f: (Ivf, Double) => DataFrame) =
+      ivfTwin(from, build: _*) { c => val v = c.double("tau", tau); f(_, v) }
+    def graphTwin(use: Call => KnnGraph => DataFrame) =
+      twin("embeddings", "nlist" -> 16, "k" -> 3)(c =>
+        use(c)(KnnGraph.of(c.docs, c.nlist(), c.int("k", 3))))((c, d) =>
+        use(c)(KnnGraph.stored(c.spark, d)))
     // the streamed quality monitor keeps the exact per-source token sums
     // the schedulers plan from, so the stored twins scan no corpus
     def tokenSums(c: Call, d: String) =
@@ -511,14 +522,16 @@ object Jx {
       "payload_pack_tuning" -> op(c =>
         MM.mmPackTuningOf(c.docs, nShards = c.long("n_shards", 8L))),
       "payload_dedup" -> plainTwin("documents", MM.dedupPairsOf(_), MM.queries("mm_dedup")),
-      "payload_semantic_dedup" -> payloadTwin(MM.semanticDedupOfDocs(_, _, _), "mm_semantic_dedup"),
-      "payload_knn" -> twin("documents", "nlist" -> 16)(c =>
-        MM.knnOfDocs(c.docs, nlist = c.nlist()))(probe(MM.queries("mm_knn"))),
+      "payload_semantic_dedup" -> tauTwin("documents", 0.999, "tau" -> 0.999)(Sim.semanticDedup),
+      "payload_knn" -> ivfTwin("documents")(_ => Sim.knnJoin(_)),
       // the text tower is the standard embeddings table
-      "payload_align" -> twin("documents")(c => MM.textAlignOfDocs(c.docs,
-        resolveFrom("embeddings", c.tables)))(probe(MM.queries("mm_text_align"))),
-      "payload_semantic_decon" -> payloadTwin(MM.semanticDeconOfDocs(_, _, _), "mm_semantic_decon"),
-      "payload_decon_report" -> payloadTwin(MM.deconReportOfDocs(_, _, _), "mm_decon_report"),
+      "payload_align" -> twin("documents") { c =>
+        val (docs, text) = (c.docs, resolveFrom("embeddings", c.tables))
+        MM.textAlignFrom(MM.payloadVecsOf(docs), text, docs)
+      }(probe(MM.queries("mm_text_align"))),
+      "payload_semantic_decon" ->
+        tauTwin("documents", 0.999, "tau" -> 0.999)(Sim.semanticDecon(_, _)),
+      "payload_decon_report" -> tauTwin("documents", 0.999, "tau" -> 0.999)(Sim.deconReport),
       "source_kl" -> on(TO.sourceKlOf(_)),
       "mix_schedule" -> twin("documents")(c => TO.mixScheduleOf(c.docs,
         c.long("budget_pct", 200L), c.long("max_epochs", 4L)))((c, d) =>
@@ -572,35 +585,28 @@ object Jx {
       // in-plan, the BPE vocabulary is trained from the corpus subquery itself
       "fertility" -> plainTwin("documents",
         d => TO.fertilityOf(d, TO.fertilityVocabOf(d)), TO.queries("text_fertility")),
-      "knn_join" -> twin("embeddings", "nlist" -> 16)(c =>
-        Sim.knnJoinOf(c.docs, c.nlist()))(probe(Sim.queries("sim_knn_join"))),
-      "probe_tuning" -> twin("embeddings", "nlist" -> 16)(c =>
-        Sim.probeTuningOf(c.docs, c.nlist()))(probe(Sim.queries("sim_probe_tuning"))),
+      "knn_join" -> ivfTwin("embeddings")(_ => Sim.knnJoin(_)),
+      "probe_tuning" -> ivfTwin("embeddings")(_ => Sim.probeTuning(_)),
       "sq8" -> plainTwin("embeddings", Sim.sq8TopkOf(_), Sim.queries("sim_sq8")),
       "token_budget" -> op(c =>
         TO.tokenBudgetOf(c.docs, c.long("quota", 300L), c.long("shards", 4L))),
       "bpe_merges" -> op(c => TO.bpeMergesOf(c.docs, c.int("merges", 3))),
-      "semantic_dedup" -> tauTwin(Sim.semanticDedupOf, Sim.semanticDedupStored),
-      "decon_recall" -> tauTwin(Sim.deconRecallOf, Sim.deconRecallStored),
-      "decon_report" -> tauTwin(Sim.deconReportOf, Sim.deconReportStored),
-      "semantic_decon" -> tauTwin(Sim.semanticDeconOf, Sim.semanticDeconStored),
+      "semantic_dedup" -> tauTwin("embeddings", 0.35)(Sim.semanticDedup),
+      "decon_recall" -> tauTwin("embeddings", 0.35)(Sim.deconRecall),
+      "decon_report" -> tauTwin("embeddings", 0.35)(Sim.deconReport),
+      "semantic_decon" -> tauTwin("embeddings", 0.35)(Sim.semanticDecon(_, _)),
       "overlap" -> op(c => Dedup.corpusOverlapOf(c.docs, c.int("k", 128))),
       "dsir" -> op(c => TO.dsirOf(c.docs, c.text("target_lang", "en"), c.int("buckets", 128))),
       "shard_manifest" -> op(c => TO.shardManifest(c.docs, c.int("shards", 16))),
       "pack_manifest" -> op(c =>
         TO.packManifest(c.docs, c.long("context", 2048L), c.long("shards", 8L))),
-      "knn_diverse" -> twin("embeddings", knn: _*)(c => Sim.knnDiverseOf(c.docs,
-        c.int("m", 2), c.nlist(), c.int("k", 3)))((c, d) =>
-        Sim.knnDiverseStored(c.spark, d, c.int("m", 2))),
-      "knn_clusters" -> knnTwin(Sim.knnClustersOf, Sim.knnClustersStored),
-      "knn_stats" -> knnTwin(Sim.knnStatsOf, Sim.knnStatsStored),
-      "knn_recall" -> knnTwin(Sim.knnRecallOf, Sim.knnRecallStored),
-      "knn_centrality" -> knnTwin(Sim.knnCentralityOf, Sim.knnCentralityStored),
-      "knn_coreset" -> twin("embeddings", knn: _*)(c => Sim.knnCoresetOf(c.docs,
-        c.int("m", 2), c.nlist(), c.int("k", 3)))((c, d) =>
-        Sim.knnCoresetStored(c.spark, d, c.int("m", 2))),
-      "quantizer_refresh" -> twin("embeddings", "nlist" -> 16)(c =>
-        Sim.quantizerRefreshOf(c.docs, c.nlist()))(probe(Sim.quantizerRefreshStored)),
+      "knn_diverse" -> graphTwin { c => val m = c.int("m", 2); Sim.knnDiverse(_, m) },
+      "knn_clusters" -> graphTwin(_ => Sim.knnClusters),
+      "knn_stats" -> graphTwin(_ => Sim.knnStats),
+      "knn_recall" -> graphTwin(_ => Sim.knnRecall(_)),
+      "knn_centrality" -> graphTwin(_ => Sim.knnCentrality),
+      "knn_coreset" -> graphTwin { c => val m = c.int("m", 2); Sim.knnCoreset(_, m) },
+      "quantizer_refresh" -> ivfTwin("embeddings")(_ => Sim.quantizerRefresh),
       "ivf_delta" -> op(c => Sim.ivfDeltaOf(c.docs, c.nlist(32))),
       // the even/odd split is the dedup_pairs_delta key's own split;
       // the delta's exactness claim does not depend on the corpus
@@ -620,7 +626,7 @@ object Jx {
       // the corpus is the documents being mixed; the topics come from a
       // quantizer over the embeddings table
       "topic_mix" -> twin("documents", "nlist" -> 16, "alpha" -> 0.5)(c =>
-        Sim.topicMixOf(c.docs, Sim.ivfIndexOf(c.tables("embeddings"), c.nlist())._4,
+        Sim.topicMixOf(c.docs, Ivf.of(c.tables("embeddings"), c.nlist()).assign,
           c.double("alpha", 0.5)))(probe(Sim.textTopicMix)),
       "inverted_index" -> on(TO.invertedIndexOf(_)),
       "bm25" -> on(TO.bm25Of(_)),

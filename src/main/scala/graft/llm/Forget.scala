@@ -132,7 +132,7 @@ object Forget {
     clustersReadout(forgetFramesOf(docs)._2)
 
   def forgetIvfOf(embs: DataFrame): DataFrame = {
-    val (_, _, _, assign) = Similarity.ivfIndexOf(embs, 16)
+    val assign = Similarity.Ivf.of(embs, 16).assign
     val tomb = embs.select("vec_id").filter(tombstoned(col("vec_id")))
     listsReadout(assign.join(broadcast(tomb), Seq("vec_id"), "left_anti"))
   }
@@ -177,10 +177,9 @@ object Forget {
 
   private def forgottenIvfStore(s: SparkSession, d: String): java.io.File =
     Artifacts.buildOnce(s, "quantizer_16_forgotten", d) { dd =>
-      val base = Similarity.quantizerStore(s, d, 16)
       val tomb = t(s, d, "embeddings").select("vec_id")
         .filter(tombstoned(col("vec_id")))
-      graft.Tables.parquet(s, s"$base/assign")
+      Similarity.Ivf.stored(s, d)().assign
         .join(broadcast(tomb), Seq("vec_id"), "left_anti")
         .write.mode("overwrite").parquet(s"$dd/assign")
     }
@@ -230,7 +229,7 @@ object Forget {
     * re-rank delta equals. */
   def forgetKnnOf(embs: DataFrame): DataFrame = {
     val tomb = embs.select("vec_id").filter(tombstoned(col("vec_id")))
-    val mem = Similarity.knnMembership(Similarity.ivfIndexOf(embs, 16), p = 3)
+    val mem = Similarity.knnMembership(Similarity.Ivf.of(embs, 16), p = 3)
       .join(broadcast(tomb), Seq("vec_id"), "left_anti")
     Similarity.knnEdgesFromMem(mem, k = 3).orderBy("src", "rnk")
   }
@@ -258,10 +257,9 @@ object Forget {
     * corpus; the quantizer stays frozen (the model discipline). */
   private def forgottenKnnStore(s: SparkSession, d: String): java.io.File =
     Artifacts.buildOnce(s, "knn_graph_forgotten", d) { dd =>
-      val base = Similarity.knnStore(s, d)
       val tomb = t(s, d, "embeddings").select("vec_id")
         .filter(tombstoned(col("vec_id")))
-      val edges = graft.Tables.parquet(s, s"$base/edges")
+      val edges = Similarity.KnnGraph.stored(s, d).edges
       val keptSrc = edges
         .join(broadcast(tomb.select(col("vec_id").as("src"))), Seq("src"), "left_anti")
       val affected = keptSrc
@@ -270,7 +268,7 @@ object Forget {
       val untouched = keptSrc
         .join(broadcast(affected), Seq("src"), "left_anti")
         .select("src", "rnk", "dst", "cosine", "cid")
-      val mem = Similarity.knnMembership(Similarity.ivfIndex(s, d, 16), p = 3)
+      val mem = Similarity.knnMembership(Similarity.Ivf.stored(s, d)(), p = 3)
         .join(broadcast(tomb), Seq("vec_id"), "left_anti")
       val reprobed = Similarity.knnEdgesFromMem(mem, k = 3,
         srcFilter = Some(affected))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.operators.Common._
+import Similarity.Ivf
 
 /** Multimodal-column support (SURVEY.md §2.9 X5).
   *
@@ -170,49 +171,45 @@ object Multimodal {
     * plan branch — the same "decode once, index many" shape a real
     * pipeline has, where the decode pass is the expensive stage and its
     * output is the artifact. */
-  private def payloadVecsOf(docs: DataFrame): DataFrame =
+  private[graft] def payloadVecsOf(docs: DataFrame): DataFrame =
     materialize(decodeEmbedding(withPayload(docs).filter(length(col("payload")) > 0)),
       "mm.payload_vecs")
 
-  /** The stored mm IVF index tuple (vecs, cents, scored, assign) — the
-    * composition point for the streamed mm decon store (ST23) and any
-    * other consumer of the payload-embedding index. */
-  private[graft] def mmIndex(s: SparkSession, d: String):
-      (DataFrame, DataFrame, DataFrame, DataFrame) =
-    Similarity.ivfIndexStored(s, d, 16, "mm")(mmVecsOf(s, d))
-
   /** The payload-embedding table of the standard documents (vec_id =
-    * doc_id, non-empty payloads) — the mm index's and the ST23 batch
-    * source. */
-  private[graft] def mmVecsOf(s: SparkSession, d: String): DataFrame =
-    payloadVecsOf(t(s, d, "documents"))
+    * doc_id, non-empty payloads) as a build-once artifact (`mm_vecs`):
+    * the codec runs once per (session, dataset), and the mm quantizer,
+    * every mm semantic key, the text-align towers and the ST23 batch
+    * source read the stored vectors. Doubles round-trip parquet
+    * bit-exactly, so the stored table equals [[payloadVecsOf]]. */
+  private[graft] def mmVecsOf(s: SparkSession, d: String): DataFrame = {
+    val dir = Artifacts.buildOnce(s, "mm_vecs", d) { dd =>
+      payloadVecsOf(t(s, d, "documents")).write.mode("overwrite").parquet(s"$dd/vecs")
+    }
+    graft.Tables.parquet(s, s"$dir/vecs")
+  }
 
   /** X5k: SEMANTIC payload dedup — SemDeDup over the codec's embedding
     * vectors, closing the gap byte-shingle dedup ([[mmDedup]]) cannot:
     * two re-encodes of the same image share no payload bytes but sit at
     * cosine ≈ 1 in embedding space. The machinery is
-    * [[Similarity.semanticDedupFromIndex]] verbatim — within-cluster
-    * pairs only, through the STORED mm quantizer (its own artifact,
-    * tag "mm": trained once per (session, dataset), probed by every mm
-    * semantic op). τ=0.999 suits the histogram embedder's compressed
+    * [[Similarity.semanticDedup]] verbatim — within-cluster pairs only,
+    * through the STORED mm quantizer (its own artifact, family
+    * `mm_quantizer`: trained once per (session, dataset), probed by every
+    * mm semantic op). τ=0.999 suits the histogram embedder's compressed
     * cosine range (the embeddings-table τ=0.35 would keep everything).
     * Scale shape: identical to sim_semantic_dedup — broadcast-scored
     * centroids, one shuffle on cid, never all-pairs. */
-  val mmSemanticDedup: Q = (s, d) => {
-    val (vecs, _, _, assign) = Similarity.ivfIndexStored(s, d, 16, "mm")(mmVecsOf(s, d))
-    Similarity.semanticDedupFromIndex(vecs, assign, tau = 0.999)
-  }
+  val mmSemanticDedup: Q = (s, d) =>
+    Similarity.semanticDedup(Ivf.stored(s, d, "mm_quantizer")(mmVecsOf(s, d)), tau = 0.999)
 
   /** X5l: cross-set semantic kNN routing over payload embeddings — the
-    * [[Similarity.knnJoinFrom]] probe (nprobe=2 lists, exact top-3
-    * inside them) through the same stored mm quantizer: "route each
-    * incoming image to its nearest existing corpus entries" for
+    * [[Similarity.knnJoin]] probe (nprobe=2 lists, exact top-3 inside
+    * them) through the same stored mm quantizer: "route each incoming
+    * image to its nearest existing corpus entries" for
     * curation/retrieval, the multimodal twin of sim_knn_join. Query set
     * = vec_id % 10 == 0, corpus = the rest, as the sim twin pins. */
-  val mmKnn: Q = (s, d) => {
-    val (vecs, _, scored, assign) = Similarity.ivfIndexStored(s, d, 16, "mm")(mmVecsOf(s, d))
-    Similarity.knnJoinFrom(vecs, scored, assign, col("vec_id") % 10 === 0)
-  }
+  val mmKnn: Q = (s, d) =>
+    Similarity.knnJoin(Ivf.stored(s, d, "mm_quantizer")(mmVecsOf(s, d)))
 
   /** X5o: the SEMANTIC online admission gate — the embedding-space twin
     * of [[mmOnlineGate]] (byte shingles): an arriving payload slice
@@ -224,14 +221,13 @@ object Multimodal {
     * [[mmKnn]] (cid-equi, broadcast queries), readout = top-1 + the
     * flag, so the stream-side decision set is exactly what the oracle
     * replays. */
-  val mmSemanticGate: Q = (s, d) => {
-    val (vecs, _, scored, assign) = Similarity.ivfIndexStored(s, d, 16, "mm")(mmVecsOf(s, d))
-    Similarity.knnJoinFrom(vecs, scored, assign, col("vec_id") % 100 === 0)
+  val mmSemanticGate: Q = (s, d) =>
+    Similarity.knnJoin(Ivf.stored(s, d, "mm_quantizer")(mmVecsOf(s, d)),
+        col("vec_id") % 100 === 0)
       .filter(col("rnk") === 1)
       .select(col("qid"), col("nid").as("nearest"), col("cosine"),
         (col("cosine") >= 0.999).as("flagged"))
       .orderBy("qid")
-  }
 
   /** X5p: multimodal SEMANTIC DECONTAMINATION — the embedding-space
     * eval-integrity pass for payloads: a held-out benchmark slice
@@ -242,19 +238,15 @@ object Multimodal {
     * decon misses a re-encode; this catches it. Same plan as
     * [[Similarity.simSemanticDecon]]: bench broadcasts, candidates are
     * cid-equi against the replicated inverted lists, never all-pairs. */
-  val mmSemanticDecon: Q = (s, d) => {
-    val (vecs, _, scored, _) = Similarity.ivfIndexStored(s, d, 16, "mm")(mmVecsOf(s, d))
-    Similarity.semanticDeconFrom(vecs, scored, col("vec_id") % 10 === 0, tau = 0.999)
-  }
+  val mmSemanticDecon: Q = (s, d) =>
+    Similarity.semanticDecon(Ivf.stored(s, d, "mm_quantizer")(mmVecsOf(s, d)), tau = 0.999)
 
   /** X5p-audit: the per-BENCH-ITEM triage — every eval payload rowed
     * (n_contaminated = 0 is the answer that matters), worst corpus
-    * offender attached. [[Similarity.deconReportFrom]] verbatim over
-    * the mm index. */
-  val mmDeconReport: Q = (s, d) => {
-    val (vecs, _, scored, _) = Similarity.ivfIndexStored(s, d, 16, "mm")(mmVecsOf(s, d))
-    Similarity.deconReportFrom(vecs, scored, col("vec_id") % 10 === 0, tau = 0.999)
-  }
+    * offender attached. [[Similarity.deconReport]] verbatim over the mm
+    * index. */
+  val mmDeconReport: Q = (s, d) =>
+    Similarity.deconReport(Ivf.stored(s, d, "mm_quantizer")(mmVecsOf(s, d)), tau = 0.999)
 
   /** X5q: CROSS-MODAL ALIGNMENT gate — the LAION/DataComp "CLIP-score
     * filter" shape: score every (payload, caption) pair by the cosine
@@ -265,7 +257,7 @@ object Multimodal {
     * are the container's deterministic stand-ins (the codec's 64-bin
     * byte histogram, [[decodeEmbedding]], and the embeddings table as
     * the text tower), but the plumbing is production-true: decode once
-    * (the materialized [[payloadVecsOf]] pass), EQUI-join the towers on item
+    * (the stored [[mmVecsOf]] pass), EQUI-join the towers on item
     * id — never a cross-join; misalignment is a property of the pair,
     * not a search — one codegen'd dot product per pair, ntile gate per
     * source. At 100 TB both towers are id-partitioned parquet and this
@@ -293,43 +285,6 @@ object Multimodal {
 
   val mmTextAlign: Q = (s, d) =>
     textAlignFrom(mmVecsOf(s, d), t(s, d, "embeddings"), t(s, d, "documents"))
-
-  /** [[mmTextAlign]] over ANY documents-shaped corpus + text-tower frame
-    * (jx `corpus_op` fallback): payload tower decoded in-plan. */
-  def textAlignOfDocs(docs: DataFrame, textVecs: DataFrame): DataFrame =
-    textAlignFrom(payloadVecsOf(docs), textVecs, docs)
-
-  /** [[mmSemanticDedup]] over ANY documents-shaped frame with an in-plan
-    * quantizer (jx `corpus_op` fallback for a non-standard corpus; a
-    * plain `{"from": "documents"}` corpus routes to the stored-quantizer
-    * driver key instead). */
-  def semanticDedupOfDocs(docs: DataFrame, nlist: Int = Similarity.AutoNlist,
-      tau: Double = 0.999): DataFrame = {
-    val (v, _, _, assign) = Similarity.ivfIndexOf(payloadVecsOf(docs), nlist)
-    Similarity.semanticDedupFromIndex(v, assign, tau)
-  }
-
-  /** [[mmKnn]] over ANY documents-shaped frame with an in-plan quantizer
-    * (jx `corpus_op` fallback, same store-routing contract). */
-  def knnOfDocs(docs: DataFrame, nlist: Int = Similarity.AutoNlist): DataFrame = {
-    val (v, _, scored, assign) = Similarity.ivfIndexOf(payloadVecsOf(docs), nlist)
-    Similarity.knnJoinFrom(v, scored, assign, col("vec_id") % 10 === 0)
-  }
-
-  /** [[mmSemanticDecon]] over ANY documents-shaped frame with an in-plan
-    * quantizer (jx `corpus_op` fallback, same store-routing contract). */
-  def semanticDeconOfDocs(docs: DataFrame, nlist: Int = Similarity.AutoNlist,
-      tau: Double = 0.999): DataFrame = {
-    val (v, _, scored, _) = Similarity.ivfIndexOf(payloadVecsOf(docs), nlist)
-    Similarity.semanticDeconFrom(v, scored, col("vec_id") % 10 === 0, tau)
-  }
-
-  /** [[mmDeconReport]] over ANY documents-shaped frame (jx fallback). */
-  def deconReportOfDocs(docs: DataFrame, nlist: Int = Similarity.AutoNlist,
-      tau: Double = 0.999): DataFrame = {
-    val (v, _, scored, _) = Similarity.ivfIndexOf(payloadVecsOf(docs), nlist)
-    Similarity.deconReportFrom(v, scored, col("vec_id") % 10 === 0, tau)
-  }
 
   /** X5m: INTERLEAVED multimodal sequence packing — the batch-assembly
     * step for an image+text trainer: each doc's cost in the packed

@@ -18,7 +18,7 @@ import graft.operators.Common._
   *  - shingling: the one expensive pass. Computed ONCE over the hygienic
   *    text and materialized ([[graft.operators.Common.materialize]]; a
   *    parquet shingle table in a 100 TB deployment — same role as
-  *    [[Similarity.ivfArtifacts]]), then SHARED by the MinHash band
+  *    the stored quantizer of [[Similarity.Ivf.stored]]), then SHARED by the MinHash band
   *    build, the exact-Jaccard verify, and the decontamination overlap —
   *    without it the composed plan would re-shingle the corpus three
   *    times. PlanAuditSpec pins that the final plan contains NO shingle
@@ -472,8 +472,8 @@ object Pipeline {
     * adds one bench-sized probe pass, never a corpus re-scan. */
   val pipelineCorpusSemdecon: Q = (s, d) => {
     val survivors = survivorStore(s, d)
-    val flagged = graft.llm.Similarity
-      .semanticDeconStoredOn(s, d, col("vec_id") < 10)
+    val flagged = Similarity
+      .semanticDecon(Similarity.Ivf.stored(s, d)(), tau = 0.35, col("vec_id") < 10)
       .select(col("vec_id").as("doc_id"))
     val kept = survivors.join(flagged, Seq("doc_id"), "left_anti")
     TextOps.packChunks(kept, 2048L, 8L)
@@ -497,8 +497,8 @@ object Pipeline {
     val docs = t(s, d, "documents")
     val raw = docs.filter(col("doc_id") >= 10)
     val surv = survivorStore(s, d)
-    val flagged = graft.llm.Similarity
-      .semanticDeconStoredOn(s, d, col("vec_id") < 10)
+    val flagged = Similarity
+      .semanticDecon(Similarity.Ivf.stored(s, d)(), tau = 0.35, col("vec_id") < 10)
       .select(col("vec_id").as("doc_id"))
     val sem = surv.join(flagged, Seq("doc_id"), "left_anti")
     val kept = sem.join(

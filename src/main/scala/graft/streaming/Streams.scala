@@ -75,12 +75,39 @@ object Streams {
     * would never be emitted. [[sessionizeEventTime]] is the event-time
     * twin: its tail flush rides the watermark instead of wall clock. */
   def sessionize(events: Dataset[Ev], gapMs: Long = 30 * 60 * 1000L,
-      idleTimeout: String = "2 seconds"): Dataset[Session] = {
+      idleTimeout: String = "2 seconds"): Dataset[Session] =
+    sessionsOf(events, GroupStateTimeout.ProcessingTimeTimeout, gapMs)(
+      (state, _) => state.setTimeoutDuration(idleTimeout))
+
+  /** ST3 (custom state, event-time): the production replay form of
+    * [[sessionize]] — the open tail session is flushed when the WATERMARK
+    * passes its gap end, not after a processing-time idle interval. Over
+    * event-time-ordered replay this gives deterministic output: a
+    * re-run of the same input stream closes the same sessions at the
+    * same event-time points regardless of wall-clock scheduling, which
+    * the processing-time form cannot promise. Same gap-split logic, same
+    * emitted Session rows; only the tail-flush trigger differs
+    * (`setTimeoutTimestamp` against the watermark vs
+    * `setTimeoutDuration`). The timeout is clamped to just above the
+    * current watermark because Spark rejects timer timestamps at or
+    * behind it (a group whose gap end is already past the watermark
+    * flushes at the next watermark advance). */
+  def sessionizeEventTime(events: Dataset[Ev], gapMs: Long = 30 * 60 * 1000L,
+      lateness: String = "1 hour"): Dataset[Session] =
+    sessionsOf(events.withWatermark("ts", lateness), GroupStateTimeout.EventTimeTimeout,
+      gapMs)((state, cur) =>
+      state.setTimeoutTimestamp(math.max(cur.end + gapMs, state.getCurrentWatermarkMs() + 1)))
+
+  /** The group body both sessionizers share: a timed-out key flushes its
+    * open tail session; otherwise the key's batch of events, in event
+    * order, closes every session whose gap exceeds `gapMs`, keeps the
+    * open one in state and re-arms the tail flush through `arm`. */
+  private def sessionsOf(events: Dataset[Ev], timeout: GroupStateTimeout, gapMs: Long)(
+      arm: (GroupState[SessState], SessState) => Unit): Dataset[Session] = {
     import events.sparkSession.implicits._
     events
       .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessState, Session](
-        OutputMode.Append, GroupStateTimeout.ProcessingTimeTimeout) {
+      .flatMapGroupsWithState[SessState, Session](OutputMode.Append, timeout) {
         (uid: Long, evs: Iterator[Ev], state: GroupState[SessState]) =>
           if (state.hasTimedOut) {
             // Idle key: flush the open tail session and clear state.
@@ -109,60 +136,7 @@ object Streams {
                   cur.n + 1, cur.errs + (if (e.event_type == "error") 1L else 0L))
               }
               state.update(cur)
-              state.setTimeoutDuration(idleTimeout)
-              out.result().iterator
-            }
-          }
-      }
-  }
-
-  /** ST3 (custom state, event-time): the production replay form of
-    * [[sessionize]] — the open tail session is flushed when the WATERMARK
-    * passes its gap end, not after a processing-time idle interval. Over
-    * event-time-ordered replay this gives deterministic output: a
-    * re-run of the same input stream closes the same sessions at the
-    * same event-time points regardless of wall-clock scheduling, which
-    * the processing-time form cannot promise. Same gap-split logic, same
-    * emitted Session rows; only the tail-flush trigger differs
-    * (`setTimeoutTimestamp` against the watermark vs
-    * `setTimeoutDuration`). The timeout is clamped to just above the
-    * current watermark because Spark rejects timer timestamps at or
-    * behind it (a group whose gap end is already past the watermark
-    * flushes at the next watermark advance). */
-  def sessionizeEventTime(events: Dataset[Ev], gapMs: Long = 30 * 60 * 1000L,
-      lateness: String = "1 hour"): Dataset[Session] = {
-    import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", lateness)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessState, Session](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, evs: Iterator[Ev], state: GroupState[SessState]) =>
-          if (state.hasTimedOut) {
-            val tail = state.getOption.map(st => sessOf(uid, st))
-            state.remove()
-            tail.iterator
-          } else {
-            val sorted = evs.toSeq.sortBy(e => (e.ts.getTime, e.event_type))
-            if (sorted.isEmpty) Iterator.empty
-            else {
-              var cur = state.getOption.getOrElse {
-                val h = sorted.head
-                SessState(h.ts.getTime, h.ts.getTime, 0L, 0L)
-              }
-              val out = Seq.newBuilder[Session]
-              sorted.foreach { e =>
-                val t = e.ts.getTime
-                if (t - cur.end > gapMs && cur.n > 0) {
-                  out += sessOf(uid, cur)
-                  cur = SessState(t, t, 0L, 0L)
-                }
-                cur = SessState(math.min(cur.start, t), math.max(cur.end, t),
-                  cur.n + 1, cur.errs + (if (e.event_type == "error") 1L else 0L))
-              }
-              state.update(cur)
-              state.setTimeoutTimestamp(
-                math.max(cur.end + gapMs, state.getCurrentWatermarkMs() + 1))
+              arm(state, cur)
               out.result().iterator
             }
           }
@@ -476,14 +450,15 @@ object Streams {
     * redelivery order. At 100 TB: a new eval suite costs one probe
     * pass over ITS OWN vectors; the corpus is never re-scanned. */
   def deconStoreInit(s: SparkSession, d: String, dir: String): Unit =
-    writeDeconIndex(graft.llm.Similarity.deconIndexArtifacts(s, d), dir)
+    writeDeconIndex(graft.llm.Similarity.Ivf.stored(s, d)(), dir)
 
-  /** Persist a decon index — (centroids, corpus inverted lists) — where
-    * [[deconDeltaSink]] reads it. */
-  private def writeDeconIndex(index: (DataFrame, DataFrame), dir: String): Unit = {
-    val (cents, inv) = index
-    cents.write.mode("overwrite").parquet(s"$dir/cents")
-    inv.write.mode("overwrite").parquet(s"$dir/inv")
+  /** Persist an index's decon artifacts for the standard bench split —
+    * its centroids and multi-assigned corpus inverted lists — where
+    * [[deconDeltaSink]] reads them. */
+  private def writeDeconIndex(ivf: graft.llm.Similarity.Ivf, dir: String): Unit = {
+    ivf.cents.write.mode("overwrite").parquet(s"$dir/cents")
+    graft.llm.Similarity.deconLists(ivf, graft.llm.Similarity.Tenth)
+      .write.mode("overwrite").parquet(s"$dir/inv")
   }
 
   def deconDeltaSink(batch: DataFrame, batchId: Long, dir: String,
@@ -509,8 +484,8 @@ object Streams {
     * partition. Merged readout == the one-shot mm_semantic_decon pass
     * BIT-identically under any split/redelivery, at the mm τ. */
   def mmDeconStoreInit(s: SparkSession, d: String, dir: String): Unit =
-    writeDeconIndex(graft.llm.Similarity.deconIndexArtifactsFrom(
-      graft.llm.Multimodal.mmIndex(s, d), col("vec_id") % 10 === 0), dir)
+    writeDeconIndex(graft.llm.Similarity.Ivf.stored(s, d, "mm_quantizer")(
+      graft.llm.Multimodal.mmVecsOf(s, d)), dir)
 
   /** ST23 batch twin / driver gate: index init + three bench-payload
     * deliveries + an at-least-once redelivery, readout in

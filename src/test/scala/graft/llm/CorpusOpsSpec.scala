@@ -373,23 +373,27 @@ class CorpusOpsSpec extends graft.SparkSpec {
     "result set") {
     // the jx corpus_op falls back to the in-plan build whenever the
     // corpus subquery or knobs are non-standard — the fallback must be
-    // the same computation, not a drifting twin
-    val embs = graft.Tables.t(spark, sf, "embeddings")
-    assert(Similarity.knnStatsOf(embs, nlist = 16).collect().map(_.toString).toSeq ===
-      run("sim_knn_stats").collect().map(_.toString).toSeq)
-    assert(Similarity.knnClustersOf(embs, nlist = 16).collect().map(_.toString).toSeq ===
-      run("sim_knn_clusters").collect().map(_.toString).toSeq)
-    assert(Similarity.knnDiverseOf(embs, nlist = 16).collect().map(_.toString).toSeq ===
-      run("sim_knn_diverse").collect().map(_.toString).toSeq)
-    assert(Similarity.knnRecallOf(embs, nlist = 16).collect().map(_.toString).toSeq ===
-      run("sim_knn_recall").collect().map(_.toString).toSeq)
-    assert(Similarity.quantizerRefreshOf(embs, nlist = 16).collect().map(_.toString).toSeq ===
-      run("sim_quantizer_refresh").collect().map(_.toString).toSeq)
-    // topic mix: in-plan quantizer fallback == stored-quantizer probe
+    // the same computation, not a drifting twin. Each op runs at nlist 16
+    // without a dataset (its in-plan route) against the driver key its
+    // stored route answers with.
+    val twins = Seq("knn_stats", "knn_clusters", "knn_diverse", "knn_recall",
+        "quantizer_refresh", "knn_join", "probe_tuning", "semantic_dedup",
+        "semantic_decon", "decon_recall", "decon_report")
+      .map(op => (op, "embeddings", s"sim_$op")) ++ Seq(
+      ("payload_semantic_dedup", "documents", "mm_semantic_dedup"),
+      ("payload_knn", "documents", "mm_knn"),
+      ("payload_semantic_decon", "documents", "mm_semantic_decon"),
+      ("payload_decon_report", "documents", "mm_decon_report"),
+      // the topics come from an in-plan quantizer over the embeddings table
+      ("topic_mix", "documents", "text_topic_mix"))
+    twins.foreach { case (op, from, key) =>
+      val inPlan = graft.jx.Jx.run(spark,
+        s"""{"corpus_op": {"op": "$op", "corpus": {"from": "$from"}, "nlist": 16}}""",
+        graft.Tables.t(spark, sf, _))
+      assert(inPlan.collect().map(_.toString).toSeq ===
+        run(key).collect().map(_.toString).toSeq, op)
+    }
     val docs = graft.Tables.t(spark, sf, "documents")
-    assert(Similarity.topicMixOf(docs,
-        Similarity.ivfIndexOf(embs, 16)._4).collect().map(_.toString).toSeq ===
-      run("text_topic_mix").collect().map(_.toString).toSeq)
     // canonical: in-plan pair-chain fallback == stored pair-graph probe
     assert(Dedup.canonicalOf(docs).collect().map(_.toString).toSeq ===
       run("dedup_canonical").collect().map(_.toString).toSeq)
@@ -614,7 +618,8 @@ class CorpusOpsSpec extends graft.SparkSpec {
 
   test("centrality: the in-plan fallback equals the stored-graph probe") {
     val embs = graft.Tables.t(spark, sf, "embeddings")
-    assert(Similarity.knnCentralityOf(embs, nlist = 16).collect().map(_.toString).toSeq ===
+    assert(Similarity.knnCentrality(Similarity.KnnGraph.of(embs, nlist = 16))
+        .collect().map(_.toString).toSeq ===
       run("sim_knn_centrality").collect().map(_.toString).toSeq)
   }
 
@@ -627,9 +632,8 @@ class CorpusOpsSpec extends graft.SparkSpec {
     val embs = graft.Tables.t(spark, sf, "embeddings")
     val n = embs.count()
     val auto = Similarity.autoNlist(n)
-    // resolution happens inside ivfIndexOf: the seed set is vec_id < auto
-    val (_, cents, _, _) = Similarity.ivfIndexOf(embs, Similarity.AutoNlist)
-    val nc = cents.count()
+    // resolution happens inside Ivf.of: the seed set is vec_id < auto
+    val nc = Similarity.Ivf.of(embs, Similarity.AutoNlist).cents.count()
     assert(nc > 16 && nc <= auto, s"$nc centroids for auto=$auto")
     // the jx knob: "nlist": "auto" must produce the AutoNlist result
     // (and a non-16 knob must NOT silently route to the nlist=16 store)
@@ -638,7 +642,7 @@ class CorpusOpsSpec extends graft.SparkSpec {
     val viaJx = graft.jx.Jx.run(spark, json,
       name => graft.Tables.t(spark, sf, name), Some(sf))
     assert(viaJx.collect().map(_.toString).toSeq ===
-      Similarity.knnStatsOf(embs).collect().map(_.toString).toSeq)
+      Similarity.knnStats(Similarity.KnnGraph.of(embs)).collect().map(_.toString).toSeq)
   }
 
   test("doc-graph centrality covers exactly the clustered docs and " +
@@ -809,7 +813,7 @@ class CorpusOpsSpec extends graft.SparkSpec {
     val docs = graft.Tables.t(spark, sf, "documents")
     val embs = graft.Tables.t(spark, sf, "embeddings")
     val flat = Similarity.topicMixOf(docs,
-      Similarity.ivfIndexOf(embs, 16)._4, alpha = 1.0).collect()
+      Similarity.Ivf.of(embs, 16).assign, alpha = 1.0).collect()
     flat.foreach { r =>
       assert(r.getAs[Double]("share") === r.getAs[Double]("target_share"), r)
       assert(r.getAs[Double]("sample_ratio") === 1.0, r)
@@ -1162,8 +1166,8 @@ class CorpusOpsSpec extends graft.SparkSpec {
     val survivors = Pipeline.corpusSurvivors(
         docs.filter(col("doc_id") >= 10), docs.filter(col("doc_id") < 10))
       .select("doc_id").collect().map(_.getLong(0)).toSet
-    val flagged = graft.llm.Similarity
-      .semanticDeconStoredOn(spark, sf, col("vec_id") < 10)
+    val flagged = Similarity
+      .semanticDecon(Similarity.Ivf.stored(spark, sf)(), tau = 0.35, col("vec_id") < 10)
       .select("vec_id").collect().map(_.getLong(0)).toSet
     val kept = run("pipeline_corpus_semdecon")
       .select("doc_id").collect().map(_.getLong(0)).toSet

@@ -82,7 +82,7 @@ class ForgetSpec extends graft.SparkSpec {
     val stored = Forget.simForgetKnn(spark, sf).collect().toSeq
     val tomb = graft.Tables.t(spark, sf, "embeddings")
       .select("vec_id").filter(col("vec_id") % 37 === 0)
-    val mem = Similarity.knnMembership(Similarity.ivfIndex(spark, sf, 16), p = 3)
+    val mem = Similarity.knnMembership(Similarity.Ivf.stored(spark, sf)(), p = 3)
       .join(broadcast(tomb), Seq("vec_id"), "left_anti")
     val rebuilt = Similarity.knnEdgesFromMem(mem, k = 3)
       .orderBy("src", "rnk").collect().toSeq
@@ -363,8 +363,7 @@ class ForgetSpec extends graft.SparkSpec {
     // IVF: the anti-joined store vs assignAgainstCentroids on survivors
     val ivfKey = Forget.simForgetIvf(spark, sf).collect().toSeq
     assert(ivfKey.nonEmpty)
-    val cents = spark.read.parquet(
-      s"${Similarity.quantizerStore(spark, sf, 16)}/cents")
+    val cents = Similarity.Ivf.stored(spark, sf)().cents
     val survivors = graft.Tables.t(spark, sf, "embeddings")
       .filter(col("vec_id") % 37 =!= 0)
     val reassigned = Similarity.assignAgainstCentroids(survivors, cents)

@@ -14,9 +14,9 @@ class IvfPersistSpec extends graft.SparkSpec {
 
   test("probe from stored artifacts == in-plan sim_ivf, row for row") {
     val dir = Files.createTempDirectory("ivf").toString
-    val (cents, inv) = Similarity.ivfArtifacts(spark, sf, nlist = 16)
-    cents.write.mode("overwrite").parquet(s"$dir/centroids")
-    inv.write.mode("overwrite").partitionBy("cid").parquet(s"$dir/invlists")
+    val ivf = Similarity.Ivf.stored(spark, sf)()
+    ivf.cents.write.mode("overwrite").parquet(s"$dir/centroids")
+    ivf.lists().write.mode("overwrite").partitionBy("cid").parquet(s"$dir/invlists")
 
     val queries = graft.Tables.t(spark, sf, "embeddings")
       .filter(col("vec_id") < 20)
@@ -95,9 +95,9 @@ class IvfPersistSpec extends graft.SparkSpec {
 
   test("probing a stored index prunes the inverted-list scan to the probed cids") {
     val dir = Files.createTempDirectory("ivf2").toString
-    val (cents, inv) = Similarity.ivfArtifacts(spark, sf, nlist = 16)
-    cents.write.mode("overwrite").parquet(s"$dir/centroids")
-    inv.write.mode("overwrite").partitionBy("cid").parquet(s"$dir/invlists")
+    val ivf = Similarity.Ivf.stored(spark, sf)()
+    ivf.cents.write.mode("overwrite").parquet(s"$dir/centroids")
+    ivf.lists().write.mode("overwrite").partitionBy("cid").parquet(s"$dir/invlists")
 
     // one query vector, nprobe=2 of 16 lists → the scan must carry a
     // partition filter on cid (not read all 16 partitions)

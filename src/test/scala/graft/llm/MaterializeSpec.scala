@@ -39,4 +39,23 @@ class MaterializeSpec extends graft.SparkSpec {
     val labels = rulesChainLabels()
     assert(labels.count(_.isEmpty) === 1, labels)
   }
+
+  /** The label of every job the in-plan route of a kNN-graph corpus_op
+    * over the sf0.01 embeddings runs while it is built, in start order. */
+  private def inPlanGraphLabels(op: String): Seq[Option[String]] =
+    jobLabelsDuring(graft.jx.Jx.run(spark,
+      s"""{"corpus_op": {"op": "$op", "corpus": {"from": "embeddings"}, "nlist": 16}}""",
+      graft.Tables.t(spark, sf, _)))
+
+  test("an in-plan kNN graph builds only what its readout reads") {
+    val recall = inPlanGraphLabels("knn_recall")
+    val clusters = inPlanGraphLabels("knn_clusters")
+    // recall reads the edges alone: the membership, no CC labeling
+    assert(runs(recall) === Seq(Some("sim.knn_membership")), recall)
+    // clusters read the labels: the same graph build, then the CC pair
+    // list and its unlabelled driver fetch
+    assert(runs(clusters) === Seq(Some("sim.knn_membership"), Some("dedup.cc_pairs"), None),
+      clusters)
+    assert(clusters.take(recall.size) === recall, clusters)
+  }
 }

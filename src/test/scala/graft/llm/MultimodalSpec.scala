@@ -199,4 +199,14 @@ class MultimodalSpec extends graft.SparkSpec {
     assert(p.contains("BroadcastHashJoin") || p.contains("SortMergeJoin")
       || p.contains("ShuffledHashJoin"), p)
   }
+
+  test("a warm construction of the mm semantic keys runs no job: the payload " +
+      "vectors are a build-once artifact") {
+    val sf = "/root/testdata/sf0.001"
+    val keys = Seq("mm_semantic_dedup", "mm_knn", "mm_semantic_gate",
+      "mm_semantic_decon", "mm_decon_report", "mm_text_align")
+    keys.foreach(k => graft.SparkEntry.queries(k)(spark, sf))
+    keys.foreach(k =>
+      assert(jobLabelsDuring(graft.SparkEntry.queries(k)(spark, sf)) === Nil, k))
+  }
 }

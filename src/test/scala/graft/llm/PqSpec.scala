@@ -11,7 +11,7 @@ class PqSpec extends graft.SparkSpec {
   private val sf = "/root/testdata/sf0.001"
 
   test("every vector encodes to 8 codes from the live codebook") {
-    val (sub, _, cents, codes) = Similarity.pqParts(spark, sf)
+    val (sub, cents, codes) = Similarity.pqParts(spark, sf)
     val nVecs = sub.select("vec_id").distinct().count()
     assert(codes.count() === nVecs * 8)
     // every (m, cid) a vector references exists in the final codebook
@@ -61,10 +61,10 @@ class PqSpec extends graft.SparkSpec {
   }
 
   test("two Lloyd iterations do not increase total quantization error") {
-    val (sub, seed, cents, codes) = Similarity.pqParts(spark, sf)
+    val (sub, _, codes) = Similarity.pqParts(spark, sf)
     def totalErr(assigned: org.apache.spark.sql.DataFrame): Double =
       assigned.agg(sum("dist")).head().getDouble(0)
-    val err0 = totalErr(Similarity.pqAssign(sub, seed))
+    val err0 = totalErr(Similarity.pqAssign(sub, Similarity.pqSeed(sub)))
     val err2 = totalErr(codes)
     assert(err2 <= err0 + 1e-9,
       s"Lloyd increased quantization error: $err0 -> $err2")

@@ -7,7 +7,7 @@ import org.apache.spark.sql.expressions.Window
 /** Scratch diagnostic (not a test): measures, for each brute-force
   * mutual top-3 pair, the centroid-rank each endpoint would need to
   * probe to see the other — calibrates the multi-probe `p` for
-  * [[Similarity.knnGraphOf]]. Run: sbt 'Test/runMain graft.llm.ProbeDiag' */
+  * [[Similarity.KnnGraph.of]]. Run: sbt 'Test/runMain graft.llm.ProbeDiag' */
 object ProbeDiag {
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder().master("local[16]")
@@ -29,8 +29,8 @@ object ProbeDiag {
       .select("src", "dst").collect().map(r => (r.getLong(0), r.getLong(1)))
     val ts = top.toSet
     val mutual = ts.filter { case (x, y) => x < y && ts((y, x)) }
-    val m = Similarity.ivfIndexOf(embs, 16)
-    val rankOf = m._3.withColumn("rn", row_number().over(
+    val m = Similarity.Ivf.of(embs, 16)
+    val rankOf = m.scored.withColumn("rn", row_number().over(
         Window.partitionBy("vec_id").orderBy(desc("cos"), asc("cid"))))
       .select("vec_id", "cid", "rn").collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(2)).toMap
@@ -47,7 +47,7 @@ object ProbeDiag {
       ru.keys.map(c => math.max(ru(c), rv(c))).min }
     (1 to 6).foreach(p => println(
       f"SYM_RECALL_AT_P p=$p%2d ${needSym.count(_ <= p).toDouble / needSym.size}%.3f"))
-    val sizes = m._4.groupBy("cid").count().collect().map(_.getLong(1)).sorted
+    val sizes = m.assign.groupBy("cid").count().collect().map(_.getLong(1)).sorted
     println("LISTSIZES " + sizes.mkString(","))
     println("NMUTUAL " + mutual.size)
     spark.stop()

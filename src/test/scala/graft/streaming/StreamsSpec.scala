@@ -887,7 +887,7 @@ class StreamsSpec extends graft.SparkSpec {
     // is a separate scheduled job, monitored by sim_quantizer_refresh)
     val base = embs.filter(col("vec_id") % 2 === 0)
     val delta = embs.filter(col("vec_id") % 2 === 1)
-    val (_, cents, _, _) = graft.llm.Similarity.ivfIndexOf(base, 8)
+    val cents = graft.llm.Similarity.Ivf.of(base, 8).cents
     val centsFixed = cents.localCheckpoint()
     val baseInv = graft.llm.Similarity
       .assignAgainstCentroids(base, centsFixed)
