@@ -60,9 +60,48 @@ object Dedup {
              i -> concat(element_at(toks, i + 1), ' ',
                          element_at(toks, i + 2), ' ',
                          element_at(toks, i + 3)))""")).as("sh"))
-      .select(col("doc_id"),
-        expr("CAST(conv(substr(md5(sh), 1, 15), 16, 10) AS BIGINT)").as("h"))
+      .select(col("doc_id"), expr(shingleHashSql("sh")).as("h"))
       .distinct()
+
+  /** The md5-derived 60-bit hash of one shingle string, as SQL over the
+    * expression `sh`: the one shingle hash of the exploded
+    * ([[shinglesOf]]) and the in-row ([[withShingleHashes]]) front
+    * ends. */
+  private def shingleHashSql(sh: String): String =
+    s"CAST(conv(substr(md5($sh), 1, 15), 16, 10) AS BIGINT)"
+
+  /** `docs` with `hs`, the sorted distinct shingle hashes of `text`, in
+    * the same hash space as [[shinglesOf]] but computed in-row: no
+    * explode, no distinct, no shuffle. Rows of fewer than 3 tokens have
+    * no shingle and drop, as in [[shinglesOf]]. */
+  private def withShingleHashes(docs: DataFrame): DataFrame = {
+    val hashes = shingleHashSql(
+      "concat(element_at(toks, i + 1), ' ', element_at(toks, i + 2), ' ', element_at(toks, i + 3))")
+    // heavy per-row md5 chain: same scan-only repartition rationale as
+    // [[shinglesOf]] (no-op on streams, composed frames, and
+    // production-parallel scans). The hash array is guarded by the same
+    // length test as the filter: the optimizer may push a predicate on
+    // `hs` (an explode's inferred non-empty test) below that filter, and
+    // on a shorter row the window would index past the tokens.
+    graft.operators.Common.spreadScan(docs)
+      .withColumn("toks", split(col("text"), " "))
+      .filter(size(col("toks")) >= 3)
+      .withColumn("hs", expr(s"""if(size(toks) >= 3,
+        array_sort(array_distinct(transform(sequence(0, size(toks) - 3), i -> $hashes))),
+        array())"""))
+      .drop("toks")
+  }
+
+  /** Per-doc shingle SETS computed in-row: every column of `docs` but
+    * `text`, plus `hs` (sorted distinct shingle hashes) and `n_sh`
+    * (= size(hs)). One row per doc, so every set consumer — the MinHash
+    * bands ([[minhashScoredPairsOfSets]]), the exact-Jaccard verify and
+    * the bench overlap ([[benchOverlaps]]) — reads it without a
+    * re-aggregating shuffle. Equal, as a set of (doc_id, h), to
+    * [[shinglesOf]] for unique doc ids. */
+  def shingleSetsOf(docs: DataFrame): DataFrame =
+    withShingleHashes(docs).drop("text")
+      .withColumn("n_sh", size(col("hs")).cast("long"))
 
   /** X1a: n-gram (3-word shingle) Jaccard near-dup pairs.
     * jaccard = |A∩B| / |A∪B| over distinct shingle sets (capped at
@@ -122,7 +161,7 @@ object Dedup {
         col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("da"), col("b.doc_id").as("db"))
       .distinct()
-    verifyJaccard(cand, sh)
+    verifyJaccard(cand, docShingleSetsFromShingles(sh))
       .filter(col("jaccard") > jt)
       .select(col("da"), col("db"), col("c"), r4(col("jaccard")).as("jaccard"))
       .orderBy(desc("jaccard"), asc("da"), asc("db"))
@@ -153,32 +192,29 @@ object Dedup {
     (sh, sizes, prefix)
   }
 
-  /** Exact-Jaccard verify for a candidate pair set: gather each doc's
-    * (distinct) shingle hashes into ONE array row, join candidates
-    * against that doc-level table, and count the overlap with
-    * `array_intersect` in-row. The alternative — re-joining candidates
-    * against the exploded shingle table per side and re-aggregating —
-    * materializes |cand| × shingles-per-doc intermediate rows and paid
-    * 7.8 of dedup_ngram_prefix's 12 s at sf0.1; here the joins move one
-    * row per doc (arrays bounded by document length, which is bounded by
-    * the corpus format) and the intersection runs codegen'd per pair.
-    * This IS how PPJoin-family implementations verify: against the
-    * records' own token lists, not a re-shuffle of the index. */
-  private def verifyJaccard(cand: DataFrame, sh: DataFrame): DataFrame = {
-    // arrays sorted ONCE per doc (amortized over every pair the doc joins
-    // into) so the per-pair overlap is the zero-allocation codegen'd
-    // two-pointer count, not array_intersect's hash-and-materialize
-    val docSets = sh.groupBy("doc_id")
-      .agg(sort_array(collect_list(col("h"))).as("hs"), count(lit(1)).as("n_sh"))
+  /** Exact-Jaccard verify for a candidate pair set against per-doc
+    * (doc_id, hs, n_sh) sets (hs sorted, distinct): join candidates
+    * against that doc-level table and count the overlap in-row. The
+    * alternative — re-joining candidates against the exploded shingle
+    * table per side and re-aggregating — materializes |cand| ×
+    * shingles-per-doc intermediate rows and paid 7.8 of
+    * dedup_ngram_prefix's 12 s at sf0.1; here the joins move one row per
+    * doc (arrays bounded by document length, which is bounded by the
+    * corpus format) and the intersection runs codegen'd per pair. This
+    * IS how PPJoin-family implementations verify: against the records'
+    * own token lists, not a re-shuffle of the index. The arrays are
+    * sorted ONCE per doc (amortized over every pair the doc joins into)
+    * so the per-pair overlap is the zero-allocation two-pointer count,
+    * not array_intersect's hash-and-materialize. */
+  private def verifyJaccard(cand: DataFrame, sets: DataFrame): DataFrame =
     cand
-      .join(docSets.select(col("doc_id").as("da"), col("hs").as("ha"),
+      .join(sets.select(col("doc_id").as("da"), col("hs").as("ha"),
         col("n_sh").as("na")), Seq("da"))
-      .join(docSets.select(col("doc_id").as("db"), col("hs").as("hb"),
+      .join(sets.select(col("doc_id").as("db"), col("hs").as("hb"),
         col("n_sh").as("nb")), Seq("db"))
       .withColumn("c", graft.functions.SortedIntersectCount(col("ha"), col("hb")))
       .withColumn("jaccard", col("c").cast("double") / (col("na") + col("nb") - col("c")))
       .select("da", "db", "c", "na", "nb", "jaccard")
-  }
 
   /** X1a': containment near-dup — the ASYMMETRIC overlap measure
     * c / min(|A|, |B|): catches sub-document duplication (one doc quoted
@@ -205,7 +241,7 @@ object Dedup {
         col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("da"), col("b.doc_id").as("db"))
       .distinct()
-    verifyJaccard(pairs, sh)
+    verifyJaccard(pairs, docShingleSetsFromShingles(sh))
       .withColumn("containment", col("c").cast("double") / least(col("na"), col("nb")))
       .filter(col("containment") >= 0.8)
       .select(col("da"), col("db"), col("c"), r4(col("containment")).as("containment"))
@@ -247,7 +283,7 @@ object Dedup {
       .select(least(col("pd"), col("fd")).as("da"),
         greatest(col("pd"), col("fd")).as("db"))
       .distinct()
-    verifyJaccard(cand, sh)
+    verifyJaccard(cand, docShingleSetsFromShingles(sh))
       .withColumn("containment", col("c").cast("double") / least(col("na"), col("nb")))
       .filter(col("containment") >= ct)
       .select(col("da"), col("db"), col("c"), r4(col("containment")).as("containment"))
@@ -339,9 +375,9 @@ object Dedup {
     minhashBandsFromShingles(shinglesOf(docs))
 
   /** The same band build over a PRECOMPUTED (doc_id, h) shingle frame —
-    * the form a composed pipeline uses so the expensive shingle pass is
-    * paid once and shared across every consumer (bands, Jaccard verify,
-    * decontamination). */
+    * the form an index build uses so the expensive shingle pass is paid
+    * once and shared by the bands and the verify sets
+    * ([[writeBandIndex]]). */
   def minhashBandsFromShingles(shFrame: DataFrame): DataFrame = {
     val sh = shFrame.withColumn("hb", pmod(col("h"), lit(MinhashM)))
     val hashAggs = (0 until MinhashK).map { k =>
@@ -354,17 +390,32 @@ object Dedup {
 
   /** Banded-LSH candidates + exact-Jaccard verify over a precomputed
     * shingle frame: the (da, db, jaccard, …) scored pair set every MinHash
-    * consumer (near-dup report, clusters, drop list, composed pipeline)
-    * derives from. */
-  def minhashScoredPairsFrom(sh: DataFrame): DataFrame = {
-    val bands = minhashBandsFromShingles(sh)
-    val cand = bands.as("x").join(bands.as("y"),
+    * consumer (near-dup report, clusters, drop list) derives from; the
+    * composed pipeline scores the same pairs from per-doc sets
+    * ([[minhashScoredPairsOfSets]]). */
+  def minhashScoredPairsFrom(sh: DataFrame): DataFrame =
+    verifyJaccard(bandCandidates(minhashBandsFromShingles(sh)),
+      docShingleSetsFromShingles(sh.select("doc_id", "h")))
+
+  /** The same scored pair set over per-doc (doc_id, hs, n_sh) shingle
+    * sets ([[shingleSetsOf]]): the band keys come in-row from `hs`
+    * ([[minhashInRowFromHashes]]) and the verify reads `hs`/`n_sh` as
+    * they are — no signature groupBy and no collect_list, the two
+    * shuffles of every shingle row the exploded form pays. */
+  def minhashScoredPairsOfSets(sets: DataFrame): DataFrame =
+    verifyJaccard(
+      bandCandidates(minhashInRowFromHashes(sets.select("doc_id", "hs"))
+        .select(col("doc_id"), posexplode(col("bands")).as(Seq("band", "bh")))),
+      sets)
+
+  /** Candidate pairs (da < db) of a (doc_id, band, bh) band frame: the
+    * docs sharing any band bucket — a bucket equi-join, never n². */
+  private def bandCandidates(bands: DataFrame): DataFrame =
+    bands.as("x").join(bands.as("y"),
         col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
           col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("da"), col("y.doc_id").as("db"))
       .distinct()
-    verifyJaccard(cand, sh.select("doc_id", "h"))
-  }
 
   /** The STATELESS in-row twin of [[minhashBands]]: the whole signature —
     * shingle hashes, K universal-family mins, band keys — computes as
@@ -375,23 +426,8 @@ object Dedup {
     * per-row map, zero state. Adds `hs` (distinct shingle hashes) and
     * `n_sh` for the exact-Jaccard verify, and `bands` (the band-key
     * array, posexplode-ready). */
-  def minhashInRow(docs: DataFrame): DataFrame = {
-    val shArr =
-      """transform(sequence(0, size(toks) - 3),
-           i -> CAST(conv(substr(md5(concat(
-                  element_at(toks, i + 1), ' ',
-                  element_at(toks, i + 2), ' ',
-                  element_at(toks, i + 3))), 1, 15), 16, 10) AS BIGINT))"""
-    minhashInRowFromHashes(
-      // heavy per-row md5 chain over a scan-shaped probe slice — same
-      // scan-only repartition rationale as [[shinglesOf]] (no-op on
-      // streams, composed frames, and production-parallel scans)
-      graft.operators.Common.spreadScan(docs)
-        .withColumn("toks", split(col("text"), " "))
-        .filter(size(col("toks")) >= 3)
-        .withColumn("hs", expr(s"array_sort(array_distinct($shArr))")))
-      .drop("toks")
-  }
+  def minhashInRow(docs: DataFrame): DataFrame =
+    minhashInRowFromHashes(withShingleHashes(docs))
 
   /** The signature back half of [[minhashInRow]] over any frame already
     * carrying `hs` (sorted distinct shingle hashes): universal-family
@@ -895,7 +931,10 @@ object Dedup {
     * (DedupSpec pins equality on the same pair set). Above the bound the
     * pointer-jumping loop runs unchanged — the 100 TB path stays
     * distributed, the threshold only picks the cheaper engine for the
-    * same deterministic answer. */
+    * same deterministic answer. The union-find labels come back as a
+    * local relation with a finite size estimate, so the planner
+    * broadcasts them into a join when they are small — no hint, and a
+    * shuffle join when they are large. */
   def clusterLabelsFrom(pairFrame: DataFrame,
       driverMax: Long = 2000000L): DataFrame = {
     val pairs = materialize(pairFrame.select("da", "db"), "dedup.cc_pairs")
@@ -927,9 +966,9 @@ object Dedup {
           org.apache.spark.sql.types.LongType, nullable = false),
         org.apache.spark.sql.types.StructField("lbl",
           org.apache.spark.sql.types.LongType, nullable = false)))
-      val s = pairFrame.sparkSession
-      return s.createDataFrame(
-        s.sparkContext.parallelize(rows, 1), schema)
+      // a local relation, not an RDD: it carries its size (see doc)
+      import scala.jdk.CollectionConverters._
+      return pairFrame.sparkSession.createDataFrame(rows.asJava, schema)
     }
     val edges = materialize(pairs.select(col("da").as("src"), col("db").as("dst"))
       .unionByName(pairs.select(col("db").as("src"), col("da").as("dst"))),
@@ -1386,31 +1425,29 @@ object Dedup {
     * keeps evaluation content out of the training set (the GPT-3-style
     * n-gram overlap filter; 3-word shingles here). Two-table API: the
     * corpus and the benchmark are independent (doc_id, text) frames —
-    * production points `bench` at the eval-set table. The benchmark's
-    * shingle set is tiny relative to the corpus → broadcast semi-side;
-    * one pass over training shingles, per-doc overlap counts, no shuffle
-    * that grows with corpus size. Overlap is counted in the same
-    * md5-hashed shingle space as dedup_ngram, so the DuckDB oracle
-    * replays it exactly. */
+    * production points `bench` at the eval-set table. Both sides are
+    * per-doc shingle sets ([[shingleSetsOf]]), and the overlap is
+    * [[benchOverlaps]]: the benchmark's hashes are tiny relative to the
+    * corpus → broadcast semi-side; one pass over training shingles,
+    * per-doc overlap counts, no shuffle that grows with corpus size.
+    * Overlap is counted in the same md5-hashed shingle space as
+    * dedup_ngram, so the DuckDB oracle replays it exactly. */
   def decontaminate(corpus: DataFrame, bench: DataFrame, minOverlap: Int = 3): DataFrame =
-    decontaminateSh(shinglesOf(corpus), shinglesOf(bench), minOverlap)
-
-  /** Shingle-level form: corpus and bench arrive as precomputed (doc_id,
-    * h) frames, so a composed pipeline shares one shingle pass across
-    * dedup and decontamination. */
-  def decontaminateSh(corpusSh: DataFrame, benchSh: DataFrame,
-      minOverlap: Int = 3): DataFrame = {
-    val sh = corpusSh
-    val bsh = benchSh.select("h").distinct()
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
-    sh.join(broadcast(bsh), Seq("h"))
-      .groupBy("doc_id").agg(count(lit(1)).as("n_overlap"))
-      .join(sizes, Seq("doc_id"))
-      .withColumn("overlap_frac", r4(col("n_overlap").cast("double") / col("n_sh")))
+    benchOverlaps(shingleSetsOf(corpus), shingleSetsOf(bench))
       .filter(col("n_overlap") >= minOverlap)
+      .withColumn("overlap_frac", r4(col("n_overlap").cast("double") / col("n_sh")))
       .select("doc_id", "n_overlap", "n_sh", "overlap_frac")
       .orderBy(desc("n_overlap"), asc("doc_id"))
-  }
+
+  /** (doc_id, n_sh, n_overlap) for every corpus doc sharing a shingle
+    * with the benchmark, over (doc_id, hs, n_sh) shingle sets: the
+    * corpus hashes left-semi joined against the broadcast bench hashes
+    * (a hash several bench docs share counts once — a semi join cannot
+    * double-count, so no distinct is needed), then one count per doc. */
+  def benchOverlaps(corpusSets: DataFrame, benchSets: DataFrame): DataFrame =
+    corpusSets.select(col("doc_id"), col("n_sh"), explode(col("hs")).as("h"))
+      .join(broadcast(benchSets.select(explode(col("hs")).as("h"))), Seq("h"), "left_semi")
+      .groupBy("doc_id", "n_sh").agg(count(lit(1)).as("n_overlap"))
 
   /** Driver key for [[decontaminate]]: the benchmark table is a
     * deterministic slice of `documents` (id < 10) so the DuckDB oracle

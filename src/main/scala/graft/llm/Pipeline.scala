@@ -15,20 +15,29 @@ import graft.operators.Common._
   * Scale shape, stage by stage:
   *  - clean + redact: in-row codegen'd regexp work in the scan stage —
   *    linear, no shuffle, survives any corpus size.
-  *  - shingling: the one expensive pass. Computed ONCE over the hygienic
-  *    text and materialized ([[graft.operators.Common.materialize]]; a
-  *    parquet shingle table in a 100 TB deployment — same role as
-  *    the stored quantizer of [[Similarity.Ivf.stored]]), then SHARED by the MinHash band
-  *    build, the exact-Jaccard verify, and the decontamination overlap —
-  *    without it the composed plan would re-shingle the corpus three
-  *    times. PlanAuditSpec pins that the final plan contains NO shingle
+  *  - shingling: the one expensive pass, computed ONCE, in-row, over the
+  *    hygienic text of corpus ∪ bench ([[Dedup.shingleSetsOf]]): one row
+  *    per doc, (doc_id, bench, hs, n_sh), with `hs` the sorted distinct
+  *    md5 shingle hashes — no explode and no shuffle. It is materialized
+  *    ([[graft.operators.Common.materialize]]; a parquet set table in a
+  *    100 TB deployment — same role as the stored quantizer of
+  *    [[Similarity.Ivf.stored]]) and SHARED by the MinHash bands, the
+  *    exact-Jaccard verify and the decontamination overlap; the `bench`
+  *    flag tells the two sides apart, with no join on bench ids.
+  *    PlanAuditSpec pins that the final plan contains NO shingle
   *    recompute (no md5→conv chain outside the checkpoint).
-  *  - near-dup drop list: banded MinHash LSH (never all-pairs) →
-  *    iterative min-label connected components → anti-join. The
-  *    anti-join streams; only the KB-scale drop list shuffles.
-  *  - decontamination: benchmark shingle set is broadcast; one semi-pass
-  *    over the corpus shingles.
-  *  - packing: per-shard cumulative windows — no global order.
+  *  - near-dup drop list: band keys computed in-row from `hs` (never
+  *    all-pairs, no signature groupBy) → bucket self-join → verify on
+  *    `hs`/`n_sh` as they are (no collect_list) → min-label connected
+  *    components, in one union-find when the pair list is small. Those
+  *    labels are a sized local relation, so the survivor anti-join
+  *    broadcasts the KB-scale drop list and the corpus text streams.
+  *  - decontamination: corpus hashes left-semi joined against the
+  *    broadcast bench hashes ([[Dedup.benchOverlaps]]), then one count
+  *    per doc — a semi join cannot double-count a hash several bench
+  *    docs share.
+  *  - packing: per-shard cumulative windows — no global order; the md5
+  *    of each survivor's bytes is computed in the packing projection.
   *
   * The oracle replays every stage in DuckDB: the same regex chain, the
   * same md5 shingle space (via [[Dedup.minhashCteFrom]] pointed at the
@@ -69,11 +78,16 @@ object Pipeline {
     val survivors = corpusSurvivors(corpus, bench, jaccardThreshold,
       minOverlap, trimSpans, qualitySources, canonicalQuality, payloadGate,
       ensembleSources, tieredSources, rulesSources)
-    TextOps.packChunks(survivors, ctx, nShards)
-      .join(survivors.select(col("doc_id"), md5(col("text")).as("final_md5")),
-        Seq("doc_id"))
-      .select("doc_id", "shard", "n_tok", "chunk_id", "chunk_offset", "final_md5")
+    packedWithMd5(survivors, ctx, nShards)
   }
+
+  /** The packed layout of a survivor set plus the md5 of each
+    * survivor's final bytes, computed in the packing projection: the
+    * survivor text is read once, with no second read and join on
+    * doc_id. */
+  private def packedWithMd5(survivors: DataFrame, ctx: Long, nShards: Long): DataFrame =
+    TextOps.packChunks(survivors, ctx, nShards, md5(col("text")).as("final_md5"))
+      .select("doc_id", "shard", "n_tok", "chunk_id", "chunk_offset", "final_md5")
 
   /** The hygiene chain up to (but not including) packing: the surviving
     * (doc_id, text) set — exposed so EXPORT consumers (the shard
@@ -135,15 +149,18 @@ object Pipeline {
         Some(TextOps.ruleVerdictsOf(gated(srcs)).filter(col("keep")))
       case (None, None, None, None) => None
     }
-    val hygCorpus = keep.fold(hygCorpus0)(k =>
-      materialize(k.select("doc_id"), "pipeline.keep_list").join(hygCorpus0, Seq("doc_id")))
-    // the one shingle pass over corpus ∪ bench, materialized and shared
-    // (see object doc); bench rows ride along so decontamination reuses it
-    val sh = materialize(Dedup.shinglesOf(hygCorpus.unionByName(hygBench)),
+    // a semi join: the kept ids, not the corpus text, are the side a
+    // join can broadcast
+    val hygCorpus = keep.fold(hygCorpus0)(k => hygCorpus0.join(
+      materialize(k.select("doc_id"), "pipeline.keep_list"), Seq("doc_id"), "left_semi"))
+    // the one shingle pass over corpus ∪ bench: one row per doc with its
+    // sorted distinct shingle hashes, materialized and shared (see object
+    // doc); the `bench` flag tells the two sides apart
+    val sets = materialize(Dedup.shingleSetsOf(
+        hygCorpus.withColumn("bench", lit(false))
+          .unionByName(hygBench.withColumn("bench", lit(true)))),
       "pipeline.shingles")
-    val benchIds = hygBench.select("doc_id")
-    val corpusSh = sh.join(broadcast(benchIds), Seq("doc_id"), "left_anti")
-    val benchSh = sh.join(broadcast(benchIds), Seq("doc_id"), "left_semi")
+    val corpusSets = sets.filter(!col("bench"))
 
     // near-dup drop list from banded-LSH pairs over the corpus shingles.
     // Default survivor rule: the cluster's min id. With `canonicalQuality`
@@ -152,7 +169,7 @@ object Pipeline {
     // pick, so the pipeline drops the truncated copies instead of
     // whichever duplicate happened to crawl first
     val labels = Dedup.clusterLabelsFrom(
-      Dedup.minhashScoredPairsFrom(corpusSh)
+      Dedup.minhashScoredPairsOfSets(corpusSets)
         .filter(col("jaccard") >= jaccardThreshold))
     val dropIds = canonicalQuality match {
       case Some(chars) =>
@@ -181,19 +198,19 @@ object Pipeline {
           .select(col("id").as("doc_id"))
     }
 
-    val contaminated = Dedup.decontaminateSh(corpusSh, benchSh, minOverlap)
+    val contaminated = Dedup.benchOverlaps(corpusSets, sets.filter(col("bench")))
+      .filter(col("n_overlap") >= minOverlap)
       .select("doc_id")
 
-    // The survivor set materializes ONCE too: every caller reads it at
-    // least twice (packChunks + the md5 join in [[corpusHygiene]]; the
-    // classifier gate + member join in the release; four token/window
-    // consumers inside the span trim), and each unmaterialized read
-    // replayed the regex chain + gate join + both anti-joins. The frame
+    // The survivor set materializes ONCE too: the release (classifier
+    // gate + member join) and the span trim (four token/window
+    // consumers) read it at least twice, and each unmaterialized read
+    // replayed the regex chain + gate join + the anti-join. The frame
     // is the DECISION-side output (surviving text, KB–MB at gate scale;
     // the parquet `hygiene_survivors` store is its cross-job twin).
     val survivors0 = materialize(hygCorpus
-      .join(dropIds, Seq("doc_id"), "left_anti")
-      .join(contaminated, Seq("doc_id"), "left_anti"), "pipeline.survivors")
+      .join(dropIds.unionByName(contaminated), Seq("doc_id"), "left_anti"),
+      "pipeline.survivors")
 
     // optional passage-level pass (the Lee-et-al-style completion):
     // whole-doc near-dups are already gone; this removes REPEATED SPANS
@@ -476,10 +493,7 @@ object Pipeline {
       .semanticDecon(Similarity.Ivf.stored(s, d)(), tau = 0.35, col("vec_id") < 10)
       .select(col("vec_id").as("doc_id"))
     val kept = survivors.join(flagged, Seq("doc_id"), "left_anti")
-    TextOps.packChunks(kept, 2048L, 8L)
-      .join(kept.select(col("doc_id"), md5(col("text")).as("final_md5")),
-        Seq("doc_id"))
-      .select("doc_id", "shard", "n_tok", "chunk_id", "chunk_offset", "final_md5")
+    packedWithMd5(kept, 2048L, 8L)
       .orderBy("doc_id")
       .limit(300)
   }

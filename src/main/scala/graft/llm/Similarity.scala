@@ -1203,16 +1203,20 @@ object Similarity {
     * census's brute force), its directed top-k `edges`
     * (src, rnk, dst, cosine, cid), the `mutual` pairs
     * (src, dst, cosine, rnk_fwd, rnk_rev), their connected-component
-    * `labels` (id, lbl) and mutual `degrees` (id, degree).
-    * [[KnnGraph.stored]] reads the four tables from the build-once store;
+    * `labels` (id, lbl), mutual `degrees` (id, degree) and PageRank
+    * `centrality` (vec_id, centrality, degree).
+    * [[KnnGraph.stored]] reads the five tables from the build-once store;
     * [[KnnGraph.of]] builds the edges in-plan and derives the rest only
     * when a readout reads it, so a readout runs only the eager jobs it
-    * needs (the CC labeling only for the readouts over `labels`). */
+    * needs (the CC labeling only for the readouts over `labels`, the
+    * rank rounds only for those over `centrality`). */
   final class KnnGraph(val vecs: DataFrame, val edges: DataFrame,
-      mutualIn: => DataFrame, labelsIn: => DataFrame, degreesIn: => DataFrame) {
+      mutualIn: => DataFrame, labelsIn: => DataFrame, degreesIn: => DataFrame,
+      centralityIn: => DataFrame) {
     lazy val mutual: DataFrame = mutualIn
     lazy val labels: DataFrame = labelsIn
     lazy val degrees: DataFrame = degreesIn
+    lazy val centrality: DataFrame = centralityIn
   }
 
   object KnnGraph {
@@ -1222,15 +1226,17 @@ object Similarity {
     def of(embs: DataFrame, nlist: Int = AutoNlist, k: Int = 3): KnnGraph = {
       val edges = edgesOf(Ivf.of(embs, nlist), k)
       lazy val mutual = mutualOfEdges(edges)
-      new KnnGraph(embs, edges, mutual, labelsOfMutual(mutual), degreesOfMutual(mutual))
+      new KnnGraph(embs, edges, mutual, labelsOfMutual(mutual), degreesOfMutual(mutual),
+        centralityOfMutual(mutual))
     }
 
     /** The graph of the standard embeddings table AND everything derived
       * from it as ONE artifact (the [[graft.llm.Artifacts]]
       * build-once/probe-many contract, like `sim_ivf_persist`): the
       * edge build over the shared stored quantizer AND the iterative
-      * connected-components labeling run once per (session, dataset);
-      * the graph / mutual / cluster / diversity / stats keys — and the jx
+      * connected-components labeling and the PageRank rounds run once
+      * per (session, dataset); the graph / mutual / cluster / diversity /
+      * stats / centrality / coreset keys — and the jx
       * `corpus_op` routes over the standard embeddings table — all PROBE
       * the stored tables. That is what a production curation stack does
       * (the kNN graph is built nightly; every analysis reads it), and it
@@ -1247,10 +1253,11 @@ object Similarity {
         val mutual = graft.Tables.parquet(s, s"$dd/mutual")
         labelsOfMutual(mutual).write.mode("overwrite").parquet(s"$dd/labels")
         degreesOfMutual(mutual).write.mode("overwrite").parquet(s"$dd/degrees")
+        centralityOfMutual(mutual).write.mode("overwrite").parquet(s"$dd/centrality")
       }
       def table(name: String) = graft.Tables.parquet(s, s"$dir/$name")
       new KnnGraph(t(s, d, "embeddings"), table("edges"), table("mutual"),
-        table("labels"), table("degrees"))
+        table("labels"), table("degrees"), table("centrality"))
     }
 
     private def edgesOf(ivf: Ivf, k: Int): DataFrame =
@@ -1427,7 +1434,10 @@ object Similarity {
       .orderBy(desc("centrality"), asc("vec_id"))
   }
 
-  def knnCentrality(g: KnnGraph): DataFrame = centralityOfMutual(g.mutual)
+  /** The graph's centrality table ranked: the rank rounds run once per
+    * graph ([[KnnGraph.centrality]]; once per store build when stored). */
+  def knnCentrality(g: KnnGraph): DataFrame =
+    g.centrality.orderBy(desc("centrality"), asc("vec_id"))
 
   val simKnnCentrality: Q = (s, d) => knnCentrality(KnnGraph.stored(s, d))
 
@@ -1442,7 +1452,7 @@ object Similarity {
     val w = Window.partitionBy("cluster_id")
       .orderBy(desc("centrality"), asc("vec_id"))
     g.labels.select(col("lbl").as("cluster_id"), col("id").as("vec_id"))
-      .join(knnCentrality(g).select(col("vec_id"), col("centrality")), Seq("vec_id"))
+      .join(g.centrality.select(col("vec_id"), col("centrality")), Seq("vec_id"))
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") <= m)
       .select("cluster_id", "rk", "vec_id", "centrality")

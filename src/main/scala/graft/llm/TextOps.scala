@@ -120,19 +120,20 @@ object TextOps {
   /** The reusable form: shard count is a parameter — size it to the
     * input's partition count (one packer per worker) at scale; a fixed
     * constant would cap packing parallelism at 100 TB no matter how many
-    * executors are available. */
-  def packChunks(docs: org.apache.spark.sql.DataFrame, ctx: Long, nShards: Long):
-      org.apache.spark.sql.DataFrame = {
+    * executors are available. `carry` columns (over `docs`) ride along
+    * in the packing projection, after `n_tok`. */
+  def packChunks(docs: org.apache.spark.sql.DataFrame, ctx: Long, nShards: Long,
+      carry: org.apache.spark.sql.Column*): org.apache.spark.sql.DataFrame = {
     val w = Window.partitionBy("shard").orderBy("doc_id")
       .rowsBetween(Window.unboundedPreceding, -1)
     docs
-      .select(col("doc_id"),
+      .select(Seq(col("doc_id"),
         pmod(col("doc_id"), lit(nShards)).as("shard"),
-        size(split(col("text"), " ")).cast("long").as("n_tok"))
+        size(split(col("text"), " ")).cast("long").as("n_tok")) ++ carry: _*)
       .withColumn("cum_before", coalesce(sum("n_tok").over(w), lit(0L)))
-      .select(col("doc_id"), col("shard"), col("n_tok"),
-        (col("cum_before") / ctx).cast("long").as("chunk_id"),
-        (col("cum_before") % ctx).as("chunk_offset"))
+      .withColumn("chunk_id", (col("cum_before") / ctx).cast("long"))
+      .withColumn("chunk_offset", col("cum_before") % ctx)
+      .drop("cum_before")
   }
 
   val textPackChunks: Q = (s, d) =>

@@ -623,6 +623,14 @@ class CorpusOpsSpec extends graft.SparkSpec {
       run("sim_knn_centrality").collect().map(_.toString).toSeq)
   }
 
+  test("centrality: a warm stored graph serves centrality and coreset " +
+    "without a job — the rank rounds run once per store build") {
+    val keys = Seq("sim_knn_centrality", "sim_knn_coreset",
+      "jx_knn_centrality", "jx_knn_coreset")
+    keys.foreach(k => run(k).collect())
+    keys.foreach(k => assert(jobsDuring(run(k)) === 0, k))
+  }
+
   test("AutoNlist: the shipped default resolves to the sqrt(n) law " +
     "(sqrt-n, clamped), the quantizer trains that many seeds, and the jx " +
     "'nlist: auto' knob reaches the same resolution") {

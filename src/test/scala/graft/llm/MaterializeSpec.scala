@@ -40,6 +40,19 @@ class MaterializeSpec extends graft.SparkSpec {
     assert(labels.count(_.isEmpty) === 1, labels)
   }
 
+  test("building and collecting the plain chain runs at most 11 jobs") {
+    // one in-row shingle-set pass: no signature groupBy, no collect_list
+    // and no bench-id joins behind the pairs, one anti-join for both drop
+    // lists, and the survivor md5 in the packing projection (the exploded
+    // shingle table ran 21 jobs here)
+    val docs = graft.Tables.t(spark, sf, "documents").filter(col("doc_id") < 80)
+    val n = jobsDuring {
+      Pipeline.corpusHygiene(docs.filter(col("doc_id") >= 10),
+        docs.filter(col("doc_id") < 10)).collect()
+    }
+    assert(n <= 11, n)
+  }
+
   /** The label of every job the in-plan route of a kNN-graph corpus_op
     * over the sf0.01 embeddings runs while it is built, in start order. */
   private def inPlanGraphLabels(op: String): Seq[Option[String]] =
