@@ -92,14 +92,15 @@ object Dedup {
       .drop("toks")
   }
 
-  /** Per-doc shingle SETS computed in-row: every column of `docs` but
-    * `text`, plus `hs` (sorted distinct shingle hashes) and `n_sh`
-    * (= size(hs)). One row per doc, so every set consumer — the MinHash
-    * bands ([[minhashScoredPairsOfSets]]), the exact-Jaccard verify and
-    * the bench overlap ([[benchOverlaps]]) — reads it without a
+  /** Per-doc shingle SETS, the verify side of every Jaccard path,
+    * computed in-row: every column of `docs` but `text`, plus `hs`
+    * (sorted distinct shingle hashes) and `n_sh` (= size(hs)). One row
+    * per doc, so every set consumer — the MinHash bands
+    * ([[minhashScoredPairsOfSets]]), the exact-Jaccard verify and the
+    * bench overlap ([[benchOverlaps]]) — reads it without a
     * re-aggregating shuffle. Equal, as a set of (doc_id, h), to
     * [[shinglesOf]] for unique doc ids. */
-  def shingleSetsOf(docs: DataFrame): DataFrame =
+  def docShingleSets(docs: DataFrame): DataFrame =
     withShingleHashes(docs).drop("text")
       .withColumn("n_sh", size(col("hs")).cast("long"))
 
@@ -341,9 +342,10 @@ object Dedup {
 
   /** X1b: MinHash + LSH banding (shingle → K minhashes → B bands → bucket
     * join → verify candidates with true Jaccard). The 100 TB design: the
-    * only shuffles are the signature groupBy (K longs per doc, not the
-    * text) and the band-bucket self-join, whose cost is Σ bucket² — no n²
-    * pair enumeration ever happens. K=8 hashes in 4 bands of 2 catches
+    * only shuffles are the regroup of shingle hashes into per-doc sets
+    * (none for in-row sets, [[docShingleSets]]) and the band-bucket
+    * self-join, whose cost is Σ bucket² — no n² pair enumeration ever
+    * happens. K=8 hashes in 4 bands of 2 catches
     * jaccard ≥ ~0.5 pairs with high probability on this corpus.
     *
     * The hash family is md5-derived (not Spark's murmur `hash()`) so an
@@ -388,20 +390,18 @@ object Dedup {
       .select(col("doc_id"), col("pos").as("band"), col("col").as("bh"))
   }
 
-  /** Banded-LSH candidates + exact-Jaccard verify over a precomputed
-    * shingle frame: the (da, db, jaccard, …) scored pair set every MinHash
-    * consumer (near-dup report, clusters, drop list) derives from; the
-    * composed pipeline scores the same pairs from per-doc sets
-    * ([[minhashScoredPairsOfSets]]). */
+  /** [[minhashScoredPairsOfSets]] over a precomputed (doc_id, h)
+    * shingle frame, regrouped into the per-doc sets that bands and
+    * verify both read. */
   def minhashScoredPairsFrom(sh: DataFrame): DataFrame =
-    verifyJaccard(bandCandidates(minhashBandsFromShingles(sh)),
-      docShingleSetsFromShingles(sh.select("doc_id", "h")))
+    minhashScoredPairsOfSets(docShingleSetsFromShingles(sh.select("doc_id", "h")))
 
-  /** The same scored pair set over per-doc (doc_id, hs, n_sh) shingle
-    * sets ([[shingleSetsOf]]): the band keys come in-row from `hs`
-    * ([[minhashInRowFromHashes]]) and the verify reads `hs`/`n_sh` as
-    * they are — no signature groupBy and no collect_list, the two
-    * shuffles of every shingle row the exploded form pays. */
+  /** Banded-LSH candidates + exact-Jaccard verify over per-doc
+    * (doc_id, hs, n_sh) shingle sets ([[docShingleSets]]): the
+    * (da, db, jaccard, …) scored pair set every MinHash consumer
+    * (near-dup report, clusters, drop list) derives from. The band keys
+    * come in-row from `hs` ([[minhashInRowFromHashes]]) and the verify
+    * reads `hs`/`n_sh` as they are: no signature groupBy. */
   def minhashScoredPairsOfSets(sets: DataFrame): DataFrame =
     verifyJaccard(
       bandCandidates(minhashInRowFromHashes(sets.select("doc_id", "hs"))
@@ -449,13 +449,9 @@ object Dedup {
       .drop(("hbs" +: (0 until MinhashK).map(k => s"h$k")): _*)
   }
 
-  /** Per-doc shingle-hash sets, the verify side of every Jaccard path:
-    * (doc_id, hs, n_sh). */
-  def docShingleSets(docs: DataFrame): DataFrame =
-    docShingleSetsFromShingles(shinglesOf(docs))
-
-  /** As [[docShingleSets]] over a precomputed (doc_id, h) frame — lets an
-    * index build share one shingle pass between bands and verify sets. */
+  /** The (doc_id, hs, n_sh) sets of [[docShingleSets]] regrouped from a
+    * precomputed (doc_id, h) frame — lets an index build share one
+    * shingle pass between bands and verify sets. */
   def docShingleSetsFromShingles(sh: DataFrame): DataFrame =
     sh.groupBy("doc_id")
       .agg(sort_array(collect_list(col("h"))).as("hs"), count(lit(1)).as("n_sh"))
@@ -1426,14 +1422,14 @@ object Dedup {
     * n-gram overlap filter; 3-word shingles here). Two-table API: the
     * corpus and the benchmark are independent (doc_id, text) frames —
     * production points `bench` at the eval-set table. Both sides are
-    * per-doc shingle sets ([[shingleSetsOf]]), and the overlap is
+    * per-doc shingle sets ([[docShingleSets]]), and the overlap is
     * [[benchOverlaps]]: the benchmark's hashes are tiny relative to the
     * corpus → broadcast semi-side; one pass over training shingles,
     * per-doc overlap counts, no shuffle that grows with corpus size.
     * Overlap is counted in the same md5-hashed shingle space as
     * dedup_ngram, so the DuckDB oracle replays it exactly. */
   def decontaminate(corpus: DataFrame, bench: DataFrame, minOverlap: Int = 3): DataFrame =
-    benchOverlaps(shingleSetsOf(corpus), shingleSetsOf(bench))
+    benchOverlaps(docShingleSets(corpus), docShingleSets(bench))
       .filter(col("n_overlap") >= minOverlap)
       .withColumn("overlap_frac", r4(col("n_overlap").cast("double") / col("n_sh")))
       .select("doc_id", "n_overlap", "n_sh", "overlap_frac")

@@ -16,7 +16,7 @@ import graft.operators.Common._
   *  - clean + redact: in-row codegen'd regexp work in the scan stage —
   *    linear, no shuffle, survives any corpus size.
   *  - shingling: the one expensive pass, computed ONCE, in-row, over the
-  *    hygienic text of corpus ∪ bench ([[Dedup.shingleSetsOf]]): one row
+  *    hygienic text of corpus ∪ bench ([[Dedup.docShingleSets]]): one row
   *    per doc, (doc_id, bench, hs, n_sh), with `hs` the sorted distinct
   *    md5 shingle hashes — no explode and no shuffle. It is materialized
   *    ([[graft.operators.Common.materialize]]; a parquet set table in a
@@ -156,7 +156,7 @@ object Pipeline {
     // the one shingle pass over corpus ∪ bench: one row per doc with its
     // sorted distinct shingle hashes, materialized and shared (see object
     // doc); the `bench` flag tells the two sides apart
-    val sets = materialize(Dedup.shingleSetsOf(
+    val sets = materialize(Dedup.docShingleSets(
         hygCorpus.withColumn("bench", lit(false))
           .unionByName(hygBench.withColumn("bench", lit(true)))),
       "pipeline.shingles")

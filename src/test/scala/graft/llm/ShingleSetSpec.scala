@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 
 /** The set-based stages of the hygiene chain — per-doc shingle sets
-  * ([[Dedup.shingleSetsOf]]), MinHash pairs scored from them
+  * ([[Dedup.docShingleSets]]), MinHash pairs scored from them
   * ([[Dedup.minhashScoredPairsOfSets]]) and the bench overlap
   * ([[Dedup.benchOverlaps]]) — against a reference built from the
   * exploded (doc_id, h) shingle table ([[Dedup.shinglesOf]],
@@ -31,6 +31,11 @@ class ShingleSetSpec extends graft.SparkSpec {
     .toDF("doc_id", "text")
 
   private lazy val corpus: DataFrame = Seq(
+    // shares its id with bench doc 2 and is checked like any corpus doc:
+    // 3 bench overlaps drop it, and its kk shingles stay on the corpus
+    // side, so doc 33 has no bench overlap
+    2L -> "the quick brown fox jumps kk1 kk2 kk3 kk4 kk5",
+    33L -> "kk1 kk2 kk3 kk4 kk5 vv1 vv2 vv3 vv4 vv5 vv6",
     20L -> "hello world",                            // fewer than 3 tokens
     21L -> Seq.fill(12)("la").mkString(" "),         // one shingle, repeated
     22L -> Seq.fill(5)("la").mkString(" "),          // the same single shingle
@@ -64,7 +69,7 @@ class ShingleSetSpec extends graft.SparkSpec {
   }
 
   test("shingle sets hold exactly the exploded shingle table, one row per doc") {
-    val sets = Dedup.shingleSetsOf(corpus)
+    val sets = Dedup.docShingleSets(corpus)
     assert(sets.columns.toSeq === Seq("doc_id", "hs", "n_sh"))
     assert(rows(sets.select(col("doc_id"), explode(col("hs")).as("h"))) ===
       rows(Dedup.shinglesOf(corpus)))
@@ -76,7 +81,7 @@ class ShingleSetSpec extends graft.SparkSpec {
   }
 
   test("MinHash pairs scored from the sets equal the exploded pipeline's") {
-    val fromSets = Dedup.minhashScoredPairsOfSets(Dedup.shingleSetsOf(corpus))
+    val fromSets = Dedup.minhashScoredPairsOfSets(Dedup.docShingleSets(corpus))
     val exploded = Dedup.minhashScoredPairsFrom(Dedup.shinglesOf(corpus))
     assert(rows(fromSets) === rows(exploded))
     val pairs = fromSets.filter(col("jaccard") >= 0.5).collect()
@@ -85,9 +90,9 @@ class ShingleSetSpec extends graft.SparkSpec {
   }
 
   test("bench overlap counts a shingle shared by two bench docs once") {
-    val overlaps = Dedup.benchOverlaps(Dedup.shingleSetsOf(corpus), Dedup.shingleSetsOf(bench))
+    val overlaps = Dedup.benchOverlaps(Dedup.docShingleSets(corpus), Dedup.docShingleSets(bench))
       .collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("n_overlap")).toMap
-    assert(overlaps === Map(30L -> 2L, 31L -> 3L, 32L -> 1L))
+    assert(overlaps === Map(2L -> 3L, 30L -> 2L, 31L -> 3L, 32L -> 1L))
     // decontaminate's report equals the distinct-based exploded form
     val cSh = Dedup.shinglesOf(corpus)
     val sizes = cSh.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
@@ -111,8 +116,10 @@ class ShingleSetSpec extends graft.SparkSpec {
     val ids = Pipeline.corpusSurvivors(corpus, bench).select("doc_id").collect()
       .map(_.getLong(0)).toSet
     // 22, 41 and 42 fall to their clusters' min ids; 31 is contaminated
-    // at exactly minOverlap, 30 one short of it, 32 hits one shingle thrice
-    assert(ids === Set(20L, 21L, 30L, 32L, 40L, 50L), ids)
+    // at exactly minOverlap, 30 one short of it, 32 hits one shingle
+    // thrice; 2 is contaminated although bench doc 2 has its id, and 33
+    // shares shingles only with corpus doc 2
+    assert(ids === Set(20L, 21L, 30L, 32L, 33L, 40L, 50L), ids)
   }
 
   test("corpusHygiene packs the reference survivors with their final md5") {
