@@ -482,6 +482,7 @@ object Jx {
   private[jx] lazy val corpusOps: Map[String, CorpusOp] = {
     import graft.llm.{Dedup, Forget, Multimodal => MM, Similarity => Sim, TextOps => TO}
     import graft.llm.Similarity.{Ivf, KnnGraph}
+    import graft.llm.Dedup.PairGraph
     import graft.streaming.Streams
     import graft.etl.Transforms
     def budgeted(f: (DataFrame, Long, Long, Long) => DataFrame) = op(c => f(c.docs,
@@ -506,6 +507,16 @@ object Jx {
       twin("embeddings", "nlist" -> 16, "k" -> 3)(c =>
         use(c)(KnnGraph.of(c.docs, c.nlist(), c.int("k", 3))))((c, d) =>
         use(c)(KnnGraph.stored(c.spark, d)))
+    // The MinHash pair-graph twins: one analysis over the pair graph,
+    // built in-plan from the corpus or opened from the minhash_pairs
+    // store; the forget twins read the graph with the tombstoned docs
+    // forgotten, in-plan or from the forgotten store.
+    def pairTwin(use: PairGraph => DataFrame) =
+      twin("documents")(c => use(PairGraph.of(c.docs)))((c, d) =>
+        use(PairGraph.stored(c.spark, d)))
+    def forgetTwin(use: PairGraph => DataFrame) =
+      twin("documents")(c => use(Forget.forgotten(PairGraph.of(c.docs))))((c, d) =>
+        use(Forget.forgottenPairGraph(c.spark, d)))
     // the streamed quality monitor keeps the exact per-source token sums
     // the schedulers plan from, so the stored twins scan no corpus
     def tokenSums(c: Call, d: String) =
@@ -570,15 +581,11 @@ object Jx {
       "hygiene_report" -> on(TO.hygieneReportOf(_)),
       "novelty_curve" -> on(TO.noveltyCurveOf(_)),
       "novelty_sources" -> on(TO.noveltySourcesOf(_)),
-      "soft_sample" -> plainTwin("documents", Dedup.sampleSoftOf(_),
-        Dedup.queries("sample_soft_dedup")),
-      "threshold_tuning" -> plainTwin("documents", Dedup.thresholdTuningOf(_),
-        Dedup.queries("dedup_threshold_tuning")),
-      "reweight" -> plainTwin("documents", Dedup.reweightOf(_), Dedup.queries("dedup_reweight")),
-      "split_stratified" -> plainTwin("documents", Dedup.splitStratifiedOf(_),
-        Dedup.queries("dedup_split_stratified")),
-      "split_leakfree" -> plainTwin("documents", Dedup.splitLeakfreeOf(_),
-        Dedup.queries("dedup_split_leakfree")),
+      "soft_sample" -> pairTwin(Dedup.softSample),
+      "threshold_tuning" -> pairTwin(Dedup.thresholdTuning),
+      "reweight" -> pairTwin(Dedup.reweight),
+      "split_stratified" -> pairTwin(Dedup.splitStratified),
+      "split_leakfree" -> pairTwin(Dedup.splitLeakfree),
       "quality_classifier" -> on(TO.qualityClassifierOf(_)),
       "quality_calibration" -> on(TO.qualityCalibrationOf(_)),
       "quality_ensemble" -> on(TO.qualityEnsembleOf(_)),
@@ -610,19 +617,17 @@ object Jx {
       "ivf_delta" -> op(c => Sim.ivfDeltaOf(c.docs, c.nlist(32))),
       // the even/odd split is the dedup_pairs_delta key's own split;
       // the delta's exactness claim does not depend on the corpus
-      "pairs_delta" -> on(d => Dedup.pairsDeltaOf(d.filter(col("doc_id") % 2 === 0),
-        d.filter(col("doc_id") % 2 =!= 0)).orderBy(desc("jaccard"), asc("da"), asc("db"))),
+      "pairs_delta" -> on(d => Dedup.pairsReadout(Dedup.pairsDeltaOf(
+        d.filter(col("doc_id") % 2 === 0), d.filter(col("doc_id") % 2 =!= 0)))),
       // the report summarizes the stored decision sets (pair-graph drop
       // list, quality monitor); a corpus subquery has none to summarize
       "curation_report" -> storeOnly(TO.queries("text_curation_report")),
-      "dedup_profile" -> plainTwin("documents", Dedup.dedupProfileOf(_),
-        Dedup.queries("dedup_profile")),
-      "pair_centrality" -> plainTwin("documents", Dedup.pairCentralityOf(_),
-        Dedup.queries("dedup_centrality")),
+      "dedup_profile" -> pairTwin(Dedup.profile),
+      "pair_centrality" -> pairTwin(Dedup.pairCentrality),
       "quality_monitor" -> plainTwin("documents",
         d => TO.qualityMergeFrom(TO.qualityPartialsOf(d)),
         Streams.queries("stream_quality_store")),
-      "canonical" -> plainTwin("documents", Dedup.canonicalOf(_), Dedup.queries("dedup_canonical")),
+      "canonical" -> pairTwin(Dedup.canonical),
       // the corpus is the documents being mixed; the topics come from a
       // quantizer over the embeddings table
       "topic_mix" -> twin("documents", "nlist" -> 16, "alpha" -> 0.5)(c =>
@@ -639,16 +644,14 @@ object Jx {
       // forget propagation: the stored twins are the FORGOTTEN stores, and
       // the in-plan builders are the rebuild-from-purged the store gate
       // pins equal to them
-      "forget_pairs" -> plainTwin("documents", Forget.forgetPairsOf(_), Forget.dedupForgetPairs),
-      "forget_clusters" -> plainTwin("documents", Forget.forgetClustersOf(_),
-        Forget.dedupForgetClusters),
+      "forget_pairs" -> forgetTwin(g => Dedup.pairsReadout(g.pairs)),
+      "forget_clusters" -> forgetTwin(Dedup.clusters),
       "forget_ivf" -> plainTwin("embeddings", Forget.forgetIvfOf(_), Forget.simForgetIvf),
       "forget_dict" -> plainTwin("documents", Forget.forgetDictOf(_), Forget.textForgetDict),
       "forget_payload" -> plainTwin("documents", Forget.forgetPayloadPairsOf(_),
         Forget.mmForgetPairs),
       "forget_knn" -> plainTwin("embeddings", Forget.forgetKnnOf(_), Forget.simForgetKnn),
-      "forget_canonical" -> plainTwin("documents", Forget.forgetCanonicalOf(_),
-        Forget.dedupForgetCanonical),
+      "forget_canonical" -> forgetTwin(Dedup.canonical),
       "forget_manifest" -> plainTwin("documents", Forget.forgetManifestOf(_),
         Forget.textForgetManifest),
       "forget_novelty" -> plainTwin("documents", Forget.forgetNoveltyOf(_),

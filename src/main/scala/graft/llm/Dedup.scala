@@ -368,18 +368,11 @@ object Dedup {
       .map(b => s"concat_ws('_', ${col(2 * b)}, ${col(2 * b + 1)})")
       .mkString("array(", ", ", ")")
 
-  /** (doc_id, band, bh) banded MinHash rows for a (doc_id, text) frame —
-    * the batch form (explode → groupBy mins), used to BUILD a corpus
-    * index. One posexplode over the in-row band array, not a bands-way
-    * union: a union re-evaluates the signature aggregate per branch per
-    * join side. */
-  def minhashBands(docs: DataFrame): DataFrame =
-    minhashBandsFromShingles(shinglesOf(docs))
-
-  /** The same band build over a PRECOMPUTED (doc_id, h) shingle frame —
-    * the form an index build uses so the expensive shingle pass is paid
-    * once and shared by the bands and the verify sets
-    * ([[writeBandIndex]]). */
+  /** (doc_id, band, bh) banded MinHash rows over an exploded (doc_id, h)
+    * shingle frame, by a groupBy of the K mins: the reference the in-row
+    * signature ([[minhashInRow]], [[Multimodal.byteMinhashInRow]]) is
+    * pinned equal to in DedupSpec and MultimodalSpec. Every index and
+    * pair set of the library is built in-row. */
   def minhashBandsFromShingles(shFrame: DataFrame): DataFrame = {
     val sh = shFrame.withColumn("hb", pmod(col("h"), lit(MinhashM)))
     val hashAggs = (0 until MinhashK).map { k =>
@@ -390,23 +383,28 @@ object Dedup {
       .select(col("doc_id"), col("pos").as("band"), col("col").as("bh"))
   }
 
-  /** [[minhashScoredPairsOfSets]] over a precomputed (doc_id, h)
-    * shingle frame, regrouped into the per-doc sets that bands and
-    * verify both read. */
-  def minhashScoredPairsFrom(sh: DataFrame): DataFrame =
-    minhashScoredPairsOfSets(docShingleSetsFromShingles(sh.select("doc_id", "h")))
-
   /** Banded-LSH candidates + exact-Jaccard verify over per-doc
-    * (doc_id, hs, n_sh) shingle sets ([[docShingleSets]]): the
-    * (da, db, jaccard, …) scored pair set every MinHash consumer
-    * (near-dup report, clusters, drop list) derives from. The band keys
-    * come in-row from `hs` ([[minhashInRowFromHashes]]) and the verify
-    * reads `hs`/`n_sh` as they are: no signature groupBy. */
+    * (doc_id, hs, n_sh) shingle sets ([[docShingleSets]], or a signed
+    * frame of [[minhashInRow]]): the (da, db, jaccard, …) scored pair set
+    * every MinHash consumer ([[PairGraph]], the pair deltas) derives
+    * from. The band keys come in-row from `hs`
+    * ([[minhashInRowFromHashes]]) and the verify reads `hs`/`n_sh` as
+    * they are: no signature groupBy. */
   def minhashScoredPairsOfSets(sets: DataFrame): DataFrame =
     verifyJaccard(
-      bandCandidates(minhashInRowFromHashes(sets.select("doc_id", "hs"))
-        .select(col("doc_id"), posexplode(col("bands")).as(Seq("band", "bh")))),
+      bandCandidates(signedBands(minhashInRowFromHashes(sets.select("doc_id", "hs")))),
       sets)
+
+  /** The (doc_id, band, bh) rows of a signed frame's band-key array
+    * ([[minhashInRow]]'s `bands`). */
+  private[graft] def signedBands(signed: DataFrame): DataFrame =
+    signed.select(col("doc_id"), posexplode(col("bands")).as(Seq("band", "bh")))
+
+  /** The (doc_id, hs, n_sh, bands) columns of a signed frame
+    * materialized under `label`: the one pass an index build or a pair
+    * delta derives its bands, verify sets and pairs from. */
+  private[graft] def materializeSigned(signed: DataFrame, label: String): DataFrame =
+    materialize(signed.select("doc_id", "hs", "n_sh", "bands"), label)
 
   /** Candidate pairs (da < db) of a (doc_id, band, bh) band frame: the
     * docs sharing any band bucket — a bucket equi-join, never n². */
@@ -417,11 +415,12 @@ object Dedup {
       .select(col("x.doc_id").as("da"), col("y.doc_id").as("db"))
       .distinct()
 
-  /** The STATELESS in-row twin of [[minhashBands]]: the whole signature —
+  /** The STATELESS in-row MinHash signature: the whole signature —
     * shingle hashes, K universal-family mins, band keys — computes as
     * array expressions on each row, no explode, no groupBy. Identical
-    * output by construction (min over a multiset equals min over its
-    * distinct set; DedupSpec asserts equality), which is what lets the
+    * output to the groupBy form [[minhashBandsFromShingles]] by
+    * construction (min over a multiset equals min over its distinct set;
+    * DedupSpec asserts equality), which is what lets the
     * SAME index semantics run on an unbounded STREAM of incoming docs:
     * per-row map, zero state. Adds `hs` (distinct shingle hashes) and
     * `n_sh` for the exact-Jaccard verify, and `bands` (the band-key
@@ -444,42 +443,97 @@ object Dedup {
         df.withColumn(s"h$k", expr(
           s"array_min(transform(hbs, x -> pmod(${2 * k + 1}L * x + ${104729L * (k + 1)}L, ${M}L)))"))
     }
+    // an empty set has no band key: its null `bands` explode to no rows,
+    // where all-null mins would put every empty set in one bucket
     withSig
-      .withColumn("bands", expr(minhashBandArraySql(k => s"h$k")))
+      .withColumn("bands", when(col("n_sh") > 0, expr(minhashBandArraySql(k => s"h$k"))))
       .drop(("hbs" +: (0 until MinhashK).map(k => s"h$k")): _*)
   }
 
   /** The (doc_id, hs, n_sh) sets of [[docShingleSets]] regrouped from a
-    * precomputed (doc_id, h) frame — lets an index build share one
-    * shingle pass between bands and verify sets. */
+    * precomputed (doc_id, h) frame: the verify sets of the exact
+    * n-gram and containment prefix keys, which index single shingles. */
   def docShingleSetsFromShingles(sh: DataFrame): DataFrame =
     sh.groupBy("doc_id")
       .agg(sort_array(collect_list(col("h"))).as("hs"), count(lit(1)).as("n_sh"))
 
-  /** The scored MinHash pair graph and its CC labels as ONE stored
-    * artifact (the r12 store-conversion recipe applied to the dedup
-    * family): the shingle→band→verify chain and the iterative CC both
-    * run once per (session, dataset); `dedup_minhash`, `dedup_clusters`,
-    * `dedup_drop_list`, `dedup_canonical`, and the jx canonical route
-    * all PROBE the stored tables. The pair graph is banded-join OUTPUT
-    * (dup-rate × n rows, KB–MB at any scale), so the store holds the
-    * decision set, not the corpus; doubles (r4'd jaccard) round-trip
-    * parquet bit-exactly, so stored == in-plan under every oracle.
-    * The composed pipeline keys deliberately DON'T probe this store —
-    * their gate is that the stages compose in one plan. */
-  private[llm] def pairStore(s: SparkSession, d: String): java.io.File =
-    Artifacts.buildOnce(s, "minhash_pairs", d) { dd =>
-      minhashScoredPairsFrom(shingles(s, d))
-        .filter(col("jaccard") >= 0.5)
+  /** The MinHash near-dup pair graph, the paper's dedup decision set, as
+    * one value every pair-graph analysis below is written against once:
+    * the documents it was built from (`docs`), the scored `pairs`
+    * (da, db, jaccard r4'd) at jaccard ≥ the threshold, and their
+    * connected-component `labels` (id, lbl). Each is derived or opened
+    * only when an analysis reads it: the CC labeling is the graph's only
+    * eager work, so a readout over the pairs alone (centrality,
+    * threshold tuning) runs no CC job, and a stored readout resolves
+    * only the tables it reads. [[PairGraph.of]] scores the pairs in-plan
+    * from in-row shingle sets; [[PairGraph.stored]] opens the
+    * `minhash_pairs` store; [[forget]] purges tombstoned docs. */
+  final class PairGraph(docsIn: => DataFrame, pairsIn: => DataFrame, labelsIn: => DataFrame) {
+    lazy val docs: DataFrame = docsIn
+    lazy val pairs: DataFrame = pairsIn
+    lazy val labels: DataFrame = labelsIn
+
+    /** The graph with the docs of `tomb` (one `doc_id` column)
+      * forgotten: their docs and pairs dropped, and only the components
+      * that held one relabeled ([[Forget.forgetPairFrames]]). */
+    def forget(tomb: DataFrame): PairGraph =
+      new PairGraph(docs.join(broadcast(tomb.select("doc_id")), Seq("doc_id"), "left_anti"),
+        Forget.dropPairs(pairs, tomb), Forget.forgetPairFrames(pairs, labels, tomb)._2)
+  }
+
+  object PairGraph {
+
+    /** The graph of any (doc_id, text) frame, scored from its in-row
+      * shingle sets ([[docShingleSets]]). The sets are materialized: the
+      * band side and both verify sides read them, and unmaterialized
+      * each would re-run the md5 pass (measured at sf0.1, 4 cores: 27.8 s
+      * for the pair set, against 0.5 s to materialize plus 1.1 s). */
+    def of(docs: DataFrame): PairGraph =
+      ofSets(docs, materialize(docShingleSets(docs).select("doc_id", "hs", "n_sh"),
+        "dedup.shingle_sets"))
+
+    /** The graph of `docs` over their per-doc (doc_id, hs, n_sh) shingle
+      * sets (or a signed frame of them), keeping the pairs whose
+      * unrounded jaccard is at least `threshold`. The sets are read three
+      * times, so a caller passes them materialized. */
+    def ofSets(docs: DataFrame, sets: DataFrame, threshold: Double = 0.5): PairGraph = {
+      val pairs = minhashScoredPairsOfSets(sets)
+        .filter(col("jaccard") >= threshold)
         .select(col("da"), col("db"), r4(col("jaccard")).as("jaccard"))
-        .write.mode("overwrite").parquet(s"$dd/pairs")
-      clusterLabelsFrom(graft.Tables.parquet(s, s"$dd/pairs"))
-        .write.mode("overwrite").parquet(s"$dd/labels")
+      new PairGraph(docs, pairs, clusterLabelsFrom(pairs))
     }
 
-  val dedupMinhash: Q = (s, d) =>
-    graft.Tables.parquet(s, s"${pairStore(s, d)}/pairs")
-      .orderBy(desc("jaccard"), asc("da"), asc("db"))
+    /** The graph of the standard documents table and its CC labels as
+      * ONE stored artifact: the shingle→band→verify chain and the
+      * iterative CC both run once per (session, dataset), and every
+      * `dedup_*` key and jx pair-graph route over the standard corpus
+      * PROBES the stored tables. The pair graph is banded-join OUTPUT
+      * (dup-rate × n rows, KB–MB at any scale), so the store holds the
+      * decision set, not the corpus; doubles (r4'd jaccard) round-trip
+      * parquet bit-exactly, so stored == in-plan under every oracle.
+      * The composed pipeline keys deliberately DON'T probe this store —
+      * their gate is that the stages compose in one plan. */
+    def stored(s: SparkSession, d: String): PairGraph = {
+      val dir = Artifacts.buildOnce(s, "minhash_pairs", d) { dd =>
+        of(t(s, d, "documents")).pairs.write.mode("overwrite").parquet(s"$dd/pairs")
+        clusterLabelsFrom(graft.Tables.parquet(s, s"$dd/pairs"))
+          .write.mode("overwrite").parquet(s"$dd/labels")
+      }
+      at(s, t(s, d, "documents"), dir)
+    }
+
+    /** The graph of `docs` whose pairs and labels are the `pairs` and
+      * `labels` tables under `dir`. */
+    private[llm] def at(s: SparkSession, docs: => DataFrame, dir: java.io.File): PairGraph =
+      new PairGraph(docs, graft.Tables.parquet(s, s"$dir/pairs"),
+        graft.Tables.parquet(s, s"$dir/labels"))
+  }
+
+  /** Scored pairs in readout order: jaccard descending, then ids. */
+  def pairsReadout(pairs: DataFrame): DataFrame =
+    pairs.orderBy(desc("jaccard"), asc("da"), asc("db"))
+
+  val dedupMinhash: Q = (s, d) => pairsReadout(PairGraph.stored(s, d).pairs)
 
   /** X1c: SimHash near-dup pairs (Charikar 2002). One 64-bit signature per
     * doc via the codegen'd [[graft.functions.SimHash64]] expression; the
@@ -749,7 +803,8 @@ object Dedup {
     // the production shape verbatim: index build on corpus version
     // change, every arriving batch pays only the in-row signature + two
     // index joins.
-    val dir = Artifacts.buildOnce(s, "dedup_gate", d)(dd => writeBandIndex(shinglesOf(docs), dd))
+    val dir = Artifacts.buildOnce(s, "dedup_gate", d)(dd =>
+      writeBandIndex(minhashInRow(docs), s"$dd"))
     // probe signatures materialized ONCE (the in-row chain is the real
     // per-probe cost; see dedupAgainstCorpusSigned) — the streaming form
     // computes them per arriving row, the batch gate per probe slice
@@ -760,17 +815,19 @@ object Dedup {
       .orderBy(desc("jaccard"), asc("doc_id"), asc("corpus_doc"))
   }
 
-  /** Writes the probe index of an online gate under `dir`: `bands`
-    * (doc_id, band, bh), partitioned by band so a narrower probe (a
-    * stream probing one band at a time) partition-prunes, and `sets`
-    * (doc_id, hs, n_sh). Both derive from ONE materialized pass over the
-    * (doc_id, h) shingle frame `sh`. */
-  private[llm] def writeBandIndex(sh: DataFrame, dir: java.io.File): Unit = {
-    val shm = materialize(sh, "dedup.index_shingles")
-    minhashBandsFromShingles(shm)
-      .write.mode("overwrite").partitionBy("band").parquet(s"$dir/bands")
-    docShingleSetsFromShingles(shm)
-      .write.mode("overwrite").parquet(s"$dir/sets")
+  /** Writes the probe index of an online gate or a pair store under
+    * `dir`: `bands` (doc_id, band, bh), partitioned by band so a narrower
+    * probe (a stream probing one band at a time) partition-prunes, and
+    * `sets` (doc_id, hs, n_sh). Both derive from ONE materialized pass
+    * over the signed frame `signed` ([[minhashInRow]] or
+    * [[Multimodal.byteMinhashInRow]]), which is returned so a caller can
+    * score its pairs from the same pass. */
+  private[graft] def writeBandIndex(signed: DataFrame, dir: String,
+      label: String = "dedup.index_signatures"): DataFrame = {
+    val sm = materializeSigned(signed, label)
+    signedBands(sm).write.mode("overwrite").partitionBy("band").parquet(s"$dir/bands")
+    sm.select("doc_id", "hs", "n_sh").write.mode("overwrite").parquet(s"$dir/sets")
+    sm
   }
 
   /** X1i: EXACT incremental growth of the near-dup pair graph — the
@@ -788,16 +845,11 @@ object Dedup {
     * the index build is per-batch-incremental, only the (rare) CC
     * label refresh touches the accumulated KB-scale pair graph. */
   def pairsDeltaOf(base: DataFrame, delta: DataFrame): DataFrame = {
-    val baseSh = materialize(shinglesOf(base), "dedup.base_shingles")
-    val basePairs = minhashScoredPairsFrom(baseSh)
-      .filter(col("jaccard") >= 0.5)
-      .select(col("da"), col("db"), r4(col("jaccard")).as("jaccard"))
-    val cross = crossPairsSigned(materialize(minhashInRow(delta), "dedup.delta_signatures"),
-      minhashBandsFromShingles(baseSh), docShingleSetsFromShingles(baseSh))
-    val deltaPairs = minhashScoredPairsFrom(shinglesOf(delta))
-      .filter(col("jaccard") >= 0.5)
-      .select(col("da"), col("db"), r4(col("jaccard")).as("jaccard"))
-    basePairs.unionByName(cross).unionByName(deltaPairs)
+    val baseSigned = materializeSigned(minhashInRow(base), "dedup.base_signatures")
+    val deltaSigned = materializeSigned(minhashInRow(delta), "dedup.delta_signatures")
+    PairGraph.ofSets(base, baseSigned).pairs
+      .unionByName(crossPairsSigned(deltaSigned, signedBands(baseSigned), baseSigned))
+      .unionByName(PairGraph.ofSets(delta, deltaSigned).pairs)
   }
 
   /** Canonically-ordered (da < db) scored pairs between a SIGNED probe
@@ -807,9 +859,7 @@ object Dedup {
     * applies to the UNROUNDED jaccard (the batch pipeline's rule). */
   private[graft] def crossPairsSigned(signed: DataFrame, bands: DataFrame,
       sets: DataFrame): DataFrame = {
-    val cand = signed
-      .select(col("doc_id"), posexplode(col("bands")))
-      .select(col("doc_id"), col("pos").as("band"), col("col").as("bh"))
+    val cand = signedBands(signed)
       .join(bands.select(col("doc_id").as("corpus_doc"), col("band"), col("bh")),
         Seq("band", "bh"))
       .filter(col("doc_id") =!= col("corpus_doc"))
@@ -834,26 +884,15 @@ object Dedup {
     * A doc that is near-dup-connected to many docs that are THEMSELVES
     * well-connected is a template/boilerplate hub — the thing to
     * review/blocklist, not merely drop, since its whole neighbourhood
-    * is suspect. Probes the stored pair graph; the iteration chain is
-    * [[Similarity.centralityOfMutual]] verbatim (decimal-exact, 3 fixed
-    * rounds, CTE-replayed). */
-  val dedupCentrality: Q = (s, d) =>
-    docCentralityOfPairs(
-      graft.Tables.parquet(s, s"${pairStore(s, d)}/pairs"))
+    * is suspect. Reads the graph's pairs only, no CC labels; the
+    * iteration chain is [[Similarity.centralityOfMutual]] verbatim
+    * (decimal-exact, 3 fixed rounds, CTE-replayed). */
+  val dedupCentrality: Q = (s, d) => pairCentrality(PairGraph.stored(s, d))
 
-  /** The doc-graph ranking over any scored (da, db) pair frame. */
-  private def docCentralityOfPairs(pairs: DataFrame): DataFrame =
-    Similarity.centralityOfMutual(
-        pairs.select(col("da").as("src"), col("db").as("dst")))
+  def pairCentrality(g: PairGraph): DataFrame =
+    Similarity.centralityOfMutual(g.pairs.select(col("da").as("src"), col("db").as("dst")))
       .select(col("vec_id").as("doc_id"), col("centrality"), col("degree"))
       .orderBy(desc("centrality"), asc("doc_id"))
-
-  /** [[dedupCentrality]] over any documents-shaped frame — the jx
-    * `corpus_op` in-plan fallback (the standard-corpus route probes the
-    * stored pair graph). */
-  private[graft] def pairCentralityOf(docsIn: DataFrame): DataFrame =
-    docCentralityOfPairs(
-      minhashScoredPairsFrom(shinglesOf(docsIn)).filter(col("jaccard") >= 0.5))
 
   /** X1h: the corpus DUPLICATION PROFILE — the cluster-size histogram of
     * the near-dup graph: how much of the corpus is duplicated, and in
@@ -864,16 +903,10 @@ object Dedup {
     * artifact even at 100 TB — dup-rate × n rows, never n) and the
     * histogram is two bounded aggregates on top; nothing touches the
     * corpus itself. */
-  val dedupProfile: Q = (s, d) => profileFromLabels(clusterLabels(s, d))
+  val dedupProfile: Q = (s, d) => profile(PairGraph.stored(s, d))
 
-  /** The same profile over ANY (doc_id, text) frame via the in-plan pair
-    * chain (jx `corpus_op` fallback). */
-  def dedupProfileOf(docsIn: DataFrame): DataFrame =
-    profileFromLabels(clusterLabelsFrom(
-      minhashScoredPairsFrom(shinglesOf(docsIn)).filter(col("jaccard") >= 0.5)))
-
-  private def profileFromLabels(labels: DataFrame): DataFrame =
-    labels.groupBy("lbl")
+  def profile(g: PairGraph): DataFrame =
+    g.labels.groupBy("lbl")
       .agg(count(lit(1)).as("sz"))
       .groupBy(col("sz").as("cluster_size"))
       .agg(count(lit(1)).as("n_clusters"),
@@ -885,10 +918,9 @@ object Dedup {
     * must reproduce `dedup_minhash`'s full-corpus pair set exactly. */
   val dedupPairsDelta: Q = (s, d) => {
     val docs = t(s, d, "documents")
-    pairsDeltaOf(
-        docs.filter(col("doc_id") % 2 === 0),
-        docs.filter(col("doc_id") % 2 =!= 0))
-      .orderBy(desc("jaccard"), asc("da"), asc("db"))
+    pairsReadout(pairsDeltaOf(
+      docs.filter(col("doc_id") % 2 === 0),
+      docs.filter(col("doc_id") % 2 =!= 0)))
   }
 
   /** X1f: near-dup clustering — the step a real dedup pipeline needs
@@ -904,16 +936,11 @@ object Dedup {
     * facing adversarial chain components would swap in large-star/
     * small-star (Kiveris et al., same join primitives). Oracle: DuckDB
     * replays the same MinHash pairs, then a recursive-CTE reachability
-    * closure — min reachable label ≡ the propagation fixpoint. */
-  /** The min-label fixpoint over the MinHash pair graph: (id, lbl) with
-    * lbl = the smallest doc id reachable from id. Shared by the cluster
-    * report and the drop list. */
-  private def clusterLabels(s: SparkSession, d: String): DataFrame =
-    graft.Tables.parquet(s, s"${pairStore(s, d)}/labels")
-
-  /** The same iterative min-label propagation over ANY (da, db) pair
-    * frame — public so a composed pipeline can feed pairs scored from a
-    * shared shingle pass instead of re-deriving them.
+    * closure — min reachable label ≡ the propagation fixpoint.
+    *
+    * The min-label propagation over ANY (da, db) pair frame: (id, lbl)
+    * with lbl = the smallest doc id reachable from id ([[PairGraph]]'s
+    * labels, and the kNN graph's).
     *
     * Driver short-circuit (forward idea aa): a near-dup pair set is the
     * OUTPUT of the banded join — KB-to-MB scale even on a 100 TB corpus
@@ -1009,8 +1036,12 @@ object Dedup {
     labels
   }
 
-  val dedupClusters: Q = (s, d) =>
-    clusterLabels(s, d).groupBy(col("lbl").as("cluster_id"))
+  val dedupClusters: Q = (s, d) => clusters(PairGraph.stored(s, d))
+
+  /** One row per near-dup cluster: its id (the min member), size and
+    * sorted member list. */
+  def clusters(g: PairGraph): DataFrame =
+    g.labels.groupBy(col("lbl").as("cluster_id"))
       .agg(count(lit(1)).as("n_docs"),
         concat_ws(",",
           transform(array_sort(collect_list(col("id"))), _.cast("string"))).as("members"))
@@ -1022,8 +1053,10 @@ object Dedup {
     * deduped training set; emitting (doc_id → canonical) rather than the
     * cluster report keeps provenance (why was this doc dropped, and for
     * which survivor). */
-  val dedupDropList: Q = (s, d) =>
-    clusterLabels(s, d)
+  val dedupDropList: Q = (s, d) => dropList(PairGraph.stored(s, d))
+
+  def dropList(g: PairGraph): DataFrame =
+    g.labels
       .filter(col("id") =!= col("lbl"))
       .select(col("id").as("doc_id"), col("lbl").as("canonical"))
       .orderBy("doc_id")
@@ -1042,8 +1075,39 @@ object Dedup {
     * on 100 TB the label join is a plain equi-join (NOT broadcast — the
     * drop set scales with the corpus); AQE handles the skew of a
     * boilerplate mega-cluster. */
-  val dedupCanonical: Q = (s, d) =>
-    canonicalFromLabels(clusterLabels(s, d), t(s, d, "documents"))
+  val dedupCanonical: Q = (s, d) => canonical(PairGraph.stored(s, d))
+
+  def canonical(g: PairGraph): DataFrame = {
+    val docs = g.docs
+      .withColumn("toks", split(col("text"), " "))
+      .withColumn("n_stop",
+        size(expr("filter(toks, w -> w IN ('the', 'a', 'of', 'and', 'to'))")))
+      .select(col("doc_id"), col("n_chars"),
+        r4(when(col("n_chars") < 100, 0.2).otherwise(1.0) *
+          when(col("n_stop") === 0, 0.5).otherwise(1.0)).as("quality"))
+    val labels = g.labels
+    labels.join(docs, labels("id") === docs("doc_id"))
+      .groupBy(col("lbl").as("cluster_id"))
+      .agg(
+        max(struct(col("quality"), col("n_chars"),
+          (-col("doc_id")).as("neg_id"))).as("mx"),
+        count(lit(1)).as("n_docs"))
+      .select(col("cluster_id"),
+        (-col("mx.neg_id")).as("canonical"),
+        col("mx.quality").as("canon_quality"),
+        col("mx.n_chars").as("canon_chars"),
+        col("n_docs"),
+        (col("n_docs") - 1).as("n_dropped"))
+      .orderBy("cluster_id")
+  }
+
+  /** Every doc of the graph with its `carry` columns and its cluster id:
+    * its CC label, or its own id for a singleton. */
+  private def docClusters(g: PairGraph, carry: String*): DataFrame =
+    g.docs.select("doc_id", carry: _*)
+      .join(g.labels, col("doc_id") === col("id"), "left")
+      .select((col("doc_id") +: carry.map(col(_))) :+
+        coalesce(col("lbl"), col("doc_id")).as("cluster_id"): _*)
 
   /** X1g: LEAKAGE-FREE train/val split — the published dedup-leakage
     * concern (a validation doc's near-duplicate sitting in train makes
@@ -1055,26 +1119,15 @@ object Dedup {
     * engines, runs, and repartitioning. Probes the stored pair-graph
     * labels (`minhash_pairs`); one doc-level left join + an in-row
     * hash — no new corpus pass. */
-  val dedupSplitLeakfree: Q = (s, d) =>
-    splitLeakfreeFrom(clusterLabels(s, d), t(s, d, "documents"))
+  val dedupSplitLeakfree: Q = (s, d) => splitLeakfree(PairGraph.stored(s, d))
 
-  /** The same split over any labels + documents pair (jx `corpus_op`
-    * in-plan fallback and the StreamsSpec maintained-label path). */
-  private[graft] def splitLeakfreeFrom(labels: DataFrame, docsIn: DataFrame): DataFrame =
-    docsIn.select("doc_id")
-      .join(labels, col("doc_id") === col("id"), "left")
-      .select(col("doc_id"), coalesce(col("lbl"), col("doc_id")).as("cluster_id"))
+  def splitLeakfree(g: PairGraph): DataFrame =
+    docClusters(g)
       .withColumn("split", when(expr(
         "CAST(conv(substr(md5(CAST(cluster_id AS STRING)), 1, 15), 16, 10) AS BIGINT) % 10")
         < 9, "train").otherwise("val"))
       .orderBy("doc_id")
       .limit(300)
-
-  /** X1g in-plan fallback over any documents-shaped frame. */
-  private[graft] def splitLeakfreeOf(docsIn: DataFrame): DataFrame =
-    splitLeakfreeFrom(clusterLabelsFrom(
-      minhashScoredPairsFrom(shinglesOf(docsIn)).filter(col("jaccard") >= 0.5)),
-      docsIn)
 
   /** X1i: SOFT dedup — reweighting instead of dropping. Hard dedup
     * discards information a sampler could still use; the soft policy
@@ -1085,30 +1138,20 @@ object Dedup {
     * without deleting a byte. Probes the stored pair-graph labels — one
     * doc-level join + a KB-scale cluster-size aggregate, no corpus
     * rescan; the downstream sampler is `sample_weighted`'s machinery. */
-  val dedupReweight: Q = (s, d) =>
-    reweightFrom(clusterLabels(s, d), t(s, d, "documents"))
+  val dedupReweight: Q = (s, d) => reweight(PairGraph.stored(s, d))
 
-  private[graft] def reweightFrom(labels: DataFrame, docsIn: DataFrame): DataFrame = {
-    val sl = docsIn.select("doc_id")
-      .join(labels, col("doc_id") === col("id"), "left")
-      .select(col("doc_id"), coalesce(col("lbl"), col("doc_id")).as("cluster_id"))
-    val sizes = sl.groupBy("cluster_id").agg(count(lit(1)).as("n_members"))
-    sl.join(sizes, Seq("cluster_id"))
+  def reweight(g: PairGraph): DataFrame =
+    clusterSizes(g)
       .select(col("doc_id"), col("cluster_id"), col("n_members"),
         expr("1000 div n_members").as("weight_permille"))
       .orderBy("doc_id")
       .limit(300)
-  }
 
-  /** The (doc_id, n_members) frame WITHOUT the gate's order/limit tail —
-    * the soft-dedup sampler consumes this corpus-wide. */
-  private[graft] def reweightCoreFrom(labels: DataFrame,
-      docsIn: DataFrame): DataFrame = {
-    val sl = docsIn.select("doc_id")
-      .join(labels, col("doc_id") === col("id"), "left")
-      .select(col("doc_id"), coalesce(col("lbl"), col("doc_id")).as("cluster_id"))
-    val sizes = sl.groupBy("cluster_id").agg(count(lit(1)).as("n_members"))
-    sl.join(sizes, Seq("cluster_id"))
+  /** Every doc of the graph with its cluster id and the cluster's
+    * member count `n_members`. */
+  private def clusterSizes(g: PairGraph): DataFrame = {
+    val sl = docClusters(g)
+    sl.join(sl.groupBy("cluster_id").agg(count(lit(1)).as("n_members")), Seq("cluster_id"))
   }
 
   /** X1i': the soft-dedup policy EXERCISED — Efraimidis–Spirakis weighted
@@ -1119,26 +1162,10 @@ object Dedup {
     * draws; top-k by exponential arrival (TakeOrdered — per-partition
     * heaps, no global sort). The composition gate for reweight →
     * sampler. */
-  val sampleSoftDedup: Q = (s, d) => {
-    val k = 100
-    reweightCoreFrom(clusterLabels(s, d), t(s, d, "documents"))
-      .withColumn("u",
-        (expr("CAST(conv(substr(md5(concat('ssamp:', CAST(doc_id AS STRING))), " +
-          "1, 15), 16, 10) AS BIGINT)")
-          .cast("double") + 1.0) / lit(1.152921504606846976e18))
-      .withColumn("wt", lit(1.0) / col("n_members"))
-      .withColumn("pri", -log(col("u")) / col("wt"))
-      .orderBy(asc("pri"), asc("doc_id"))
-      .limit(k)
-      .select(col("doc_id"), col("cluster_id"), col("n_members"))
-      .orderBy("doc_id")
-  }
+  val sampleSoftDedup: Q = (s, d) => softSample(PairGraph.stored(s, d))
 
-  /** [[sampleSoftDedup]] in-plan fallback over any documents frame. */
-  private[graft] def sampleSoftOf(docsIn: DataFrame): DataFrame =
-    reweightCoreFrom(clusterLabelsFrom(
-        minhashScoredPairsFrom(shinglesOf(docsIn)).filter(col("jaccard") >= 0.5)),
-        docsIn)
+  def softSample(g: PairGraph): DataFrame =
+    clusterSizes(g)
       .withColumn("u",
         (expr("CAST(conv(substr(md5(concat('ssamp:', CAST(doc_id AS STRING))), " +
           "1, 15), 16, 10) AS BIGINT)")
@@ -1149,12 +1176,6 @@ object Dedup {
       .limit(100)
       .select(col("doc_id"), col("cluster_id"), col("n_members"))
       .orderBy("doc_id")
-
-  /** [[dedupReweight]] in-plan fallback over any documents-shaped frame. */
-  private[graft] def reweightOf(docsIn: DataFrame): DataFrame =
-    reweightFrom(clusterLabelsFrom(
-      minhashScoredPairsFrom(shinglesOf(docsIn)).filter(col("jaccard") >= 0.5)),
-      docsIn)
 
   /** X1j: STRATIFIED leak-free split — train/val/test with EXACT
     * per-source quotas at cluster granularity. The hash split (X1g)
@@ -1168,15 +1189,10 @@ object Dedup {
     * partitioning. Scale: windows run over the KB-scale CLUSTER table
     * (|clusters| rows partitioned by source), never the corpus; docs
     * join the verdict by cluster key once. */
-  val dedupSplitStratified: Q = (s, d) =>
-    splitStratifiedFrom(clusterLabels(s, d), t(s, d, "documents"))
+  val dedupSplitStratified: Q = (s, d) => splitStratified(PairGraph.stored(s, d))
 
-  private[graft] def splitStratifiedFrom(labels: DataFrame,
-      docsIn: DataFrame): DataFrame = {
-    val sl = docsIn.select("doc_id", "source")
-      .join(labels, col("doc_id") === col("id"), "left")
-      .select(col("doc_id"), col("source"),
-        coalesce(col("lbl"), col("doc_id")).as("cluster_id"))
+  def splitStratified(g: PairGraph): DataFrame = {
+    val sl = docClusters(g, "source")
     val clusters = sl.groupBy("cluster_id")
       .agg(count(lit(1)).as("n_members"),
         min(struct(col("doc_id"), col("source"))).as("mn"))
@@ -1198,27 +1214,20 @@ object Dedup {
       .limit(300)
   }
 
-  /** [[dedupSplitStratified]] in-plan fallback. */
-  private[graft] def splitStratifiedOf(docsIn: DataFrame): DataFrame =
-    splitStratifiedFrom(clusterLabelsFrom(
-      minhashScoredPairsFrom(shinglesOf(docsIn)).filter(col("jaccard") >= 0.5)),
-      docsIn)
-
   /** X1k: DEDUP-THRESHOLD TUNING census — "measure, don't guess" (the
     * X3l/X4ae pattern) applied to the jaccard knob itself: per candidate
     * τ ∈ {0.5 … 0.9}, the pair count, the distinct docs touched, and the
     * decimal-exact mean jaccard of surviving pairs — the whole
     * aggressiveness/coverage curve in 5 rows, so the τ an operator ships
-    * is a read knee, not a default. Probes the STORED pair graph (pairs
-    * are banded-join output, KB–MB at any corpus size); shallower
-    * thresholds are FILTERS over the one stored table — no rescore per
-    * candidate, the probe-tuning trick verbatim. */
-  val dedupThresholdTuning: Q = (s, d) =>
-    thresholdTuningFrom(graft.Tables.parquet(s, s"${pairStore(s, d)}/pairs"))
+    * is a read knee, not a default. Reads the graph's pairs only (banded-
+    * join output, KB–MB at any corpus size); shallower thresholds are
+    * FILTERS over the one pair table — no rescore per candidate, the
+    * probe-tuning trick verbatim. */
+  val dedupThresholdTuning: Q = (s, d) => thresholdTuning(PairGraph.stored(s, d))
 
-  private[graft] def thresholdTuningFrom(pairs: DataFrame): DataFrame = {
+  def thresholdTuning(g: PairGraph): DataFrame = {
     val taus = array(Seq(500, 700, 900, 950, 975).map(lit(_)): _*)
-    val tp = pairs
+    val tp = g.pairs
       .select(explode(taus).as("tau_permille"),
         col("da"), col("db"), col("jaccard"))
       .filter(col("jaccard") >= col("tau_permille") / 1000.0)
@@ -1234,45 +1243,6 @@ object Dedup {
     agg.join(ends, Seq("tau_permille"))
       .select("tau_permille", "n_pairs", "n_docs", "mean_jaccard")
       .orderBy("tau_permille")
-  }
-
-  /** [[dedupThresholdTuning]] in-plan fallback over any documents frame. */
-  private[graft] def thresholdTuningOf(docsIn: DataFrame): DataFrame =
-    thresholdTuningFrom(
-      minhashScoredPairsFrom(shinglesOf(docsIn))
-        .filter(col("jaccard") >= 0.5)
-        .select(col("da"), col("db"), r4(col("jaccard")).as("jaccard")))
-
-  /** [[dedupCanonical]] over any documents-shaped frame — the jx
-    * `corpus_op` front end's IN-PLAN fallback (same contract as
-    * [[graft.llm.TextOps.qualityFilterOf]]); the standard-corpus route
-    * probes the stored pair graph instead. */
-  private[graft] def canonicalOf(docsIn: DataFrame): DataFrame =
-    canonicalFromLabels(clusterLabelsFrom(
-      minhashScoredPairsFrom(shinglesOf(docsIn)).filter(col("jaccard") >= 0.5)),
-      docsIn)
-
-  private[graft] def canonicalFromLabels(labels: DataFrame, docsIn: DataFrame): DataFrame = {
-    val docs = docsIn
-      .withColumn("toks", split(col("text"), " "))
-      .withColumn("n_stop",
-        size(expr("filter(toks, w -> w IN ('the', 'a', 'of', 'and', 'to'))")))
-      .select(col("doc_id"), col("n_chars"),
-        r4(when(col("n_chars") < 100, 0.2).otherwise(1.0) *
-          when(col("n_stop") === 0, 0.5).otherwise(1.0)).as("quality"))
-    labels.join(docs, labels("id") === docs("doc_id"))
-      .groupBy(col("lbl").as("cluster_id"))
-      .agg(
-        max(struct(col("quality"), col("n_chars"),
-          (-col("doc_id")).as("neg_id"))).as("mx"),
-        count(lit(1)).as("n_docs"))
-      .select(col("cluster_id"),
-        (-col("mx.neg_id")).as("canonical"),
-        col("mx.quality").as("canon_quality"),
-        col("mx.n_chars").as("canon_chars"),
-        col("n_docs"),
-        (col("n_docs") - 1).as("n_dropped"))
-      .orderBy("cluster_id")
   }
 
   /** X1e: passage-level EXACT-substring dedup — the training-data pass

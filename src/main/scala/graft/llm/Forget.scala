@@ -57,16 +57,22 @@ object Forget {
 
   // ——— T13b/T13c: MinHash pair graph + CC labels ———
 
-  /** The pure delta: (surviving pairs, updated labels) from the stored
-    * (pairs, labels) and a tombstone frame (one `doc_id` column). Public
-    * to the spec so idempotence and rebuild-equality are pinned on the
-    * FRAME algebra, not just the store wiring. */
-  private[llm] def forgetPairFrames(pairs0: DataFrame, labels0: DataFrame,
-      tomb: DataFrame): (DataFrame, DataFrame) = {
-    val kept = pairs0
+  /** The scored (da, db, jaccard) pairs with no endpoint in `tomb` (one
+    * `doc_id` column): two broadcast anti-joins. */
+  private[llm] def dropPairs(pairs: DataFrame, tomb: DataFrame): DataFrame =
+    pairs
       .join(broadcast(tomb.select(col("doc_id").as("da"))), Seq("da"), "left_anti")
       .join(broadcast(tomb.select(col("doc_id").as("db"))), Seq("db"), "left_anti")
       .select("da", "db", "jaccard")
+
+  /** The pure delta: (surviving pairs, updated labels) from the stored
+    * (pairs, labels) and a tombstone frame (one `doc_id` column), the
+    * body of [[Dedup.PairGraph.forget]]. Public to the spec so
+    * idempotence and rebuild-equality are pinned on the FRAME algebra,
+    * not just the store wiring. */
+  private[llm] def forgetPairFrames(pairs0: DataFrame, labels0: DataFrame,
+      tomb: DataFrame): (DataFrame, DataFrame) = {
+    val kept = dropPairs(pairs0, tomb)
     // components holding a tombstoned doc: only these can change (a
     // removed doc can split its own component or take its min-id label
     // with it; no other component gains or loses an edge)
@@ -83,53 +89,26 @@ object Forget {
     (kept, untouched.unionByName(Dedup.clusterLabelsFrom(affPairs)))
   }
 
-  private def forgottenPairStore(s: SparkSession, d: String): java.io.File =
-    Artifacts.buildOnce(s, "minhash_pairs_forgotten", d) { dd =>
-      val base = Dedup.pairStore(s, d)
-      val tomb = t(s, d, "documents").select("doc_id")
-        .filter(tombstoned(col("doc_id")))
-      val (pairs, labels) = forgetPairFrames(
-        graft.Tables.parquet(s, s"$base/pairs"),
-        graft.Tables.parquet(s, s"$base/labels"), tomb)
-      pairs.write.mode("overwrite").parquet(s"$dd/pairs")
-      labels.write.mode("overwrite").parquet(s"$dd/labels")
+  /** `g` with the family's tombstoned docs forgotten: the in-plan
+    * forget, which IS the rebuild-from-purged the store gate pins equal
+    * (the jx `corpus_op` forget routes over a non-standard corpus). */
+  def forgotten(g: Dedup.PairGraph): Dedup.PairGraph =
+    g.forget(g.docs.select("doc_id").filter(tombstoned(col("doc_id"))))
+
+  /** The stored pair graph with the tombstoned docs forgotten, as its own
+    * build-once store over the purged documents. */
+  private[graft] def forgottenPairGraph(s: SparkSession, d: String): Dedup.PairGraph = {
+    val dir = Artifacts.buildOnce(s, "minhash_pairs_forgotten", d) { dd =>
+      val g = forgotten(Dedup.PairGraph.stored(s, d))
+      g.pairs.write.mode("overwrite").parquet(s"$dd/pairs")
+      g.labels.write.mode("overwrite").parquet(s"$dd/labels")
     }
-
-  private def pairsReadout(pairs: DataFrame): DataFrame =
-    pairs.orderBy(desc("jaccard"), asc("da"), asc("db"))
-
-  private def clustersReadout(labels: DataFrame): DataFrame =
-    labels
-      .groupBy(col("lbl").as("cluster_id"))
-      .agg(count(lit(1)).as("n_docs"),
-        concat_ws(",",
-          transform(array_sort(collect_list(col("id"))), _.cast("string")))
-          .as("members"))
-      .orderBy("cluster_id")
-
-  val dedupForgetPairs: Q = (s, d) =>
-    pairsReadout(graft.Tables.parquet(s, s"${forgottenPairStore(s, d)}/pairs"))
-
-  val dedupForgetClusters: Q = (s, d) =>
-    clustersReadout(graft.Tables.parquet(s, s"${forgottenPairStore(s, d)}/labels"))
-
-  // ——— in-plan twins (jx corpus_op fallbacks): the same forget
-  // semantics derived from the corpus frame when no store is available —
-  // which IS the rebuild-from-purged the store gate pins equal ———
-
-  private def forgetFramesOf(docs: DataFrame): (DataFrame, DataFrame) = {
-    val tomb = docs.select("doc_id").filter(tombstoned(col("doc_id")))
-    val pairs = Dedup.minhashScoredPairsFrom(Dedup.shinglesOf(docs))
-      .filter(col("jaccard") >= 0.5)
-      .select(col("da"), col("db"), r4(col("jaccard")).as("jaccard"))
-    forgetPairFrames(pairs, Dedup.clusterLabelsFrom(pairs), tomb)
+    Dedup.PairGraph.at(s, t(s, d, "documents").filter(!tombstoned(col("doc_id"))), dir)
   }
 
-  def forgetPairsOf(docs: DataFrame): DataFrame =
-    pairsReadout(forgetFramesOf(docs)._1)
+  val dedupForgetPairs: Q = (s, d) => Dedup.pairsReadout(forgottenPairGraph(s, d).pairs)
 
-  def forgetClustersOf(docs: DataFrame): DataFrame =
-    clustersReadout(forgetFramesOf(docs)._2)
+  val dedupForgetClusters: Q = (s, d) => Dedup.clusters(forgottenPairGraph(s, d))
 
   def forgetIvfOf(embs: DataFrame): DataFrame = {
     val assign = Similarity.Ivf.of(embs, 16).assign
@@ -143,10 +122,6 @@ object Forget {
   /** In-plan twins of the T13h–T13k stores — the rebuild-from-purged each
     * store gate pins equal (jx `corpus_op` fallbacks for non-standard
     * corpora). */
-  def forgetCanonicalOf(docs: DataFrame): DataFrame =
-    Dedup.canonicalFromLabels(forgetFramesOf(docs)._2,
-      docs.filter(!tombstoned(col("doc_id"))))
-
   def forgetManifestOf(docs: DataFrame): DataFrame =
     TextOps.shardManifest(docs.filter(!tombstoned(col("doc_id"))))
 
@@ -206,23 +181,20 @@ object Forget {
 
   /** The text pair-graph argument holds verbatim for the PAYLOAD pair
     * store (byte-shingle MinHash is the same per-pair-local chain over
-    * the `(doc_id, h)` interface, no bucket cap), so forgetting is the
-    * same two broadcast anti-joins. No label table in this store — the
-    * mm family's clustering rides the text machinery downstream. */
+    * in-row shingle sets, no bucket cap), so forgetting is the same two
+    * broadcast anti-joins ([[dropPairs]]). No label table in this store —
+    * the mm family's clustering rides the text machinery downstream. */
   private def forgottenMmPairStore(s: SparkSession, d: String): java.io.File =
     Artifacts.buildOnce(s, "mm_pairs_forgotten", d) { dd =>
       val base = Multimodal.mmPairStore(s, d)
       val tomb = t(s, d, "documents").select("doc_id")
         .filter(tombstoned(col("doc_id")))
-      graft.Tables.parquet(s, s"$base/pairs")
-        .join(broadcast(tomb.select(col("doc_id").as("da"))), Seq("da"), "left_anti")
-        .join(broadcast(tomb.select(col("doc_id").as("db"))), Seq("db"), "left_anti")
-        .select("da", "db", "jaccard")
+      dropPairs(graft.Tables.parquet(s, s"$base/pairs"), tomb)
         .write.mode("overwrite").parquet(s"$dd/pairs")
     }
 
   val mmForgetPairs: Q = (s, d) =>
-    pairsReadout(graft.Tables.parquet(s, s"${forgottenMmPairStore(s, d)}/pairs"))
+    Dedup.pairsReadout(graft.Tables.parquet(s, s"${forgottenMmPairStore(s, d)}/pairs"))
 
   /** In-plan twin (jx `forget_knn` fallback): full rebuild over the
     * purged membership — by ForgetSpec's pin, exactly what the store's
@@ -235,13 +207,9 @@ object Forget {
   }
 
   /** In-plan twin (jx `forget_payload` fallback). */
-  def forgetPayloadPairsOf(docs: DataFrame): DataFrame = {
-    val tomb = docs.select("doc_id").filter(tombstoned(col("doc_id")))
-    pairsReadout(Multimodal.dedupPairsOf(docs)
-      .join(broadcast(tomb.select(col("doc_id").as("da"))), Seq("da"), "left_anti")
-      .join(broadcast(tomb.select(col("doc_id").as("db"))), Seq("db"), "left_anti")
-      .select("da", "db", "jaccard"))
-  }
+  def forgetPayloadPairsOf(docs: DataFrame): DataFrame =
+    Dedup.pairsReadout(dropPairs(Multimodal.payloadPairsOf(docs),
+      docs.select("doc_id").filter(tombstoned(col("doc_id")))))
 
   // ——— T13f: kNN-graph edges (the re-rank delta) ———
 
@@ -509,10 +477,7 @@ object Forget {
     * table (cluster → argmax-quality member) re-reads from those stored
     * labels joined with the purged docs — splits and min-id renames
     * included. Gate: `dedup_canonical`'s oracle over the purged corpus. */
-  val dedupForgetCanonical: Q = (s, d) =>
-    Dedup.canonicalFromLabels(
-      graft.Tables.parquet(s, s"${forgottenPairStore(s, d)}/labels"),
-      t(s, d, "documents").filter(!tombstoned(col("doc_id"))))
+  val dedupForgetCanonical: Q = (s, d) => Dedup.canonical(forgottenPairGraph(s, d))
 
   // ——— T13k: the SQ8 codes store (frozen stats) ———
 
@@ -697,12 +662,10 @@ object Forget {
           coalesce(sum(when(refs, lit(1L)).otherwise(lit(0L))), lit(0L))
             .as("tomb_refs"))
         .select(lit(store).as("store"), col("n_store"), col("tomb_refs"))
-    val pairDir = forgottenPairStore(s, d)
+    val g = forgottenPairGraph(s, d)
     Seq(
-      rowOf("dedup_pairs", graft.Tables.parquet(s, s"$pairDir/pairs"),
-        tombstoned(col("da")) || tombstoned(col("db"))),
-      rowOf("dedup_labels", graft.Tables.parquet(s, s"$pairDir/labels"),
-        tombstoned(col("id"))),
+      rowOf("dedup_pairs", g.pairs, tombstoned(col("da")) || tombstoned(col("db"))),
+      rowOf("dedup_labels", g.labels, tombstoned(col("id"))),
       rowOf("ivf_lists", graft.Tables.parquet(s, s"${forgottenIvfStore(s, d)}/assign"),
         tombstoned(col("vec_id"))),
       rowOf("knn_edges", graft.Tables.parquet(s, s"${forgottenKnnStore(s, d)}/edges"),

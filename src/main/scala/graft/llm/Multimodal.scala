@@ -376,9 +376,11 @@ object Multimodal {
     graft.llm.TextOps.packMergeFrom(mmPackPartialsOf(t(s, d, "documents")))
 
   /** Byte shingles of the payload — the multimodal twin of
-    * [[Dedup.shinglesOf]]'s word shingles: every 4-byte window of the raw
-    * payload, hashed into the same md5-derived 60-bit space, emitted as
-    * the `(doc_id, h)` shape every MinHash consumer takes. Hex-encoding
+    * [[Dedup.shinglesOf]]'s word shingles: every sampled 4-byte window of
+    * the raw payload, hashed into the same md5-derived 60-bit space. The
+    * library signs and scores them in-row ([[byteMinhashInRow]]);
+    * [[byteShinglesOf]] emits them exploded as `(doc_id, h)` rows, the
+    * reference MultimodalSpec pins the in-row form against. Hex-encoding
     * the blob once and slicing 8-char windows keeps the whole shingle
     * pass in codegen'd Column ops (no UDF, no byte-array lambda), and is
     * what lets the DuckDB oracle reproduce identical hashes: both engines
@@ -417,10 +419,11 @@ object Multimodal {
 
   /** X5d: payload-level near-duplicate pairs — image/audio copy detection
     * re-expressed on the text stand-in payloads. The ENTIRE MinHash
-    * machinery is reused verbatim over [[byteShinglesOf]]'s output
-    * (signature mins, 4×2 banding, bucket join, exact-Jaccard verify):
-    * the point of the `(doc_id, h)` shingle interface is that "what gets
-    * shingled" is the only modality-specific code. With a real codec,
+    * machinery is reused verbatim over [[byteMinhashInRow]]'s in-row
+    * shingle sets (signature mins, 4×2 banding, bucket join,
+    * exact-Jaccard verify, [[Dedup.PairGraph.ofSets]]): the point of the
+    * `(doc_id, hs)` set interface is that "what gets shingled" is the
+    * only modality-specific code. With a real codec,
     * swap the hex windows for decoded-frame pHashes and the chain is
     * untouched.
     *
@@ -441,22 +444,24 @@ object Multimodal {
     * under the oracle. */
   private[llm] def mmPairStore(s: SparkSession, d: String): java.io.File =
     Artifacts.buildOnce(s, "mm_pairs", d) { dd =>
-      dedupPairsOf(t(s, d, "documents"))
+      payloadPairsOf(t(s, d, "documents"))
         .write.mode("overwrite").parquet(s"$dd/pairs")
     }
 
   val mmDedup: Q = (s, d) =>
-    graft.Tables.parquet(s, s"${mmPairStore(s, d)}/pairs")
-      .orderBy(desc("jaccard"), asc("da"), asc("db"))
+    Dedup.pairsReadout(graft.Tables.parquet(s, s"${mmPairStore(s, d)}/pairs"))
 
-  /** [[mmDedup]]'s chain over ANY documents-shaped frame — the jx
-    * `corpus_op` front end's IN-PLAN fallback (same contract as
-    * [[Dedup.canonicalOf]]); the standard corpus goes through the store. */
-  def dedupPairsOf(docsIn: DataFrame): DataFrame =
-    Dedup.minhashScoredPairsFrom(byteShinglesOf(withPayload(docsIn)))
-      .filter(col("jaccard") >= 0.5)
-      .select(col("da"), col("db"), r4(col("jaccard")).as("jaccard"))
-      .orderBy(desc("jaccard"), asc("da"), asc("db"))
+  /** The payload pairs (da, db, jaccard) of ANY documents-shaped frame,
+    * scored from its in-row byte-shingle sets ([[byteMinhashInRow]]),
+    * materialized once for the band and verify sides. */
+  private[llm] def payloadPairsOf(docsIn: DataFrame): DataFrame =
+    Dedup.PairGraph.ofSets(docsIn, materialize(
+      byteMinhashInRow(withPayload(docsIn)).select("doc_id", "hs", "n_sh"), "mm.payload_sets")).pairs
+
+  /** [[mmDedup]] over ANY documents-shaped frame — the jx `corpus_op`
+    * front end's IN-PLAN fallback; the standard corpus goes through the
+    * store. */
+  def dedupPairsOf(docsIn: DataFrame): DataFrame = Dedup.pairsReadout(payloadPairsOf(docsIn))
 
   /** Per-payload quality/integrity gate over the DECODED features — the
     * multimodal twin of the text quality score, shaped for pipeline
@@ -502,7 +507,12 @@ object Multimodal {
     * exploded build by the same min-over-multiset argument as the text
     * twin (MultimodalSpec pins it), which is what lets the SAME payload
     * index semantics gate an unbounded stream of arriving media rows:
-    * per-row map, zero state. */
+    * per-row map, zero state. A payload with no sampled window keeps its
+    * row with an empty `hs` and null `bands`, so it bands into no bucket:
+    * a filter on `hs` would be pushed below the scan repartition and run
+    * the whole md5 chain a second time in the scan's single task, with
+    * `hx` inlined into every window (measured at sf0.1: 9.5 s for the
+    * corpus sets, against 4.2 s for the exploded build). */
   def byteMinhashInRow(mm: DataFrame): DataFrame = {
     val shArr =
       s"""transform($SampledWindowsSql,
@@ -513,8 +523,7 @@ object Multimodal {
       graft.operators.Common.spreadScan(mm)
         .withColumn("hx", hex(col("payload")))
         .filter(length(col("hx")) >= 8)
-        .withColumn("hs", expr(s"array_sort(array_distinct($shArr))"))
-        .filter(size(col("hs")) >= 1))
+        .withColumn("hs", expr(s"array_sort(array_distinct($shArr))")))
       .drop("hx")
   }
 
@@ -527,7 +536,7 @@ object Multimodal {
   val mmOnlineGate: Q = (s, d) => {
     val mm = withPayload(t(s, d, "documents"))
     val dir = Artifacts.buildOnce(s, "mm_gate", d)(dd =>
-      Dedup.writeBandIndex(byteShinglesOf(mm), dd))
+      Dedup.writeBandIndex(byteMinhashInRow(mm), s"$dd"))
     Dedup.dedupAgainstCorpusSigned(
         materialize(byteMinhashInRow(mm.filter(col("doc_id") % 10 === 0)),
           "mm.probe_signatures"),

@@ -168,9 +168,7 @@ object Pipeline {
     // argmax over (quality, n_chars, -doc_id), `dedup_canonical`'s exact
     // pick, so the pipeline drops the truncated copies instead of
     // whichever duplicate happened to crawl first
-    val labels = Dedup.clusterLabelsFrom(
-      Dedup.minhashScoredPairsOfSets(corpusSets)
-        .filter(col("jaccard") >= jaccardThreshold))
+    val labels = Dedup.PairGraph.ofSets(hygCorpus, corpusSets, jaccardThreshold).labels
     val dropIds = canonicalQuality match {
       case Some(chars) =>
         // Left join with n_chars defaulting to 0: a clustered doc missing

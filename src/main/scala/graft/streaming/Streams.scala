@@ -518,22 +518,15 @@ object Streams {
     * is never re-shingled; each arriving batch pays its own signature
     * pass plus band-bucket joins. */
   def pairStoreInit(base: DataFrame, dir: String): Unit = {
-    val sh = materialize(graft.llm.Dedup.shinglesOf(base), "streams.pair_shingles")
-    graft.llm.Dedup.minhashBandsFromShingles(sh)
-      .write.mode("overwrite").parquet(s"$dir/bands")
-    graft.llm.Dedup.docShingleSetsFromShingles(sh)
-      .write.mode("overwrite").parquet(s"$dir/sets")
-    sinkBatch(
-      graft.llm.Dedup.minhashScoredPairsFrom(sh)
-        .filter(col("jaccard") >= 0.5)
-        .select(col("da"), col("db"),
-          graft.operators.Common.r4(col("jaccard")).as("jaccard")),
-      -1L, s"$dir/pairs")
+    val signed = graft.llm.Dedup.writeBandIndex(graft.llm.Dedup.minhashInRow(base), dir,
+      "streams.pair_base_signatures")
+    sinkBatch(graft.llm.Dedup.PairGraph.ofSets(base, signed).pairs, -1L, s"$dir/pairs")
   }
 
   def pairDeltaSink(batch: DataFrame, batchId: Long, dir: String): Unit = {
     val s = batch.sparkSession
-    val signed = materialize(graft.llm.Dedup.minhashInRow(batch), "streams.pair_signatures")
+    val signed = graft.llm.Dedup.materializeSigned(
+      graft.llm.Dedup.minhashInRow(batch), "streams.pair_signatures")
     def withDelta(basePath: String, deltaPath: String, cols: Seq[String]) = {
       val b = graft.Tables.parquet(s, basePath).selectExpr(cols: _*)
       // a URI delta path (file:, hdfs:, s3a:) must be seen too, or the
@@ -547,16 +540,9 @@ object Streams {
     val sets = withDelta(s"$dir/sets", s"$dir/dsets",
       Seq("doc_id", "hs", "n_sh"))
     val cross = graft.llm.Dedup.crossPairsSigned(signed, bands, sets)
-    val internal = graft.llm.Dedup
-      .minhashScoredPairsFrom(graft.llm.Dedup.shinglesOf(batch))
-      .filter(col("jaccard") >= 0.5)
-      .select(col("da"), col("db"),
-        graft.operators.Common.r4(col("jaccard")).as("jaccard"))
+    val internal = graft.llm.Dedup.PairGraph.ofSets(batch, signed).pairs
     sinkBatch(cross.unionByName(internal).distinct(), batchId, s"$dir/pairs")
-    sinkBatch(
-      signed.select(col("doc_id"), posexplode(col("bands")))
-        .select(col("doc_id"), col("pos").as("band"), col("col").as("bh")),
-      batchId, s"$dir/dbands")
+    sinkBatch(graft.llm.Dedup.signedBands(signed), batchId, s"$dir/dbands")
     sinkBatch(signed.select("doc_id", "hs", "n_sh"), batchId, s"$dir/dsets")
   }
 
@@ -564,9 +550,17 @@ object Streams {
     * every delta partition — exact duplicates from post-hoc
     * redeliveries collapse here. */
   def pairStoreReadout(s: SparkSession, dir: String): DataFrame =
-    graft.Tables.parquet(s, s"$dir/pairs")
-      .select("da", "db", "jaccard").distinct()
-      .orderBy(desc("jaccard"), asc("da"), asc("db"))
+    graft.llm.Dedup.pairsReadout(streamedPairs(s, dir))
+
+  private def streamedPairs(s: SparkSession, dir: String): DataFrame =
+    graft.Tables.parquet(s, s"$dir/pairs").select("da", "db", "jaccard").distinct()
+
+  /** The streamed pair and label stores under `dir` as the pair graph of
+    * `docs`, the way [[graft.llm.Dedup.PairGraph.stored]] opens the batch
+    * store: every pair-graph analysis reads it unchanged. */
+  private def pairGraphStored(s: SparkSession, dir: String,
+      docs: DataFrame): graft.llm.Dedup.PairGraph =
+    new graft.llm.Dedup.PairGraph(docs, streamedPairs(s, dir), labelStoreReadout(s, dir))
 
   /** ST12b: incremental connected-component LABEL maintenance over the
     * streamed pair store — the missing streamed maintainer for the
@@ -795,8 +789,7 @@ object Streams {
       pairDeltaSink(docs.filter(col("doc_id") % 3 === 1), 1L, p)
       labelDeltaSink(s, 1L, p)
     }
-    graft.llm.Dedup.canonicalFromLabels(
-      labelStoreReadout(s, s"$dir/p"), t(s, d, "documents"))
+    graft.llm.Dedup.canonical(pairGraphStored(s, s"$dir/p", t(s, d, "documents")))
   }
 
   /** ST13 batch twin / driver gate: three deterministic micro-batches

@@ -373,30 +373,42 @@ class CorpusOpsSpec extends graft.SparkSpec {
     "result set") {
     // the jx corpus_op falls back to the in-plan build whenever the
     // corpus subquery or knobs are non-standard — the fallback must be
-    // the same computation, not a drifting twin. Each op runs at nlist 16
-    // without a dataset (its in-plan route) against the driver key its
-    // stored route answers with.
+    // the same computation, not a drifting twin. Each op runs without a
+    // dataset (its in-plan route; the IVF and kNN-graph ops at nlist 16,
+    // the pair-graph ops, which read no knob, at none) against the driver
+    // key its stored route answers with.
+    val nlist16 = """, "nlist": 16"""
     val twins = Seq("knn_stats", "knn_clusters", "knn_diverse", "knn_recall",
         "quantizer_refresh", "knn_join", "probe_tuning", "semantic_dedup",
         "semantic_decon", "decon_recall", "decon_report")
-      .map(op => (op, "embeddings", s"sim_$op")) ++ Seq(
-      ("payload_semantic_dedup", "documents", "mm_semantic_dedup"),
-      ("payload_knn", "documents", "mm_knn"),
-      ("payload_semantic_decon", "documents", "mm_semantic_decon"),
-      ("payload_decon_report", "documents", "mm_decon_report"),
+      .map(op => (op, "embeddings", s"sim_$op", nlist16)) ++ Seq(
+      ("payload_semantic_dedup", "documents", "mm_semantic_dedup", nlist16),
+      ("payload_knn", "documents", "mm_knn", nlist16),
+      ("payload_semantic_decon", "documents", "mm_semantic_decon", nlist16),
+      ("payload_decon_report", "documents", "mm_decon_report", nlist16),
       // the topics come from an in-plan quantizer over the embeddings table
-      ("topic_mix", "documents", "text_topic_mix"))
-    twins.foreach { case (op, from, key) =>
+      ("topic_mix", "documents", "text_topic_mix", nlist16)) ++ Seq(
+      "soft_sample" -> "sample_soft_dedup",
+      "threshold_tuning" -> "dedup_threshold_tuning",
+      "reweight" -> "dedup_reweight",
+      "split_stratified" -> "dedup_split_stratified",
+      "split_leakfree" -> "dedup_split_leakfree",
+      "dedup_profile" -> "dedup_profile",
+      "pair_centrality" -> "dedup_centrality",
+      "canonical" -> "dedup_canonical",
+      "forget_pairs" -> "dedup_forget_pairs",
+      "forget_clusters" -> "dedup_forget_clusters",
+      "forget_canonical" -> "dedup_forget_canonical",
+      "payload_dedup" -> "mm_dedup",
+      "forget_payload" -> "mm_forget_pairs")
+      .map { case (op, key) => (op, "documents", key, "") }
+    twins.foreach { case (op, from, key, knobs) =>
       val inPlan = graft.jx.Jx.run(spark,
-        s"""{"corpus_op": {"op": "$op", "corpus": {"from": "$from"}, "nlist": 16}}""",
+        s"""{"corpus_op": {"op": "$op", "corpus": {"from": "$from"}$knobs}}""",
         graft.Tables.t(spark, sf, _))
       assert(inPlan.collect().map(_.toString).toSeq ===
         run(key).collect().map(_.toString).toSeq, op)
     }
-    val docs = graft.Tables.t(spark, sf, "documents")
-    // canonical: in-plan pair-chain fallback == stored pair-graph probe
-    assert(Dedup.canonicalOf(docs).collect().map(_.toString).toSeq ===
-      run("dedup_canonical").collect().map(_.toString).toSeq)
   }
 
   test("quantizer refresh report conserves the corpus and balances " +
@@ -766,16 +778,14 @@ class CorpusOpsSpec extends graft.SparkSpec {
         canonicalQuality = Some(docs.select("doc_id", "n_chars")))
       .select("doc_id").collect().map(_.getLong(0)).toSet
     // outside the near-dup clusters the two chains are identical
-    val labels = Dedup.clusterLabelsFrom(
-      Dedup.minhashScoredPairsFrom(Dedup.shinglesOf(corpus))
-        .filter(col("jaccard") >= 0.5)).collect()
+    val labels = Dedup.clusterLabelsFrom(Dedup.PairGraph.of(corpus).pairs).collect()
     val clustered = labels.map(_.getLong(0)).toSet
     assert((base -- clustered) === (can -- clustered),
       "canonical rule must only affect clustered docs")
     // every clustered survivor of the canonical chain is its cluster's
     // dedup_canonical pick (decontamination may drop a pick entirely,
     // hence subset, not equality)
-    val picks = Dedup.canonicalOf(corpus).collect()
+    val picks = Dedup.canonical(Dedup.PairGraph.of(corpus)).collect()
       .map(_.getAs[Long]("canonical")).toSet
     assert((can & clustered).subsetOf(picks),
       s"non-argmax survivors: ${(can & clustered) -- picks}")

@@ -168,7 +168,7 @@ class DedupSpec extends graft.SparkSpec {
 
   test("in-row minhash signatures equal the batch groupBy pipeline's exactly") {
     val docs = spark.read.parquet(s"$corpusDir/documents.parquet")
-    val batch = Dedup.minhashBands(docs)
+    val batch = Dedup.minhashBandsFromShingles(Dedup.shinglesOf(docs))
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet
     val inRow = Dedup.minhashInRow(docs)
       .select(col("doc_id"), org.apache.spark.sql.functions.posexplode(col("bands")))
@@ -179,7 +179,7 @@ class DedupSpec extends graft.SparkSpec {
   test("online gate: a streamed near-dup of the corpus is flagged, a novel doc is not") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val corpus = spark.read.parquet(s"$corpusDir/documents.parquet")
-    val corpusBands = Dedup.minhashBands(corpus)
+    val corpusBands = Dedup.minhashBandsFromShingles(Dedup.shinglesOf(corpus))
     val corpusSets = Dedup.docShingleSets(corpus)
 
     // a near-dup of corpus doc 0 (2 of its 40 words changed — the same

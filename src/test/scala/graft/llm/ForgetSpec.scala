@@ -62,15 +62,11 @@ class ForgetSpec extends graft.SparkSpec {
     "(labels AND pairs, in-engine)") {
     val docs = graft.Tables.t(spark, sf, "documents")
     val tomb = docs.select("doc_id").filter(col("doc_id") % 37 === 0)
-    val fullPairs = Dedup.minhashScoredPairsFrom(Dedup.shinglesOf(docs))
-      .filter(col("jaccard") >= 0.5)
-      .select(col("da"), col("db"), round(col("jaccard"), 4).as("jaccard"))
+    val fullPairs = Dedup.PairGraph.of(docs).pairs
     val fullLabels = Dedup.clusterLabelsFrom(fullPairs)
     val (kept, relab) = Forget.forgetPairFrames(fullPairs, fullLabels, tomb)
     val purged = docs.filter(col("doc_id") % 37 =!= 0)
-    val rebuiltPairs = Dedup.minhashScoredPairsFrom(Dedup.shinglesOf(purged))
-      .filter(col("jaccard") >= 0.5)
-      .select(col("da"), col("db"), round(col("jaccard"), 4).as("jaccard"))
+    val rebuiltPairs = Dedup.PairGraph.of(purged).pairs
     assert(kept.collect().toSet === rebuiltPairs.collect().toSet)
     assert(Dedup.clusterLabelsFrom(rebuiltPairs).collect().toSet
       === relab.collect().toSet)

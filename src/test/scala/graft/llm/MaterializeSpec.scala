@@ -71,4 +71,26 @@ class MaterializeSpec extends graft.SparkSpec {
       clusters)
     assert(clusters.take(recall.size) === recall, clusters)
   }
+
+  /** The label of every job the in-plan route of a pair-graph corpus_op
+    * over the sf0.01 documents runs while it is built, in start order. */
+  private def inPlanPairLabels(op: String): Seq[Option[String]] =
+    jobLabelsDuring(graft.jx.Jx.run(spark,
+      s"""{"corpus_op": {"op": "$op", "corpus": {"from": "documents"}}}""",
+      graft.Tables.t(spark, sf, _)))
+
+  test("an in-plan pair graph labels its components only for a readout over the labels") {
+    // centrality and threshold tuning read the pairs alone: the shingle
+    // sets, and no CC job
+    for (op <- Seq("pair_centrality", "threshold_tuning")) {
+      val labels = inPlanPairLabels(op)
+      assert(runs(labels).head === Some("dedup.shingle_sets"), s"$op: $labels")
+      assert(!labels.flatten.exists(_.startsWith("dedup.cc_")), s"$op: $labels")
+    }
+    // canonical reads the labels: the same sets, then the CC pair list
+    // once and its unlabelled driver fetch
+    val canonical = inPlanPairLabels("canonical")
+    assert(runs(canonical) === Seq(Some("dedup.shingle_sets"), Some("dedup.cc_pairs"), None),
+      canonical)
+  }
 }

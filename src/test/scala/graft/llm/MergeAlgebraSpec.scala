@@ -111,10 +111,7 @@ class MergeAlgebraSpec extends graft.SparkSpec {
       // each text appears twice at different ids — guaranteed near-dups
       val docs = (texts ++ texts).zipWithIndex
         .map { case (t0, i) => (i.toLong, t0) }.toDF("doc_id", "text")
-      val full = Dedup.minhashScoredPairsFrom(Dedup.shinglesOf(docs))
-        .filter(col("jaccard") >= 0.5)
-        .select(col("da"), col("db"), round(col("jaccard"), 4).as("jaccard"))
-        .orderBy(desc("jaccard"), asc("da"), asc("db"))
+      val full = Dedup.pairsReadout(Dedup.PairGraph.of(docs).pairs)
         .collect().map(_.toString).toSeq
       assert(full.nonEmpty, s"seed $seed produced no near-dup pairs")
       val inc = Dedup.pairsDeltaOf(

@@ -47,7 +47,8 @@ class MultimodalSpec extends graft.SparkSpec {
       .toDF("doc_id", "text", "lang", "source", "n_chars")
     val mm = Multimodal.withPayload(mmDocs)
 
-    val pairs = Dedup.minhashScoredPairsFrom(Multimodal.byteShinglesOf(mm))
+    val pairs = Dedup.minhashScoredPairsOfSets(
+        Dedup.docShingleSetsFromShingles(Multimodal.byteShinglesOf(mm)))
       .filter(col("jaccard") >= 0.5)
       .select("da", "db").as[(Long, Long)].collect().toSet
     assert(pairs.contains((10L, 11L)), s"near-dup payload pair missing: $pairs")

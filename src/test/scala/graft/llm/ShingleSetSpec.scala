@@ -8,8 +8,8 @@ import org.apache.spark.sql.functions._
   * ([[Dedup.docShingleSets]]), MinHash pairs scored from them
   * ([[Dedup.minhashScoredPairsOfSets]]) and the bench overlap
   * ([[Dedup.benchOverlaps]]) — against a reference built from the
-  * exploded (doc_id, h) shingle table ([[Dedup.shinglesOf]],
-  * [[Dedup.minhashScoredPairsFrom]] and a distinct-based overlap), on a
+  * exploded (doc_id, h) shingle table ([[Dedup.shinglesOf]] regrouped by
+  * [[Dedup.docShingleSetsFromShingles]], and a distinct-based overlap), on a
   * hand-built corpus and benchmark whose every row is an edge case. */
 class ShingleSetSpec extends graft.SparkSpec {
   import spark.implicits._
@@ -58,7 +58,8 @@ class ShingleSetSpec extends graft.SparkSpec {
     val cSh = Dedup.shinglesOf(hyg(corpus))
     val bSh = Dedup.shinglesOf(hyg(bench))
     val drop = Dedup.clusterLabelsFrom(
-        Dedup.minhashScoredPairsFrom(cSh).filter(col("jaccard") >= 0.5))
+        Dedup.minhashScoredPairsOfSets(Dedup.docShingleSetsFromShingles(cSh))
+          .filter(col("jaccard") >= 0.5))
       .filter(col("id") =!= col("lbl")).select(col("id").as("doc_id"))
     val contaminated = cSh.join(bSh.select("h").distinct(), Seq("h"))
       .groupBy("doc_id").agg(count(lit(1)).as("n"))
@@ -82,11 +83,31 @@ class ShingleSetSpec extends graft.SparkSpec {
 
   test("MinHash pairs scored from the sets equal the exploded pipeline's") {
     val fromSets = Dedup.minhashScoredPairsOfSets(Dedup.docShingleSets(corpus))
-    val exploded = Dedup.minhashScoredPairsFrom(Dedup.shinglesOf(corpus))
+    val exploded = Dedup.minhashScoredPairsOfSets(
+      Dedup.docShingleSetsFromShingles(Dedup.shinglesOf(corpus)))
     assert(rows(fromSets) === rows(exploded))
     val pairs = fromSets.filter(col("jaccard") >= 0.5).collect()
       .map(r => (r.getAs[Long]("da"), r.getAs[Long]("db"))).toSet
     assert(pairs === Set((21L, 22L), (40L, 41L), (41L, 42L)), pairs)
+  }
+
+  test("a repeated doc_id keeps one shingle set per row") {
+    // doc 60 comes twice: once as a copy of doc 40, once as unrelated
+    // text. The in-row sets keep a row each, so the copy pairs with 40
+    // and 41; the exploded table merges both rows into one set of 38 + 48
+    // shingles, whose jaccard with doc 40 is 38/86
+    val docs = Seq(40L -> a.mkString(" "), 41L -> b.mkString(" "),
+      60L -> a.mkString(" "), 60L -> words("u", 50).mkString(" "))
+      .toDF("doc_id", "text")
+    assert(Dedup.docShingleSets(docs).filter(col("doc_id") === 60L).count() === 2L)
+    def pairIds(df: DataFrame) = df.filter(col("jaccard") >= 0.5).collect()
+      .map(r => (r.getAs[Long]("da"), r.getAs[Long]("db"))).toSet
+    val g = Dedup.PairGraph.of(docs)
+    assert(pairIds(g.pairs) === Set((40L, 41L), (40L, 60L), (41L, 60L)))
+    assert(rows(g.labels) === Seq("[40,40]", "[41,40]", "[60,40]"))
+    val exploded = Dedup.minhashScoredPairsOfSets(
+      Dedup.docShingleSetsFromShingles(Dedup.shinglesOf(docs)))
+    assert(pairIds(exploded) === Set((40L, 41L)))
   }
 
   test("bench overlap counts a shingle shared by two bench docs once") {

@@ -166,9 +166,7 @@ class StreamsSpec extends graft.SparkSpec {
     val docs = graft.Tables.t(spark, sf, "documents")
       .select("doc_id", "text")
     // the exactness target: CC labels over the full-corpus pair graph
-    val fullPairs = graft.llm.Dedup
-      .minhashScoredPairsFrom(graft.llm.Dedup.shinglesOf(docs))
-      .filter(col("jaccard") >= 0.5)
+    val fullPairs = graft.llm.Dedup.PairGraph.of(docs).pairs
     val full = graft.llm.Dedup.clusterLabelsFrom(fullPairs)
       .orderBy("id").collect().map(_.toString).toSeq
 
