@@ -384,16 +384,19 @@ object Dedup {
   }
 
   /** Banded-LSH candidates + exact-Jaccard verify over per-doc
-    * (doc_id, hs, n_sh) shingle sets ([[docShingleSets]], or a signed
-    * frame of [[minhashInRow]]): the (da, db, jaccard, …) scored pair set
-    * every MinHash consumer ([[PairGraph]], the pair deltas) derives
-    * from. The band keys come in-row from `hs`
-    * ([[minhashInRowFromHashes]]) and the verify reads `hs`/`n_sh` as
-    * they are: no signature groupBy. */
+    * (doc_id, hs, n_sh) shingle sets ([[docShingleSets]]): the
+    * (da, db, jaccard, …) scored pair set every MinHash consumer
+    * ([[PairGraph]], the pair deltas) derives from. The sets are signed
+    * in-row ([[minhashInRowFromHashes]]): no signature groupBy. */
   def minhashScoredPairsOfSets(sets: DataFrame): DataFrame =
-    verifyJaccard(
-      bandCandidates(signedBands(minhashInRowFromHashes(sets.select("doc_id", "hs")))),
-      sets)
+    minhashScoredPairsOfSigned(minhashInRowFromHashes(sets.select("doc_id", "hs")))
+
+  /** The scored pair set of a signed frame (doc_id, hs, n_sh, bands), a
+    * [[minhashInRow]] output: candidates from its `bands` as they are,
+    * verified on its `hs`/`n_sh`. A materialized signed frame is not
+    * signed again. */
+  private[graft] def minhashScoredPairsOfSigned(signed: DataFrame): DataFrame =
+    verifyJaccard(bandCandidates(signedBands(signed)), signed)
 
   /** The (doc_id, band, bh) rows of a signed frame's band-key array
     * ([[minhashInRow]]'s `bands`). */
@@ -435,19 +438,13 @@ object Dedup {
     * identical stateless signature chain. */
   private[graft] def minhashInRowFromHashes(withHs: DataFrame): DataFrame = {
     val M = MinhashM
-    val withSig = (0 until MinhashK).foldLeft(
-      withHs
-        .withColumn("n_sh", size(col("hs")).cast("long"))
-        .withColumn("hbs", expr(s"transform(hs, h -> pmod(h, ${M}L))"))) {
-      (df, k) =>
-        df.withColumn(s"h$k", expr(
-          s"array_min(transform(hbs, x -> pmod(${2 * k + 1}L * x + ${104729L * (k + 1)}L, ${M}L)))"))
-    }
+    def min(k: Int) = s"array_min(transform(hs, h -> " +
+      s"pmod(${2 * k + 1}L * pmod(h, ${M}L) + ${104729L * (k + 1)}L, ${M}L)))"
     // an empty set has no band key: its null `bands` explode to no rows,
     // where all-null mins would put every empty set in one bucket
-    withSig
-      .withColumn("bands", when(col("n_sh") > 0, expr(minhashBandArraySql(k => s"h$k"))))
-      .drop(("hbs" +: (0 until MinhashK).map(k => s"h$k")): _*)
+    withHs.withColumns(scala.collection.immutable.ListMap(
+      "n_sh" -> size(col("hs")).cast("long"),
+      "bands" -> when(size(col("hs")) > 0, expr(minhashBandArraySql(min)))))
   }
 
   /** The (doc_id, hs, n_sh) sets of [[docShingleSets]] regrouped from a
@@ -493,11 +490,21 @@ object Dedup {
         "dedup.shingle_sets"))
 
     /** The graph of `docs` over their per-doc (doc_id, hs, n_sh) shingle
-      * sets (or a signed frame of them), keeping the pairs whose
+      * sets, keeping the pairs whose
       * unrounded jaccard is at least `threshold`. The sets are read three
       * times, so a caller passes them materialized. */
-    def ofSets(docs: DataFrame, sets: DataFrame, threshold: Double = 0.5): PairGraph = {
-      val pairs = minhashScoredPairsOfSets(sets)
+    def ofSets(docs: DataFrame, sets: DataFrame, threshold: Double = 0.5): PairGraph =
+      ofScored(docs, minhashScoredPairsOfSets(sets), threshold)
+
+    /** The graph of `docs` over their signed frame ([[minhashInRow]]'s
+      * doc_id, hs, n_sh, bands), passed materialized: its band keys are
+      * read, not recomputed. */
+    private[graft] def ofSigned(docs: DataFrame, signed: DataFrame,
+        threshold: Double = 0.5): PairGraph =
+      ofScored(docs, minhashScoredPairsOfSigned(signed), threshold)
+
+    private def ofScored(docs: DataFrame, scored: DataFrame, threshold: Double): PairGraph = {
+      val pairs = scored
         .filter(col("jaccard") >= threshold)
         .select(col("da"), col("db"), r4(col("jaccard")).as("jaccard"))
       new PairGraph(docs, pairs, clusterLabelsFrom(pairs))
@@ -847,9 +854,9 @@ object Dedup {
   def pairsDeltaOf(base: DataFrame, delta: DataFrame): DataFrame = {
     val baseSigned = materializeSigned(minhashInRow(base), "dedup.base_signatures")
     val deltaSigned = materializeSigned(minhashInRow(delta), "dedup.delta_signatures")
-    PairGraph.ofSets(base, baseSigned).pairs
+    PairGraph.ofSigned(base, baseSigned).pairs
       .unionByName(crossPairsSigned(deltaSigned, signedBands(baseSigned), baseSigned))
-      .unionByName(PairGraph.ofSets(delta, deltaSigned).pairs)
+      .unionByName(PairGraph.ofSigned(delta, deltaSigned).pairs)
   }
 
   /** Canonically-ordered (da < db) scored pairs between a SIGNED probe
@@ -1077,21 +1084,8 @@ object Dedup {
     * boilerplate mega-cluster. */
   val dedupCanonical: Q = (s, d) => canonical(PairGraph.stored(s, d))
 
-  def canonical(g: PairGraph): DataFrame = {
-    val docs = g.docs
-      .withColumn("toks", split(col("text"), " "))
-      .withColumn("n_stop",
-        size(expr("filter(toks, w -> w IN ('the', 'a', 'of', 'and', 'to'))")))
-      .select(col("doc_id"), col("n_chars"),
-        r4(when(col("n_chars") < 100, 0.2).otherwise(1.0) *
-          when(col("n_stop") === 0, 0.5).otherwise(1.0)).as("quality"))
-    val labels = g.labels
-    labels.join(docs, labels("id") === docs("doc_id"))
-      .groupBy(col("lbl").as("cluster_id"))
-      .agg(
-        max(struct(col("quality"), col("n_chars"),
-          (-col("doc_id")).as("neg_id"))).as("mx"),
-        count(lit(1)).as("n_docs"))
+  def canonical(g: PairGraph): DataFrame =
+    canonicalPicks(g.labels, g.docs)
       .select(col("cluster_id"),
         (-col("mx.neg_id")).as("canonical"),
         col("mx.quality").as("canon_quality"),
@@ -1099,6 +1093,27 @@ object Dedup {
         col("n_docs"),
         (col("n_docs") - 1).as("n_dropped"))
       .orderBy("cluster_id")
+
+  /** The canonical pick of every cluster of `labels` (id, lbl) over the
+    * (doc_id, n_chars, text) `docs`: per cluster (`cluster_id`, its
+    * `n_docs`), `mx` = the max of (quality, n_chars, neg_id = -doc_id),
+    * so the pick is the doc -mx.neg_id. The one definition behind
+    * [[canonical]] and the quality-aware survivors of
+    * [[Pipeline.corpusSurvivors]]. */
+  private[llm] def canonicalPicks(labels: DataFrame, docs: DataFrame): DataFrame = {
+    val q = docs
+      .withColumn("toks", split(col("text"), " "))
+      .withColumn("n_stop",
+        size(expr("filter(toks, w -> w IN ('the', 'a', 'of', 'and', 'to'))")))
+      .select(col("doc_id"), col("n_chars"),
+        r4(when(col("n_chars") < 100, 0.2).otherwise(1.0) *
+          when(col("n_stop") === 0, 0.5).otherwise(1.0)).as("quality"))
+    labels.join(q, labels("id") === q("doc_id"))
+      .groupBy(col("lbl").as("cluster_id"))
+      .agg(
+        max(struct(col("quality"), col("n_chars"),
+          (-col("doc_id")).as("neg_id"))).as("mx"),
+        count(lit(1)).as("n_docs"))
   }
 
   /** Every doc of the graph with its `carry` columns and its cluster id:

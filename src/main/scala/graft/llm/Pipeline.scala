@@ -127,32 +127,34 @@ object Pipeline {
     // gate — only docs passing EVERY heuristic rule reach the shingle
     // pass (the cheapest of the front gates: pure per-row string work,
     // no corpus-wide model, so at 100 TB it runs first among filters)
-    // EVERY gate's keep list materializes ONCE (KB-scale — one row per
-    // kept doc): the gated corpus is referenced by several consumers (the
-    // shingle union, the survivor joins, canonical's quality frame), and
+    // EVERY gate's keep list materializes ONCE (KB-scale — one decision
+    // per gated doc): the gated corpus is referenced by several consumers
+    // (the shingle union, the survivor joins, canonical's quality frame), and
     // an unmaterialized gate subtree — a corpus-wide word explode +
     // frequency join + rank window for quality/tiered, three such passes
-    // for ensemble, the rule chain's large decoration codegen tree for
-    // rules — replayed under EACH consumer (r18 plan read: the ensemble
+    // for ensemble, the rule table's per-doc counting pass for rules —
+    // replayed under EACH consumer (r18 plan read: the ensemble
     // chain carried 92 scans / 132 exchanges; the rules branch measured
     // 28.5 s → 0.8 s when its list was first materialized in r17).
     // Production shape: a gate output IS a persisted decision list.
+    // Each gate yields its (doc_id, keep) decisions, materialized before
+    // the keep filter: a filter over the rule verdicts would be pushed
+    // below their projection and count each doc once per verdict read.
     def gated(srcs: DataFrame) = hygCorpus0.join(srcs, Seq("doc_id"))
-    val keep: Option[DataFrame] =
+    val decisions: Option[DataFrame] =
       (qualitySources, ensembleSources, tieredSources, rulesSources) match {
-      case (Some(srcs), _, _, _) => Some(TextOps.qualityFilterOf(gated(srcs)))
-      case (None, Some(srcs), _, _) =>
-        Some(TextOps.ensembleVotesOf(gated(srcs)).filter(col("keep")))
-      case (None, None, Some(srcs), _) =>
-        Some(TextOps.pplGateOf(gated(srcs)).filter(col("keep")))
-      case (None, None, None, Some(srcs)) =>
-        Some(TextOps.ruleVerdictsOf(gated(srcs)).filter(col("keep")))
+      case (Some(srcs), _, _, _) =>
+        Some(TextOps.qualityFilterOf(gated(srcs)).withColumn("keep", lit(true)))
+      case (None, Some(srcs), _, _) => Some(TextOps.ensembleVotesOf(gated(srcs)))
+      case (None, None, Some(srcs), _) => Some(TextOps.pplGateOf(gated(srcs)))
+      case (None, None, None, Some(srcs)) => Some(TextOps.ruleVerdictsOf(gated(srcs)))
       case (None, None, None, None) => None
     }
     // a semi join: the kept ids, not the corpus text, are the side a
     // join can broadcast
-    val hygCorpus = keep.fold(hygCorpus0)(k => hygCorpus0.join(
-      materialize(k.select("doc_id"), "pipeline.keep_list"), Seq("doc_id"), "left_semi"))
+    val hygCorpus = decisions.fold(hygCorpus0)(k => hygCorpus0.join(
+      materialize(k.select("doc_id", "keep"), "pipeline.keep_list")
+        .filter(col("keep")).select("doc_id"), Seq("doc_id"), "left_semi"))
     // the one shingle pass over corpus ∪ bench: one row per doc with its
     // sorted distinct shingle hashes, materialized and shared (see object
     // doc); the `bench` flag tells the two sides apart
@@ -176,18 +178,8 @@ object Pipeline {
         // quality band) instead of silently dropping out — an all-missing
         // cluster degrades to the min-id survivor rule rather than losing
         // every member.
-        val q = hygCorpus.join(chars, Seq("doc_id"), "left")
-          .withColumn("n_chars", coalesce(col("n_chars"), lit(0)))
-          .withColumn("toks", split(col("text"), " "))
-          .withColumn("n_stop",
-            size(expr("filter(toks, w -> w IN ('the', 'a', 'of', 'and', 'to'))")))
-          .select(col("doc_id"), col("n_chars"),
-            r4(when(col("n_chars") < 100, 0.2).otherwise(1.0) *
-              when(col("n_stop") === 0, 0.5).otherwise(1.0)).as("quality"))
-        val picks = labels.join(q, labels("id") === q("doc_id"))
-          .groupBy(col("lbl"))
-          .agg(max(struct(col("quality"), col("n_chars"),
-            (-col("doc_id")).as("neg_id"))).as("mx"))
+        val picks = Dedup.canonicalPicks(labels, hygCorpus.join(chars, Seq("doc_id"), "left")
+            .withColumn("n_chars", coalesce(col("n_chars"), lit(0))))
           .select((-col("mx.neg_id")).as("doc_id"))
         labels.select(col("id").as("doc_id"))
           .join(picks, Seq("doc_id"), "left_anti")

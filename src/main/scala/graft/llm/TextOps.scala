@@ -400,7 +400,7 @@ object TextOps {
         log((col("cc") + lit(1.0)) / (col("c_n") + col("v"))) -
           log((col("rc") + lit(1.0)) / (col("r_n") + col("v"))))
       .select(col("w"), col("lo"), col("wc"), col("n_total"))
-    val scored = toks.join(broadcast(model), Seq("w"))
+    val scored = toks.join(model, Seq("w"))
       .groupBy("doc_id", "source")
       .agg(
         r4(sum(col("lo").cast("decimal(28,12)")).cast("double")
@@ -490,16 +490,16 @@ object TextOps {
     * without any corpus scan (monitor → planner, closed loop). */
   def mixScheduleFromTok(srcTok: org.apache.spark.sql.DataFrame, budgetPct: Long = 200L,
       maxEpochs: Long = 4L): org.apache.spark.sql.DataFrame = {
-    // materialized at |sources| rows — the totals frame below re-reads
-    // this KB table instead of re-running the upstream aggregate
-    val src = materialize(srcTok
+    // the finished |sources|-row schedule is materialized: a training
+    // order reads it once per phase, and the totals below read the
+    // per-source rows twice in one plan (one shared exchange)
+    val src = srcTok
       .withColumn("weight_pct", expr(
         """CAST(CASE CAST(substr(source, 4) AS INT) % 3
-             WHEN 0 THEN 225 WHEN 1 THEN 100 ELSE 40 END AS BIGINT)""")),
-      "text.mix_sources")
+             WHEN 0 THEN 225 WHEN 1 THEN 100 ELSE 40 END AS BIGINT)"""))
     val tot = src.agg(
       sum("n_tok").as("tot_tok"), sum("weight_pct").as("tot_w"))
-    src.crossJoin(broadcast(tot))
+    materialize(src.crossJoin(broadcast(tot))
       .withColumn("target_tok",
         // single integer floor-division — no intermediate truncation, no
         // doubles; budget×tokens×weight stays < 2⁶³ through ~10¹⁶ tokens
@@ -509,7 +509,8 @@ object TextOps {
       .select(col("source"), col("n_tok"), col("weight_pct"),
         col("target_tok"), col("scheduled_tok"),
         r4(col("scheduled_tok").cast("double") / col("n_tok")).as("epochs"),
-        (col("target_tok") - col("scheduled_tok")).as("deficit_tok"))
+        (col("target_tok") - col("scheduled_tok")).as("deficit_tok")),
+      "text.mix_schedule")
       .orderBy("source")
   }
 
@@ -552,7 +553,7 @@ object TextOps {
       docs.select(col("doc_id"), col("source"),
         size(split(col("text"), " ")).cast("long").as("n_tok")),
       mixScheduleOf(docs, budgetPct, maxEpochs)
-        .select(col("source"), col("scheduled_tok").as("quota_tok")),
+        .select(col("source"), col("scheduled_tok").as("quota_tok"), col("n_tok").as("set_tok")),
       maxEpochs, nShards, shardSalt = "")
 
   /** X4ab: TRAINING-ORDER MIX AUDIT — the trainer-side validation of
@@ -638,9 +639,11 @@ object TextOps {
 
   /** The shared placement core behind [[trainOrderFullOf]] and
     * [[annealOrderOf]]: given ONE phase's doc set (doc_id, source,
-    * n_tok) and a per-source token quota, emit one row per (doc, epoch)
-    * instance. `quota div set_tok` full passes (capped at maxEpochs) +
-    * a threshold-gated partial pass over the remainder; `shardSalt`
+    * n_tok) and a per-source (source, quota_tok, set_tok) frame — the
+    * token quota and the phase set's token total, which the schedule
+    * already holds — emit one row per (doc, epoch) instance.
+    * `quota div set_tok` full passes (capped at maxEpochs) + a
+    * threshold-gated partial pass over the remainder; `shardSalt`
     * (appended inside the md5 shard key) keeps different phases'
     * epoch-reshuffles independent. The quota join is |sources| rows —
     * always broadcast; the gate window partitions by source; placement
@@ -654,7 +657,6 @@ object TextOps {
       // the order it's read in.
       placeOrder: Seq[org.apache.spark.sql.Column] =
         Seq(col("hk"), col("doc_id"))): org.apache.spark.sql.DataFrame = {
-    val setTok = base.groupBy("source").agg(sum("n_tok").as("set_tok"))
     val gate = Window.partitionBy("source").orderBy("hk", "doc_id")
       .rowsBetween(Window.unboundedPreceding, -1)
     val place = Window.partitionBy("epoch", "shard").orderBy(placeOrder: _*)
@@ -662,7 +664,7 @@ object TextOps {
     base
       .withColumn("hk", expr(
         "CAST(conv(substr(md5(CAST(doc_id AS STRING)), 1, 15), 16, 10) AS BIGINT)"))
-      .join(broadcast(quota.join(setTok, Seq("source"))), Seq("source"))
+      .join(broadcast(quota), Seq("source"))
       .withColumn("raw_epochs", expr("quota_tok div set_tok"))
       .withColumn("full_epochs", least(col("raw_epochs"), lit(maxEpochs)))
       .withColumn("rem_tok",
@@ -712,7 +714,7 @@ object TextOps {
           Seq("doc_id"), "left")
         .withColumn("score", coalesce(col("score"), lit(0.0))),
       mixScheduleOf(docs, budgetPct, maxEpochs)
-        .select(col("source"), col("scheduled_tok").as("quota_tok")),
+        .select(col("source"), col("scheduled_tok").as("quota_tok"), col("n_tok").as("set_tok")),
       maxEpochs, nShards, shardSalt = "",
       placeOrder = Seq(col("score").desc, col("doc_id")))
 
@@ -758,13 +760,15 @@ object TextOps {
     val base = docs.select(col("doc_id"), col("source"),
       size(split(col("text"), " ")).cast("long").as("n_tok"))
     val bulk = placeInstances(base,
-      sched.select(col("source"), col("bulk_tok").as("quota_tok")),
+      sched.select(col("source"), col("bulk_tok").as("quota_tok"), col("n_tok").as("set_tok")),
       maxEpochs, nShards, shardSalt = "")
       .withColumn("phase", lit(0))
-    val anneal = placeInstances(
-      base.join(scores.filter(col("selected"))
-        .select("doc_id"), Seq("doc_id")),
-      sched.select(col("source"), col("anneal_tok").as("quota_tok")),
+    // the anneal phase places the selected docs only: its set total is
+    // theirs, not the schedule's all-doc n_tok
+    val selected = base.join(scores.filter(col("selected")).select("doc_id"), Seq("doc_id"))
+    val anneal = placeInstances(selected,
+      sched.select(col("source"), col("anneal_tok").as("quota_tok"))
+        .join(selected.groupBy("source").agg(sum("n_tok").as("set_tok")), Seq("source")),
       maxEpochs, nShards, shardSalt = "#a")
       .withColumn("phase", lit(1))
     bulk.unionByName(anneal)
@@ -991,7 +995,8 @@ object TextOps {
   }
 
   /** The SCORE half: per-doc mean log-odds of `docs` against a frozen
-    * (w, lo) model (broadcast — vocabulary-bounded), with the same
+    * (w, lo) model (vocabulary-bounded: the planner broadcasts it by
+    * its stored size), with the same
     * DECIMAL-sum determinism and rounded-decision recipe as
     * [[classifierScoresOf]]. In-vocab tokens only (the inner join), so
     * scoring a batch against the stored full-corpus model reproduces
@@ -1001,7 +1006,7 @@ object TextOps {
     docs
       .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
       .filter(length(col("w")) > 0)
-      .join(broadcast(model), Seq("w"))
+      .join(model, Seq("w"))
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_tok"),
         r4(sum(col("lo").cast("decimal(28,12)")).cast("double")
@@ -1512,11 +1517,12 @@ object TextOps {
     // ONE corpus pass builds the frequency table; the corpus token total
     // is its exact sum (the old form paid a second full pass for it —
     // guide §2.4). The table materializes once (vocabulary-bounded, the
-    // persisted-table shape) and BROADCASTS into the scoring join, so
-    // the token stream is never shuffled by word (guide §3.1).
+    // persisted-table shape); its checkpointed size makes the planner
+    // broadcast it into the scoring join, so the token stream is never
+    // shuffled by word (guide §3.1).
     val freq = materialize(toks.groupBy("w").agg(count(lit(1)).as("wc")), "text.nll_vocab")
     val total = freq.agg(sum("wc").as("n_total"))
-    toks.join(broadcast(freq), Seq("w"))
+    toks.join(freq, Seq("w"))
       .crossJoin(broadcast(total))
       .groupBy("doc_id", "source")
       .agg(r4(-avg(log(col("wc").cast("double") / col("n_total")))).as("nll"))
@@ -2190,50 +2196,16 @@ object TextOps {
 
   // ——— X4af/X4ag: rule-LEVEL heuristic curation (Gopher/C4 rule table) ———
 
-  /** Deterministic rule-corpus decoration (the [[withPii]] house recipe:
-    * the synthetic corpus is bare lowercase words, so each doc is first
-    * decorated with structure derived from its own doc_id — both engines
-    * construct the identical string). Words reflow into 10-word lines;
-    * then, keyed on doc_id residues, a doc gets bullet-prefixed lines
-    * (%11), ellipsis-suffixed lines (%13), a hash-symbol line sized to
-    * ~n/8 words (%7), a 45-char-word line sized to ~n/3 words (%17), or
-    * a digits line sized to ~n/3 words (%19) — one deterministic
-    * violator population per rule, so every rule verdict has both
-    * outcomes in the gated output. Pure per-row string/array built-ins:
-    * whole-stage codegen, no shuffle, linear at any corpus size. */
-  private[llm] def withRuleText(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    docs
-      .withColumn("words0", split(col("text"), " "))
-      .withColumn("lines0", expr(
-        "transform(sequence(0, (size(words0)-1) div 10), " +
-          "i -> array_join(slice(words0, i*10+1, 10), ' '))"))
-      .withColumn("lines1", expr(
-        "CASE WHEN doc_id % 11 = 0 THEN transform(lines0, l -> '- ' || l) " +
-          "ELSE lines0 END"))
-      .withColumn("lines2", expr(
-        "CASE WHEN doc_id % 13 = 0 THEN transform(lines1, l -> l || ' ...') " +
-          "ELSE lines1 END"))
-      .withColumn("rlines", expr(
-        """concat(lines2,
-             CASE WHEN doc_id % 7 = 0
-                  THEN array(rtrim(repeat('# ', greatest(1, size(words0) div 8))))
-                  ELSE array() END,
-             CASE WHEN doc_id % 17 = 0
-                  THEN array(rtrim(repeat(
-                    'pneumonoultramicroscopicsilicovolcanoconiosis ',
-                    greatest(1, size(words0) div 3))))
-                  ELSE array() END,
-             CASE WHEN doc_id % 19 = 0
-                  THEN array(rtrim(repeat('12345 ', greatest(1, size(words0) div 3))))
-                  ELSE array() END)"""))
-      .withColumn("rtext", array_join(col("rlines"), "\n"))
-      .drop("words0", "lines0", "lines1", "lines2")
-
   /** The published heuristic rule table (Gopher §A.1.1 / C4), one BOOLEAN
-    * verdict per rule, all-integer arithmetic so both engines compare
-    * bit-identical values (mean-word-length bands as cross-multiplied
-    * integer inequalities, ratios as scaled integer compares — no float
-    * division anywhere):
+    * verdict per rule over the deterministic rule-corpus decoration (the
+    * [[withPii]] house recipe: the synthetic corpus is bare lowercase
+    * words, so each doc is first decorated with structure derived from
+    * its own doc_id — both engines construct the identical string; see
+    * [[graft.functions.RuleFeatures]], which counts the decorated text in
+    * one codegen'd pass per doc). All-integer arithmetic so both engines
+    * compare bit-identical values (mean-word-length bands as
+    * cross-multiplied integer inequalities, ratios as scaled integer
+    * compares — no float division anywhere):
     *  - r_wc       word count in [50, 100k]
     *  - r_mwl      mean word length in [3, 10]   (3·w ≤ chars ≤ 10·w)
     *  - r_sym      symbol-to-word ratio < 0.1    (10·(# + …) < w)
@@ -2242,39 +2214,25 @@ object TextOps {
     *  - r_alpha    ≥ 80% of words contain a letter (5·a ≥ 4·w)
     *  - r_stop     ≥ 2 distinct stop words
     * `keep` is the conjunction — the Gopher paper's filter semantics
-    * (every rule must pass). Per-doc map work only. */
-  private[llm] def ruleVerdictsOf(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    withRuleText(docs)
-      .withColumn("rwords", split(expr("replace(rtext, chr(10), ' ')"), " "))
-      .withColumn("n_words", size(col("rwords")).cast("long"))
-      .withColumn("n_lines", size(col("rlines")).cast("long"))
-      .withColumn("n_ns",
-        length(expr("replace(replace(rtext, chr(10), ''), ' ', '')")).cast("long"))
-      .withColumn("n_hash",
-        (length(col("rtext")) - length(expr("replace(rtext, '#', '')"))).cast("long"))
-      .withColumn("n_dots", expr(
-        "CAST((length(rtext) - length(replace(rtext, '...', ''))) div 3 AS BIGINT)"))
-      .withColumn("n_bullet",
-        expr("CAST(size(filter(rlines, l -> l like '- %')) AS BIGINT)"))
-      .withColumn("n_eline",
-        expr("CAST(size(filter(rlines, l -> l like '%...')) AS BIGINT)"))
-      .withColumn("n_alpha",
-        expr("CAST(size(filter(rwords, w -> w rlike '[a-z]')) AS BIGINT)"))
-      .withColumn("n_stopd", expr(
-        "CAST(size(array_distinct(filter(rwords, " +
-          "w -> w IN ('the','a','of','and','to')))) AS BIGINT)"))
-      .withColumn("r_wc", col("n_words").between(50, 100000))
-      .withColumn("r_mwl",
-        lit(3) * col("n_words") <= col("n_ns") &&
-          col("n_ns") <= lit(10) * col("n_words"))
-      .withColumn("r_sym", lit(10) * (col("n_hash") + col("n_dots")) < col("n_words"))
-      .withColumn("r_bullet", lit(10) * col("n_bullet") < lit(9) * col("n_lines"))
-      .withColumn("r_ellipsis", lit(10) * col("n_eline") < lit(3) * col("n_lines"))
-      .withColumn("r_alpha", lit(5) * col("n_alpha") >= lit(4) * col("n_words"))
-      .withColumn("r_stop", col("n_stopd") >= 2)
-      .withColumn("keep",
-        col("r_wc") && col("r_mwl") && col("r_sym") && col("r_bullet") &&
-          col("r_ellipsis") && col("r_alpha") && col("r_stop"))
+    * (every rule must pass). Per-doc map work only: one projection of the
+    * verdicts over the counts struct. */
+  private[llm] def ruleVerdictsOf(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val counted = docs.withColumn("rf",
+      graft.functions.RuleFeatures(col("doc_id"), col("text")))
+    def n(c: String) = col(s"rf.$c")
+    val verdicts = Seq(
+      "r_wc" -> n("n_words").between(50, 100000),
+      "r_mwl" -> (lit(3) * n("n_words") <= n("n_ns") && n("n_ns") <= lit(10) * n("n_words")),
+      "r_sym" -> (lit(10) * (n("n_hash") + n("n_dots")) < n("n_words")),
+      "r_bullet" -> (lit(10) * n("n_bullet") < lit(9) * n("n_lines")),
+      "r_ellipsis" -> (lit(10) * n("n_eline") < lit(3) * n("n_lines")),
+      "r_alpha" -> (lit(5) * n("n_alpha") >= lit(4) * n("n_words")),
+      "r_stop" -> (n("n_stopd") >= 2))
+    counted.select(docs.columns.map(c => col(s"`$c`")) ++
+      Seq(n("n_words").as("n_words"), n("n_lines").as("n_lines")) ++
+      verdicts.map { case (name, v) => v.as(name) } :+
+      verdicts.map(_._2).reduce(_ && _).as("keep"): _*)
+  }
 
   /** X4af driver gate: the per-doc rule breakdown — what real pipelines
     * ship for filter ABLATION (which rule fired, not just the composite

@@ -23,13 +23,16 @@ object Common {
     * its lineage cut ([[DataFrame.localCheckpoint]]), so every consumer
     * reads the computed rows instead of replaying the plan. Its jobs run
     * with `label` as their job description; the caller's description (a
-    * stream's micro-batch one, or none) is restored afterwards. ROADMAP
-    * direction 2 lists every label, its consumers and its bound. */
+    * stream's micro-batch one, or none) is restored afterwards. The
+    * checkpoint reports the bytes it stored as its size, so a join on it
+    * picks its strategy from what was computed rather than from the
+    * estimate of the plan it cut. ROADMAP direction 2 lists every label,
+    * its consumers and its bound. */
   def materialize(df: DataFrame, label: String): DataFrame = {
     val sc = df.sparkSession.sparkContext
     val caller = sc.getLocalProperty("spark.job.description")
     sc.setLocalProperty("spark.job.description", label)
-    try df.localCheckpoint()
+    try org.apache.spark.sql.graft.SizedCheckpoint.of(df.localCheckpoint())
     finally sc.setLocalProperty("spark.job.description", caller)
   }
 

@@ -520,7 +520,7 @@ object Streams {
   def pairStoreInit(base: DataFrame, dir: String): Unit = {
     val signed = graft.llm.Dedup.writeBandIndex(graft.llm.Dedup.minhashInRow(base), dir,
       "streams.pair_base_signatures")
-    sinkBatch(graft.llm.Dedup.PairGraph.ofSets(base, signed).pairs, -1L, s"$dir/pairs")
+    sinkBatch(graft.llm.Dedup.PairGraph.ofSigned(base, signed).pairs, -1L, s"$dir/pairs")
   }
 
   def pairDeltaSink(batch: DataFrame, batchId: Long, dir: String): Unit = {
@@ -540,7 +540,7 @@ object Streams {
     val sets = withDelta(s"$dir/sets", s"$dir/dsets",
       Seq("doc_id", "hs", "n_sh"))
     val cross = graft.llm.Dedup.crossPairsSigned(signed, bands, sets)
-    val internal = graft.llm.Dedup.PairGraph.ofSets(batch, signed).pairs
+    val internal = graft.llm.Dedup.PairGraph.ofSigned(batch, signed).pairs
     sinkBatch(cross.unionByName(internal).distinct(), batchId, s"$dir/pairs")
     sinkBatch(graft.llm.Dedup.signedBands(signed), batchId, s"$dir/dbands")
     sinkBatch(signed.select("doc_id", "hs", "n_sh"), batchId, s"$dir/dsets")

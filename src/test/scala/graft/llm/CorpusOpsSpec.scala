@@ -782,13 +782,18 @@ class CorpusOpsSpec extends graft.SparkSpec {
     val clustered = labels.map(_.getLong(0)).toSet
     assert((base -- clustered) === (can -- clustered),
       "canonical rule must only affect clustered docs")
-    // every clustered survivor of the canonical chain is its cluster's
-    // dedup_canonical pick (decontamination may drop a pick entirely,
-    // hence subset, not equality)
+    // with decontamination off, the clustered survivors of the canonical
+    // chain are exactly the clusters' dedup_canonical picks
     val picks = Dedup.canonical(Dedup.PairGraph.of(corpus)).collect()
       .map(_.getAs[Long]("canonical")).toSet
-    assert((can & clustered).subsetOf(picks),
-      s"non-argmax survivors: ${(can & clustered) -- picks}")
+    val canAll = Pipeline.corpusSurvivors(corpus, bench, minOverlap = Int.MaxValue,
+        canonicalQuality = Some(docs.select("doc_id", "n_chars")))
+      .select("doc_id").collect().map(_.getLong(0)).toSet
+    assert((canAll & clustered) === picks,
+      s"non-argmax survivors: ${(canAll & clustered) -- picks}, " +
+        s"picks dropped: ${picks -- canAll}")
+    // and decontamination only removes docs
+    assert(can.subsetOf(canAll))
     // and the min-id chain keeps exactly the min labels among survivors
     val minIds = labels.filter(r => r.getLong(0) == r.getLong(1))
       .map(_.getLong(0)).toSet

@@ -53,6 +53,43 @@ class MaterializeSpec extends graft.SparkSpec {
     assert(n <= 11, n)
   }
 
+  test("building and collecting the rules chain runs at most 15 jobs") {
+    // the rule gate is one codegen'd projection, and its keep list is a
+    // checkpoint sized by what it stored, so both joins on it broadcast
+    // at planning time (19 jobs when the keep list carried the join
+    // estimate of the gated corpus and its semi join shuffled the text)
+    val docs = graft.Tables.t(spark, sf, "documents").filter(col("doc_id") < 80)
+    val n = jobsDuring {
+      Pipeline.corpusHygiene(docs.filter(col("doc_id") >= 10),
+        docs.filter(col("doc_id") < 10),
+        rulesSources = Some(docs.select("doc_id", "source"))).collect()
+    }
+    assert(n <= 15, n)
+  }
+
+  test("the rules chain's keep-list semi join is a broadcast in the initial plan") {
+    // the pre-AQE plan of every materialization the chain runs: the
+    // semi join on the keep list broadcasts before any stage has run
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = plans.add(qe.executedPlan match {
+        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+          a.initialPlan.toString
+        case p => p.toString
+      })
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try rulesChainLabels()
+    finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    val semi = plans.asScala.toSeq.flatMap(_.linesIterator.filter(_.contains("LeftSemi")))
+    assert(semi.nonEmpty, plans)
+    assert(semi.forall(_.contains("BroadcastHashJoin")), semi.mkString("\n"))
+  }
+
   /** The label of every job the in-plan route of a kNN-graph corpus_op
     * over the sf0.01 embeddings runs while it is built, in start order. */
   private def inPlanGraphLabels(op: String): Seq[Option[String]] =

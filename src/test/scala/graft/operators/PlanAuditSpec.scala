@@ -101,7 +101,8 @@ class PlanAuditSpec extends graft.SparkSpec {
       df.collect()
       df.queryExecution.executedPlan.toString
     }
-    for (key <- Seq("filter_pred", "str_concat", "arith_nullskip", "json_struct")) {
+    for (key <- Seq("filter_pred", "str_concat", "arith_nullskip", "json_struct",
+        "text_rule_filter")) {
       val p = finalPlan(key)
       assert(p.contains("*("), s"$key has no codegen span:\n$p")
       assert(p.linesIterator.exists(l =>
@@ -110,11 +111,42 @@ class PlanAuditSpec extends graft.SparkSpec {
       assert(!p.contains("BatchEvalPython") && !p.contains("ScalaUDF"),
         s"$key fell out of codegen:\n$p")
     }
+    // the rule table counts each doc in one codegen'd projection
+    val rules = finalPlan("text_rule_filter").linesIterator.filter(_.contains("rule_features"))
+      .toSeq
+    assert(rules.nonEmpty && rules.forall(_.contains("*(")), rules.mkString("\n"))
     // and the custom expressions advertise codegen: the LSH signature
     // (48 DotProducts) and the sorted-overlap verify must not appear
     // under an interpreted Project
     val lsh = finalPlan("dedup_embed_lsh")
     assert(lsh.linesIterator.exists(l => l.contains("*(") && l.contains("Project")), lsh)
+  }
+
+  test("vocabulary joins broadcast by their stored size; the shuffle join scores the same") {
+    // the token stream joins a vocabulary-bounded table (a materialized
+    // or stored one) with no broadcast hint: the planner broadcasts it by
+    // the size the table reports, and with broadcasts disabled the
+    // shuffle join gives the identical rows
+    def vocabJoins(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      (df.queryExecution.executedPlan match {
+        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.initialPlan
+        case p => p
+      }).toString.linesIterator.filter(l => l.contains("Join [w#")).toSeq
+    for (key <- Seq("text_quality_ensemble", "text_classifier_gate", "text_quality_filter")) {
+      val df = graft.SparkEntry.queries(key)(spark, sf)
+      val joins = vocabJoins(df)
+      assert(joins.nonEmpty && joins.forall(_.contains("BroadcastHashJoin")),
+        s"$key:\n${joins.mkString("\n")}")
+      val rows = df.collect().toSeq
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      try {
+        val shuffled = graft.SparkEntry.queries(key)(spark, sf)
+        val sj = vocabJoins(shuffled)
+        assert(sj.nonEmpty && sj.forall(!_.contains("BroadcastHashJoin")),
+          s"$key:\n${sj.mkString("\n")}")
+        assert(shuffled.collect().toSeq === rows, key)
+      } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    }
   }
 
   test("text_logfreq / dedup_containment: vocabulary and pair joins stay equi-keyed") {
